@@ -49,8 +49,7 @@ def classpath(classes):
 
 
 def build(log=sys.stderr):
-    """Compile if needed; returns the classes directory, which also holds
-    oracle_sql.json (the DuckDB mirror SQL of the entries the checks use)."""
+    """Compile if needed; returns the classes directory."""
     main, bench = sources()
     if not main:
         raise FileNotFoundError(f"no program sources under {ROOT}/src/main/scala")
@@ -60,20 +59,17 @@ def build(log=sys.stderr):
         with open(f, "rb") as fh:
             h.update(fh.read())
     classes = os.path.join(OUT, "classes-" + h.hexdigest()[:16])
-    if os.path.exists(os.path.join(classes, "oracle_sql.json")):
+    if os.path.isdir(classes):
         return classes
     tmp = classes + f".tmp{os.getpid()}"
     shutil.rmtree(tmp, ignore_errors=True)
     os.makedirs(tmp)
     print(f"[perfbench] compiling {len(main)} program + {len(bench)} benchmark sources",
           file=log, flush=True)
-    steps = [("compile", ["java", "-Xmx3g", "-Xss8m", "-cp", jars(), "scala.tools.nsc.Main",
-                          "-nowarn", "-d", tmp, "-classpath", jars()] + main + bench),
-             ("oracle SQL dump", ["java", *JVM_OPENS, "-cp", classpath(tmp), "perfbench.Main",
-                                  "--dump-oracle", os.path.join(tmp, "oracle_sql.json")])]
-    for step, cmd in steps:
-        if subprocess.run(cmd, stdout=log, stderr=log).returncode != 0:
-            raise RuntimeError(f"build: {step} failed")
+    cmd = ["java", "-Xmx3g", "-Xss8m", "-cp", jars(), "scala.tools.nsc.Main",
+           "-nowarn", "-d", tmp, "-classpath", jars()] + main + bench
+    if subprocess.run(cmd, stdout=log, stderr=log).returncode != 0:
+        raise RuntimeError("build: compile failed")
     shutil.rmtree(classes, ignore_errors=True)
     os.rename(tmp, classes)
     return classes

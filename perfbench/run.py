@@ -1,13 +1,14 @@
 #!/usr/bin/env python3
-"""Benchmark of the retail ETL engine: four closed-loop workloads, one client.
+"""Benchmark of the retail ETL engine: two closed-loop workloads, one client.
 
-    python3 perfbench/run.py --workload etl_build --seed 1 --seconds 10 --trace 0
-    python3 perfbench/run.py --workload all --seed 1 --seconds 10 --trace 0
+    python3 perfbench/run.py --workload nightly_batch --seed 1 --seconds 1 --trace 0
+    python3 perfbench/run.py --workload all --seed 1 --seconds 1 --trace 1
 
-Each run builds the program if needed (perfbench/build.py), generates its
-inputs from the seed (perfbench/gen.py), computes the expected output
-checksums with the program's DuckDB mirror SQL, runs the workload in one JVM
-on local[nproc] and prints, as its last line, one JSON object with
+Each run builds the program if needed (perfbench/build.py), cuts the seeded
+top-up deltas out of the stored testdata tables (perfbench/data), runs the
+workload in one JVM on local[nproc], checks every output against the stored
+oracle checksums (perfbench/oracle) and prints, as its last line, one JSON
+object with
 `correct`, `attempted`, `failed` and `metrics`: the end-to-end metrics with
 --trace 0, the per-layer metrics with --trace 1. Any output mismatch makes
 `correct` false and the exit code 1. See perfbench/README.md.
@@ -23,14 +24,14 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 import build  # noqa: E402
-import gen  # noqa: E402
 
+HERE = os.path.dirname(os.path.abspath(__file__))
 WORKLOADS = ["nightly_batch", "daytime_mix"]
-# orders (sets every TPC-H table's size) and documents per workload
-SIZES = {"nightly_batch": (1500, 1000), "daytime_mix": (1500, 100)}
-# orders per daytime_mix top-up delta file (10% of the orders: a top-up
-# appends ~540 fact rows, so its fixed per-batch bytes vary little by seed)
-DELTA_ORDERS = 150
+# testdata scale factor each workload reads (perfbench/data/<sf>)
+SCALE = {"nightly_batch": "sf0.01", "daytime_mix": "sf0.001"}
+# daytime_mix cuts the orders into this many top-up delta files: one for
+# the untimed first round, the rest for timed rounds
+DELTAS = 10
 HEAP = "3g"
 RUN_LIMIT_S = 170
 
@@ -55,43 +56,40 @@ def canary_ms():
     return best
 
 
-def oracle_tables(data, out, queries):
-    """Run each mirror query in DuckDB over the generated tables and write
-    its result to <out>/<entry>.parquet."""
-    import duckdb
+def split_deltas(orders_path, out, seed, parts):
+    """Cut the orders into `parts` delta files of seeded, disjoint order
+    sets, named in landing order."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    orders = pq.read_table(orders_path)
+    perm = np.random.default_rng(seed).permutation(orders.num_rows)
     os.makedirs(out, exist_ok=True)
-    con = duckdb.connect()
-    con.execute("SET threads=2")
-    con.execute(f"SET temp_directory='{out}/duckdb-tmp'")
-    for t in ["region", "nation", "customer", "supplier", "part", "orders", "lineitem",
-              "documents"]:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{data}/{t}.parquet')")
-    for name, sql in queries.items():
-        con.execute(f"COPY ({sql}) TO '{out}/{name}.parquet' (FORMAT parquet)")
-    con.close()
+    for k, chunk in enumerate(np.array_split(perm, parts)):
+        pq.write_table(orders.take(pa.array(np.sort(chunk))), f"{out}/orders_{k:05d}.parquet")
 
 
 def run_one(root, workload, seed, seconds, trace, deadline):
     classes = build.build()
     work = os.path.join(root, ".bench_build", "perfbench", "work", f"{workload}-{seed}-{os.getpid()}")
     shutil.rmtree(work, ignore_errors=True)
-    data = os.path.join(work, "data")
+    data = os.path.join(HERE, "data", SCALE[workload])
+    deltas = os.path.join(work, "deltas")
     try:
-        gen.generate(data, seed, *SIZES[workload])
+        os.makedirs(deltas)
         if workload == "daytime_mix":
-            gen.split_deltas(data, os.path.join(data, "deltas"), seed, DELTA_ORDERS)
-        oracle_tables(data, os.path.join(work, "oracle"),
-                      json.load(open(os.path.join(classes, "oracle_sql.json")))[workload])
+            split_deltas(os.path.join(data, "orders.parquet"), deltas, seed, DELTAS)
 
         cores = len(os.sched_getaffinity(0))
         tmp = os.path.join(work, "tmp")
         os.makedirs(tmp, exist_ok=True)
-        cmd = ["java", f"-Xms{HEAP}", f"-Xmx{HEAP}", "-XX:TieredStopAtLevel=1", *build.JVM_OPENS,
+        cmd = ["java", f"-Xms{HEAP}", f"-Xmx{HEAP}", *build.JVM_OPENS,
                "-Duser.timezone=UTC", f"-Djava.io.tmpdir={tmp}",
                f"-Dderby.system.home={tmp}", "-Dspark.ui.enabled=false",
                "-cp", build.classpath(classes), "perfbench.Main",
-               "--workload", workload, "--data", data, "--work", work,
-               "--oracle", os.path.join(work, "oracle"), "--seconds", str(seconds), "--trace", "1" if trace else "0",
+               "--workload", workload, "--data", data, "--deltas", deltas, "--work", work,
+               "--oracle", os.path.join(HERE, "oracle", f"{SCALE[workload]}.txt"),
+               "--seed", str(seed), "--seconds", str(seconds), "--trace", "1" if trace else "0",
                "--cores", str(cores)]
         log_path = os.path.join(root, ".bench_build", "perfbench", f"{workload}.log")
         steal0, canary0, load0 = health_sample(), canary_ms(), os.getloadavg()

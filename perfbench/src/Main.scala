@@ -12,13 +12,17 @@ import graft.SparkEntry
 
 /** Runs one workload in this JVM and prints one `PERFBENCH {json}` line.
   *
-  *   --workload W --data DIR --work DIR --oracle DIR --seconds S
-  *   --trace 0|1 --cores N
-  *   --dump-oracle FILE   writes the DuckDB mirror SQL the checks use
+  *   --workload W --data DIR --deltas DIR --work DIR --oracle FILE --seed N
+  *   --seconds S --trace 0|1 --cores N
   *
-  * End-to-end numbers come from untraced rounds. With --trace 1 the first
-  * round runs untimed, then untraced and traced rounds alternate; the
+  * End-to-end numbers come from untraced rounds. A workload that serves
+  * traffic (daytime_mix) and every traced run first run one untimed round;
+  * with --trace 1 untraced and traced rounds then alternate, and the
   * per-layer numbers are averages per traced call into each layer.
+  *
+  * Two modes derive the stored oracle checksums (perfbench/derive_oracle.py):
+  *   --oracle-sql FILE   writes the DuckDB mirror SQL of every checked entry
+  *   --checksums DIR     prints `entry rows hash` for each DIR/<entry>.parquet
   */
 object Main {
 
@@ -26,27 +30,47 @@ object Main {
 
   def main(args: Array[String]): Unit = {
     val a = args.grouped(2).collect { case Array(k, v) => k.stripPrefix("--") -> v }.toMap
-    a.get("dump-oracle") match {
-      case Some(file) => dumpOracle(file)
-      case None =>
-        val json = run(a("workload"), a("data"), a("work"), a("oracle"),
-          a("seconds").toDouble, a("trace") == "1", a("cores").toInt)
-        println(s"PERFBENCH $json")
+    if (a.contains("oracle-sql")) oracleSql(a("oracle-sql"))
+    else if (a.contains("checksums")) checksums(a("checksums"))
+    else {
+      val json = run(a("workload"), Env(a("data"), a("deltas"), a("work"), a("seed").toLong),
+        a("oracle"), a("seconds").toDouble, a("trace") == "1", a("cores").toInt)
+      println(s"PERFBENCH $json")
     }
   }
 
-  /** {workload: {entry: DuckDB mirror SQL}} for the entries each workload's
-    * checks compare against. */
-  private def dumpOracle(file: String): Unit = {
+  /** {entry: DuckDB mirror SQL} for every entry a workload's checks compare
+    * against. */
+  private def oracleSql(file: String): Unit = {
     val sql = SparkEntry.oracleSql
-    val body = Json.obj(Workload.oracles.toSeq.sortBy(_._1).map { case (w, names) =>
-      w -> Json.obj(names.map(n => n -> Json.str(sql(n))))
-    })
+    val body = Json.obj(Workload.oracles.values.flatten.toSeq.distinct.sorted
+      .map(n => n -> Json.str(sql(n))))
     java.nio.file.Files.write(java.nio.file.Paths.get(file), body.getBytes("UTF-8"))
   }
 
-  private def session(cores: Int, work: String): SparkSession =
-    SparkSession.builder()
+  private def checksums(dir: String): Unit = {
+    val spark = session(2, s"$dir/spark-tmp")
+    new java.io.File(dir).list().filter(_.endsWith(".parquet")).sorted.foreach { f =>
+      val c = Check.of(spark.read.parquet(s"$dir/$f"))
+      println(s"${f.stripSuffix(".parquet")} ${c.rows} ${java.lang.Long.toHexString(c.hash)}")
+    }
+    spark.stop()
+  }
+
+  /** The stored checksums: one `entry rows hash` line each. */
+  def readOracle(file: String): Map[String, Checksum] = {
+    val src = scala.io.Source.fromFile(file, "UTF-8")
+    try src.getLines().map(_.trim).filter(_.nonEmpty).map { l =>
+      val Array(n, rows, hash) = l.split(" ")
+      n -> Checksum(rows.toLong, java.lang.Long.parseUnsignedLong(hash, 16))
+    }.toMap
+    finally src.close()
+  }
+
+  /** A session set up as the program's own mains (graft.Bench, graft.Verify)
+    * set theirs: UTC, ANSI off, WARN logging. */
+  private def session(cores: Int, work: String): SparkSession = {
+    val spark = SparkSession.builder()
       .master(s"local[$cores]")
       .appName("perfbench")
       .config("spark.ui.enabled", "false")
@@ -64,6 +88,9 @@ object Main {
       .config("spark.sql.streaming.ui.retainedQueries", "10")
       .config("spark.sql.streaming.ui.retainedProgressUpdates", "10")
       .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
 
   def percentile(xs: Seq[Double], q: Double): Double = {
     val s = xs.sorted
@@ -90,11 +117,12 @@ object Main {
   final case class OpRec(i: Int, traced: Boolean, ms: Double, cpuNs: Long, gcMs: Long,
                          startMs: Long, endMs: Long, rows: Long, ok: Boolean)
 
-  def run(workload: String, data: String, work: String, oracleDir: String,
+  def run(workload: String, env: Env, oracleFile: String,
           seconds: Double, trace: Boolean, cores: Int): String = {
+    val work = env.work
+    env.expected ++= readOracle(oracleFile)
     // Set-up: a fresh SparkContext and session, then the workload's own
     // preparation; repeated so its median is steady. The last one runs.
-    val env = Env(data, work)
     val wl = Workload(workload, env)
     var spark: SparkSession = null
     val setupS = (1 to SetupReps).map { _ =>
@@ -104,10 +132,7 @@ object Main {
       wl.setup(spark)
       (System.nanoTime - t0) / 1e9
     }
-    Workload.oracles(workload).foreach { n =>
-      env.expected(n) = Check.of(spark.read.parquet(s"$oracleDir/$n.parquet"))
-    }
-    System.err.println(s"[perfbench] setup done ${setupS.mkString(", ")}")
+    System.err.println(s"[perfbench] ${System.currentTimeMillis} setup done ${setupS.mkString(", ")}")
     val sc = spark.sparkContext
 
     val tasks = new TaskListener
@@ -126,8 +151,8 @@ object Main {
     val budgetNs = (seconds * 1e9).toLong
     var measuredNs = 0L
     // A traced run compares traced with untraced ops, so both must be warm:
-    // its first round runs untimed.
-    val start = if (trace) round else 0
+    // its first round runs untimed, as does a serving workload's.
+    val start = if (trace || wl.warmUp) round else 0
     (0 until start).foreach { k =>
       wl.op(spark, k, NoTrace)().error.foreach(e => throw new IllegalStateException(s"warm-up round: $e"))
     }
@@ -156,12 +181,12 @@ object Main {
       i += 1
     }
 
-    System.gc()
-    Thread.sleep(200)
-    System.gc()
+    // Spark's ContextCleaner frees the blocks of collected broadcasts and
+    // shuffles only after a GC has found them unreachable: collect three times.
+    (1 to 3).foreach { _ => System.gc(); Thread.sleep(300) }
     val heap = ManagementFactory.getMemoryMXBean.getHeapMemoryUsage.getUsed / 1048576.0
 
-    System.err.println(s"[perfbench] ops done")
+    System.err.println(s"[perfbench] ${System.currentTimeMillis} ops done")
     val finishErrors = Try(wl.finish(spark)) match {
       case Success(es) => es
       case Failure(e) => Seq(s"end-of-run check: $e")
