@@ -11,7 +11,8 @@ import graft.sources.Crm
   * the summary report would otherwise re-execute every dim subplan per
   * consumer. The CacheManager's canonical-plan matching also substitutes
   * these for the standalone q_dim_* queries in the same session. The fact
-  * itself is NOT cached — it is the streamed output of the ETL.
+  * is cached too: it is the materialized end product of the ETL, read by
+  * both the summary report and the fact query.
   */
 final case class Warehouse(
     dimLocalidade: DataFrame,

@@ -74,8 +74,8 @@ private[graft] object QueryShared {
     val df = lshPairsMemo.computeIfAbsent((s, dir), _ =>
       operators.Dedup.minhashLshPairs(
         s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text"))
-    // minhashLshPairs returns an eagerly-cached artifact, but a family-
-    // boundary clearCache (Bench hygiene) still drops that storage — lazily
+    // minhashLshPairs returns an eagerly-cached artifact, but a caller that
+    // clears the cache (catalog.clearCache) still drops that storage — lazily
     // re-persist like memoizedArtifact so no consumer ever silently
     // re-executes the pair build PER ACTION (one rebuild is paid, once).
     if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE) df.persist()
@@ -84,9 +84,8 @@ private[graft] object QueryShared {
 
   /** Pruned co-purchase pair artifact (Basket.copurchasePairs), memoized per
     * (session, dir): all graph-family queries consume the SAME build-once
-    * edge table (r7 — in production this is a persisted artifact, and Bench
-    * runs the family contiguously in one cache-family window). If a cache
-    * clear dropped the data between windows, the storage-level probe
+    * edge table (r7 — in production this is a persisted artifact). If a
+    * caller cleared the cache between consumers, the storage-level probe
     * re-persists it lazily, so no consumer ever silently re-executes the
     * quadratic pair build per action.
     */
@@ -130,12 +129,11 @@ private[graft] object QueryShared {
     * input-fingerprint manifest (VERDICT r12 #5): the trained BPE vocab and
     * the IVF-PQ index used to be retrained INSIDE their gated queries —
     * ~24 s of every bench run measuring provenance instead of serving. Now
-    * the build runs once (timed by Bench as its own `artifact:*` entry at
-    * the first consuming family's window) and every consumer proves
-    * derivation through [[operators.ArtifactManifest.check]] — the corpus
+    * the build runs once, on the first consuming query, and every consumer
+    * proves derivation through [[operators.ArtifactManifest.check]] — the corpus
     * it serves must fingerprint-match the corpus the artifact was trained
-    * on, or the query throws. Disk paths (not cached frames): a
-    * family-boundary cache clear cannot drop them, and a fresh session
+    * on, or the query throws. Disk paths (not cached frames): a caller
+    * that clears the cache cannot drop them, and a fresh session
     * rebuilds. */
   val bpeVocabMemo =
     new java.util.concurrent.ConcurrentHashMap[(String, String), String]()

@@ -35,18 +35,8 @@ object Dedup {
     * composed form as the semantic reference the DuckDB oracle mirrors,
     * pinned bit-identical by HashExpressionsSpec.
     */
-  /** Dev-only A/B switch for isolated measurement (never set by the
-    * driver): `SPARK_GRAFT_HASH_IMPL=composed` routes hash60/hash60b to
-    * the composed-builtin reference forms, so the native expression's
-    * payoff stays measurable round-over-round (VERDICT r9 #1 done
-    * criterion — if native ever stops beating composed, revert to them).
-    */
-  private val useComposedHash: Boolean =
-    sys.env.get("SPARK_GRAFT_HASH_IMPL").contains("composed")
-
   def hash60(c: Column): Column =
-    if (useComposedHash) hash60Ref(c)
-    else graft.functions.HashExpressions.hash60Native(c)
+    graft.functions.HashExpressions.hash60Native(c)
 
   /** The composed reference form of [[hash60]] — oracle-mirrored
     * semantics, used only by the parity spec. */
@@ -59,8 +49,7 @@ object Dedup {
     * Native evaluation like [[hash60]]; [[hash60bRef]] is the mirror.
     */
   def hash60b(c: Column): Column =
-    if (useComposedHash) hash60bRef(c)
-    else graft.functions.HashExpressions.hash60bNative(c) % 1000000007L
+    graft.functions.HashExpressions.hash60bNative(c) % 1000000007L
 
   /** The composed reference form of [[hash60b]]. */
   def hash60bRef(c: Column): Column =
@@ -322,13 +311,14 @@ object Dedup {
   }
 
   /** Per-task unspillable-build budget for the SHJ choice. The measured
-    * failure mode (VerifyHintProbe, sf10 AND sf100 replicas): every slot
-    * builds its hash map CONCURRENTLY out of `heap × spark.memory.fraction`
-    * execution memory, so a map bigger than its 1/slots share dies on the
-    * growth acquire regardless of how many shuffle partitions spread the
-    * data. Derivation: (heap − 300 MB reserved) × fraction / slots / 2 —
-    * the final /2 covers the BytesToBytesMap growth-doubling transient and
-    * storage contention from the operator's own cached build tables.
+    * failure mode (SCALE_PROBE_r12_verifyhint.json, sf10 AND sf100
+    * replicas): every slot builds its hash map CONCURRENTLY out of
+    * `heap × spark.memory.fraction` execution memory, so a map bigger than
+    * its 1/slots share dies on the growth acquire regardless of how many
+    * shuffle partitions spread the data. Derivation: (heap − 300 MB
+    * reserved) × fraction / slots / 2 — the final /2 covers the
+    * BytesToBytesMap growth-doubling transient and storage contention from
+    * the operator's own cached build tables.
     * Local mode reads the actual JVM heap (executors share it); cluster
     * mode reads spark.executor.memory/cores. Floor 64 MB so undersized
     * test JVMs still exercise SHJ. `spark.graft.lsh.shjBuildBudgetBytes`

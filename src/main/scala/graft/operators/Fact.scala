@@ -144,9 +144,11 @@ object Fact {
     * zero-pass unique id is stretched by `sk*nSlices + slice`, so two
     * independently-run slices can never collide (monotonically_increasing_id
     * restarts its partition numbering per job, so the plain key would).
-    * Used by the oracle-gated q_fato_backfill; the operational sf100 recipe
-    * (tools/FactBackfillProbe) runs the same slices as SEPARATE jobs with a
-    * sink append between them, which is what actually bounds scratch.
+    * Used by the oracle-gated q_fato_backfill; the operational recipe
+    * ([[backfillSlices]]; sf100 run in SCALE_PROBE_r11_backfill.json, crash
+    * resume in SCALE_PROBE_r12_backfill_resume.json) runs the same slices as
+    * SEPARATE jobs with a sink append between them, which is what actually
+    * bounds scratch.
     */
   def fatoVendasBackfill(vendas: DataFrame, itemVendas: DataFrame, dimTempo: DataFrame,
                          dimCliente: DataFrame, dimProduto: DataFrame, dimVendedor: DataFrame,

@@ -46,9 +46,6 @@ object Parallelism {
     * query). */
   val EnabledConf = "spark.graft.fanout.enabled"
 
-  /** Session kill-switch for [[withInputSizedShuffle]] (A/B probes). */
-  val LoopSizeConf = "spark.graft.loopsize.enabled"
-
   /** Run `body` with the session's `spark.sql.shuffle.partitions` sized to
     * the loop inputs' optimizer-estimated bytes — `ceil(bytes/targetBytes)`
     * clamped to `[1, current session width]` — restoring the previous value
@@ -98,7 +95,6 @@ object Parallelism {
                                floorN: Int = 1)(body: => T): T = {
     if (inputs.isEmpty) return body
     val session = inputs.head.sparkSession
-    if (session.conf.get(LoopSizeConf, "true") != "true") return body
     val lock = loopLock(session)
     lock.lock()
     try {

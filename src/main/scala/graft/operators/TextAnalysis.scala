@@ -704,7 +704,7 @@ object TextAnalysis {
             / ((col("cr") + 1).cast("double") * (col("tt") + dim).cast("double"))
             - lit(1.0)) * quantScale + lit(0.5)).cast("long").as("lam_q"))
     // Lifecycle: by default the feats cache stays registered until the
-    // session drops it (Bench clears caches at family boundaries) — the
+    // session drops it (or a caller clears the cache) — the
     // lazy plan keeps the TakeOrdered/broadcast shape the whole-surface
     // gate inspects. `releaseCache = true` is the long-lived-session hook
     // (VERDICT r11 #8): the n-row result is materialized eagerly
@@ -999,7 +999,7 @@ object TextAnalysis {
     * map-side-combinable aggregate: the 100 TB filter pass.
     *
     * Lifecycle mirrors [[dsirSelect]]: the feature cache stays registered
-    * by default (Bench clears at family boundaries); `releaseCache = true`
+    * by default (until a caller clears the cache); `releaseCache = true`
     * materializes the result and unpersists before returning.
     */
   def perceptronScore(docs: DataFrame, id: String, text: String,

@@ -310,15 +310,10 @@ object IdempotentFold {
     * path already erases every keyed file of the batch before recomputing,
     * order-free ([[cleanKeyedAll]]); the commit marker still lands only
     * after ALL tasks complete. Exceptions propagate (first cause) so a
-    * failed append still fails the stream loudly. */
-  /** Session kill-switch for [[inParallel]] (interleaved A/B probes). */
-  val OverlapConf = "spark.graft.overlap.enabled"
-
+    * failed append still fails the stream loudly. A single task runs on
+    * the caller thread. */
   def inParallel(spark: SparkSession)(tasks: (() => Unit)*): Unit = {
-    if (tasks.lengthCompare(2) < 0 ||
-        spark.conf.get(OverlapConf, "true") != "true") {
-      tasks.foreach(_()); return
-    }
+    if (tasks.lengthCompare(2) < 0) { tasks.foreach(_()); return }
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
       math.min(tasks.size, 4))
     try {

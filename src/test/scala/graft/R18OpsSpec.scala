@@ -57,20 +57,11 @@ class R18OpsSpec extends SparkSpec {
     assert(e.getMessage === "boom")
   }
 
-  test("inParallel kill-switch runs tasks serially on the caller thread") {
-    val prevConf = spark.conf.getOption(IdempotentFold.OverlapConf)
-    spark.conf.set(IdempotentFold.OverlapConf, "false")
-    try {
-      val t = Thread.currentThread()
-      var sameThread = true
-      IdempotentFold.inParallel(spark)(
-        () => { sameThread &&= (Thread.currentThread() eq t) },
-        () => { sameThread &&= (Thread.currentThread() eq t) })
-      assert(sameThread)
-    } finally prevConf match {
-      case Some(v) => spark.conf.set(IdempotentFold.OverlapConf, v)
-      case None => spark.conf.unset(IdempotentFold.OverlapConf)
-    }
+  test("inParallel runs a single task on the caller thread") {
+    val t = Thread.currentThread()
+    var ran: Thread = null
+    IdempotentFold.inParallel(spark)(() => { ran = Thread.currentThread() })
+    assert(ran eq t)
   }
 
   test("derivedStatePartitions sizes from input bytes with floor and cap") {

@@ -5,7 +5,7 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all specs — one JVM-wide session (ScalaTest
-  * runs suites in the same forked JVM), configured like Verify/Bench:
+  * runs suites in the same forked JVM), configured like graft.Verify:
   * non-ANSI (F13 null-on-parse-failure), UTC, small shuffle fan-out.
   */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {

@@ -4,7 +4,7 @@
 VERDICT r12 #7: SURVEY.md is builder-facing; users need the 219-query
 surface discoverable as an API. This tool derives, for every entry in
 SparkEntry.queries:
-  - the gated query name (the stable API key for Verify/Bench ONLY= use)
+  - the gated query name (the stable API key for Verify's ONLY= use)
   - the one-line description (the comment block right above the entry)
   - the primary entry function(s) it drives (operators.X.y / streaming.X.y
     / functions.X.y / Warehouse.* / sources.*), with the `def` signature
@@ -254,8 +254,8 @@ def main():
 
     lines = [START, "", "## Operator index", "",
              f"All {len(rows)} gated queries — each is an API entry point "
-             "(run one with `SPARK_GRAFT_ONLY=<name>` through `graft.Verify` "
-             "or `graft.Bench`), each is hash-verified against the DuckDB "
+             "(run one with `SPARK_GRAFT_ONLY=<name>` through `graft.Verify`), "
+             "each is hash-verified against the DuckDB "
              "oracle at the driver gate, and the scale-evidence column links "
              "the committed probe artifacts that name the query at sf1 and "
              "above. Generated from `SparkEntry.queries`; regenerate with "
