@@ -7,5 +7,4 @@ for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio 
 done
 exec java $ADDOPENS -Xmx${SPARK_DRIVER_MEM:-12g} \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  $SPARK_GRAFT_EXTRA_JAVA_OPTS \
   -cp "/root/repo/target/scala-2.13/classes:/opt/spark/jars/*" "$MAIN" "$@"

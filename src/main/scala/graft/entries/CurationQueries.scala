@@ -7,19 +7,13 @@ import graft.operators.Surrogate
 import graft.sources.{Crm, OracleSql => O}
 import QueryShared._
 
-/** Curation-family query registry (split out of SparkEntry in r14 — VERDICT r13
-  * "what's wrong" #4: one 4.6k-line file was the single edit point for every
-  * round). Entries and their DuckDB oracle mirrors are verbatim moves; the
-  * public surface is still [[SparkEntry.queries]]/[[SparkEntry.oracleSql]],
-  * which concatenates the registries in the original file order.
-  */
-private[graft] object CurationQueries {
+/** Curation-family query registry. */
+private[graft] object CurationQueries extends QueryFamily {
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ---- §7.5 extensions: corpus-curation widening ------------------------
     // Benchmark decontamination: 3-shingle overlap of the corpus against a
     // held-out benchmark slice (doc_id ≡ 0 mod 20 plays the benchmark).
     "q_contamination" -> ((s, dir) => {
-      prep(s)
       val docs = s.read.parquet(s"$dir/documents.parquet")
       operators.TextAnalysis.contamination(
         docs.filter(col("doc_id") % 20 =!= 0), docs.filter(col("doc_id") % 20 === 0),
@@ -27,13 +21,11 @@ private[graft] object CurationQueries {
         .orderBy(col("doc_id"))
     }),
     "q_repetition" -> ((s, dir) => {
-      prep(s)
       operators.TextAnalysis.repetitionScore(
         s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text")
         .orderBy(col("doc_id"))
     }),
     "q_pii_redact" -> ((s, dir) => {
-      prep(s)
       // The corpus text is digit-free, so PII shapes are synthesized from
       // customer fields — the REDACTION itself (regex masking + audit
       // counts, cross-engine-identical patterns) is the operator under test.
@@ -48,14 +40,12 @@ private[graft] object CurationQueries {
     // Domain rebalancing: per-language deterministic sampling fractions
     // (drop zh/fr entirely, thin en, keep most of de).
     "q_sample_stratified" -> ((s, dir) => {
-      prep(s)
       operators.Sampling.stratifiedSample(
         s.read.parquet(s"$dir/documents.parquet"),
         col("doc_id"), col("lang"), Map("en" -> 0.3, "es" -> 0.7, "de" -> 0.9))
         .select(col("doc_id"), col("lang")).orderBy(col("doc_id"))
     }),
     "q_length_hist" -> ((s, dir) => {
-      prep(s)
       s.read.parquet(s"$dir/documents.parquet")
         .groupBy((floor(col("n_chars") / 100) * 100).cast("long").as("bucket_lo"))
         .agg(count(lit(1)).as("n_docs"),

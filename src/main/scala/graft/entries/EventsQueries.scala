@@ -7,37 +7,27 @@ import graft.operators.Surrogate
 import graft.sources.{Crm, OracleSql => O}
 import QueryShared._
 
-/** Events-family query registry (split out of SparkEntry in r14 — VERDICT r13
-  * "what's wrong" #4: one 4.6k-line file was the single edit point for every
-  * round). Entries and their DuckDB oracle mirrors are verbatim moves; the
-  * public surface is still [[SparkEntry.queries]]/[[SparkEntry.oracleSql]],
-  * which concatenates the registries in the original file order.
-  */
-private[graft] object EventsQueries {
+/** Events-family query registry. */
+private[graft] object EventsQueries extends QueryFamily {
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ---- §7.5 extensions: event-time analytics ----------------------------
     "q_events_hourly" -> ((s, dir) => {
-      prep(s)
       operators.Events.hourly(events(s, dir))
         .orderBy(col("hora"), col("event_type"))
     }),
     "q_events_sessions" -> ((s, dir) => {
-      prep(s)
       operators.Events.userSessionStats(events(s, dir))
         .orderBy(col("user_id"))
     }),
     "q_events_top_types" -> ((s, dir) => {
-      prep(s)
       operators.Events.topTypesPerHour(events(s, dir))
         .orderBy(col("hora"), col("rank"))
     }),
     "q_events_funnel" -> ((s, dir) => {
-      prep(s)
       operators.Events.funnel(events(s, dir), Seq("view", "click", "purchase"))
         .orderBy(col("stage"))
     }),
     "q_stream_hourly" -> ((s, dir) => {
-      prep(s)
       // glob (not the bare file path): FileStreamSource requires its base
       // path to be a directory, which glob resolution infers as $dir.
       streaming.EventsStream.runToCompletion(s, "q_stream_hourly_sink") { ss =>
@@ -51,7 +41,6 @@ private[graft] object EventsQueries {
     // deterministic oracle is batch sessionization MINUS the last session
     // per user.
     "q_stream_sessions" -> ((s, dir) => {
-      prep(s)
       streaming.EventsStream.runToCompletion(s, "q_stream_sessions_sink",
         org.apache.spark.sql.streaming.OutputMode.Append()) { ss =>
         import ss.implicits._
@@ -66,7 +55,6 @@ private[graft] object EventsQueries {
     // in-range (purchase, prior view) pair emits, so the batch interval
     // join IS the exact oracle.
     "q_stream_join" -> ((s, dir) => {
-      prep(s)
       // state width DERIVED from the stream's input bytes (floor 2): a
       // stream-stream join opens FOUR state stores per shuffle partition
       // per side, each paying open/commit I/O every batch — at 8
@@ -86,7 +74,6 @@ private[graft] object EventsQueries {
     // side once the watermark proves no match can arrive; the oracle is the
     // batch left join gated on the final watermark.
     "q_stream_join_outer" -> ((s, dir) => {
-      prep(s)
       // derived state width, floor 2: same four-stores-per-partition-per-
       // side measurement and derive-don't-hardcode rule as q_stream_join
       streaming.EventsStream.runToCompletion(s, "q_stream_join_outer_sink",
@@ -99,7 +86,6 @@ private[graft] object EventsQueries {
     }),
     // Streaming twin of q_dedup_exact: complete-mode running dedup state.
     "q_stream_dedup" -> ((s, dir) => {
-      prep(s)
       streaming.EventsStream.runToCompletion(s, "q_stream_dedup_sink") { ss =>
         streaming.EventsStream.streamingExactDedup(
           ss.readStream.schema(streaming.EventsStream.documentsSchema)
@@ -109,7 +95,6 @@ private[graft] object EventsQueries {
     // Streaming delta-vs-history dedup through the history's Bloom filter:
     // doc_id%3==0 streams in as the delta, the rest is the ingested base.
     "q_stream_bloom_dedup" -> ((s, dir) => {
-      prep(s)
       streaming.EventsStream.runToCompletion(s, "q_stream_bloom_sink",
         org.apache.spark.sql.streaming.OutputMode.Append()) { ss =>
         streaming.EventsStream.bloomDedupStream(
@@ -123,7 +108,6 @@ private[graft] object EventsQueries {
     // as a literal array in a stateless per-row scoring expression — the
     // streaming twin of q_quality_filter (same batch-chain oracle).
     "q_stream_quality" -> ((s, dir) => {
-      prep(s)
       val w = operators.TextAnalysis.perceptronTrainedWeights(
         s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text")
       streaming.EventsStream.runToCompletion(s, "q_stream_quality_sink",
@@ -138,7 +122,6 @@ private[graft] object EventsQueries {
     // features via the shared core, as a stateless typed flatMap (Append
     // mode, zero state). Same closed-form oracle as the batch twin.
     "q_stream_audio" -> ((s, dir) => {
-      prep(s)
       streaming.EventsStream.runToCompletion(s, "q_stream_audio_sink",
         org.apache.spark.sql.streaming.OutputMode.Append()) { ss =>
         // same glob as the batch twin q_audio_energy: both are gated on the

@@ -7,23 +7,16 @@ import graft.operators.Surrogate
 import graft.sources.{Crm, OracleSql => O}
 import QueryShared._
 
-/** Multimodal-family query registry (split out of SparkEntry in r14 — VERDICT r13
-  * "what's wrong" #4: one 4.6k-line file was the single edit point for every
-  * round). Entries and their DuckDB oracle mirrors are verbatim moves; the
-  * public surface is still [[SparkEntry.queries]]/[[SparkEntry.oracleSql]],
-  * which concatenates the registries in the original file order.
-  */
-private[graft] object MultimodalQueries {
+/** Multimodal-family query registry. */
+private[graft] object MultimodalQueries extends QueryFamily {
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ---- §7.5 extensions: multimodal plumbing (decode stubbed) ------------
     "q_multimodal_meta" -> ((s, dir) => {
-      prep(s)
       val docs = s.read.parquet(s"$dir/documents.parquet")
       operators.Multimodal.decodeMeta(s, operators.Multimodal.withPayload(docs, "text"), "doc_id")
         .drop("feature").orderBy(col("doc_id"))
     }),
     "q_multimodal_resize" -> ((s, dir) => {
-      prep(s)
       val docs = s.read.parquet(s"$dir/documents.parquet")
       operators.Multimodal.resizeMeta(
         operators.Multimodal.decodeMeta(s, operators.Multimodal.withPayload(docs, "text"), "doc_id"))
@@ -32,7 +25,6 @@ private[graft] object MultimodalQueries {
         .orderBy(col("doc_id"))
     }),
     "q_multimodal_frames" -> ((s, dir) => {
-      prep(s)
       val docs = s.read.parquet(s"$dir/documents.parquet")
       operators.Multimodal.sampleFrames(
         operators.Multimodal.withPayload(docs, "text"), "doc_id", stride = 16)
@@ -49,7 +41,6 @@ private[graft] object MultimodalQueries {
     // from the formula, proving the engine iterated genuinely decoded
     // frames (stride stub retired to opaque-codec payloads only).
     "q_multimodal_frames_real" -> ((s, dir) => {
-      prep(s)
       val docs = s.read.parquet(s"$dir/documents.parquet")
         .filter(col("doc_id") % 11 === 0)
       operators.Multimodal.frameStats(
@@ -59,7 +50,6 @@ private[graft] object MultimodalQueries {
     // REAL audio decode: RIFF/WAVE chunk walk + PCM16 sample aggregation,
     // oracle-recomputed from the synthetic generator's closed form.
     "q_multimodal_wav" -> ((s, dir) => {
-      prep(s)
       val docs = s.read.parquet(s"$dir/documents.parquet")
         .filter(col("doc_id") % 7 === 0)
       operators.Multimodal.wavStats(
@@ -72,7 +62,6 @@ private[graft] object MultimodalQueries {
     // recomputes each SAMPLED frame's sums from the closed-form pixel
     // formula, proving both the demux (true n_frames) and the decode.
     "q_multimodal_video" -> ((s, dir) => {
-      prep(s)
       val docs = s.read.parquet(s"$dir/documents.parquet")
         .filter(col("doc_id") % 13 === 0)
       operators.Multimodal.aviFrameSample(
@@ -85,7 +74,6 @@ private[graft] object MultimodalQueries {
     // zero-crossing and peak features per window, oracle-recomputed from
     // the synthetic generator's closed form.
     "q_audio_energy" -> ((s, dir) => {
-      prep(s)
       // the SAME glob as the streaming twin q_stream_audio (shared oracle
       // => structurally identical source contract; see the note there)
       val docs = s.read.parquet(s"$dir/documents.parquet*")
@@ -97,7 +85,6 @@ private[graft] object MultimodalQueries {
     }),
     // Overlapping byte-chunk segmentation plan over the opaque payload.
     "q_multimodal_chunks" -> ((s, dir) => {
-      prep(s)
       val docs = s.read.parquet(s"$dir/documents.parquet")
       operators.Multimodal.chunkPlan(
         operators.Multimodal.withPayload(docs, "text"), "doc_id")
@@ -107,7 +94,6 @@ private[graft] object MultimodalQueries {
     // pixel formula is closed-form, so DuckDB recomputes the exact channel
     // stats javax.imageio must read back out of the encoded bytes.
     "q_multimodal_pixels" -> ((s, dir) => {
-      prep(s)
       import graft.functions.GraftFunctions.detRound
       val docs = s.read.parquet(s"$dir/documents.parquet")
       val meta = operators.Multimodal.decodeMeta(
@@ -128,7 +114,6 @@ private[graft] object MultimodalQueries {
     // pixel formula (no codec in DuckDB), so a green gate proves the
     // engine's hash was computed from genuinely decoded pixels.
     "q_multimodal_phash" -> ((s, dir) => {
-      prep(s)
       val docs = s.read.parquet(s"$dir/documents.parquet")
       val hashed = operators.Multimodal.phashMeta(
         s, operators.Multimodal.withSyntheticImages(s, docs, "doc_id"), "doc_id")
@@ -146,7 +131,6 @@ private[graft] object MultimodalQueries {
     // NEAR-dup images at Hamming ≤ 3 over the dHash: pigeonhole 16-bit
     // chunk blocking + popcount verify — the image twin of q_dedup_simhash.
     "q_multimodal_phash_near" -> ((s, dir) => {
-      prep(s)
       val docs = s.read.parquet(s"$dir/documents.parquet")
       operators.Multimodal.phashNearDupPairs(
         operators.Multimodal.phashMeta(
@@ -157,7 +141,6 @@ private[graft] object MultimodalQueries {
     // join over the streamed sale headers — result equals the batch fact
     // minus the surrogate key, so it shares q_fato_vendas' oracle.
     "q_stream_fato" -> ((s, dir) => {
-      prep(s)
       import graft.functions.GraftFunctions.detRound
       val w = Warehouse.build(s, dir)
       streaming.FactStream.incrementalFact(s, dir, w.dimTempo, w.dimCliente,
@@ -175,7 +158,6 @@ private[graft] object MultimodalQueries {
     // int8 embedding quantization (max-abs scaling) — exploded to
     // (vec_id, pos, qval) rows, integer-exact across engines.
     "q_embed_quantize" -> ((s, dir) => {
-      prep(s)
       val emb = s.read.parquet(s"$dir/embeddings.parquet")
       val maxabs = array_max(transform(col("embedding"), x => abs(x.cast("double"))))
       emb.select(col("vec_id"), maxabs.as("__m"), posexplode(col("embedding")))

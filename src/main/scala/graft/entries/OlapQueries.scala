@@ -7,60 +7,45 @@ import graft.operators.Surrogate
 import graft.sources.{Crm, OracleSql => O}
 import QueryShared._
 
-/** Olap-family query registry (split out of SparkEntry in r14 — VERDICT r13
-  * "what's wrong" #4: one 4.6k-line file was the single edit point for every
-  * round). Entries and their DuckDB oracle mirrors are verbatim moves; the
-  * public surface is still [[SparkEntry.queries]]/[[SparkEntry.oracleSql]],
-  * which concatenates the registries in the original file order.
-  */
-private[graft] object OlapQueries {
+/** Olap-family query registry. */
+private[graft] object OlapQueries extends QueryFamily {
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ---- OLAP coverage: rollup/pivot/windows/percentiles/set-ops/Q3/asof --
     "q_rollup" -> ((s, dir) => {
-      prep(s)
       operators.Olap.rollupQuantities(li(s, dir))
         .orderBy(col("l_returnflag").asc_nulls_first, col("l_linestatus").asc_nulls_first)
     }),
     "q_pivot" -> ((s, dir) => {
-      prep(s)
       operators.Olap.pivotEventCounts(events(s, dir), EventTypes).orderBy(col("hora"))
     }),
     "q_window_running" -> ((s, dir) => {
-      prep(s)
       operators.Olap.runningTotals(ord(s, dir))
         .orderBy(col("o_custkey"), col("order_seq"))
     }),
     "q_percentile" -> ((s, dir) => {
-      prep(s)
       operators.Olap.pricePercentiles(li(s, dir)).orderBy(col("l_returnflag"))
     }),
     "q_set_ops" -> ((s, dir) => {
-      prep(s)
       operators.Olap.customerYearSetOps(ord(s, dir), 1996, 1997)
         .orderBy(col("tag"), col("o_custkey"))
     }),
     "q_set_ops_all" -> ((s, dir) => {
-      prep(s)
       operators.Olap.customerYearSetOpsAll(ord(s, dir), 1996, 1997)
         .orderBy(col("tag"), col("o_custkey"))
     }),
     "q_gapfill" -> ((s, dir) => {
-      prep(s)
       operators.Olap.hourlyGapFill(events(s, dir))
         .orderBy(col("hora"), col("event_type"))
     }),
     "q_olap_pricing" -> ((s, dir) => {
-      prep(s)
       operators.Olap.pricingSummary(cust(s, dir), ord(s, dir), li(s, dir),
         segment = "BUILDING", cutoff = "1998-01-01", k = 10)
     }),
     "q_asof_join" -> ((s, dir) => {
-      prep(s)
       operators.Olap.asofPriorEvent(events(s, dir), "view", "click")
         .orderBy(col("event_id"))
     }),
     "q_json_extract" -> ((s, dir) => {
-      prep(s)
       // semi-structured props column: JSON field extraction + aggregation
       events(s, dir)
         .withColumn("k", get_json_object(col("props"), "$.k").cast("long"))
@@ -70,7 +55,6 @@ private[graft] object OlapQueries {
         .orderBy(col("event_type"))
     }),
     "q_window_ntile" -> ((s, dir) => {
-      prep(s)
       // Scale-safe global ntile (r2 verdict #2): a bare Window.orderBy would
       // pull the whole table through one WindowExec task. Instead: dense
       // global rank via the two-pass offset scheme (no single-partition
@@ -99,7 +83,6 @@ private[graft] object OlapQueries {
         .orderBy(col("quartile"))
     }),
     "q_range_join" -> ((s, dir) => {
-      prep(s)
       // time-range join: per purchase, views by the same user in the
       // preceding 10 minutes — equi key (user_id) + interval predicate; the
       // equi part keeps it a hash/SMJ join, never a cartesian.

@@ -7,17 +7,11 @@ import graft.operators.Surrogate
 import graft.sources.{Crm, OracleSql => O}
 import QueryShared._
 
-/** Parity-family query registry (split out of SparkEntry in r14 — VERDICT r13
-  * "what's wrong" #4: one 4.6k-line file was the single edit point for every
-  * round). Entries and their DuckDB oracle mirrors are verbatim moves; the
-  * public surface is still [[SparkEntry.queries]]/[[SparkEntry.oracleSql]],
-  * which concatenates the registries in the original file order.
-  */
-private[graft] object ParityQueries {
+/** Parity-family query registry. */
+private[graft] object ParityQueries extends QueryFamily {
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ---- A-series: aggregations ------------------------------------------
     "q1_agg" -> ((s, dir) => {
-      prep(s)
       import graft.functions.GraftFunctions.{detRound, stableAvg2, stableSum2, stableSumScaled}
       li(s, dir).groupBy(col("l_returnflag"), col("l_linestatus"))
         .agg(
@@ -31,7 +25,6 @@ private[graft] object ParityQueries {
     }),
     // ---- SQL interface: temp views + spark.sql + SQL-registered UDF -------
     "q_sql_api" -> ((s, dir) => {
-      prep(s)
       s.udf.register("graft_clean", graft.functions.PyText.cleanText _)
       Crm.localidade(s, dir).createOrReplaceTempView("localidade_v")
       s.sql(
@@ -40,18 +33,15 @@ private[graft] object ParityQueries {
     }),
     // ---- P-series: scan/project/filter/distinct --------------------------
     "q_scan_project" -> ((s, dir) => {
-      prep(s)
       cust(s, dir).filter(col("c_acctbal") > 1000.0)
         .select(col("c_custkey"), col("c_name"), col("c_mktsegment"))
         .orderBy(col("c_custkey"))
     }),
     "q_distinct" -> ((s, dir) => {
-      prep(s)
       cust(s, dir).select(col("c_mktsegment")).distinct().orderBy(col("c_mktsegment"))
     }),
     // ---- J-series: joins ---------------------------------------------------
     "q_join_inner" -> ((s, dir) => {
-      prep(s)
       ord(s, dir).join(li(s, dir), col("o_orderkey") === col("l_orderkey"), "inner")
         .groupBy(col("o_orderkey"))
         .agg(count(lit(1)).as("n_items"),
@@ -61,17 +51,14 @@ private[graft] object ParityQueries {
         .orderBy(col("o_orderkey"))
     }),
     "q_anti_join" -> ((s, dir) => {
-      prep(s)
       cust(s, dir).join(ord(s, dir), col("c_custkey") === col("o_custkey"), "left_anti")
         .select(col("c_custkey"), col("c_name")).orderBy(col("c_custkey"))
     }),
     "q_semi_join" -> ((s, dir) => {
-      prep(s)
       cust(s, dir).join(ord(s, dir), col("c_custkey") === col("o_custkey"), "left_semi")
         .select(col("c_custkey"), col("c_name")).orderBy(col("c_custkey"))
     }),
     "q_decorrelated_avg" -> ((s, dir) => {
-      prep(s)
       val avgPrice = li(s, dir).groupBy(col("l_partkey"))
         .agg(graft.functions.GraftFunctions.stableAvg2(col("l_extendedprice")).as("__avg"))
       part(s, dir).join(avgPrice, col("p_partkey") === col("l_partkey"), "left")
@@ -82,12 +69,10 @@ private[graft] object ParityQueries {
     }),
     // ---- sort/limit/window -------------------------------------------------
     "q_topk" -> ((s, dir) => {
-      prep(s)
       ord(s, dir).select(col("o_orderkey"), col("o_totalprice"))
         .orderBy(col("o_totalprice").desc, col("o_orderkey")).limit(10)
     }),
     "q_window_rownum" -> ((s, dir) => {
-      prep(s)
       cust(s, dir)
         .withColumn("rn", row_number()
           .over(Window.partitionBy(col("c_mktsegment")).orderBy(col("c_custkey"))).cast("long"))
@@ -96,12 +81,10 @@ private[graft] object ParityQueries {
         .orderBy(col("c_mktsegment"), col("rn"))
     }),
     "q_surrogate_key" -> ((s, dir) => {
-      prep(s)
       Surrogate.withSurrogateKey(nat(s, dir).select(col("n_nationkey"), col("n_name")),
         "sk", Seq(col("n_nationkey"))).orderBy(col("n_nationkey"))
     }),
     "q_surrogate_scalable" -> ((s, dir) => {
-      prep(s)
       // §7.3 scale path: dense 1..N in total key order with NO
       // single-partition window (two-pass partition-offset row_number).
       Surrogate.zipWithIndexOrdered(
@@ -110,7 +93,6 @@ private[graft] object ParityQueries {
         .orderBy(col("o_orderkey"))
     }),
     "q_first_match" -> ((s, dir) => {
-      prep(s)
       // (l_orderkey, l_linenumber) is NOT unique in the testdata, so the
       // tiebreak includes l_partkey to stay deterministic.
       Surrogate.firstMatch(
@@ -119,7 +101,6 @@ private[graft] object ParityQueries {
         .orderBy(col("l_orderkey"))
     }),
     "q_join_full_outer" -> ((s, dir) => {
-      prep(s)
       val cu = cust(s, dir).groupBy(col("c_nationkey").as("nk_c"))
         .agg(count(lit(1)).as("n_customers"))
       val su = s.read.parquet(s"$dir/supplier.parquet")
@@ -131,13 +112,11 @@ private[graft] object ParityQueries {
         .orderBy(col("nationkey"))
     }),
     "q_cube" -> ((s, dir) => {
-      prep(s)
       li(s, dir).cube(col("l_returnflag"), col("l_linestatus"))
         .agg(count(lit(1)).as("n_rows"))
         .orderBy(col("l_returnflag").asc_nulls_first, col("l_linestatus").asc_nulls_first)
     }),
     "q_array_agg" -> ((s, dir) => {
-      prep(s)
       // Array outputs are serialized to a CSV string: the driver's pandas
       // comparator cannot sort array-typed cells (r2 verdict), and "1,5,9"
       // is engine-neutral for integer elements.

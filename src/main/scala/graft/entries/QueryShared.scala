@@ -4,16 +4,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sources.{OracleSql => O}
 
-/** Shared plumbing for the per-family query registries under entries/
-  * (split out of SparkEntry in r14): session prep, table readers, the
-  * build-once artifact memos, and the oracle-SQL helper fragments. All
-  * members were `private` in SparkEntry; `private[graft]` on the object
-  * keeps them out of the public API surface.
+/** Shared plumbing for the per-family query registries under entries/:
+  * session prep, table readers, the build-once artifact memos, temp
+  * artifact directories, and the oracle-SQL helper fragments.
   */
 private[graft] object QueryShared {
 
   /** F13 null-on-parse-failure requires non-ANSI mode (SURVEY §4.3); Spark 4
-    * defaults ANSI on, and the driver owns the session, so set it per call.
+    * defaults ANSI on, and the caller owns the session, so
+    * [[SparkEntry.queries]] sets it before every entry.
     * The UTC pin (also session-wide) makes timezone-sensitive semantics
     * uniform from the first query instead of flipping when the first
     * events-based query runs (r8 advice): every oracle comparison assumes a
@@ -24,7 +23,6 @@ private[graft] object QueryShared {
     s.conf.set("spark.sql.ansi.enabled", "false")
     s.conf.set("spark.sql.session.timeZone", "UTC")
   }
-
 
   def li(s: SparkSession, dir: String) = s.read.parquet(s"$dir/lineitem.parquet")
   def ord(s: SparkSession, dir: String) = s.read.parquet(s"$dir/orders.parquet")
@@ -63,24 +61,15 @@ private[graft] object QueryShared {
   /** MinHash-LSH pair artifact, memoized per (session, dir): the signatures/
     * pairs are build-once persisted artifacts by design (Dedup scaladoc), so
     * the near-dup pair query and the clustering query share ONE build instead
-    * of re-running the eager LSH job each. Stopped sessions are purged like
-    * Warehouse's memo.
+    * of re-running the eager LSH job each.
     */
   val lshPairsMemo =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
 
-  def lshPairs(s: SparkSession, dir: String): DataFrame = {
-    lshPairsMemo.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    val df = lshPairsMemo.computeIfAbsent((s, dir), _ =>
+  def lshPairs(s: SparkSession, dir: String): DataFrame =
+    memoizedArtifact(lshPairsMemo, s, dir)(
       operators.Dedup.minhashLshPairs(
         s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text"))
-    // minhashLshPairs returns an eagerly-cached artifact, but a caller that
-    // clears the cache (catalog.clearCache) still drops that storage — lazily
-    // re-persist like memoizedArtifact so no consumer ever silently
-    // re-executes the pair build PER ACTION (one rebuild is paid, once).
-    if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE) df.persist()
-    df
-  }
 
   /** Pruned co-purchase pair artifact (Basket.copurchasePairs), memoized per
     * (session, dir): all graph-family queries consume the SAME build-once
@@ -93,17 +82,16 @@ private[graft] object QueryShared {
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
 
   /** Memoize a build-once CACHED artifact per (session, dir) — the shared
-    * lifecycle of the co-purchase and quantizer artifacts: purge stopped
-    * sessions, cache on first build, and lazily re-persist if a
-    * family-boundary cache clear dropped the storage, so no consumer ever
-    * silently re-executes the build per action. (lshPairs stays separate:
-    * minhashLshPairs returns an already-cached eager artifact that owns
-    * its own lifecycle.) */
+    * lifecycle of the LSH-pair, co-purchase and quantizer artifacts: purge
+    * stopped sessions, build once, and persist whenever the frame is not
+    * cached — lazily on a lazy first build, and again if a caller cleared
+    * the cache — so no consumer ever silently re-executes the build per
+    * action. An eagerly cached build (minhashLshPairs) keeps its storage. */
   def memoizedArtifact(
       memo: java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame],
       s: SparkSession, dir: String)(build: => DataFrame): DataFrame = {
     memo.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    val df = memo.computeIfAbsent((s, dir), _ => build.cache())
+    val df = memo.computeIfAbsent((s, dir), _ => build)
     if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE) df.persist()
     df
   }
@@ -138,13 +126,13 @@ private[graft] object QueryShared {
   val bpeVocabMemo =
     new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
 
-  /** Recursively delete a memoized temp artifact dir at JVM exit (ADVICE
-    * r13: long-lived JVMs — test suites, repeated sessions — used to leak
-    * one temp dir per (session, dir) forever; the memo keys also pinned
-    * SparkSession objects on the heap. Keys are now (applicationId, dir)
-    * — value strings hold no session reference — and every temp dir is
-    * registered here once.) */
-  def deleteAtExit(dir: String): String = {
+  /** A fresh temp directory named after `tag`, deleted recursively at JVM
+    * exit, so long-lived JVMs (test suites, repeated sessions) do not
+    * accumulate one artifact or stream output per call. The disk-artifact
+    * memos key on (applicationId, dir) and hold path strings, so they pin
+    * no SparkSession either. */
+  def tempDir(tag: String): String = {
+    val dir = java.nio.file.Files.createTempDirectory(tag).toString
     Runtime.getRuntime.addShutdownHook(new Thread(() => {
       def rm(f: java.io.File): Unit = {
         Option(f.listFiles).getOrElse(Array.empty).foreach(rm); f.delete(): Unit
@@ -157,8 +145,7 @@ private[graft] object QueryShared {
   def bpeVocabArtifact(s: SparkSession, dir: String): String =
     bpeVocabMemo.computeIfAbsent((s.sparkContext.applicationId, dir), _ => {
       val docs = s.read.parquet(s"$dir/documents.parquet")
-      val art = deleteAtExit(
-        java.nio.file.Files.createTempDirectory("bpe_vocab").toString)
+      val art = tempDir("bpe_vocab")
       operators.TextAnalysis.writeBpeVocab(docs, "doc_id", "text", rounds = 5, art)
       operators.ArtifactManifest.write(art, docs, Seq(col("doc_id"), col("text")))
       art
@@ -170,8 +157,7 @@ private[graft] object QueryShared {
   def ivfPqIndexArtifact(s: SparkSession, dir: String): String =
     ivfPqIndexMemo.computeIfAbsent((s.sparkContext.applicationId, dir), _ => {
       val emb = s.read.parquet(s"$dir/embeddings.parquet")
-      val idx = deleteAtExit(
-        java.nio.file.Files.createTempDirectory("ivfpq_index").toString)
+      val idx = tempDir("ivfpq_index")
       // reuse the memoized fixed-K coarse quantizer (identical train:
       // kmeansFixedK(embeddings, 32, 2) — bit-identical by construction;
       // the index build used to re-run the Lloyd train the suite had
@@ -182,8 +168,6 @@ private[graft] object QueryShared {
         Seq(col("vec_id"), col("embedding")))
       idx
     })
-
-  /** One entry per implemented operator from SURVEY.md §2. */
 
   /** Shared by q_drift and q_stream_drift (the streaming run's bounded
     * complete-mode counts equal the batch counts, so one mirror serves both). */
@@ -241,8 +225,6 @@ private[graft] object QueryShared {
   def sampleKeepSql(keyExpr: String, fraction: Double): String =
     s"CAST('0x' || substr(md5(CAST($keyExpr AS VARCHAR)), 1, 15) AS BIGINT) < ${operators.Sampling.cut(fraction)}"
 
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
   /** Shared by q_domain_cap and q_domain_cap_agg — both query forms have
     * the identical contract (unscorable null-score docs excluded), so one
     * oracle text serves both and cannot desynchronize. */

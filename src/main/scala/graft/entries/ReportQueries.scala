@@ -7,17 +7,11 @@ import graft.operators.Surrogate
 import graft.sources.{Crm, OracleSql => O}
 import QueryShared._
 
-/** Report-family query registry (split out of SparkEntry in r14 — VERDICT r13
-  * "what's wrong" #4: one 4.6k-line file was the single edit point for every
-  * round). Entries and their DuckDB oracle mirrors are verbatim moves; the
-  * public surface is still [[SparkEntry.queries]]/[[SparkEntry.oracleSql]],
-  * which concatenates the registries in the original file order.
-  */
-private[graft] object ReportQueries {
+/** Report-family query registry. */
+private[graft] object ReportQueries extends QueryFamily {
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ---- A2/A3 summary report ---------------------------------------------
     "q_report_summary" -> ((s, dir) => {
-      prep(s)
       val w = Warehouse.build(s, dir)
       val counts = w.tables.map { case (name, df) =>
         df.groupBy().agg(count(lit(1)).as("registros")).select(lit(name).as("tabela"), col("registros"))

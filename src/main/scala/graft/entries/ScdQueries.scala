@@ -7,17 +7,11 @@ import graft.operators.Surrogate
 import graft.sources.{Crm, OracleSql => O}
 import QueryShared._
 
-/** Scd-family query registry (split out of SparkEntry in r14 — VERDICT r13
-  * "what's wrong" #4: one 4.6k-line file was the single edit point for every
-  * round). Entries and their DuckDB oracle mirrors are verbatim moves; the
-  * public surface is still [[SparkEntry.queries]]/[[SparkEntry.oracleSql]],
-  * which concatenates the registries in the original file order.
-  */
-private[graft] object ScdQueries {
+/** Scd-family query registry. */
+private[graft] object ScdQueries extends QueryFamily {
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ---- DW temporal versioning (SCD Type 2) ------------------------------
     "q_scd2" -> ((s, dir) => {
-      prep(s)
       operators.Scd.scd2(ord(s, dir),
         col("o_custkey"), col("o_orderdate"), col("o_orderpriority"))
         .select(col("key").as("o_custkey"), col("version"), col("attr").as("priority"),
@@ -27,7 +21,6 @@ private[graft] object ScdQueries {
     // Point-in-time (temporal) lookup against the SCD2 dimension: every
     // probe lands in exactly one [valid_from, valid_to) interval.
     "q_scd2_lookup" -> ((s, dir) => {
-      prep(s)
       val versions = operators.Scd.scd2(ord(s, dir),
         col("o_custkey"), col("o_orderdate"), col("o_orderpriority"))
       operators.Scd.asOfLookup(

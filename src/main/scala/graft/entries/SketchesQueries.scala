@@ -7,18 +7,12 @@ import graft.operators.Surrogate
 import graft.sources.{Crm, OracleSql => O}
 import QueryShared._
 
-/** Sketches-family query registry (split out of SparkEntry in r14 — VERDICT r13
-  * "what's wrong" #4: one 4.6k-line file was the single edit point for every
-  * round). Entries and their DuckDB oracle mirrors are verbatim moves; the
-  * public surface is still [[SparkEntry.queries]]/[[SparkEntry.oracleSql]],
-  * which concatenates the registries in the original file order.
-  */
-private[graft] object SketchesQueries {
+/** Sketches-family query registry. */
+private[graft] object SketchesQueries extends QueryFamily {
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ---- §7.5 round 5: deterministic sketches ------------------------------
     // Per-language HLL distinct-token estimate next to the exact count.
     "q_hll_distinct" -> ((s, dir) => {
-      prep(s)
       val tok = s.read.parquet(s"$dir/documents.parquet")
         .select(col("lang"), explode(operators.TextAnalysis.words(col("text"))).as("w"))
       operators.Sketches.hllDistinct(tok, col("lang"), col("w"))
@@ -27,14 +21,12 @@ private[graft] object SketchesQueries {
     }),
     // Count-min sketch estimates for the exact top-20 corpus terms.
     "q_heavy_hitters" -> ((s, dir) => {
-      prep(s)
       val tok = s.read.parquet(s"$dir/documents.parquet")
         .select(explode(operators.TextAnalysis.words(col("text"))).as("term"))
       operators.Sketches.cmsHeavyHitters(tok, col("term"), 20)
     }),
     // MOSS winnowing fingerprints: position-aware k-gram selections.
     "q_winnow" -> ((s, dir) => {
-      prep(s)
       operators.TextAnalysis.winnow(
         s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text")
         .orderBy(col("doc_id"), col("pos"), col("fp"))
@@ -42,33 +34,28 @@ private[graft] object SketchesQueries {
     // Vocabulary coverage curve via the distributed prefix sum — no global
     // window anywhere (Surrogate.rankedRunningTotal).
     "q_vocab_coverage" -> ((s, dir) => {
-      prep(s)
       operators.TextAnalysis.vocabCoverage(
         s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text",
         Seq(0.5, 0.9, 0.99))
     }),
     // Web-corpus rebalancing: keep at most 50 best docs per source domain.
     "q_domain_cap" -> ((s, dir) => {
-      prep(s)
       operators.Curation.capPerDomain(
         s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text", "source", 50)
         .orderBy(col("domain"), col("rank_in_domain"))
     }),
     // Join-key skew diagnostics over the fact join key.
     "q_key_skew" -> ((s, dir) => {
-      prep(s)
       operators.Olap.keySkewStats(li(s, dir), col("l_orderkey"))
     }),
     // Catalog-style column profile over the noisy cliente table.
     "q_column_profile" -> ((s, dir) => {
-      prep(s)
       operators.Quality.columnProfile(Crm.cliente(s, dir),
         Seq("nome_cliente", "idade", "genero", "id_categoria_cliente", "id_localidade"))
         .orderBy(col("column_name"))
     }),
     // k-anonymity audit over (lang, source, length-bucket) quasi-identifiers.
     "q_k_anonymity" -> ((s, dir) => {
-      prep(s)
       operators.Quality.kAnonymity(
         s.read.parquet(s"$dir/documents.parquet"),
         Seq(col("lang"), col("source"),
@@ -77,7 +64,6 @@ private[graft] object SketchesQueries {
     }),
     // l-diversity twin: groups must also span >= l distinct langs.
     "q_l_diversity" -> ((s, dir) => {
-      prep(s)
       operators.Quality.lDiversity(
         s.read.parquet(s"$dir/documents.parquet"),
         Seq(col("source"), (col("n_chars") / 200).cast("long").as("len_bucket")),
@@ -86,7 +72,6 @@ private[graft] object SketchesQueries {
     }),
     // t-closeness: group lang-distributions within TV distance t of global.
     "q_t_closeness" -> ((s, dir) => {
-      prep(s)
       operators.Quality.tCloseness(
         s.read.parquet(s"$dir/documents.parquet"),
         Seq(col("source"), (col("n_chars") / 200).cast("long").as("len_bucket")),
@@ -95,40 +80,34 @@ private[graft] object SketchesQueries {
     }),
     // Gini concentration of the docs-per-domain distribution.
     "q_domain_gini" -> ((s, dir) => {
-      prep(s)
       operators.Curation.domainConcentration(
         s.read.parquet(s"$dir/documents.parquet"), "source")
     }),
     // Same cap via the O(k)-state TopKByScore aggregate (the mega-domain
     // scale path) — shares q_domain_cap's oracle: identical output.
     "q_domain_cap_agg" -> ((s, dir) => {
-      prep(s)
       operators.Curation.capPerDomainAgg(
         s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text", "source", 50)
         .orderBy(col("domain"), col("rank_in_domain"))
     }),
     // Trailing-24h z-score volume anomalies on the hourly event series.
     "q_zscore_anomaly" -> ((s, dir) => {
-      prep(s)
       operators.Events.zscoreAnomalies(events(s, dir))
     }),
     // Asymmetric containment near-dups via DF-ordered prefix filtering.
     "q_containment" -> ((s, dir) => {
-      prep(s)
       operators.Dedup.containmentPairs(
         s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text")
         .orderBy(col("doc_id_a"), col("doc_id_b"))
     }),
     // Hopping 2h/1h windows — each event in exactly two windows.
     "q_events_sliding" -> ((s, dir) => {
-      prep(s)
       operators.Events.slidingCounts(events(s, dir))
         .orderBy(col("win_start"), col("event_type"))
     }),
     // Native session_window streaming sessionization (vs the custom
     // flatMapGroupsWithState form of q_stream_sessions).
     "q_stream_session_window" -> ((s, dir) => {
-      prep(s)
       streaming.EventsStream.runToCompletion(s, "q_stream_session_window_sink",
         org.apache.spark.sql.streaming.OutputMode.Append()) { ss =>
         streaming.EventsStream.sessionWindowAgg(
@@ -137,7 +116,6 @@ private[graft] object SketchesQueries {
     }),
     // HLL register merge: per-day estimate rolled up from hourly registers.
     "q_hll_merge" -> ((s, dir) => {
-      prep(s)
       // cast: both engines must md5 the same bytes — the decimal string form
       operators.Sketches.hllMergedDaily(events(s, dir), col("ts"),
         col("user_id").cast("string"))
@@ -146,7 +124,6 @@ private[graft] object SketchesQueries {
     // Native bounded-state streaming dedup (keys only — arrival order
     // decides the winning payload, so only the key set is deterministic).
     "q_stream_dedup_wm" -> ((s, dir) => {
-      prep(s)
       streaming.EventsStream.runToCompletion(s, "q_stream_dedup_wm_sink",
         org.apache.spark.sql.streaming.OutputMode.Append()) { ss =>
         streaming.EventsStream.streamingDedupWithinWatermark(
@@ -155,7 +132,6 @@ private[graft] object SketchesQueries {
     }),
     // Streaming hopping windows (complete mode == batch sliding counts).
     "q_stream_sliding" -> ((s, dir) => {
-      prep(s)
       streaming.EventsStream.runToCompletion(s, "q_stream_sliding_sink") { ss =>
         streaming.EventsStream.slidingCountsStream(
           streaming.EventsStream.readEventsStreamNanos(ss, s"$dir/events*"))
@@ -163,14 +139,12 @@ private[graft] object SketchesQueries {
     }),
     // One Lloyd refinement step over the IVF seed centroids.
     "q_kmeans_step" -> ((s, dir) => {
-      prep(s)
       operators.Similarity.kmeansStep(s.read.parquet(s"$dir/embeddings.parquet"))
         .orderBy(col("cell"), col("pos"))
     }),
     // Lloyd's to a fixpoint (tol=0 ⇒ exactly 3 deterministic rounds, the
     // mode the DuckDB oracle unrolls); final centroids exploded per-element.
     "q_kmeans" -> ((s, dir) => {
-      prep(s)
       operators.Similarity.kmeans(s.read.parquet(s"$dir/embeddings.parquet"), maxIter = 3)
         .select(col("cell"), col("n_vectors"), posexplode(col("emb_cent")))
         .select(col("cell"), col("pos").cast("long").as("pos"),
@@ -179,7 +153,6 @@ private[graft] object SketchesQueries {
     }),
     // CDC apply: latest-wins snapshot from a synthesized I/U/D change log.
     "q_cdc_apply" -> ((s, dir) => {
-      prep(s)
       val o = ord(s, dir)
       val ins = o.select(col("o_orderkey").as("k"), col("o_orderdate").as("vts"),
         lit("I").as("op"), col("o_totalprice").as("price"))
@@ -199,7 +172,6 @@ private[graft] object SketchesQueries {
     }),
     // Deterministic fixed-size per-language reservoir (eval-set carving).
     "q_reservoir" -> ((s, dir) => {
-      prep(s)
       operators.Sampling.reservoirPerGroup(
         s.read.parquet(s"$dir/documents.parquet"), col("doc_id"), col("lang"), 20)
         .select(col("group").as("lang"), col("rank"), col("key").as("doc_id"))
@@ -207,13 +179,11 @@ private[graft] object SketchesQueries {
     }),
     // Weekly cohort retention over events.
     "q_retention" -> ((s, dir) => {
-      prep(s)
       operators.Events.retention(events(s, dir))
         .orderBy(col("cohort_week"), col("age_weeks"))
     }),
     // Incremental view maintenance: merged partial states == full aggregate.
     "q_incr_agg" -> ((s, dir) => {
-      prep(s)
       val o = ord(s, dir)
       val split = lit("1995-01-01").cast("timestamp")
       val base = operators.Incremental.revenueState(o.filter(col("o_orderdate") < split))
@@ -223,7 +193,6 @@ private[graft] object SketchesQueries {
     }),
     // Data-quality audit over the dirty CRM inputs (one scan per table).
     "q_dq_report" -> ((s, dir) => {
-      prep(s)
       import graft.functions.GraftFunctions.{isDateSentinel, keepRowForDate}
       operators.Quality.report(
         Map(
@@ -250,7 +219,6 @@ private[graft] object SketchesQueries {
     // Time-RANGE window frame: trailing-3h sums over the hourly series
     // (RANGE, not ROWS — gaps in the series change the answer).
     "q_window_range_frame" -> ((s, dir) => {
-      prep(s)
       val hourly = events(s, dir)
         .groupBy(col("event_type"), date_trunc("hour", col("ts")).as("hora"))
         .agg(count(lit(1)).as("n_events"))
@@ -263,7 +231,6 @@ private[graft] object SketchesQueries {
     // Percent-of-total (ratio_to_report) via a broadcast grand total — the
     // scale-safe form (no global window over data rows).
     "q_share" -> ((s, dir) => {
-      prep(s)
       import graft.functions.GraftFunctions.{detRound, stableSum2}
       val seg = cust(s, dir).groupBy(col("c_mktsegment"))
         .agg(stableSum2(col("c_acctbal")).as("seg_balance"),
@@ -278,7 +245,6 @@ private[graft] object SketchesQueries {
     }),
     // Native session_window in BATCH mode (same operator as the stream).
     "q_session_batch" -> ((s, dir) => {
-      prep(s)
       events(s, dir)
         .groupBy(session_window(col("ts"), "30 minutes").as("sw"), col("user_id"))
         .agg(count(lit(1)).as("n_events"))
@@ -288,28 +254,24 @@ private[graft] object SketchesQueries {
     }),
     // Rebalance to a target mix: data-dependent per-language fractions.
     "q_mix_rebalance" -> ((s, dir) => {
-      prep(s)
       operators.Sampling.rebalanceToTarget(
         s.read.parquet(s"$dir/documents.parquet"), col("doc_id"), col("lang"), 60)
         .select(col("doc_id"), col("lang")).orderBy(col("doc_id"))
     }),
     // Deterministic Poisson bootstrap: 16 replicates of mean(o_totalprice).
     "q_bootstrap" -> ((s, dir) => {
-      prep(s)
       operators.Sampling.poissonBootstrap(
         ord(s, dir), col("o_orderkey"), col("o_totalprice"))
         .orderBy(col("r"))
     }),
     // Temperature-scaled mixture sampling (XLM-R α=0.5 via exact sqrt).
     "q_temperature_mix" -> ((s, dir) => {
-      prep(s)
       operators.Sampling.temperatureMix(
         s.read.parquet(s"$dir/documents.parquet"), col("doc_id"), col("lang"), 150)
         .select(col("doc_id"), col("lang")).orderBy(col("doc_id"))
     }),
     // Weighted Bernoulli sample: inclusion probability ∝ document length.
     "q_weighted_sample" -> ((s, dir) => {
-      prep(s)
       operators.Sampling.weightedSample(
         s.read.parquet(s"$dir/documents.parquet"), col("doc_id"), col("n_chars"),
         targetFraction = 0.8)
@@ -317,7 +279,6 @@ private[graft] object SketchesQueries {
     }),
     // Leakage-safe group k-fold: a domain never straddles folds.
     "q_group_kfold" -> ((s, dir) => {
-      prep(s)
       operators.Sampling.groupKFold(
         s.read.parquet(s"$dir/documents.parquet").select(col("doc_id"), col("source")),
         col("source"), 5)
@@ -325,7 +286,6 @@ private[graft] object SketchesQueries {
     }),
     // Duplicate-span fraction: per doc, share of 5-gram hashes seen in ≥2 docs.
     "q_dup_span" -> ((s, dir) => {
-      prep(s)
       operators.Dedup.duplicateSpanStats(
         s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text")
         .orderBy(col("doc_id"))
@@ -333,7 +293,6 @@ private[graft] object SketchesQueries {
     // Exact duplicated-substring spans (ExactSubstr, Lee et al. 2022):
     // bounded prefix-doubling suffix ranks — hash-free, exact at any scale.
     "q_exact_substr" -> ((s, dir) => {
-      prep(s)
       operators.Dedup.exactSubstrSpans(
         s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text")
         .orderBy(col("doc_id"))
@@ -341,7 +300,6 @@ private[graft] object SketchesQueries {
     // The ExactSubstr cleaning transform: duplicated spans cut out of the
     // corpus, canonical-form reconstruction of the survivors.
     "q_exact_substr_clean" -> ((s, dir) => {
-      prep(s)
       operators.Dedup.exactSubstrClean(
         s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text")
         .orderBy(col("doc_id"))
@@ -349,7 +307,6 @@ private[graft] object SketchesQueries {
     // Sorted-neighborhood entity resolution (Hernández & Stolfo 1995):
     // N·w candidates by construction, codegen Jaro-Winkler comparator.
     "q_er_neighborhood" -> ((s, dir) => {
-      prep(s)
       operators.Linkage.sortedNeighborhood(part(s, dir), "p_partkey", "p_name")
         .orderBy(col("id1"), col("id2"))
     }),
@@ -360,7 +317,6 @@ private[graft] object SketchesQueries {
     // pair space vocabulary-bounded as the corpus grows (this table keeps
     // 64 distinct names at every sf — raw pairs would grow ~100x/decade).
     "q_edit_neardup" -> ((s, dir) => {
-      prep(s)
       val base = part(s, dir).select(col("p_partkey"), col("p_name"))
       val dirty = base.filter(pmod(col("p_partkey"), lit(10)) === 0)
         .select((col("p_partkey") + 10000000L).as("p_partkey"),
@@ -373,14 +329,12 @@ private[graft] object SketchesQueries {
     }),
     // CCNet-style head/middle/tail LM quality terciles.
     "q_lm_bucket" -> ((s, dir) => {
-      prep(s)
       operators.TextAnalysis.lmQualityBuckets(
         s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text")
         .orderBy(col("doc_id"))
     }),
     // Hashed-feature linear scorer: fastText-filter plumbing, margin + keep.
     "q_logreg_score" -> ((s, dir) => {
-      prep(s)
       operators.TextAnalysis.hashLinearScore(
         s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text")
         .orderBy(col("doc_id"))
@@ -389,7 +343,6 @@ private[graft] object SketchesQueries {
     // unigram features, weak-supervised by the lang-id heuristic — the
     // learned weight table q_logreg_score's doc promises.
     "q_quality_train" -> ((s, dir) => {
-      prep(s)
       operators.TextAnalysis.perceptronTrain(
         s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text")
         .orderBy(col("bucket"))
@@ -397,7 +350,6 @@ private[graft] object SketchesQueries {
     // The trained classifier's consumer: the corpus filtered by the learned
     // weights (integer-exact margins, keep = margin > 0).
     "q_quality_filter" -> ((s, dir) => {
-      prep(s)
       operators.TextAnalysis.perceptronScore(
         s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text")
         .orderBy(col("doc_id"))
@@ -406,10 +358,8 @@ private[graft] object SketchesQueries {
     // the corpus scored from the artifact (inference only — no labels, no
     // training loop) — output-equal to q_quality_filter, same oracle.
     "q_quality_artifact" -> ((s, dir) => {
-      prep(s)
       val docs = s.read.parquet(s"$dir/documents.parquet")
-      val art = deleteAtExit(
-        java.nio.file.Files.createTempDirectory("quality_model").toString)
+      val art = tempDir("quality_model")
       operators.TextAnalysis.writeQualityModel(docs, "doc_id", "text", art)
       operators.TextAnalysis.perceptronScoreWithModel(docs, "doc_id", "text", art)
         .orderBy(col("doc_id"))

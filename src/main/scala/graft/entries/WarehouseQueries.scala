@@ -7,45 +7,34 @@ import graft.operators.Surrogate
 import graft.sources.{Crm, OracleSql => O}
 import QueryShared._
 
-/** Warehouse-family query registry (split out of SparkEntry in r14 — VERDICT r13
-  * "what's wrong" #4: one 4.6k-line file was the single edit point for every
-  * round). Entries and their DuckDB oracle mirrors are verbatim moves; the
-  * public surface is still [[SparkEntry.queries]]/[[SparkEntry.oracleSql]],
-  * which concatenates the registries in the original file order.
-  */
-private[graft] object WarehouseQueries {
+/** Warehouse-family query registry. */
+private[graft] object WarehouseQueries extends QueryFamily {
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ---- DW dimension builds (CRM-shaped inputs from Crm adapter) ---------
     "q_dim_localidade" -> ((s, dir) => {
-      prep(s)
       operators.Dims.dimLocalidade(Crm.localidade(s, dir)).orderBy(col("id_localidade"))
     }),
     "q_dim_categoria_cliente" -> ((s, dir) => {
-      prep(s)
       operators.Dims.dimCategoriaCliente(Crm.categoriaCliente(s, dir))
         .orderBy(col("id_categoria_cliente"))
     }),
     "q_dim_categoria_produto" -> ((s, dir) => {
-      prep(s)
       operators.Dims.dimCategoriaProduto(Crm.categoriaProduto(s, dir))
         .orderBy(col("id_categoria_produto"))
     }),
     "q_dim_fornecedor" -> ((s, dir) => {
-      prep(s)
       operators.Dims.dimFornecedor(Crm.fornecedores(s, dir)).orderBy(col("id_fornecedor"))
     }),
     // Each dim query constructs ONLY its dependency chain — Warehouse.build
     // would analyze the full fact plan just to discard it (DataFrame ops run
     // the Catalyst analyzer eagerly, so dead plan weight costs real seconds).
     "q_dim_cliente" -> ((s, dir) => {
-      prep(s)
       operators.Dims.dimCliente(Crm.cliente(s, dir),
         operators.Dims.dimCategoriaCliente(Crm.categoriaCliente(s, dir)),
         operators.Dims.dimLocalidade(Crm.localidade(s, dir)))
         .drop("data_cadastro").orderBy(col("id_cliente"))
     }),
     "q_dim_produto" -> ((s, dir) => {
-      prep(s)
       import graft.functions.GraftFunctions.detRound
       operators.Dims.dimProduto(Crm.produto(s, dir), Crm.itemVendas(s, dir),
         operators.Dims.dimCategoriaProduto(Crm.categoriaProduto(s, dir))).select(col("sk_produto"), col("id_produto"), col("nome_produto"),
@@ -56,25 +45,20 @@ private[graft] object WarehouseQueries {
         col("status_produto")).orderBy(col("id_produto"))
     }),
     "q_dim_vendedor" -> ((s, dir) => {
-      prep(s)
       operators.Dims.dimVendedor(Crm.vendedor(s, dir)).orderBy(col("id_vendedor"))
     }),
     "q_dim_loja" -> ((s, dir) => {
-      prep(s)
       operators.Dims.dimLoja(Crm.lojas(s, dir),
         operators.Dims.dimLocalidade(Crm.localidade(s, dir))).orderBy(col("id_loja"))
     }),
     "q_dim_promocao" -> ((s, dir) => {
-      prep(s)
       operators.Dims.dimPromocao(Crm.promocoes(s, dir)).orderBy(col("id_promocao"))
     }),
     "q_dim_tempo" -> ((s, dir) => {
-      prep(s)
       operators.Dims.dimTempo(s).orderBy(col("data_completa"))
     }),
     // ---- the fact build (flagship) ----------------------------------------
     "q_fato_vendas" -> ((s, dir) => {
-      prep(s)
       val w = Warehouse.build(s, dir)
       w.fatoVendas.select(
         col("id_venda"), col("id_produto"),
@@ -89,7 +73,6 @@ private[graft] object WarehouseQueries {
     // v2 fact (reference's dead-code promo variant — the only consumer of
     // J7/J9/F9; SURVEY §3.3 keeps it as an explicitly-flagged variant).
     "q_fato_vendas_v2" -> ((s, dir) => {
-      prep(s)
       import graft.functions.GraftFunctions.detRound
       // Share the memoized Warehouse dims: v1 and v2 consume the SAME
       // dimension tables (the reference's two fact loaders do too), so
@@ -118,7 +101,6 @@ private[graft] object WarehouseQueries {
     // ONE-SHOT batch fact, so a slicing bug that drops/duplicates a row
     // across slice boundaries hash-mismatches here).
     "q_fato_backfill" -> ((s, dir) => {
-      prep(s)
       val w = Warehouse.build(s, dir)
       operators.Fact.fatoVendasBackfill(
         Crm.vendas(s, dir), Crm.itemVendas(s, dir),
@@ -142,11 +124,8 @@ private[graft] object WarehouseQueries {
     // oracle then re-proves content preservation differentially against
     // the ORIGINAL source table, one rewrite removed.
     "q_compact_docs" -> ((s, dir) => {
-      prep(s)
-      val scatter = deleteAtExit(
-        java.nio.file.Files.createTempDirectory("compact_in").toString)
-      val out = deleteAtExit(
-        java.nio.file.Files.createTempDirectory("compact_out").toString)
+      val scatter = tempDir("compact_in")
+      val out = tempDir("compact_out")
       s.read.parquet(s"$dir/documents.parquet").repartition(32)
         .write.mode("overwrite").parquet(scatter)
       operators.Compaction.compact(s, scatter, out, targetFileBytes = 8L << 20)
@@ -161,11 +140,8 @@ private[graft] object WarehouseQueries {
     // re-derives lang from the directory layout, so the oracle also proves
     // the partition scheme survived the rewrite.
     "q_compact_partitioned" -> ((s, dir) => {
-      prep(s)
-      val scatter = deleteAtExit(
-        java.nio.file.Files.createTempDirectory("compact_part_in").toString)
-      val out = deleteAtExit(
-        java.nio.file.Files.createTempDirectory("compact_part_out").toString)
+      val scatter = tempDir("compact_part_in")
+      val out = tempDir("compact_part_out")
       s.read.parquet(s"$dir/documents.parquet").repartition(8)
         .write.partitionBy("lang").mode("overwrite").parquet(scatter)
       operators.Compaction.compactPartitioned(s, scatter, out,
@@ -183,11 +159,8 @@ private[graft] object WarehouseQueries {
     // flattened it). The flat compact() path now refuses nested inputs
     // outright (spec-pinned), so the flatten bug is unreachable.
     "q_compact_nested" -> ((s, dir) => {
-      prep(s)
-      val scatter = deleteAtExit(
-        java.nio.file.Files.createTempDirectory("compact_nest_in").toString)
-      val out = deleteAtExit(
-        java.nio.file.Files.createTempDirectory("compact_nest_out").toString)
+      val scatter = tempDir("compact_nest_in")
+      val out = tempDir("compact_nest_out")
       s.read.parquet(s"$dir/documents.parquet")
         .withColumn("day", col("doc_id") % 3)
         .repartition(4)
@@ -205,9 +178,7 @@ private[graft] object WarehouseQueries {
     // so the S9 sorted-layout row-skipping survives the rewrite. Content
     // gate is the full key/qty projection vs the source table.
     "q_compact_range" -> ((s, dir) => {
-      prep(s)
-      val out = deleteAtExit(
-        java.nio.file.Files.createTempDirectory("compact_range").toString)
+      val out = tempDir("compact_range")
       operators.Compaction.compact(s, s"$dir/lineitem.parquet", out,
         targetFileBytes = 4L << 20, sortCol = Some("l_orderkey"))
       s.read.parquet(out)

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{ArrayType, FloatType, IntegerType, LongType, StructField, StructType}
 
+import graft.QueryShared.tempDir
 import graft.operators.{ArtifactManifest, Similarity}
 
 /** Streaming refresh of the persisted IVF-PQ index — the ANN twin of
@@ -109,20 +110,18 @@ object AnnIndexRefresh {
     * from the artifact alone — output-equal to the train-on-base /
     * assign-all oracle chain. */
   def gatedRefresh(s: SparkSession, dir: String): DataFrame = {
-    def tmp(tag: String) = graft.QueryShared.deleteAtExit(
-      java.nio.file.Files.createTempDirectory(tag).toString)
     val emb = s.read.parquet(s"$dir/embeddings.parquet")
     val base = emb.filter(col("vec_id") % 4 =!= 0)
     val delta = emb.filter(col("vec_id") % 4 === 0)
-    val idx = tmp("ann_refresh_idx")
+    val idx = tempDir("ann_refresh_idx")
     Similarity.writeIvfPqIndex(base, idx)
     ArtifactManifest.write(idx, base.select(col("vec_id"), col("embedding")),
       Seq(col("vec_id"), col("embedding")))
     // deterministic 3-file split of the delta = 3 micro-batches
-    val deltaDir = tmp("ann_refresh_delta")
+    val deltaDir = tempDir("ann_refresh_delta")
     delta.repartitionByRange(3, col("vec_id"))
       .write.mode("overwrite").parquet(deltaDir)
-    refreshFromStream(s, deltaDir, idx, tmp("ann_refresh_ck"))
+    refreshFromStream(s, deltaDir, idx, tempDir("ann_refresh_ck"))
     Similarity.ivfPqSearchIndex(
       idx, emb.filter(col("vec_id") % 50 === 0 && col("vec_id") < 2000), k = 5)
   }

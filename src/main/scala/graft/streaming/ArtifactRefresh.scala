@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
+import graft.QueryShared.tempDir
 import graft.operators.{ArtifactManifest, Dedup}
 
 /** Streaming refresh of the persisted MinHash-LSH signature artifact
@@ -132,16 +133,14 @@ object ArtifactRefresh {
     * return the accumulated pairs — output-equivalent to the one-shot
     * batch delta path (q_dedup_artifact's oracle). */
   def gatedRefresh(s: SparkSession, dir: String): DataFrame = {
-    def tmp(tag: String) = graft.QueryShared.deleteAtExit(
-      java.nio.file.Files.createTempDirectory(tag).toString)
     val docs = s.read.parquet(s"$dir/documents.parquet")
     val base = docs.filter(col("doc_id") % 4 =!= 0)
     val delta = docs.filter(col("doc_id") % 4 === 0)
-    val art = tmp("stream_refresh_art")
+    val art = tempDir("stream_refresh_art")
     // the three setup tracks are independent (artifact tables, manifest
     // sidecar, delta files) — overlap them (guide §2.6); the stream starts
     // only after all three have landed
-    val deltaDir = tmp("stream_refresh_delta")
+    val deltaDir = tempDir("stream_refresh_delta")
     IdempotentFold.inParallel(s)(
       () => Dedup.writeSignatureArtifact(base, "doc_id", "text", art),
       () => ArtifactManifest.write(art, base.select(col("doc_id"), col("text")),
@@ -149,9 +148,9 @@ object ArtifactRefresh {
       // deterministic 3-file split of the delta = 3 micro-batches
       () => delta.repartitionByRange(3, col("doc_id"))
         .write.mode("overwrite").parquet(deltaDir))
-    val pairsDir = tmp("stream_refresh_pairs")
+    val pairsDir = tempDir("stream_refresh_pairs")
     refreshFromStream(s, deltaDir, "doc_id", "text",
-      art, pairsDir, tmp("stream_refresh_ck"))
+      art, pairsDir, tempDir("stream_refresh_ck"))
     s.read.parquet(pairsDir)
   }
 
@@ -168,31 +167,29 @@ object ArtifactRefresh {
     * check proves run B actually folded (batchId-only keying would have
     * silently skipped it). */
   def gatedCompactedRefresh(s: SparkSession, dir: String): DataFrame = {
-    def tmp(tag: String) = graft.QueryShared.deleteAtExit(
-      java.nio.file.Files.createTempDirectory(tag).toString)
     val docs = s.read.parquet(s"$dir/documents.parquet")
     val dCols = Seq(col("doc_id"), col("text"))
     val base = docs.filter(col("doc_id") % 4 >= 2)
-    val art = tmp("cstream_art")
+    val art = tempDir("cstream_art")
     // artifact tables and manifest sidecar are independent — overlap
     // (guide §2.6), same as gatedRefresh
     IdempotentFold.inParallel(s)(
       () => Dedup.writeSignatureArtifact(base, "doc_id", "text", art),
       () => ArtifactManifest.write(art, base.select(dCols: _*), dCols))
-    val pairsDir = tmp("cstream_pairs")
+    val pairsDir = tempDir("cstream_pairs")
     def runDelta(mod: Int, ck: String): Unit = {
-      val deltaDir = tmp(s"cstream_delta$mod")
+      val deltaDir = tempDir(s"cstream_delta$mod")
       docs.filter(col("doc_id") % 4 === mod)
         .repartitionByRange(2, col("doc_id"))
         .write.mode("overwrite").parquet(deltaDir)
       refreshFromStream(s, deltaDir, "doc_id", "text", art, pairsDir, ck): Unit
     }
-    val ckA = tmp("cstream_ck_a")
+    val ckA = tempDir("cstream_ck_a")
     runDelta(0, ckA)
     FoldCompaction.compactArtifact(s, art,
       Seq(s"$art/shingles.parquet", s"$art/bands.parquet", pairsDir), ckA,
       targetFileBytes = 256L << 20): Unit
-    runDelta(1, tmp("cstream_ck_b"))
+    runDelta(1, tempDir("cstream_ck_b"))
     ArtifactManifest.check(art, docs.select(dCols: _*), dCols)
     s.read.parquet(pairsDir)
   }

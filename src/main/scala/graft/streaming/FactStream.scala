@@ -35,7 +35,8 @@ object FactStream {
     * would collect the whole fact to the driver, a non-starter at scale)
     * and return a reader over the appended output. The result equals the
     * batch fact build minus the surrogate key — which is exactly what the
-    * DuckDB oracle checks.
+    * DuckDB oracle checks. The output and its checkpoint live in a temp
+    * directory deleted at JVM exit.
     *
     * Runs directly on the caller's session: with no stateful operator there
     * is no state-partition pinning to isolate (contrast
@@ -44,12 +45,9 @@ object FactStream {
   def incrementalFact(spark: SparkSession, dir: String,
                       dimTempo: DataFrame, dimCliente: DataFrame, dimProduto: DataFrame,
                       dimVendedor: DataFrame, dimLoja: DataFrame,
-                      name: String): DataFrame = {
-    val out = java.nio.file.Files.createTempDirectory(name)
-    registerCleanup(out)
+                      name: String): DataFrame =
     incrementalFactTo(spark, dir, dimTempo, dimCliente, dimProduto, dimVendedor,
-      dimLoja, out.toString)
-  }
+      dimLoja, graft.QueryShared.tempDir(name))
 
   /** Caller-owned output/checkpoint root: `$out/data` is the appended fact,
     * `$out/ckpt` the streaming checkpoint. Re-invoking with the SAME root
@@ -97,16 +95,4 @@ object FactStream {
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         stream.schema)
   }
-
-  /** Temp fact copies + checkpoints are deleted on JVM exit — repeated
-    * verify/bench/test runs in one JVM would otherwise accumulate a full
-    * fact copy per call (ADVICE r4). */
-  private def registerCleanup(dir: java.nio.file.Path): Unit =
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      import java.nio.file._
-      import java.util.Comparator
-      try Files.walk(dir).sorted(Comparator.reverseOrder[Path]())
-        .forEach(p => Files.deleteIfExists(p))
-      catch { case _: Throwable => () }
-    }))
 }

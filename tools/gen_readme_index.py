@@ -1,8 +1,8 @@
 #!/usr/bin/env python3
 """Generate the README operator-index table from SparkEntry.scala.
 
-VERDICT r12 #7: SURVEY.md is builder-facing; users need the 219-query
-surface discoverable as an API. This tool derives, for every entry in
+SURVEY.md is the design blueprint; users need the 226-query surface
+discoverable as an API. This tool derives, for every entry in
 SparkEntry.queries:
   - the gated query name (the stable API key for Verify's ONLY= use)
   - the one-line description (the comment block right above the entry)
@@ -199,16 +199,15 @@ FAMILY_TITLES = [
 
 
 def registry_text():
-    """Reassemble the queries-map source from the per-family registries
-    (r14 split): SparkEntry.queries concatenates entries/<Fam>Queries maps;
-    read the family order from SparkEntry itself, then splice each file's
-    `def queries`..`def oracleSql` region in that order so parse_entries
-    sees the same one-region shape the monolithic file had."""
+    """Reassemble the queries-map source from the per-family registries:
+    SparkEntry.queries merges the entries/<Fam>Queries maps named in
+    SparkEntry.families; read that list, then splice each file's
+    `def queries`..`def oracleSql` region in its order so parse_entries
+    sees one region."""
     with open(ENTRY, encoding="utf-8") as fh:
         se = fh.read()
-    fams = re.findall(r"(\w+Queries)\.queries", se)
-    if not fams:  # pre-split layout
-        return se
+    fams = re.findall(r"\w+Queries",
+                      re.search(r"val families\b[^=]*=\s*Seq\(([^)]*)\)", se).group(1))
     blocks = []
     for fam in fams:
         path = os.path.join(SRC, "entries", fam + ".scala")
