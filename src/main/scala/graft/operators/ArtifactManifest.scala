@@ -181,13 +181,9 @@ object ArtifactManifest {
     * single-runner append contract all the artifact folds share), so one
     * stamp suffices. `foldRun` is
     * [[graft.streaming.IdempotentFold.runIdentity]] of the checkpoint; ""
-    * (legacy batch-only stamping) matches a stamp with no run.
-    * `aliasRuns` are older-era tags for the SAME resumed stream (ADVICE
-    * r16 upgrade): a stored stamp under an alias proves this batch already
-    * folded — re-adding it would double-count the fingerprint. */
+    * stamps no run and matches a stamp with no run. */
   def add(artifactDir: String, batch: DataFrame, cols: Seq[Column],
-          foldBatchId: Long, foldRun: String = "",
-          aliasRuns: Seq[String] = Nil): Boolean = {
+          foldBatchId: Long, foldRun: String = ""): Boolean = {
     val spark = batch.sparkSession
     val hconf = spark.sparkContext.hadoopConfiguration
     val (fs, p) = manifestPath(artifactDir, hconf)
@@ -195,10 +191,7 @@ object ArtifactManifest {
       s"artifact at $artifactDir has no input manifest ($FILE)")
     val stored = readManifest(fs, p)
     val runOpt = Option(foldRun).filter(_.nonEmpty)
-    val stampMatches = stored.foldBatch.contains(foldBatchId) &&
-      (stored.foldRun == runOpt ||
-        aliasRuns.map(a => Option(a).filter(_.nonEmpty)).contains(stored.foldRun))
-    if (stampMatches) false
+    if (stored.foldBatch.contains(foldBatchId) && stored.foldRun == runOpt) false
     else {
       val (n, h) = fingerprintOf(batch, cols)
       atomicWrite(fs, p,

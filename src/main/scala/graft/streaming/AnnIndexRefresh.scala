@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{ArrayType, FloatType, IntegerType, LongType, StructField, StructType}
 
 import graft.QueryShared.tempDir
@@ -30,13 +29,8 @@ import graft.operators.{ArtifactManifest, Similarity}
   * train-on-base / assign-all SQL chain
   * ([[graft.sources.OracleSql.ivfPqRefreshSql]]).
   *
-  * foreachBatch (not a table sink) because the work is the side effect;
-  * batches arrive sequentially, preserving the artifact's single-runner
-  * append contract. **Replay-idempotent** (VERDICT r14 #2): every
-  * side-effect is batchId-keyed through [[IdempotentFold]] — clean, then
-  * recompute, then re-land; the manifest fold's batch stamp makes the
-  * fingerprint fold exactly-once; a fully-committed batch is skipped.
-  * Restart drill pinned in AnnIndexRefreshSpec.
+  * Replay-idempotent through [[IdempotentFold.foldStream]]; the restart
+  * drill is pinned in AnnIndexRefreshSpec.
   */
 object AnnIndexRefresh {
 
@@ -55,54 +49,13 @@ object AnnIndexRefresh {
   def refreshFromStream(spark: SparkSession, deltaDir: String,
                         indexDir: String, checkpointDir: String,
                         m: Int = 4, dim: Int = 64,
-                        shufflePartitions: Option[Int] = None): Long = {
-    // batch-sized appends; the tiny assignment joins default narrow
-    val s = IdempotentFold.foldSession(spark, shufflePartitions)
-    // bookkeeping keyed by the checkpoint's run identity (query UUID —
-    // ADVICE r15/r16: batch ids restart at 0 under a new checkpoint, even
-    // one recreated at the same path); aliases honor a resumed stream's
-    // older-era bookkeeping
-    val keys = IdempotentFold.runKeys(spark, checkpointDir)
-    val run = keys.run
-    val fingerCols = Seq(col("vec_id"), col("embedding"))
-    var batches = 0L
-    val q = s.readStream.schema(embeddingsSchema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(deltaDir)
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], batchId: Long) =>
-        val b = batch.persist()
-        if (!b.isEmpty) {
-          // explicit override wins; else size this batch's shuffles to its
-          // own input bytes (VERDICT r16 #5)
-          IdempotentFold.sizeBatchShuffle(b, shufflePartitions): Unit
-          if (!IdempotentFold.isCommittedAny(b.sparkSession, indexDir, keys, batchId)) {
-            IdempotentFold.cleanKeyedAll(b.sparkSession, s"$indexDir/cells.parquet", keys, batchId)
-            IdempotentFold.cleanKeyedAll(b.sparkSession, s"$indexDir/codes.parquet", keys, batchId)
-            val (cells, codes) = Similarity.ivfPqAssignFrames(b, indexDir, m, dim)
-            // the batch's three side-effects are pairwise independent (two
-            // distinct index tables + the manifest sidecar) — overlap them
-            // (guide §2.6, VERDICT r17 #1); marker after ALL, replay
-            // erases any landed subset
-            IdempotentFold.inParallel(b.sparkSession)(
-              () => IdempotentFold.appendKeyed(cells, s"$indexDir/cells.parquet", run, batchId),
-              () => IdempotentFold.appendKeyed(codes, s"$indexDir/codes.parquet", run, batchId),
-              // O(batch) manifest fold, exactly-once via the (run, batch)
-              // stamp; alias runs match a stamp an older code era landed
-              () => ArtifactManifest.add(indexDir, b.select(fingerCols: _*),
-                fingerCols, batchId, run, keys.aliases): Unit)
-            IdempotentFold.markCommitted(b.sparkSession, indexDir, run, batchId)
-          }
-          batches += 1
-        }
-        b.unpersist(): Unit
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    batches
-  }
+                        shufflePartitions: Option[Int] = None): Long =
+    IdempotentFold.foldStream(spark, embeddingsSchema, deltaDir, indexDir,
+      checkpointDir, shufflePartitions, Seq(col("vec_id"), col("embedding")),
+      Seq(s"$indexDir/cells.parquet", s"$indexDir/codes.parquet")) { b =>
+      val (cells, codes) = Similarity.ivfPqAssignFrames(b, indexDir, m, dim)
+      Seq(cells, codes)
+    }
 
   /** The gated end-to-end form: build the index over `vec_id % 4 != 0`,
     * stream the `% 4 == 0` delta through [[refreshFromStream]] in ≥3

@@ -65,23 +65,22 @@ object FoldCompaction {
   def compactArtifact(spark: SparkSession, artifactDir: String,
                       datasetDirs: Seq[String], checkpointDir: String,
                       targetFileBytes: Long): Map[String, FoldStats] = {
-    val keys = IdempotentFold.runKeys(spark, checkpointDir)
+    val run = IdempotentFold.runIdentity(spark, checkpointDir)
     val horizon = IdempotentFold.committedHorizon(spark, checkpointDir)
     // independent datasets (distinct dirs, distinct tmp/old siblings;
     // markers only READ here, pruned after all) — overlap the per-dataset
     // rewrites on a bounded pool (guide §2.6, VERDICT r17 #1)
     val stats = new java.util.concurrent.ConcurrentHashMap[String, FoldStats]
     IdempotentFold.inParallel(spark)(datasetDirs.map { d => () =>
-      stats.put(d, compactFold(spark, d, keys.run, horizon, targetFileBytes,
-        markerDir = Some(artifactDir), aliasRuns = keys.aliases)): Unit
+      stats.put(d, compactFold(spark, d, run, horizon, targetFileBytes,
+        markerDir = Some(artifactDir))): Unit
     }: _*)
-    IdempotentFold.pruneMarkers(spark, artifactDir, keys.all, horizon): Unit
+    IdempotentFold.pruneMarkers(spark, artifactDir, Seq(run), horizon): Unit
     scala.jdk.CollectionConverters.MapHasAsScala(stats).asScala.toMap
   }
 
   /** Commit markers present under `markerDir`, as (run, batchId) — the
-    * proof a foreign run's batch fully landed. Pre-r16 batch-only markers
-    * parse as run `""`. */
+    * proof a foreign run's batch fully landed. */
   private def markerSet(spark: SparkSession, markerDir: String): Set[(String, Long)] = {
     val (fs, p) = fsFor(spark, s"$markerDir/_commits")
     if (!fs.exists(p)) Set.empty
@@ -90,8 +89,7 @@ object FoldCompaction {
   }
 
   /** Tags of every run that still has commit markers at `artifactDir` —
-    * the candidates for [[retireRuns]] (pre-r16 batch-only markers report
-    * as `""`). */
+    * the candidates for [[retireRuns]]. */
   def markerRuns(spark: SparkSession, artifactDir: String): Set[String] =
     markerSet(spark, artifactDir).map(_._1)
 
@@ -140,8 +138,7 @@ object FoldCompaction {
     * keyed appends: merge the replay-dead files (small plain parts, own
     * keyed files at or below `horizon`, and marker-proven foreign keyed
     * files) into ~`targetFileBytes` parts, keep every other file verbatim,
-    * and swap the result in place. `aliasRuns` are older-era tags of the
-    * same stream (treated as `run`). Idempotent: a stored content manifest
+    * and swap the result in place. Idempotent: a stored content manifest
     * matching the current merge set makes the call a no-op.
     *
     * Nightly cost is O(new batches), not O(total artifact) (ADVICE r16):
@@ -153,8 +150,7 @@ object FoldCompaction {
     * (local), else raw byte copies — never a parquet decode. */
   def compactFold(spark: SparkSession, dir: String, run: String,
                   horizon: Long, targetFileBytes: Long,
-                  markerDir: Option[String] = None,
-                  aliasRuns: Seq[String] = Nil): FoldStats = {
+                  markerDir: Option[String] = None): FoldStats = {
     val (fs, target) = fsFor(spark, dir)
     val qt = fs.makeQualified(target)
     val name = qt.getName
@@ -190,11 +186,10 @@ object FoldCompaction {
       val n = st.getPath.getName
       st.isFile && !n.startsWith("_") && !n.startsWith(".")
     }
-    def isOwn(r: String) = r == run || aliasRuns.contains(r)
     val (deadAll, live) = files.partition { st =>
       IdempotentFold.parseKeyed(st.getPath.getName) match {
         case None                      => true // plain part (base build / prior compaction)
-        case Some((r, id)) if isOwn(r) => id <= horizon
+        case Some((r, id)) if r == run => id <= horizon
         case Some(key)                 => markers.contains(key)
       }
     }

@@ -1,7 +1,11 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.types.StructType
+
+import graft.operators.ArtifactManifest
 
 /** Replay-idempotent micro-batch side-effects for foreachBatch folds
   * (VERDICT r14 #2). foreachBatch is at-least-once: a crash between a
@@ -19,10 +23,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * at the same path is a NEW identity, ADVICE r16 medium); markers, staging
   * dirs and keyed part files all embed it, so two runs' bookkeeping can
   * never collide and a replayed batch only ever erases its OWN run's
-  * partial work. [[runKeys]] adds read-side aliases for bookkeeping older
-  * code eras wrote for the same resumed stream.
+  * partial work.
   *
-  * Three pieces, composed by the refresh loops:
+  * Three pieces, composed per micro-batch by [[foldStream]]:
   *
   *  - [[appendKeyed]]: append `df` to a flat parquet dataset such that the
   *    batch's contribution is identifiable and re-writable — stage the
@@ -78,11 +81,6 @@ object IdempotentFold {
     }
     s.conf.set("spark.sql.shuffle.partitions",
       shufflePartitions.getOrElse(8).toString)
-    // micro-batch frames: operator-level fan-out is a no-op at production
-    // scale (a real batch arrives as many files) and pure overhead on the
-    // gate's tiny batches — parallelism here is owned by the per-batch
-    // shuffle sizing above / sizeBatchShuffle
-    s.conf.set(graft.operators.Parallelism.EnabledConf, "false")
     s
   }
 
@@ -97,8 +95,8 @@ object IdempotentFold {
     * `<ckpt>/metadata` at first start and adopts a pre-existing file, so on
     * a fresh checkpoint we mint and persist the id ourselves (same format)
     * and the engine keeps it; on an existing checkpoint we read the
-    * engine's. 64 bits (vs r16's 32-bit path hash — ADVICE r16 low) because
-    * a tag collision means silent data loss, not a retry. */
+    * engine's. 64 bits because a tag collision means silent data loss, not
+    * a retry. */
   def runIdentity(spark: SparkSession, checkpointDir: String): String = {
     val (fs, ck) = fsFor(spark, checkpointDir)
     val meta = new Path(ck, "metadata")
@@ -124,38 +122,53 @@ object IdempotentFold {
   }
   private val MetaIdRe = """"id"\s*:\s*"([0-9a-fA-F-]+)"""".r
 
-  /** The r16 path-hash tag — kept ONLY as an upgrade alias: bookkeeping
-    * written by r16 code for this same checkpoint used it as the run key. */
-  def legacyPathTag(checkpointDir: String): String = {
-    val normalized = new Path(checkpointDir).toString
-    f"${scala.util.hashing.MurmurHash3.stringHash(normalized) & 0xffffffffL}%08x"
-  }
-
-  /** The current run tag plus the alias tags older code eras keyed THIS
-    * stream's bookkeeping by. `""` is the pre-r16 batch-only era
-    * ([[keyedPrefix]]/markers render it with no `r<tag>_` part). */
-  final case class RunKeys(run: String, aliases: Seq[String]) {
-    def all: Seq[String] = run +: aliases
-  }
-
-  /** Resolve the run identity for a refresh about to start. Aliases cover
-    * bookkeeping written by OLDER code for THIS SAME stream (ADVICE r16
-    * upgrade path): the r16 path-hash tag and the pre-r16 batch-only
-    * keying. They are active ONLY when the checkpoint has prior engine
-    * state (its `offsets/` log is non-empty) — the batches a resumed
-    * checkpoint can re-deliver are exactly the ones an older era may have
-    * half-landed, and under the single-runner contract that older bookkeeping
-    * can only be this stream's own. A FRESH checkpoint gets no aliases: a
-    * dead run that happened to use the same path must never make the new
-    * run's batches look committed (the data-loss class run identity exists
-    * to prevent). */
-  def runKeys(spark: SparkSession, checkpointDir: String): RunKeys = {
+  /** The replay-idempotent fold loop every streamed refresh runs: stream
+    * `deltaDir`'s parquet files (declared `schema`) one per micro-batch
+    * under [[foldSession]], keyed by the checkpoint's [[runIdentity]]. Per
+    * non-empty batch not yet marked committed at `artifactDir`: clean every
+    * dest's keyed files of the batch, then `compute` one frame per dest
+    * (in `dests` order), append each keyed into its dest while the batch's
+    * `fingerCols` fingerprint folds into `artifactDir`'s manifest,
+    * unpersist the frames, and only then land the commit marker. Returns
+    * the number of non-empty micro-batches delivered (replays included). */
+  def foldStream(spark: SparkSession, schema: StructType, deltaDir: String,
+                 artifactDir: String, checkpointDir: String,
+                 shufflePartitions: Option[Int], fingerCols: Seq[Column],
+                 dests: Seq[String])(compute: DataFrame => Seq[DataFrame]): Long = {
     val run = runIdentity(spark, checkpointDir)
-    val (fs, ck) = fsFor(spark, checkpointDir)
-    val offsets = new Path(ck, "offsets")
-    val resumed = fs.exists(offsets) && fs.listStatus(offsets).nonEmpty
-    if (resumed) RunKeys(run, Seq(legacyPathTag(checkpointDir), ""))
-    else RunKeys(run, Nil)
+    var batches = 0L
+    val q = foldSession(spark, shufflePartitions).readStream.schema(schema)
+      .option("maxFilesPerTrigger", "1")
+      .parquet(deltaDir)
+      .writeStream
+      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
+        val b = batch.persist()
+        if (!b.isEmpty) {
+          val s = b.sparkSession
+          sizeBatchShuffle(b, shufflePartitions): Unit
+          if (!isCommitted(s, artifactDir, run, batchId)) {
+            // clean BEFORE compute: compute may read a dest (the LSH delta
+            // join reads bands.parquet) and must see the pre-batch state
+            dests.foreach(cleanKeyed(s, _, run, batchId))
+            val outs = compute(b)
+            require(outs.size == dests.size,
+              s"compute returned ${outs.size} frames for ${dests.size} dests")
+            inParallel(s)(dests.zip(outs).map { case (d, df) =>
+              () => appendKeyed(df, d, run, batchId)
+            } :+ (() => ArtifactManifest.add(artifactDir, b.select(fingerCols: _*),
+              fingerCols, batchId, run): Unit): _*)
+            outs.foreach(_.unpersist())
+            markCommitted(s, artifactDir, run, batchId)
+          }
+          batches += 1
+        }
+        b.unpersist(): Unit
+      }
+      .option("checkpointLocation", checkpointDir)
+      .trigger(Trigger.AvailableNow())
+      .start()
+    q.awaitTermination()
+    batches
   }
 
   /** Highest batch id recorded in the checkpoint's `commits/` log, or -1
@@ -173,38 +186,27 @@ object IdempotentFold {
     }
   }
 
-  /** The keyed-file name prefix for (`run`, `batchId`). `run == ""` renders
-    * the pre-r16 batch-only form (`b<id>_`) — read-side alias only; writes
-    * always carry the current tag. */
-  def keyedPrefix(run: String, batchId: Long) =
-    if (run.isEmpty) s"b${batchId}_" else s"r${run}_b${batchId}_"
+  /** The keyed-file name prefix for (`run`, `batchId`). */
+  def keyedPrefix(run: String, batchId: Long) = s"r${run}_b${batchId}_"
 
   /** Parse a keyed file name back to its (run, batchId), None for plain
     * (unkeyed) parts — how [[FoldCompaction]] splits a dataset's files
-    * into replay-dead and replay-live. Pre-r16 batch-only names parse as
-    * run `""`. */
+    * into replay-dead and replay-live. */
   def parseKeyed(name: String): Option[(String, Long)] = name match {
-    case KeyedRe(run, id)  => Some((run, id.toLong))
-    case LegacyKeyedRe(id) => Some(("", id.toLong))
-    case _                 => None
+    case KeyedRe(run, id) => Some((run, id.toLong))
+    case _                => None
   }
   private val KeyedRe = """^r([0-9a-f]{8,64})_b(\d+)_.*""".r
-  private val LegacyKeyedRe = """^b(\d+)_.*""".r
 
-  /** A marker's file name for (`run`, `batchId`) — `""` is the pre-r16
-    * batch-only era. */
-  def markerName(run: String, batchId: Long): String =
-    if (run.isEmpty) s"b$batchId" else s"r${run}_b$batchId"
+  /** A marker's file name for (`run`, `batchId`). */
+  def markerName(run: String, batchId: Long): String = s"r${run}_b$batchId"
 
-  /** Parse a marker file name to (run, batchId); pre-r16 batch-only
-    * markers parse as run `""`. */
+  /** Parse a marker file name to (run, batchId). */
   def parseMarker(name: String): Option[(String, Long)] = name match {
-    case MarkerRe(run, id)  => Some((run, id.toLong))
-    case LegacyMarkerRe(id) => Some(("", id.toLong))
-    case _                  => None
+    case MarkerRe(run, id) => Some((run, id.toLong))
+    case _                 => None
   }
   private val MarkerRe = """^r([0-9a-f]{8,64})_b(\d+)$""".r
-  private val LegacyMarkerRe = """^b(\d+)$""".r
 
   private def markerPath(p: Path, run: String, batchId: Long) =
     new Path(p, s"_commits/${markerName(run, batchId)}")
@@ -217,18 +219,11 @@ object IdempotentFold {
     fs.exists(markerPath(p, run, batchId))
   }
 
-  /** [[isCommitted]] under the current tag OR any upgrade alias — the
-    * resumed-checkpoint read path (a batch an older code era fully landed
-    * must not be recomputed on replay; ADVICE r16 upgrade). */
-  def isCommittedAny(spark: SparkSession, dir: String, keys: RunKeys,
-                     batchId: Long): Boolean =
-    keys.all.exists(isCommitted(spark, dir, _, batchId))
-
   /** Land the batch's commit marker — call ONLY after every side-effect
     * (keyed appends AND the manifest fold) has completed. */
   def markCommitted(spark: SparkSession, dir: String, run: String,
                     batchId: Long): Unit = {
-    require(run.nonEmpty, "commit markers are always written run-tagged")
+    require(run.nonEmpty, "commit markers need a run tag")
     val (fs, p) = fsFor(spark, dir)
     fs.create(markerPath(p, run, batchId), true).close()
   }
@@ -252,11 +247,6 @@ object IdempotentFold {
     }
   }
 
-  /** Single-run convenience overload. */
-  def pruneMarkers(spark: SparkSession, dir: String, run: String,
-                   horizon: Long): Int =
-    pruneMarkers(spark, dir, Seq(run), horizon)
-
   /** Remove `batchId`'s keyed part files (and any stale staging dir) from
     * the dataset at `destDir` — the replay's first move, erasing a crashed
     * attempt's partial append before recomputing. Only files of THIS run
@@ -265,34 +255,12 @@ object IdempotentFold {
                  batchId: Long): Unit = {
     val (fs, p) = fsFor(spark, destDir)
     if (fs.exists(p)) {
+      val staging = s"_staging_r${run}_b$batchId"
       fs.listStatus(p).foreach { st =>
         val n = st.getPath.getName
         if (st.isFile && n.startsWith(keyedPrefix(run, batchId)))
           fs.delete(st.getPath, false)
-      }
-      val staging = new Path(p, s"_staging_r${run}_b$batchId")
-      if (fs.exists(staging)) fs.delete(staging, true): Unit
-    }
-  }
-
-  /** [[cleanKeyed]] under the current tag AND every upgrade alias: a torn
-    * attempt of this batch may have been written by an older code era
-    * (`b<id>_` files, r16 path-tag files) — the replay must erase those
-    * too or the recompute double-appends (ADVICE r16 upgrade). One
-    * directory listing serves every tag (r18, VERDICT r17 #1: the per-tag
-    * re-list paid |tags| round-trips per dataset per batch for the same
-    * status array). */
-  def cleanKeyedAll(spark: SparkSession, destDir: String, keys: RunKeys,
-                    batchId: Long): Unit = {
-    val (fs, p) = fsFor(spark, destDir)
-    if (fs.exists(p)) {
-      val prefixes = keys.all.map(keyedPrefix(_, batchId))
-      val stagings = keys.all.map(r => s"_staging_r${r}_b$batchId").toSet
-      fs.listStatus(p).foreach { st =>
-        val n = st.getPath.getName
-        if (st.isFile && prefixes.exists(n.startsWith))
-          fs.delete(st.getPath, false)
-        else if (st.isDirectory && stagings(n))
+        else if (st.isDirectory && n == staging)
           fs.delete(st.getPath, true): Unit
       }
     }
@@ -308,10 +276,10 @@ object IdempotentFold {
     * replay contract is untouched — a crash can now leave any SUBSET of
     * the batch's side-effects landed instead of a prefix, and the re-entry
     * path already erases every keyed file of the batch before recomputing,
-    * order-free ([[cleanKeyedAll]]); the commit marker still lands only
-    * after ALL tasks complete. Exceptions propagate (first cause) so a
-    * failed append still fails the stream loudly. A single task runs on
-    * the caller thread. */
+    * order-free ([[cleanKeyed]]); the commit marker still lands only
+    * after ALL tasks complete. The first failure's cause propagates once
+    * every task has finished, so a failed append still fails the stream
+    * loudly. A single task runs on the caller thread. */
   def inParallel(spark: SparkSession)(tasks: (() => Unit)*): Unit = {
     if (tasks.lengthCompare(2) < 0) { tasks.foreach(_()); return }
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
@@ -327,10 +295,13 @@ object IdempotentFold {
           }
         })
       }
-      futures.foreach { f =>
-        try f.get()
-        catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
+      // wait for EVERY task before rethrowing: a failed batch must leave no
+      // side-effect in flight that could land after its replay starts
+      val failures = futures.flatMap { f =>
+        try { f.get(); None }
+        catch { case e: java.util.concurrent.ExecutionException => Some(e.getCause) }
       }
+      failures.headOption.foreach(e => throw e)
     } finally pool.shutdown()
   }
 

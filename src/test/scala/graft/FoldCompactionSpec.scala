@@ -323,91 +323,60 @@ class FoldCompactionSpec extends SparkSpec {
     assert(spark.read.parquet(ds).collect().map(_.toString).sorted.toSeq === want)
   }
 
-  test("upgrade path: a resumed checkpoint honors pre-r16 batch-only bookkeeping — committed batches skip, torn batches clean and recompute, the manifest never double-folds (ADVICE r16)") {
+  test("replay: a landed batch whose engine commit tore skips on its marker; a torn batch whose manifest fold landed cleans, recomputes and folds once") {
     val docs = spark.read.parquet(s"$dir/documents.parquet")
     val base = docs.filter(col("doc_id") % 4 >= 2)
-    val delta = docs.filter(col("doc_id") % 4 < 2)
-    val deltaDir = splitDelta(delta)
-
-    // control: uninterrupted modern run
-    val artC = buildArtifact(base)
-    val pairsC = tmp("foldc_up_pc")
+    val deltaDir = splitDelta(docs.filter(col("doc_id") % 4 < 2))
+    val art = buildArtifact(base)
+    val pairs = tmp("foldc_rp_pairs")
+    val ck = tmp("foldc_rp_ck")
     ArtifactRefresh.refreshFromStream(spark, deltaDir, "doc_id", "text",
-      artC, pairsC, tmp("foldc_up_ckc"))
-    val wantPairs = pairsMultiset(pairsC)
-    val wantBands = spark.read.parquet(s"$artC/bands.parquet").count()
-
-    // rewrite a run's bookkeeping to the pre-r16 era: b<id>_ file names,
-    // _commits/b<id> markers, a run-less manifest fold stamp
-    def demote(art: String, pairs: String, ck: String): Long = {
-      val run = IdempotentFold.runIdentity(spark, ck)
-      val fs = fsOf(art)
-      for (d <- Seq(s"$art/shingles.parquet", s"$art/bands.parquet", pairs);
-           st <- fs.listStatus(new Path(d)) if st.isFile) {
-        val n = st.getPath.getName
-        if (n.startsWith(s"r${run}_b"))
-          require(fs.rename(st.getPath, new Path(d, n.stripPrefix(s"r${run}_"))))
-      }
-      var last = -1L
-      for (st <- fs.listStatus(new Path(art, "_commits"))) {
-        IdempotentFold.parseMarker(st.getPath.getName).foreach { case (r, id) =>
-          if (r == run) {
-            last = math.max(last, id)
-            fs.create(new Path(art, s"_commits/b$id"), true).close()
-            fs.delete(st.getPath, false)
-          }
-        }
-      }
-      val m = ArtifactManifest.read(art, spark).get
-      ArtifactManifest.writeValues(art, m.nRows, m.inputHash, spark,
-        m.foldBatch, foldRun = None)
-      last
-    }
-    def tearEngineCommit(ck: String, id: Long): Unit = {
+      art, pairs, ck)
+    val wantPairs = pairsMultiset(pairs)
+    val wantBands = spark.read.parquet(s"$art/bands.parquet").count()
+    val wantManifest = ArtifactManifest.read(art, spark).get
+    val run = IdempotentFold.runIdentity(spark, ck)
+    val fs = fsOf(art)
+    val last = fs.listStatus(new Path(art, "_commits"))
+      .flatMap(st => IdempotentFold.parseMarker(st.getPath.getName)).map(_._2).max
+    assert(last >= 2)
+    def bandFiles = fs.listStatus(new Path(s"$art/bands.parquet"))
+      .map(_.getPath.getName).filter(_.startsWith(s"r${run}_b${last}_")).toSet
+    def tearEngineCommit(): Unit =
       new java.io.File(s"$ck/commits").listFiles()
-        .filter(f => f.getName.forall(_.isDigit) && f.getName.toLong >= id)
+        .filter(f => f.getName.forall(_.isDigit) && f.getName.toLong >= last)
         .foreach { f =>
           assert(f.delete())
           val crc = new java.io.File(f.getParent, s".${f.getName}.crc")
           if (crc.exists()) assert(crc.delete())
         }
+    def assertConverged(): Unit = {
+      assert(pairsMultiset(pairs) === wantPairs)
+      assert(spark.read.parquet(s"$art/bands.parquet").count() === wantBands)
+      assert(ArtifactManifest.read(art, spark).get === wantManifest)
+      ArtifactManifest.check(art, docs.select(dCols: _*), dCols)
     }
 
-    // case 1: the legacy batch fully landed (marker present) but the engine
-    // commit was torn — the replay must SKIP on the legacy marker
-    val art1 = buildArtifact(base); val pairs1 = tmp("foldc_up_p1")
-    val ck1 = tmp("foldc_up_ck1")
-    ArtifactRefresh.refreshFromStream(spark, deltaDir, "doc_id", "text",
-      art1, pairs1, ck1)
-    val last1 = demote(art1, pairs1, ck1)
-    assert(last1 >= 2)
-    tearEngineCommit(ck1, last1)
-    ArtifactRefresh.refreshFromStream(spark, deltaDir, "doc_id", "text",
-      art1, pairs1, ck1)
-    assert(pairsMultiset(pairs1) === wantPairs)
-    assert(spark.read.parquet(s"$art1/bands.parquet").count() === wantBands)
-    ArtifactManifest.check(art1, docs.select(dCols: _*), dCols)
+    // case 1: every side-effect and the marker landed, the engine commit
+    // did not — the re-delivered batch must SKIP (its files stay as written)
+    val landed = bandFiles
+    assert(landed.nonEmpty, "expected the last batch's keyed band files")
+    tearEngineCommit()
+    assert(ArtifactRefresh.refreshFromStream(spark, deltaDir, "doc_id", "text",
+      art, pairs, ck) >= 1, "expected the batch to be re-delivered")
+    assert(bandFiles === landed, "a marked batch must not be recomputed")
+    assertConverged()
 
-    // case 2: the legacy batch is TORN (marker gone, a band file gone) but
-    // its manifest fold landed — the replay must erase the legacy files,
-    // recompute under the new tag, and NOT fold the manifest twice
-    val art2 = buildArtifact(base); val pairs2 = tmp("foldc_up_p2")
-    val ck2 = tmp("foldc_up_ck2")
-    ArtifactRefresh.refreshFromStream(spark, deltaDir, "doc_id", "text",
-      art2, pairs2, ck2)
-    val last2 = demote(art2, pairs2, ck2)
-    val fs2 = fsOf(art2)
-    fs2.delete(new Path(art2, s"_commits/b$last2"), false)
-    val keyed = fs2.listStatus(new Path(s"$art2/bands.parquet"))
-      .filter(_.getPath.getName.startsWith(s"b${last2}_"))
-    assert(keyed.nonEmpty, "expected legacy-named band files")
-    fs2.delete(keyed.head.getPath, false) // tear the legacy append
-    tearEngineCommit(ck2, last2)
-    ArtifactRefresh.refreshFromStream(spark, deltaDir, "doc_id", "text",
-      art2, pairs2, ck2)
-    assert(pairsMultiset(pairs2) === wantPairs)
-    assert(spark.read.parquet(s"$art2/bands.parquet").count() === wantBands)
-    ArtifactManifest.check(art2, docs.select(dCols: _*), dCols)
+    // case 2: the marker is gone and a band file is torn, but the manifest
+    // fold landed — the replay must clean, recompute, and not fold twice
+    fs.delete(new Path(art, s"_commits/${IdempotentFold.markerName(run, last)}"), false)
+    fs.delete(new Path(s"$art/bands.parquet", landed.head), false)
+    tearEngineCommit()
+    assert(ArtifactRefresh.refreshFromStream(spark, deltaDir, "doc_id", "text",
+      art, pairs, ck) >= 1, "expected the torn batch to be re-delivered")
+    assert(bandFiles.nonEmpty && (bandFiles & landed).isEmpty,
+      "the torn batch's files must be rewritten")
+    assertConverged()
   }
 
   test("foldSession: a caller-set shuffle-partition override survives; default stays 8") {

@@ -9,8 +9,10 @@ import graft.streaming.{ArtifactRefresh, IdempotentFold}
 /** Pins the run-identity contract (ADVICE r16): UUID-keyed 64-bit run tags,
   * engine adoption of the pre-minted metadata id, wipe-and-recreate at the
   * SAME checkpoint path = a NEW identity (the fixed-nightly-ck-dir ops
-  * pattern that silently lost data under path-hash tags), era parsing, and
-  * the per-batch shuffle self-sizing (VERDICT r16 #5).
+  * pattern that silently lost data under path-hash tags), keyed-name
+  * parsing, the per-batch shuffle self-sizing (VERDICT r16 #5), and
+  * [[IdempotentFold.foldStream]]'s rule that a failed side-effect withholds
+  * the batch's commit marker.
   */
 class IdempotentFoldSpec extends SparkSpec {
   import spark.implicits._
@@ -92,20 +94,16 @@ class IdempotentFoldSpec extends SparkSpec {
     ArtifactManifest.check(art, docs.select(dCols: _*), dCols)
   }
 
-  test("era parsing: current 16-hex, r16 8-hex, and pre-r16 batch-only forms") {
+  test("keyed-name parsing: 16-hex and 8-hex run tags; plain parts and other names are unkeyed") {
     assert(IdempotentFold.parseKeyed("rdeadbeefdeadbeef_b12_part-0.parquet")
       === Some(("deadbeefdeadbeef", 12L)))
     assert(IdempotentFold.parseKeyed("rdeadbeef_b3_part-0.parquet")
       === Some(("deadbeef", 3L)))
-    assert(IdempotentFold.parseKeyed("b7_part-0.parquet") === Some(("", 7L)))
     assert(IdempotentFold.parseKeyed("part-00000-c000.snappy.parquet") === None)
     assert(IdempotentFold.parseMarker("rdeadbeefdeadbeef_b12")
       === Some(("deadbeefdeadbeef", 12L)))
     assert(IdempotentFold.parseMarker("rdeadbeef_b3") === Some(("deadbeef", 3L)))
-    assert(IdempotentFold.parseMarker("b7") === Some(("", 7L)))
     assert(IdempotentFold.parseMarker("anything-else") === None)
-    assert(IdempotentFold.keyedPrefix("", 5L) === "b5_")
-    assert(IdempotentFold.markerName("", 5L) === "b5")
     assert(IdempotentFold.keyedPrefix("aa", 5L) === "raa_b5_")
   }
 
@@ -144,19 +142,69 @@ class IdempotentFoldSpec extends SparkSpec {
     assert(s.conf.get("spark.sql.shuffle.partitions") === bigger.toString)
   }
 
-  test("pruneMarkers prunes the named runs (incl. pre-r16 batch-only) at or below the horizon") {
+  test("pruneMarkers prunes the named runs at or below the horizon") {
     val art = tmp("idf_prune")
     fsOf(art).mkdirs(new Path(art))
     val runA = "aaaaaaaaaaaaaaaa"
     IdempotentFold.markCommitted(spark, art, runA, 0L)
     IdempotentFold.markCommitted(spark, art, runA, 5L)
     IdempotentFold.markCommitted(spark, art, "bbbbbbbb", 1L)
-    fsOf(art).create(new Path(art, "_commits/b2"), true).close() // legacy era
-    val n = IdempotentFold.pruneMarkers(spark, art, Seq(runA, ""), 3L)
-    assert(n === 2, "runA b0 and legacy b2 prune; b5 is above the horizon")
+    val n = IdempotentFold.pruneMarkers(spark, art, Seq(runA), 3L)
+    assert(n === 1, "runA b0 prunes; b5 is above the horizon")
+    assert(!IdempotentFold.isCommitted(spark, art, runA, 0L))
     assert(IdempotentFold.isCommitted(spark, art, runA, 5L))
     assert(IdempotentFold.isCommitted(spark, art, "bbbbbbbb", 1L),
       "an unnamed run's markers survive")
-    assert(!IdempotentFold.isCommitted(spark, art, "", 2L))
+  }
+
+  test("foldStream: a side-effect that throws fails the stream and withholds the batch's marker; a rerun converges to the uninterrupted run") {
+    val src = tmp("idf_fs_src")
+    (0L until 30L).map(i => (i, s"t$i")).toDF("id", "v")
+      .repartitionByRange(3, col("id")).write.mode("overwrite").parquet(src)
+    val schema = spark.read.parquet(src).schema
+    val fCols = Seq(col("id"), col("v"))
+    // two dests; on the `failOnCall`-th compute the second one's write
+    // throws at run time while the first dest and the manifest fold land
+    def fold(art: String, ck: String, failOnCall: Int): Long = {
+      var calls = 0
+      IdempotentFold.foldStream(spark, schema, src, art, ck, None, fCols,
+        Seq(s"$art/rows.parquet", s"$art/ids.parquet")) { b =>
+        calls += 1
+        val ids =
+          if (calls == failOnCall)
+            b.select(raise_error(lit("injected write failure")).cast("long").as("id"))
+          else b.select(col("id"))
+        Seq(b.select(fCols: _*), ids)
+      }
+    }
+    def artifact(tag: String): String = {
+      val art = tmp(tag)
+      ArtifactManifest.writeValues(art, 0L, 0L, spark)
+      art
+    }
+    def rows(p: String) =
+      spark.read.parquet(p).collect().map(_.toString).sorted.toSeq
+
+    val artU = artifact("idf_fs_u")
+    assert(fold(artU, tmp("idf_fs_cku"), failOnCall = 0) === 3L)
+
+    val art = artifact("idf_fs_f")
+    val ck = tmp("idf_fs_ck")
+    val e = intercept[Exception](fold(art, ck, failOnCall = 2))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("injected write failure")), e)
+    val run = IdempotentFold.runIdentity(spark, ck)
+    assert(IdempotentFold.isCommitted(spark, art, run, 0L))
+    assert(!IdempotentFold.isCommitted(spark, art, run, 1L),
+      "a batch whose side-effect failed must not be marked committed")
+    assert(IdempotentFold.committedHorizon(spark, ck) === 0L)
+
+    assert(fold(art, ck, failOnCall = 0) === 2L, "batches 1 and 2 run on the rerun")
+    for (d <- Seq("rows.parquet", "ids.parquet"))
+      assert(rows(s"$art/$d") === rows(s"$artU/$d"), d)
+    val (m, mU) = (ArtifactManifest.read(art, spark).get,
+      ArtifactManifest.read(artU, spark).get)
+    assert((m.nRows, m.inputHash) === (mU.nRows, mU.inputHash))
+    ArtifactManifest.check(art, spark.read.parquet(src), fCols)
   }
 }

@@ -19,7 +19,6 @@ class KnobGuardSpec extends AnyFunSuite {
     "SPARK_GRAFT_JARS" -> "ClusterMode: application jar shipped to executors",
     "SPARK_GRAFT_EXECUTOR_MEM" -> "ClusterMode: executor heap",
     "SPARK_GRAFT_ALLOW_STALE_JAR" -> "ClusterMode: downgrade the stale-jar check to a warning",
-    "spark.graft.fanout.enabled" -> "IdempotentFold.foldSession turns fan-out off per session",
     "spark.graft.lsh.verifyJoinHint" -> "force the LSH verify-join strategy (DedupSpec)",
     "spark.graft.lsh.shjBuildBudgetBytes" -> "override the derived SHJ build budget (DedupSpec)",
     "spark.graft.stream.statePartitions" -> "streaming state width override (R18OpsSpec)")
