@@ -268,7 +268,9 @@ object Warehouse {
     * (memoized per session+dir; a fresh session rebuilds). Entries whose
     * SparkContext has stopped are purged on each call, so a long-lived
     * driver that cycles sessions does not retain dead sessions and their
-    * cached plans forever (r3 advice).
+    * cached plans forever (r3 advice). The memo keys on the directory
+    * name only: it does not notice files changed in place under `dir`, so
+    * a session keeps serving the first build until it is stopped.
     */
   def build(spark: SparkSession, dir: String): Warehouse = {
     built.keySet.removeIf(k => k._1.sparkContext.isStopped)

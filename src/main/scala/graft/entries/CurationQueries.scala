@@ -14,7 +14,7 @@ private[graft] object CurationQueries extends QueryFamily {
     // Benchmark decontamination: 3-shingle overlap of the corpus against a
     // held-out benchmark slice (doc_id ≡ 0 mod 20 plays the benchmark).
     "q_contamination" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Crm.table(s, dir, "documents")
       operators.TextAnalysis.contamination(
         docs.filter(col("doc_id") % 20 =!= 0), docs.filter(col("doc_id") % 20 === 0),
         "doc_id", "text", flagThreshold = 0.5)
@@ -22,7 +22,7 @@ private[graft] object CurationQueries extends QueryFamily {
     }),
     "q_repetition" -> ((s, dir) => {
       operators.TextAnalysis.repetitionScore(
-        s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text")
+        Crm.table(s, dir, "documents"), "doc_id", "text")
         .orderBy(col("doc_id"))
     }),
     "q_pii_redact" -> ((s, dir) => {
@@ -33,7 +33,7 @@ private[graft] object CurationQueries extends QueryFamily {
         lower(regexp_replace(col("c_name"), "Customer#", "user")),
         lit("@example.com> acct "),
         floor(col("c_acctbal")).cast("long").cast("string"))
-      operators.Privacy.redactPii(cust(s, dir), col("c_custkey"), profile)
+      operators.Privacy.redactPii(Crm.table(s, dir, "customer"), col("c_custkey"), profile)
         .withColumnRenamed("id", "c_custkey")
         .orderBy(col("c_custkey"))
     }),
@@ -41,12 +41,12 @@ private[graft] object CurationQueries extends QueryFamily {
     // (drop zh/fr entirely, thin en, keep most of de).
     "q_sample_stratified" -> ((s, dir) => {
       operators.Sampling.stratifiedSample(
-        s.read.parquet(s"$dir/documents.parquet"),
+        Crm.table(s, dir, "documents"),
         col("doc_id"), col("lang"), Map("en" -> 0.3, "es" -> 0.7, "de" -> 0.9))
         .select(col("doc_id"), col("lang")).orderBy(col("doc_id"))
     }),
     "q_length_hist" -> ((s, dir) => {
-      s.read.parquet(s"$dir/documents.parquet")
+      Crm.table(s, dir, "documents")
         .groupBy((floor(col("n_chars") / 100) * 100).cast("long").as("bucket_lo"))
         .agg(count(lit(1)).as("n_docs"),
           min(col("n_chars")).as("min_chars"), max(col("n_chars")).as("max_chars"))

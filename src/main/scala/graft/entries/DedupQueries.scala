@@ -13,12 +13,12 @@ private[graft] object DedupQueries extends QueryFamily {
     // ---- §7.5 extensions: dedup -------------------------------------------
     "q_dedup_exact" -> ((s, dir) => {
       operators.Dedup.exactDedup(
-        s.read.parquet(s"$dir/documents.parquet"), col("text"), col("doc_id"))
+        Crm.table(s, dir, "documents"), col("text"), col("doc_id"))
         .orderBy(col("doc_id"))
     }),
     "q_dedup_jaccard" -> ((s, dir) => {
       operators.Dedup.jaccardPairs(
-        s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text", "lang", 0.6)
+        Crm.table(s, dir, "documents"), "doc_id", "text", "lang", 0.6)
         .orderBy(col("doc_id_a"), col("doc_id_b"))
     }),
     "q_dedup_minhash" -> ((s, dir) => {
@@ -28,7 +28,7 @@ private[graft] object DedupQueries extends QueryFamily {
     // base without base×base pair formation (the nightly-feed shape).
     "q_dedup_incr" -> ((s, dir) => {
       operators.Dedup.minhashLshPairsIncremental(
-        s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text",
+        Crm.table(s, dir, "documents"), "doc_id", "text",
         col("doc_id") % 4 === 0)
         .orderBy(col("doc_id_a"), col("doc_id_b"))
     }),
@@ -39,7 +39,7 @@ private[graft] object DedupQueries extends QueryFamily {
     // output-equivalent to re-running the incremental operator on the
     // full corpus, at delta-sized cost.
     "q_dedup_artifact" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Crm.table(s, dir, "documents")
       val art = tempDir("lsh_artifact")
       operators.Dedup.writeSignatureArtifact(
         docs.filter(col("doc_id") % 4 =!= 0), "doc_id", "text", art)
@@ -67,7 +67,7 @@ private[graft] object DedupQueries extends QueryFamily {
     }),
     "q_dedup_simhash" -> ((s, dir) => {
       operators.Dedup.simhashPairs(
-        s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text", maxHamming = 3)
+        Crm.table(s, dir, "documents"), "doc_id", "text", maxHamming = 3)
         .orderBy(col("doc_id_a"), col("doc_id_b"))
     }),
     // Cluster/canonical assignment: pairwise near-dup output → per-document
@@ -76,7 +76,7 @@ private[graft] object DedupQueries extends QueryFamily {
     // pipeline — the edge set a production run actually materializes
     // (all-pairs jaccard is exactly what LSH exists to avoid).
     "q_dedup_clusters" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Crm.table(s, dir, "documents")
       operators.Dedup.connectedComponents(
         docs.select(col("doc_id")), "doc_id", lshPairs(s, dir), "doc_id_a", "doc_id_b")
         .orderBy(col("doc_id"))
@@ -85,7 +85,7 @@ private[graft] object DedupQueries extends QueryFamily {
     // CLUSTER (CC over the LSH pair set), so no eval doc has a train-side
     // near-duplicate — the Lee et al. cross-split contamination fix.
     "q_split_leakage_safe" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Crm.table(s, dir, "documents")
       operators.Sampling.leakageSafeSplit(
         docs, "doc_id", lshPairs(s, dir), "doc_id_a", "doc_id_b", 0.8)
         .orderBy(col("doc_id"))
@@ -95,7 +95,7 @@ private[graft] object DedupQueries extends QueryFamily {
     "q_skew_join" -> ((s, dir) => {
       import graft.functions.GraftFunctions.{detRound, stableSumScaled}
       val j = operators.Skew.saltedEquiJoin(
-        li(s, dir), ord(s, dir), col("l_orderkey"), col("o_orderkey"), salt = 8)
+        Crm.table(s, dir, "lineitem"), Crm.table(s, dir, "orders"), col("l_orderkey"), col("o_orderkey"), salt = 8)
       j.groupBy(col("o_orderpriority"))
         .agg(count(lit(1)).as("n_items"),
           detRound(stableSumScaled(col("l_extendedprice") * (lit(1) - col("l_discount")), 4), 2)

@@ -12,12 +12,12 @@ private[graft] object MultimodalQueries extends QueryFamily {
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ---- §7.5 extensions: multimodal plumbing (decode stubbed) ------------
     "q_multimodal_meta" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Crm.table(s, dir, "documents")
       operators.Multimodal.decodeMeta(s, operators.Multimodal.withPayload(docs, "text"), "doc_id")
         .drop("feature").orderBy(col("doc_id"))
     }),
     "q_multimodal_resize" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Crm.table(s, dir, "documents")
       operators.Multimodal.resizeMeta(
         operators.Multimodal.decodeMeta(s, operators.Multimodal.withPayload(docs, "text"), "doc_id"))
         .select(col("doc_id"), col("width"), col("height"),
@@ -25,7 +25,7 @@ private[graft] object MultimodalQueries extends QueryFamily {
         .orderBy(col("doc_id"))
     }),
     "q_multimodal_frames" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Crm.table(s, dir, "documents")
       operators.Multimodal.sampleFrames(
         operators.Multimodal.withPayload(docs, "text"), "doc_id", stride = 16)
         // CSV-serialized for the driver comparator; empty payloads sample a
@@ -41,7 +41,7 @@ private[graft] object MultimodalQueries extends QueryFamily {
     // from the formula, proving the engine iterated genuinely decoded
     // frames (stride stub retired to opaque-codec payloads only).
     "q_multimodal_frames_real" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Crm.table(s, dir, "documents")
         .filter(col("doc_id") % 11 === 0)
       operators.Multimodal.frameStats(
         s, operators.Multimodal.withSyntheticGifs(s, docs, "doc_id"), "doc_id")
@@ -50,7 +50,7 @@ private[graft] object MultimodalQueries extends QueryFamily {
     // REAL audio decode: RIFF/WAVE chunk walk + PCM16 sample aggregation,
     // oracle-recomputed from the synthetic generator's closed form.
     "q_multimodal_wav" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Crm.table(s, dir, "documents")
         .filter(col("doc_id") % 7 === 0)
       operators.Multimodal.wavStats(
         s, operators.Multimodal.withSyntheticWavs(s, docs, "doc_id"), "doc_id")
@@ -62,7 +62,7 @@ private[graft] object MultimodalQueries extends QueryFamily {
     // recomputes each SAMPLED frame's sums from the closed-form pixel
     // formula, proving both the demux (true n_frames) and the decode.
     "q_multimodal_video" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Crm.table(s, dir, "documents")
         .filter(col("doc_id") % 13 === 0)
       operators.Multimodal.aviFrameSample(
         s, operators.Multimodal.withSyntheticAvis(s, docs, "doc_id"), "doc_id",
@@ -74,9 +74,7 @@ private[graft] object MultimodalQueries extends QueryFamily {
     // zero-crossing and peak features per window, oracle-recomputed from
     // the synthetic generator's closed form.
     "q_audio_energy" -> ((s, dir) => {
-      // the SAME glob as the streaming twin q_stream_audio (shared oracle
-      // => structurally identical source contract; see the note there)
-      val docs = s.read.parquet(s"$dir/documents.parquet*")
+      val docs = Crm.table(s, dir, "documents")
         .filter(col("doc_id") % 7 === 3)
       operators.Multimodal.wavWindows(
         s, operators.Multimodal.withSyntheticWavs(s, docs, "doc_id"), "doc_id",
@@ -85,7 +83,7 @@ private[graft] object MultimodalQueries extends QueryFamily {
     }),
     // Overlapping byte-chunk segmentation plan over the opaque payload.
     "q_multimodal_chunks" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Crm.table(s, dir, "documents")
       operators.Multimodal.chunkPlan(
         operators.Multimodal.withPayload(docs, "text"), "doc_id")
         .orderBy(col("doc_id"), col("chunk_idx"))
@@ -95,7 +93,7 @@ private[graft] object MultimodalQueries extends QueryFamily {
     // stats javax.imageio must read back out of the encoded bytes.
     "q_multimodal_pixels" -> ((s, dir) => {
       import graft.functions.GraftFunctions.detRound
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Crm.table(s, dir, "documents")
       val meta = operators.Multimodal.decodeMeta(
         s, operators.Multimodal.withSyntheticImages(s, docs, "doc_id"), "doc_id")
       meta.select(col("doc_id"), col("format"), col("width"), col("height"),
@@ -114,7 +112,7 @@ private[graft] object MultimodalQueries extends QueryFamily {
     // pixel formula (no codec in DuckDB), so a green gate proves the
     // engine's hash was computed from genuinely decoded pixels.
     "q_multimodal_phash" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Crm.table(s, dir, "documents")
       val hashed = operators.Multimodal.phashMeta(
         s, operators.Multimodal.withSyntheticImages(s, docs, "doc_id"), "doc_id")
       val w = Window.partitionBy(col("phash_hi"), col("phash_lo"))
@@ -131,7 +129,7 @@ private[graft] object MultimodalQueries extends QueryFamily {
     // NEAR-dup images at Hamming ≤ 3 over the dHash: pigeonhole 16-bit
     // chunk blocking + popcount verify — the image twin of q_dedup_simhash.
     "q_multimodal_phash_near" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Crm.table(s, dir, "documents")
       operators.Multimodal.phashNearDupPairs(
         operators.Multimodal.phashMeta(
           s, operators.Multimodal.withSyntheticImages(s, docs, "doc_id"), "doc_id"))
@@ -158,7 +156,7 @@ private[graft] object MultimodalQueries extends QueryFamily {
     // int8 embedding quantization (max-abs scaling) — exploded to
     // (vec_id, pos, qval) rows, integer-exact across engines.
     "q_embed_quantize" -> ((s, dir) => {
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
+      val emb = Crm.table(s, dir, "embeddings")
       val maxabs = array_max(transform(col("embedding"), x => abs(x.cast("double"))))
       emb.select(col("vec_id"), maxabs.as("__m"), posexplode(col("embedding")))
         .select(col("vec_id"), col("pos").cast("long").as("pos"),

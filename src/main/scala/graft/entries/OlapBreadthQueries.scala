@@ -12,7 +12,7 @@ private[graft] object OlapBreadthQueries extends QueryFamily {
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ---- OLAP breadth: grouping sets / unpivot / rank family --------------
     "q_grouping_sets" -> ((s, dir) => {
-      li(s, dir).createOrReplaceTempView("lineitem_v")
+      Crm.table(s, dir, "lineitem").createOrReplaceTempView("lineitem_v")
       s.sql(
         """SELECT l_returnflag, l_linestatus, count(*) AS n_rows,
           |  CAST(grouping(l_returnflag) AS BIGINT) AS g_rf,
@@ -26,9 +26,9 @@ private[graft] object OlapBreadthQueries extends QueryFamily {
     "q_unpivot" -> ((s, dir) => {
       // wide per-nation metrics → long (nationkey, metric, value) via the
       // native melt operator (narrow, no shuffle beyond the input aggs)
-      val cu = cust(s, dir).groupBy(col("c_nationkey").as("nk_c"))
+      val cu = Crm.table(s, dir, "customer").groupBy(col("c_nationkey").as("nk_c"))
         .agg(count(lit(1)).as("n_customers"))
-      val su = s.read.parquet(s"$dir/supplier.parquet")
+      val su = Crm.table(s, dir, "supplier")
         .groupBy(col("s_nationkey").as("nk_s")).agg(count(lit(1)).as("n_suppliers"))
       cu.join(su, col("nk_c") === col("nk_s"), "full_outer")
         .select(coalesce(col("nk_c"), col("nk_s")).as("nationkey"),
@@ -43,7 +43,7 @@ private[graft] object OlapBreadthQueries extends QueryFamily {
       // composite so no partition grows with a single attribute's skew;
       // bucketed prices create real ties (rank ≠ dense_rank).
       import graft.functions.GraftFunctions.detRound
-      val o = ord(s, dir).select(col("o_orderkey"), col("o_orderpriority"),
+      val o = Crm.table(s, dir, "orders").select(col("o_orderkey"), col("o_orderpriority"),
         year(col("o_orderdate")).cast("long").as("o_year"),
         (floor(col("o_totalprice") / 10000) * 10000).cast("long").as("price_bucket"))
       val w = Window.partitionBy(col("o_orderpriority"), col("o_year"))

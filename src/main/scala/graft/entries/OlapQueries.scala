@@ -12,25 +12,25 @@ private[graft] object OlapQueries extends QueryFamily {
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ---- OLAP coverage: rollup/pivot/windows/percentiles/set-ops/Q3/asof --
     "q_rollup" -> ((s, dir) => {
-      operators.Olap.rollupQuantities(li(s, dir))
+      operators.Olap.rollupQuantities(Crm.table(s, dir, "lineitem"))
         .orderBy(col("l_returnflag").asc_nulls_first, col("l_linestatus").asc_nulls_first)
     }),
     "q_pivot" -> ((s, dir) => {
       operators.Olap.pivotEventCounts(events(s, dir), EventTypes).orderBy(col("hora"))
     }),
     "q_window_running" -> ((s, dir) => {
-      operators.Olap.runningTotals(ord(s, dir))
+      operators.Olap.runningTotals(Crm.table(s, dir, "orders"))
         .orderBy(col("o_custkey"), col("order_seq"))
     }),
     "q_percentile" -> ((s, dir) => {
-      operators.Olap.pricePercentiles(li(s, dir)).orderBy(col("l_returnflag"))
+      operators.Olap.pricePercentiles(Crm.table(s, dir, "lineitem")).orderBy(col("l_returnflag"))
     }),
     "q_set_ops" -> ((s, dir) => {
-      operators.Olap.customerYearSetOps(ord(s, dir), 1996, 1997)
+      operators.Olap.customerYearSetOps(Crm.table(s, dir, "orders"), 1996, 1997)
         .orderBy(col("tag"), col("o_custkey"))
     }),
     "q_set_ops_all" -> ((s, dir) => {
-      operators.Olap.customerYearSetOpsAll(ord(s, dir), 1996, 1997)
+      operators.Olap.customerYearSetOpsAll(Crm.table(s, dir, "orders"), 1996, 1997)
         .orderBy(col("tag"), col("o_custkey"))
     }),
     "q_gapfill" -> ((s, dir) => {
@@ -38,7 +38,7 @@ private[graft] object OlapQueries extends QueryFamily {
         .orderBy(col("hora"), col("event_type"))
     }),
     "q_olap_pricing" -> ((s, dir) => {
-      operators.Olap.pricingSummary(cust(s, dir), ord(s, dir), li(s, dir),
+      operators.Olap.pricingSummary(Crm.table(s, dir, "customer"), Crm.table(s, dir, "orders"), Crm.table(s, dir, "lineitem"),
         segment = "BUILDING", cutoff = "1998-01-01", k = 10)
     }),
     "q_asof_join" -> ((s, dir) => {
@@ -61,7 +61,7 @@ private[graft] object OlapQueries extends QueryFamily {
       // stage), then arithmetic bucketing — SQL ntile gives the first
       // (n mod k) tiles ceil(n/k) rows and the rest floor(n/k).
       val k = 4
-      val src = ord(s, dir).select(col("o_orderkey"), col("o_totalprice"))
+      val src = Crm.table(s, dir, "orders").select(col("o_orderkey"), col("o_totalprice"))
       val ranked = Surrogate.zipWithIndexOrdered(
         src, "rk", Seq(col("o_totalprice"), col("o_orderkey")))
       // row count taken from the SOURCE projection (ranking preserves it) —

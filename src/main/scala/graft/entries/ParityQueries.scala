@@ -13,7 +13,7 @@ private[graft] object ParityQueries extends QueryFamily {
     // ---- A-series: aggregations ------------------------------------------
     "q1_agg" -> ((s, dir) => {
       import graft.functions.GraftFunctions.{detRound, stableAvg2, stableSum2, stableSumScaled}
-      li(s, dir).groupBy(col("l_returnflag"), col("l_linestatus"))
+      Crm.table(s, dir, "lineitem").groupBy(col("l_returnflag"), col("l_linestatus"))
         .agg(
           stableSum2(col("l_quantity")).as("sum_qty"),
           stableSum2(col("l_extendedprice")).as("sum_base_price"),
@@ -33,16 +33,16 @@ private[graft] object ParityQueries extends QueryFamily {
     }),
     // ---- P-series: scan/project/filter/distinct --------------------------
     "q_scan_project" -> ((s, dir) => {
-      cust(s, dir).filter(col("c_acctbal") > 1000.0)
+      Crm.table(s, dir, "customer").filter(col("c_acctbal") > 1000.0)
         .select(col("c_custkey"), col("c_name"), col("c_mktsegment"))
         .orderBy(col("c_custkey"))
     }),
     "q_distinct" -> ((s, dir) => {
-      cust(s, dir).select(col("c_mktsegment")).distinct().orderBy(col("c_mktsegment"))
+      Crm.table(s, dir, "customer").select(col("c_mktsegment")).distinct().orderBy(col("c_mktsegment"))
     }),
     // ---- J-series: joins ---------------------------------------------------
     "q_join_inner" -> ((s, dir) => {
-      ord(s, dir).join(li(s, dir), col("o_orderkey") === col("l_orderkey"), "inner")
+      Crm.table(s, dir, "orders").join(Crm.table(s, dir, "lineitem"), col("o_orderkey") === col("l_orderkey"), "inner")
         .groupBy(col("o_orderkey"))
         .agg(count(lit(1)).as("n_items"),
           graft.functions.GraftFunctions.detRound(
@@ -51,17 +51,17 @@ private[graft] object ParityQueries extends QueryFamily {
         .orderBy(col("o_orderkey"))
     }),
     "q_anti_join" -> ((s, dir) => {
-      cust(s, dir).join(ord(s, dir), col("c_custkey") === col("o_custkey"), "left_anti")
+      Crm.table(s, dir, "customer").join(Crm.table(s, dir, "orders"), col("c_custkey") === col("o_custkey"), "left_anti")
         .select(col("c_custkey"), col("c_name")).orderBy(col("c_custkey"))
     }),
     "q_semi_join" -> ((s, dir) => {
-      cust(s, dir).join(ord(s, dir), col("c_custkey") === col("o_custkey"), "left_semi")
+      Crm.table(s, dir, "customer").join(Crm.table(s, dir, "orders"), col("c_custkey") === col("o_custkey"), "left_semi")
         .select(col("c_custkey"), col("c_name")).orderBy(col("c_custkey"))
     }),
     "q_decorrelated_avg" -> ((s, dir) => {
-      val avgPrice = li(s, dir).groupBy(col("l_partkey"))
+      val avgPrice = Crm.table(s, dir, "lineitem").groupBy(col("l_partkey"))
         .agg(graft.functions.GraftFunctions.stableAvg2(col("l_extendedprice")).as("__avg"))
-      part(s, dir).join(avgPrice, col("p_partkey") === col("l_partkey"), "left")
+      Crm.table(s, dir, "part").join(avgPrice, col("p_partkey") === col("l_partkey"), "left")
         .select(col("p_partkey"),
           graft.functions.GraftFunctions.detRound(coalesce(col("__avg"), lit(0.0)), 4)
             .as("preco_medio"))
@@ -69,11 +69,11 @@ private[graft] object ParityQueries extends QueryFamily {
     }),
     // ---- sort/limit/window -------------------------------------------------
     "q_topk" -> ((s, dir) => {
-      ord(s, dir).select(col("o_orderkey"), col("o_totalprice"))
+      Crm.table(s, dir, "orders").select(col("o_orderkey"), col("o_totalprice"))
         .orderBy(col("o_totalprice").desc, col("o_orderkey")).limit(10)
     }),
     "q_window_rownum" -> ((s, dir) => {
-      cust(s, dir)
+      Crm.table(s, dir, "customer")
         .withColumn("rn", row_number()
           .over(Window.partitionBy(col("c_mktsegment")).orderBy(col("c_custkey"))).cast("long"))
         .filter(col("rn") <= 3)
@@ -81,14 +81,14 @@ private[graft] object ParityQueries extends QueryFamily {
         .orderBy(col("c_mktsegment"), col("rn"))
     }),
     "q_surrogate_key" -> ((s, dir) => {
-      Surrogate.withSurrogateKey(nat(s, dir).select(col("n_nationkey"), col("n_name")),
+      Surrogate.withSurrogateKey(Crm.table(s, dir, "nation").select(col("n_nationkey"), col("n_name")),
         "sk", Seq(col("n_nationkey"))).orderBy(col("n_nationkey"))
     }),
     "q_surrogate_scalable" -> ((s, dir) => {
       // §7.3 scale path: dense 1..N in total key order with NO
       // single-partition window (two-pass partition-offset row_number).
       Surrogate.zipWithIndexOrdered(
-        ord(s, dir).select(col("o_orderkey"), col("o_custkey")),
+        Crm.table(s, dir, "orders").select(col("o_orderkey"), col("o_custkey")),
         "sk", Seq(col("o_orderkey")))
         .orderBy(col("o_orderkey"))
     }),
@@ -96,14 +96,14 @@ private[graft] object ParityQueries extends QueryFamily {
       // (l_orderkey, l_linenumber) is NOT unique in the testdata, so the
       // tiebreak includes l_partkey to stay deterministic.
       Surrogate.firstMatch(
-        li(s, dir).select(col("l_orderkey"), col("l_linenumber"), col("l_partkey")),
+        Crm.table(s, dir, "lineitem").select(col("l_orderkey"), col("l_linenumber"), col("l_partkey")),
         Seq(col("l_orderkey")), Seq(col("l_linenumber"), col("l_partkey")))
         .orderBy(col("l_orderkey"))
     }),
     "q_join_full_outer" -> ((s, dir) => {
-      val cu = cust(s, dir).groupBy(col("c_nationkey").as("nk_c"))
+      val cu = Crm.table(s, dir, "customer").groupBy(col("c_nationkey").as("nk_c"))
         .agg(count(lit(1)).as("n_customers"))
-      val su = s.read.parquet(s"$dir/supplier.parquet")
+      val su = Crm.table(s, dir, "supplier")
         .groupBy(col("s_nationkey").as("nk_s")).agg(count(lit(1)).as("n_suppliers"))
       cu.join(su, col("nk_c") === col("nk_s"), "full_outer")
         .select(coalesce(col("nk_c"), col("nk_s")).as("nationkey"),
@@ -112,7 +112,7 @@ private[graft] object ParityQueries extends QueryFamily {
         .orderBy(col("nationkey"))
     }),
     "q_cube" -> ((s, dir) => {
-      li(s, dir).cube(col("l_returnflag"), col("l_linestatus"))
+      Crm.table(s, dir, "lineitem").cube(col("l_returnflag"), col("l_linestatus"))
         .agg(count(lit(1)).as("n_rows"))
         .orderBy(col("l_returnflag").asc_nulls_first, col("l_linestatus").asc_nulls_first)
     }),
@@ -120,7 +120,7 @@ private[graft] object ParityQueries extends QueryFamily {
       // Array outputs are serialized to a CSV string: the driver's pandas
       // comparator cannot sort array-typed cells (r2 verdict), and "1,5,9"
       // is engine-neutral for integer elements.
-      li(s, dir).groupBy(col("l_orderkey"))
+      Crm.table(s, dir, "lineitem").groupBy(col("l_orderkey"))
         .agg(sort_array(collect_list(col("l_partkey"))).as("__parts"))
         .select(col("l_orderkey"),
           array_join(col("__parts").cast("array<string>"), ",").as("parts"),

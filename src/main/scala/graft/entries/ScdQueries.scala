@@ -12,7 +12,7 @@ private[graft] object ScdQueries extends QueryFamily {
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ---- DW temporal versioning (SCD Type 2) ------------------------------
     "q_scd2" -> ((s, dir) => {
-      operators.Scd.scd2(ord(s, dir),
+      operators.Scd.scd2(Crm.table(s, dir, "orders"),
         col("o_custkey"), col("o_orderdate"), col("o_orderpriority"))
         .select(col("key").as("o_custkey"), col("version"), col("attr").as("priority"),
           col("valid_from"), col("valid_to"), col("is_current"))
@@ -21,10 +21,10 @@ private[graft] object ScdQueries extends QueryFamily {
     // Point-in-time (temporal) lookup against the SCD2 dimension: every
     // probe lands in exactly one [valid_from, valid_to) interval.
     "q_scd2_lookup" -> ((s, dir) => {
-      val versions = operators.Scd.scd2(ord(s, dir),
+      val versions = operators.Scd.scd2(Crm.table(s, dir, "orders"),
         col("o_custkey"), col("o_orderdate"), col("o_orderpriority"))
       operators.Scd.asOfLookup(
-        ord(s, dir).select(col("o_orderkey"), col("o_custkey"), col("o_orderdate")),
+        Crm.table(s, dir, "orders").select(col("o_orderkey"), col("o_custkey"), col("o_orderdate")),
         col("o_custkey"), col("o_orderdate"), versions)
         .select(col("o_orderkey"), col("o_custkey"), col("version"),
           col("attr").as("priority"), col("valid_from"))

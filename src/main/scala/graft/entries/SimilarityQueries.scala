@@ -12,24 +12,24 @@ private[graft] object SimilarityQueries extends QueryFamily {
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ---- §7.5 extensions: similarity search -------------------------------
     "q_ann_topk" -> ((s, dir) => {
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
+      val emb = Crm.table(s, dir, "embeddings")
       operators.Similarity.bruteForceTopK(emb, emb.filter(col("vec_id") % 50 === 0), k = 5)
         .orderBy(col("query_id"), col("rank"))
     }),
     "q_ann_lsh" -> ((s, dir) => {
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
+      val emb = Crm.table(s, dir, "embeddings")
       operators.Similarity.lshTopK(emb, emb.filter(col("vec_id") % 50 === 0), dim = 64, k = 5)
         .orderBy(col("query_id"), col("rank"))
     }),
     "q_ann_ivf" -> ((s, dir) => {
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
+      val emb = Crm.table(s, dir, "embeddings")
       operators.Similarity.ivfTopK(emb, emb.filter(col("vec_id") % 50 === 0), k = 5)
         .orderBy(col("query_id"), col("rank"))
     }),
     // IVF against TRAINED centroids (2 Lloyd rounds) — the index build as
     // a trained artifact instead of the deterministic seed sample.
     "q_ann_ivf_trained" -> ((s, dir) => {
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
+      val emb = Crm.table(s, dir, "embeddings")
       val cents = operators.Similarity.kmeans(emb, maxIter = 2)
       operators.Similarity.ivfTopKTrained(
           emb, emb.filter(col("vec_id") % 50 === 0), k = 5, cents, nprobe = 2)
@@ -38,12 +38,12 @@ private[graft] object SimilarityQueries extends QueryFamily {
     // Join-fanout audit for orders⋈lineitem, without running the join.
     "q_join_fanout" -> ((s, dir) => {
       operators.Skew.joinFanoutAudit(
-        ord(s, dir), col("o_orderkey"), li(s, dir), col("l_orderkey"))
+        Crm.table(s, dir, "orders"), col("o_orderkey"), Crm.table(s, dir, "lineitem"), col("l_orderkey"))
     }),
     // Per-source integrity manifest: counts, order-free checksum, key range.
     "q_manifest" -> ((s, dir) => {
       operators.Reconcile.manifest(
-        s.read.parquet(s"$dir/documents.parquet"),
+        Crm.table(s, dir, "documents"),
         col("source"), col("doc_id"), col("text"))
         .orderBy(col("part"))
     }),
@@ -52,14 +52,14 @@ private[graft] object SimilarityQueries extends QueryFamily {
     "q_stream_manifest" -> ((s, dir) => {
       streaming.EventsStream.runToCompletion(s, "q_stream_manifest_sink") { ss =>
         operators.Reconcile.manifest(
-          ss.readStream.schema(streaming.EventsStream.documentsSchema)
+          ss.readStream.schema(Crm.schemas("documents"))
             .parquet(s"$dir/documents.parquet*"),
           col("source"), col("doc_id"), col("text"))
       }.orderBy(col("part"))
     }),
     // Snapshot drift: chi-square over length buckets, even vs odd doc ids.
     "q_drift" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Crm.table(s, dir, "documents")
       operators.Reconcile.histogramDrift(
         docs.filter(col("doc_id") % 2 === 0),
         docs.filter(col("doc_id") % 2 === 1),
@@ -71,12 +71,12 @@ private[graft] object SimilarityQueries extends QueryFamily {
     "q_stream_drift" -> ((s, dir) => {
       val streamCounts = streaming.EventsStream.runToCompletion(
         s, "q_stream_drift_sink") { ss =>
-        ss.readStream.schema(streaming.EventsStream.documentsSchema)
+        ss.readStream.schema(Crm.schemas("documents"))
           .parquet(s"$dir/documents.parquet*").filter(col("doc_id") % 2 === 1)
           .groupBy(expr("n_chars DIV 200").as("bucket"))
           .agg(count(lit(1)).as("c_b"))
       }
-      val base = s.read.parquet(s"$dir/documents.parquet")
+      val base = Crm.table(s, dir, "documents")
         .filter(col("doc_id") % 2 === 0)
         .groupBy(expr("n_chars DIV 200").as("bucket"))
         .agg(count(lit(1)).as("c_a"))
@@ -85,12 +85,12 @@ private[graft] object SimilarityQueries extends QueryFamily {
     // Embedding covariance (upper triangle): the whitening/PCA input.
     "q_embed_cov" -> ((s, dir) => {
       operators.Similarity.covarianceMatrix(
-        s.read.parquet(s"$dir/embeddings.parquet"))
+        Crm.table(s, dir, "embeddings"))
         .orderBy(col("i"), col("j"))
     }),
     // IVF-PQ ANN: coarse cell pruning + asymmetric-distance (ADC) scoring.
     "q_ann_ivfpq" -> ((s, dir) => {
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
+      val emb = Crm.table(s, dir, "embeddings")
       operators.Similarity.ivfPqTopK(emb, emb.filter(col("vec_id") % 50 === 0), k = 5)
         .orderBy(col("query_id"), col("rank"))
     }),
@@ -100,7 +100,7 @@ private[graft] object SimilarityQueries extends QueryFamily {
     // (quadratic by parameterization). The query set is FIXED (vec_id < 2000)
     // so measured scale factors reflect the index, not a growing probe load.
     "q_ann_ivfpq_trained" -> ((s, dir) => {
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
+      val emb = Crm.table(s, dir, "embeddings")
       operators.Similarity.ivfPqTopKTrained(
           emb, emb.filter(col("vec_id") % 50 === 0 && col("vec_id") < 2000), k = 5,
           coarseCents = Some(fixedKCentroidsArtifact(s, dir)))
@@ -112,7 +112,7 @@ private[graft] object SimilarityQueries extends QueryFamily {
     // search time. Output-equal to q_ann_ivfpq_trained by construction
     // (shared adcSearch core), so it gates against the SAME oracle SQL.
     "q_ann_index" -> ((s, dir) => {
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
+      val emb = Crm.table(s, dir, "embeddings")
       // serve from the persisted index; derivation is proven by the
       // input-fingerprint manifest check (train corpus == serve corpus),
       // not by retraining inline (VERDICT r12 #5)
@@ -139,7 +139,7 @@ private[graft] object SimilarityQueries extends QueryFamily {
     // broadcast probe of the vector store, never a corpus shuffle) and
     // re-ranked by EXACT L2² for the final top-5.
     "q_ann_ivfpq_rerank" -> ((s, dir) => {
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
+      val emb = Crm.table(s, dir, "embeddings")
       operators.Similarity.ivfPqRerank(
           emb, emb.filter(col("vec_id") % 50 === 0 && col("vec_id") < 2000),
           k = 5, shortlist = 20,
@@ -152,7 +152,7 @@ private[graft] object SimilarityQueries extends QueryFamily {
     // q_ann_ivf_trained's K = N/40 makes the same product quadratic. Query
     // set pinned (vec_id < 2000) so measured scale factors isolate the index.
     "q_ann_ivf_fixedk" -> ((s, dir) => {
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
+      val emb = Crm.table(s, dir, "embeddings")
       operators.Similarity.ivfTopKTrained(
           emb, emb.filter(col("vec_id") % 50 === 0 && col("vec_id") < 2000),
           k = 5, fixedKCentroidsArtifact(s, dir), nprobe = 2)
@@ -160,51 +160,51 @@ private[graft] object SimilarityQueries extends QueryFamily {
     }),
     // Order-sensitive index eval: nDCG@5 of the IVF list vs the exact one.
     "q_ann_ndcg" -> ((s, dir) => {
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
+      val emb = Crm.table(s, dir, "embeddings")
       operators.Similarity.annNdcg(emb, emb.filter(col("vec_id") % 50 === 0), k = 5)
         .orderBy(col("query_id"))
     }),
     // ANN index-quality evaluation: recall@5 of the IVF index vs exact top-5.
     "q_ann_recall" -> ((s, dir) => {
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
+      val emb = Crm.table(s, dir, "embeddings")
       operators.Similarity.annRecall(emb, emb.filter(col("vec_id") % 50 === 0), k = 5)
         .orderBy(col("query_id"))
     }),
     // MRR of the exact nearest neighbor within the IVF list.
     "q_ann_mrr" -> ((s, dir) => {
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
+      val emb = Crm.table(s, dir, "embeddings")
       operators.Similarity.annMrr(emb, emb.filter(col("vec_id") % 50 === 0), k = 5)
         .orderBy(col("query_id"))
     }),
     "q_cosine_neardup" -> ((s, dir) => {
       operators.Similarity.cosineNearDupPairs(
-        s.read.parquet(s"$dir/embeddings.parquet"), threshold = 0.4)
+        Crm.table(s, dir, "embeddings"), threshold = 0.4)
         .orderBy(col("vec_id_a"), col("vec_id_b"))
     }),
     // the scale path: same-bucket candidates only (~n²/2^nBits pairs)
     "q_cosine_neardup_lsh" -> ((s, dir) => {
       operators.Similarity.lshNearDupPairs(
-        s.read.parquet(s"$dir/embeddings.parquet"), dim = 64, threshold = 0.4)
+        Crm.table(s, dir, "embeddings"), dim = 64, threshold = 0.4)
         .orderBy(col("vec_id_a"), col("vec_id_b"))
     }),
     // deterministic md5-keyed train/eval split — reproducible across reruns,
     // engines and cluster layouts (rand() is none of those)
     "q_train_split" -> ((s, dir) => {
       operators.Sampling.trainEvalSplit(
-        s.read.parquet(s"$dir/documents.parquet"), col("doc_id"), 0.8)
+        Crm.table(s, dir, "documents"), col("doc_id"), 0.8)
         .groupBy(col("split")).agg(count(lit(1)).as("n_docs"))
         .orderBy(col("split"))
     }),
     // end-to-end curation: lang filter → quality gate → dedup keepers →
     // deterministic subsample, fused into one corpus pass + one agg shuffle
     "q_curation" -> ((s, dir) => {
-      operators.Curation.curate(s.read.parquet(s"$dir/documents.parquet"),
+      operators.Curation.curate(Crm.table(s, dir, "documents"),
         "doc_id", "text", lang = "en", minQuality = 0.45, sampleFraction = 0.5)
         .orderBy(col("doc_id"))
     }),
     // Data-constrained epoch scheduling: budget split ∝ token mass, ≤4 epochs.
     "q_token_budget" -> ((s, dir) => {
-      operators.Curation.tokenBudget(s.read.parquet(s"$dir/documents.parquet"),
+      operators.Curation.tokenBudget(Crm.table(s, dir, "documents"),
         "text", "source", budget = 100000L, maxEpochs = 4)
         .orderBy(col("source"))
     }),
@@ -212,7 +212,7 @@ private[graft] object SimilarityQueries extends QueryFamily {
     // Gated end-to-end on the (split, shard) manifest.
     "q_pipeline_manifest" -> ((s, dir) => {
       operators.Curation.pipelineManifest(
-        s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text",
+        Crm.table(s, dir, "documents"), "doc_id", "text",
         lang = "en", minQuality = 0.3, sampleFraction = 1.0,
         pairs = lshPairs(s, dir), aCol = "doc_id_a", bCol = "doc_id_b",
         trainFraction = 0.8, nShards = 8)
@@ -223,13 +223,13 @@ private[graft] object SimilarityQueries extends QueryFamily {
     // sort. Gated on the shard manifest (balance + order-free checksums).
     "q_shuffle_shards" -> ((s, dir) => {
       operators.Curation.shuffleShards(
-        s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text",
+        Crm.table(s, dir, "documents"), "doc_id", "text",
         nShards = 8, epochs = 2)
         .orderBy(col("epoch"), col("shard"))
     }),
     // Observability twin of q_curation: per-stage survivor/drop counts.
     "q_curation_funnel" -> ((s, dir) => {
-      operators.Curation.curationFunnel(s.read.parquet(s"$dir/documents.parquet"),
+      operators.Curation.curationFunnel(Crm.table(s, dir, "documents"),
         "doc_id", "text", lang = "en", minQuality = 0.45, sampleFraction = 0.5)
         .orderBy(col("stage_idx"))
     }))

@@ -13,7 +13,7 @@ private[graft] object SketchesQueries extends QueryFamily {
     // ---- §7.5 round 5: deterministic sketches ------------------------------
     // Per-language HLL distinct-token estimate next to the exact count.
     "q_hll_distinct" -> ((s, dir) => {
-      val tok = s.read.parquet(s"$dir/documents.parquet")
+      val tok = Crm.table(s, dir, "documents")
         .select(col("lang"), explode(operators.TextAnalysis.words(col("text"))).as("w"))
       operators.Sketches.hllDistinct(tok, col("lang"), col("w"))
         .withColumnRenamed("grp", "lang")
@@ -21,32 +21,32 @@ private[graft] object SketchesQueries extends QueryFamily {
     }),
     // Count-min sketch estimates for the exact top-20 corpus terms.
     "q_heavy_hitters" -> ((s, dir) => {
-      val tok = s.read.parquet(s"$dir/documents.parquet")
+      val tok = Crm.table(s, dir, "documents")
         .select(explode(operators.TextAnalysis.words(col("text"))).as("term"))
       operators.Sketches.cmsHeavyHitters(tok, col("term"), 20)
     }),
     // MOSS winnowing fingerprints: position-aware k-gram selections.
     "q_winnow" -> ((s, dir) => {
       operators.TextAnalysis.winnow(
-        s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text")
+        Crm.table(s, dir, "documents"), "doc_id", "text")
         .orderBy(col("doc_id"), col("pos"), col("fp"))
     }),
     // Vocabulary coverage curve via the distributed prefix sum — no global
     // window anywhere (Surrogate.rankedRunningTotal).
     "q_vocab_coverage" -> ((s, dir) => {
       operators.TextAnalysis.vocabCoverage(
-        s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text",
+        Crm.table(s, dir, "documents"), "doc_id", "text",
         Seq(0.5, 0.9, 0.99))
     }),
     // Web-corpus rebalancing: keep at most 50 best docs per source domain.
     "q_domain_cap" -> ((s, dir) => {
       operators.Curation.capPerDomain(
-        s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text", "source", 50)
+        Crm.table(s, dir, "documents"), "doc_id", "text", "source", 50)
         .orderBy(col("domain"), col("rank_in_domain"))
     }),
     // Join-key skew diagnostics over the fact join key.
     "q_key_skew" -> ((s, dir) => {
-      operators.Olap.keySkewStats(li(s, dir), col("l_orderkey"))
+      operators.Olap.keySkewStats(Crm.table(s, dir, "lineitem"), col("l_orderkey"))
     }),
     // Catalog-style column profile over the noisy cliente table.
     "q_column_profile" -> ((s, dir) => {
@@ -57,7 +57,7 @@ private[graft] object SketchesQueries extends QueryFamily {
     // k-anonymity audit over (lang, source, length-bucket) quasi-identifiers.
     "q_k_anonymity" -> ((s, dir) => {
       operators.Quality.kAnonymity(
-        s.read.parquet(s"$dir/documents.parquet"),
+        Crm.table(s, dir, "documents"),
         Seq(col("lang"), col("source"),
           (col("n_chars") / 100).cast("long").as("len_bucket")), k = 5)
         .orderBy(col("lang"), col("source"), col("len_bucket"))
@@ -65,7 +65,7 @@ private[graft] object SketchesQueries extends QueryFamily {
     // l-diversity twin: groups must also span >= l distinct langs.
     "q_l_diversity" -> ((s, dir) => {
       operators.Quality.lDiversity(
-        s.read.parquet(s"$dir/documents.parquet"),
+        Crm.table(s, dir, "documents"),
         Seq(col("source"), (col("n_chars") / 200).cast("long").as("len_bucket")),
         col("lang"), l = 3)
         .orderBy(col("source"), col("len_bucket"))
@@ -73,7 +73,7 @@ private[graft] object SketchesQueries extends QueryFamily {
     // t-closeness: group lang-distributions within TV distance t of global.
     "q_t_closeness" -> ((s, dir) => {
       operators.Quality.tCloseness(
-        s.read.parquet(s"$dir/documents.parquet"),
+        Crm.table(s, dir, "documents"),
         Seq(col("source"), (col("n_chars") / 200).cast("long").as("len_bucket")),
         col("lang"), t = 0.25)
         .orderBy(col("source"), col("len_bucket"))
@@ -81,13 +81,13 @@ private[graft] object SketchesQueries extends QueryFamily {
     // Gini concentration of the docs-per-domain distribution.
     "q_domain_gini" -> ((s, dir) => {
       operators.Curation.domainConcentration(
-        s.read.parquet(s"$dir/documents.parquet"), "source")
+        Crm.table(s, dir, "documents"), "source")
     }),
     // Same cap via the O(k)-state TopKByScore aggregate (the mega-domain
     // scale path) — shares q_domain_cap's oracle: identical output.
     "q_domain_cap_agg" -> ((s, dir) => {
       operators.Curation.capPerDomainAgg(
-        s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text", "source", 50)
+        Crm.table(s, dir, "documents"), "doc_id", "text", "source", 50)
         .orderBy(col("domain"), col("rank_in_domain"))
     }),
     // Trailing-24h z-score volume anomalies on the hourly event series.
@@ -97,7 +97,7 @@ private[graft] object SketchesQueries extends QueryFamily {
     // Asymmetric containment near-dups via DF-ordered prefix filtering.
     "q_containment" -> ((s, dir) => {
       operators.Dedup.containmentPairs(
-        s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text")
+        Crm.table(s, dir, "documents"), "doc_id", "text")
         .orderBy(col("doc_id_a"), col("doc_id_b"))
     }),
     // Hopping 2h/1h windows — each event in exactly two windows.
@@ -111,7 +111,7 @@ private[graft] object SketchesQueries extends QueryFamily {
       streaming.EventsStream.runToCompletion(s, "q_stream_session_window_sink",
         org.apache.spark.sql.streaming.OutputMode.Append()) { ss =>
         streaming.EventsStream.sessionWindowAgg(
-          streaming.EventsStream.readEventsStreamNanos(ss, s"$dir/events*"))
+          streaming.EventsStream.readEventsStreamNanos(ss, dir))
       }.orderBy(col("user_id"), col("session_start"))
     }),
     // HLL register merge: per-day estimate rolled up from hourly registers.
@@ -127,25 +127,25 @@ private[graft] object SketchesQueries extends QueryFamily {
       streaming.EventsStream.runToCompletion(s, "q_stream_dedup_wm_sink",
         org.apache.spark.sql.streaming.OutputMode.Append()) { ss =>
         streaming.EventsStream.streamingDedupWithinWatermark(
-          streaming.EventsStream.readEventsStreamNanos(ss, s"$dir/events*"))
+          streaming.EventsStream.readEventsStreamNanos(ss, dir))
       }.orderBy(col("user_id"), col("event_type"), col("minuto"))
     }),
     // Streaming hopping windows (complete mode == batch sliding counts).
     "q_stream_sliding" -> ((s, dir) => {
       streaming.EventsStream.runToCompletion(s, "q_stream_sliding_sink") { ss =>
         streaming.EventsStream.slidingCountsStream(
-          streaming.EventsStream.readEventsStreamNanos(ss, s"$dir/events*"))
+          streaming.EventsStream.readEventsStreamNanos(ss, dir))
       }.orderBy(col("win_start"), col("event_type"))
     }),
     // One Lloyd refinement step over the IVF seed centroids.
     "q_kmeans_step" -> ((s, dir) => {
-      operators.Similarity.kmeansStep(s.read.parquet(s"$dir/embeddings.parquet"))
+      operators.Similarity.kmeansStep(Crm.table(s, dir, "embeddings"))
         .orderBy(col("cell"), col("pos"))
     }),
     // Lloyd's to a fixpoint (tol=0 ⇒ exactly 3 deterministic rounds, the
     // mode the DuckDB oracle unrolls); final centroids exploded per-element.
     "q_kmeans" -> ((s, dir) => {
-      operators.Similarity.kmeans(s.read.parquet(s"$dir/embeddings.parquet"), maxIter = 3)
+      operators.Similarity.kmeans(Crm.table(s, dir, "embeddings"), maxIter = 3)
         .select(col("cell"), col("n_vectors"), posexplode(col("emb_cent")))
         .select(col("cell"), col("pos").cast("long").as("pos"),
           col("col").as("value"), col("n_vectors"))
@@ -153,7 +153,7 @@ private[graft] object SketchesQueries extends QueryFamily {
     }),
     // CDC apply: latest-wins snapshot from a synthesized I/U/D change log.
     "q_cdc_apply" -> ((s, dir) => {
-      val o = ord(s, dir)
+      val o = Crm.table(s, dir, "orders")
       val ins = o.select(col("o_orderkey").as("k"), col("o_orderdate").as("vts"),
         lit("I").as("op"), col("o_totalprice").as("price"))
       val upd = o.filter(col("o_orderkey") % 7 === 0)
@@ -173,7 +173,7 @@ private[graft] object SketchesQueries extends QueryFamily {
     // Deterministic fixed-size per-language reservoir (eval-set carving).
     "q_reservoir" -> ((s, dir) => {
       operators.Sampling.reservoirPerGroup(
-        s.read.parquet(s"$dir/documents.parquet"), col("doc_id"), col("lang"), 20)
+        Crm.table(s, dir, "documents"), col("doc_id"), col("lang"), 20)
         .select(col("group").as("lang"), col("rank"), col("key").as("doc_id"))
         .orderBy(col("lang"), col("rank"))
     }),
@@ -184,7 +184,7 @@ private[graft] object SketchesQueries extends QueryFamily {
     }),
     // Incremental view maintenance: merged partial states == full aggregate.
     "q_incr_agg" -> ((s, dir) => {
-      val o = ord(s, dir)
+      val o = Crm.table(s, dir, "orders")
       val split = lit("1995-01-01").cast("timestamp")
       val base = operators.Incremental.revenueState(o.filter(col("o_orderdate") < split))
       val delta = operators.Incremental.revenueState(o.filter(col("o_orderdate") >= split))
@@ -232,7 +232,7 @@ private[graft] object SketchesQueries extends QueryFamily {
     // scale-safe form (no global window over data rows).
     "q_share" -> ((s, dir) => {
       import graft.functions.GraftFunctions.{detRound, stableSum2}
-      val seg = cust(s, dir).groupBy(col("c_mktsegment"))
+      val seg = Crm.table(s, dir, "customer").groupBy(col("c_mktsegment"))
         .agg(stableSum2(col("c_acctbal")).as("seg_balance"),
           count(lit(1)).as("n_customers"))
       // decimal re-cast: the 5-row total must not depend on float sum order
@@ -255,59 +255,59 @@ private[graft] object SketchesQueries extends QueryFamily {
     // Rebalance to a target mix: data-dependent per-language fractions.
     "q_mix_rebalance" -> ((s, dir) => {
       operators.Sampling.rebalanceToTarget(
-        s.read.parquet(s"$dir/documents.parquet"), col("doc_id"), col("lang"), 60)
+        Crm.table(s, dir, "documents"), col("doc_id"), col("lang"), 60)
         .select(col("doc_id"), col("lang")).orderBy(col("doc_id"))
     }),
     // Deterministic Poisson bootstrap: 16 replicates of mean(o_totalprice).
     "q_bootstrap" -> ((s, dir) => {
       operators.Sampling.poissonBootstrap(
-        ord(s, dir), col("o_orderkey"), col("o_totalprice"))
+        Crm.table(s, dir, "orders"), col("o_orderkey"), col("o_totalprice"))
         .orderBy(col("r"))
     }),
     // Temperature-scaled mixture sampling (XLM-R α=0.5 via exact sqrt).
     "q_temperature_mix" -> ((s, dir) => {
       operators.Sampling.temperatureMix(
-        s.read.parquet(s"$dir/documents.parquet"), col("doc_id"), col("lang"), 150)
+        Crm.table(s, dir, "documents"), col("doc_id"), col("lang"), 150)
         .select(col("doc_id"), col("lang")).orderBy(col("doc_id"))
     }),
     // Weighted Bernoulli sample: inclusion probability ∝ document length.
     "q_weighted_sample" -> ((s, dir) => {
       operators.Sampling.weightedSample(
-        s.read.parquet(s"$dir/documents.parquet"), col("doc_id"), col("n_chars"),
+        Crm.table(s, dir, "documents"), col("doc_id"), col("n_chars"),
         targetFraction = 0.8)
         .select(col("doc_id"), col("n_chars")).orderBy(col("doc_id"))
     }),
     // Leakage-safe group k-fold: a domain never straddles folds.
     "q_group_kfold" -> ((s, dir) => {
       operators.Sampling.groupKFold(
-        s.read.parquet(s"$dir/documents.parquet").select(col("doc_id"), col("source")),
+        Crm.table(s, dir, "documents").select(col("doc_id"), col("source")),
         col("source"), 5)
         .orderBy(col("doc_id"))
     }),
     // Duplicate-span fraction: per doc, share of 5-gram hashes seen in ≥2 docs.
     "q_dup_span" -> ((s, dir) => {
       operators.Dedup.duplicateSpanStats(
-        s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text")
+        Crm.table(s, dir, "documents"), "doc_id", "text")
         .orderBy(col("doc_id"))
     }),
     // Exact duplicated-substring spans (ExactSubstr, Lee et al. 2022):
     // bounded prefix-doubling suffix ranks — hash-free, exact at any scale.
     "q_exact_substr" -> ((s, dir) => {
       operators.Dedup.exactSubstrSpans(
-        s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text")
+        Crm.table(s, dir, "documents"), "doc_id", "text")
         .orderBy(col("doc_id"))
     }),
     // The ExactSubstr cleaning transform: duplicated spans cut out of the
     // corpus, canonical-form reconstruction of the survivors.
     "q_exact_substr_clean" -> ((s, dir) => {
       operators.Dedup.exactSubstrClean(
-        s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text")
+        Crm.table(s, dir, "documents"), "doc_id", "text")
         .orderBy(col("doc_id"))
     }),
     // Sorted-neighborhood entity resolution (Hernández & Stolfo 1995):
     // N·w candidates by construction, codegen Jaro-Winkler comparator.
     "q_er_neighborhood" -> ((s, dir) => {
-      operators.Linkage.sortedNeighborhood(part(s, dir), "p_partkey", "p_name")
+      operators.Linkage.sortedNeighborhood(Crm.table(s, dir, "part"), "p_partkey", "p_name")
         .orderBy(col("id1"), col("id2"))
     }),
     // Exact edit-distance near-dup pairs via PassJoin segment pigeonhole,
@@ -317,7 +317,7 @@ private[graft] object SketchesQueries extends QueryFamily {
     // pair space vocabulary-bounded as the corpus grows (this table keeps
     // 64 distinct names at every sf — raw pairs would grow ~100x/decade).
     "q_edit_neardup" -> ((s, dir) => {
-      val base = part(s, dir).select(col("p_partkey"), col("p_name"))
+      val base = Crm.table(s, dir, "part").select(col("p_partkey"), col("p_name"))
       val dirty = base.filter(pmod(col("p_partkey"), lit(10)) === 0)
         .select((col("p_partkey") + 10000000L).as("p_partkey"),
           concat(substring(col("p_name"), 1, 3),
@@ -330,13 +330,13 @@ private[graft] object SketchesQueries extends QueryFamily {
     // CCNet-style head/middle/tail LM quality terciles.
     "q_lm_bucket" -> ((s, dir) => {
       operators.TextAnalysis.lmQualityBuckets(
-        s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text")
+        Crm.table(s, dir, "documents"), "doc_id", "text")
         .orderBy(col("doc_id"))
     }),
     // Hashed-feature linear scorer: fastText-filter plumbing, margin + keep.
     "q_logreg_score" -> ((s, dir) => {
       operators.TextAnalysis.hashLinearScore(
-        s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text")
+        Crm.table(s, dir, "documents"), "doc_id", "text")
         .orderBy(col("doc_id"))
     }),
     // TRAINED quality classifier: distributed batch perceptron over hashed
@@ -344,21 +344,21 @@ private[graft] object SketchesQueries extends QueryFamily {
     // learned weight table q_logreg_score's doc promises.
     "q_quality_train" -> ((s, dir) => {
       operators.TextAnalysis.perceptronTrain(
-        s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text")
+        Crm.table(s, dir, "documents"), "doc_id", "text")
         .orderBy(col("bucket"))
     }),
     // The trained classifier's consumer: the corpus filtered by the learned
     // weights (integer-exact margins, keep = margin > 0).
     "q_quality_filter" -> ((s, dir) => {
       operators.TextAnalysis.perceptronScore(
-        s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text")
+        Crm.table(s, dir, "documents"), "doc_id", "text")
         .orderBy(col("doc_id"))
     }),
     // The persisted-model lifecycle: the trained weight table written ONCE,
     // the corpus scored from the artifact (inference only — no labels, no
     // training loop) — output-equal to q_quality_filter, same oracle.
     "q_quality_artifact" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Crm.table(s, dir, "documents")
       val art = tempDir("quality_model")
       operators.TextAnalysis.writeQualityModel(docs, "doc_id", "text", art)
       operators.TextAnalysis.perceptronScoreWithModel(docs, "doc_id", "text", art)

@@ -15,7 +15,7 @@ private[graft] object TextQueries extends QueryFamily {
       // Exploded (label, pos, value) shape: the centroid array itself is not
       // harness-comparable (pandas cannot sort array cells — r2 verdict), and
       // per-element rows let the driver's float normalization do its job.
-      operators.Similarity.labelCentroids(s.read.parquet(s"$dir/embeddings.parquet"))
+      operators.Similarity.labelCentroids(Crm.table(s, dir, "embeddings"))
         .select(col("label"), posexplode(col("centroid")), col("n_vectors"))
         .select(col("label"), col("pos").cast("long").as("pos"),
           col("col").as("value"), col("n_vectors"))
@@ -23,19 +23,19 @@ private[graft] object TextQueries extends QueryFamily {
     }),
     "q_tfidf" -> ((s, dir) => {
       operators.TextAnalysis.topTermsByTfRarity(
-        s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text", k = 3)
+        Crm.table(s, dir, "documents"), "doc_id", "text", k = 3)
         .orderBy(col("doc_id"), col("rank"))
     }),
     // BM25 top terms (tf saturation + length normalization; odds idf).
     "q_bm25" -> ((s, dir) => {
       operators.TextAnalysis.bm25TopTerms(
-        s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text", k = 3)
+        Crm.table(s, dir, "documents"), "doc_id", "text", k = 3)
         .orderBy(col("doc_id"), col("rank"))
     }),
     // Top-k bigrams per language via the O(k)-state TopKByScore aggregate.
     "q_ngrams_top" -> ((s, dir) => {
       operators.TextAnalysis.topNgramsPerLang(
-        s.read.parquet(s"$dir/documents.parquet"), "text", "lang", k = 20)
+        Crm.table(s, dir, "documents"), "text", "lang", k = 20)
         .orderBy(col("lang"), col("rank"))
     }),
     // Market-basket co-occurrence lift over (order, part) baskets.
@@ -44,7 +44,7 @@ private[graft] object TextQueries extends QueryFamily {
       // canonically identical, so the CacheManager substitutes it and this
       // query's action materializes the artifact for the whole graph family
       copurchasePairsArtifact(s, dir)
-      operators.Basket.cooccurrenceLift(li(s, dir))
+      operators.Basket.cooccurrenceLift(Crm.table(s, dir, "lineitem"))
         .orderBy(col("pk_a"), col("pk_b"))
     }),
     // Item-to-item top-3 co-purchase neighbors by lift — the recommender
@@ -52,7 +52,7 @@ private[graft] object TextQueries extends QueryFamily {
     // window partitions by item (bounded by the item's pruned degree).
     "q_item_neighbors" -> ((s, dir) => {
       copurchasePairsArtifact(s, dir) // prime: lift's pairs subtree reuses it
-      val lift = operators.Basket.cooccurrenceLift(li(s, dir))
+      val lift = operators.Basket.cooccurrenceLift(Crm.table(s, dir, "lineitem"))
       val both = lift.select(col("pk_a").as("item"), col("pk_b").as("neighbor"),
           col("c_ab"), col("lift"))
         .unionAll(lift.select(col("pk_b").as("item"), col("pk_a").as("neighbor"),
@@ -74,12 +74,12 @@ private[graft] object TextQueries extends QueryFamily {
     }),
     // Z-order (Morton) layout audit: per-cell (part, supplier) bounding box.
     "q_zorder_cells" -> ((s, dir) => {
-      operators.Layout.zorderCells(li(s, dir)).orderBy(col("zcell"))
+      operators.Layout.zorderCells(Crm.table(s, dir, "lineitem")).orderBy(col("zcell"))
     }),
     // Concat-and-chunk sequence packing over the two-pass prefix sum.
     "q_pack" -> ((s, dir) => {
       operators.Packing.packPlan(
-        s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text", 2048)
+        Crm.table(s, dir, "documents"), "doc_id", "text", 2048)
         .orderBy(col("doc_id"))
     }),
     // The training-data final mile, composed from two gated pieces: counts
@@ -88,7 +88,7 @@ private[graft] object TextQueries extends QueryFamily {
     // layout an LLM pre-training run actually consumes. Oracle = the
     // unrolled BPE chain's per-doc counts fed to the q_pack window SQL.
     "q_pack_bpe" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Crm.table(s, dir, "documents")
       // persisted trained vocab + manifest check replaces the in-query
       // retrain (VERDICT r12 #5); the oracle (unrolled BPE chain) and the
       // output are unchanged — the vocab content is deterministic
@@ -104,12 +104,12 @@ private[graft] object TextQueries extends QueryFamily {
     // SemDeDup: k-means cell assignment + intra-cell cosine near-dup marking.
     "q_semantic_dedup" -> ((s, dir) => {
       operators.Similarity.semanticDedup(
-        s.read.parquet(s"$dir/embeddings.parquet")).orderBy(col("vec_id"))
+        Crm.table(s, dir, "embeddings")).orderBy(col("vec_id"))
     }),
     // SQL-surface natives: dot_fp via the GraftExtensions function registry.
     "q_sql_native" -> ((s, dir) => {
       GraftExtensions.install(s)
-      s.read.parquet(s"$dir/embeddings.parquet").createOrReplaceTempView("embeddings_v")
+      Crm.table(s, dir, "embeddings").createOrReplaceTempView("embeddings_v")
       s.sql("SELECT vec_id, dot_fp(embedding, embedding) AS raw FROM embeddings_v")
         .select(col("vec_id"),
           graft.functions.GraftFunctions.detRound(col("raw"), 4).as("norm2"))
@@ -118,38 +118,38 @@ private[graft] object TextQueries extends QueryFamily {
     // Materialized BPE-ish tokenizer output: (doc, position, token) stream.
     "q_tokenize" -> ((s, dir) => {
       operators.TextAnalysis
-        .tokenStream(s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text")
+        .tokenStream(Crm.table(s, dir, "documents"), "doc_id", "text")
         .orderBy(col("doc_id"), col("token_idx"))
     }),
     // CMS join-size estimate: |orders96 x orders97 on custkey| from sketches.
     // Per-language p50/p95 doc length from the grouped fixed-bin sketch.
     "q_grouped_quantiles" -> ((s, dir) => {
       operators.Sketches.histogramQuantilesByGroup(
-        s.read.parquet(s"$dir/documents.parquet"),
+        Crm.table(s, dir, "documents"),
         col("lang"), col("n_chars"), 100.0, Seq(0.5, 0.95))
         .orderBy(col("g"), col("p"))
     }),
     // Sparse TF-IDF cosine near-dup pairs over the token inverted index.
     "q_sparse_cosine" -> ((s, dir) => {
       operators.TextAnalysis.sparseCosinePairs(
-        s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text")
+        Crm.table(s, dir, "documents"), "doc_id", "text")
         .orderBy(col("doc_a"), col("doc_b"))
     }),
     // IVF-pruned kNN graph: per-vector top-3 in-cell neighbors by cosine.
     "q_knn_graph" -> ((s, dir) => {
       operators.Similarity.knnGraph(
-        s.read.parquet(s"$dir/embeddings.parquet"), k = 3)
+        Crm.table(s, dir, "embeddings"), k = 3)
         .orderBy(col("vec_id"), col("rank"))
     }),
     // Late-interaction MaxSim top-k (ColBERT shape) over m=4 sub-vectors.
     "q_maxsim" -> ((s, dir) => {
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
+      val emb = Crm.table(s, dir, "embeddings")
       operators.Similarity.maxSimTopK(emb, emb.filter(col("vec_id") % 50 === 0), k = 5)
         .orderBy(col("query_id"), col("rank"))
     }),
     // Hybrid-search fusion: RRF of cosine top-10 and MaxSim top-10.
     "q_rrf_fusion" -> ((s, dir) => {
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
+      val emb = Crm.table(s, dir, "embeddings")
       val q = emb.filter(col("vec_id") % 50 === 0)
       operators.Similarity.rrfFuse(
         operators.Similarity.bruteForceTopK(emb, q, k = 10),
@@ -159,20 +159,20 @@ private[graft] object TextQueries extends QueryFamily {
     // Hard negatives: closest non-duplicate neighbors per vector.
     "q_hard_negatives" -> ((s, dir) => {
       operators.Similarity.hardNegatives(
-        s.read.parquet(s"$dir/embeddings.parquet"))
+        Crm.table(s, dir, "embeddings"))
         .orderBy(col("vec_id"), col("hard_rank"))
     }),
     // Nearest-label-centroid confusion matrix over the embedding corpus.
     "q_centroid_confusion" -> ((s, dir) => {
       operators.Similarity.centroidConfusion(
-        s.read.parquet(s"$dir/embeddings.parquet"))
+        Crm.table(s, dir, "embeddings"))
         .orderBy(col("label"), col("predicted"))
     }),
     // Streaming CMS register build; probe finished in batch per event type.
     "q_stream_cms" -> ((s, dir) => {
       val sketch = streaming.EventsStream.runToCompletion(s, "q_stream_cms_sink") { ss =>
         streaming.EventsStream.cmsRegistersStream(
-          streaming.EventsStream.readEventsStreamNanos(ss, s"$dir/events*"))
+          streaming.EventsStream.readEventsStreamNanos(ss, dir))
       }
       val exact = events(s, dir).groupBy(col("event_type").as("term"))
         .agg(count(lit(1)).as("exact_cnt"))
@@ -183,7 +183,7 @@ private[graft] object TextQueries extends QueryFamily {
     // Hashing-trick featurization: (doc, bucket, count) triples, no vocab.
     "q_feature_hashing" -> ((s, dir) => {
       operators.TextAnalysis.hashFeatures(
-        s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text")
+        Crm.table(s, dir, "documents"), "doc_id", "text")
         .orderBy(col("doc_id"), col("bucket"))
     }),
     // DSIR-style data selection: the 100 docs whose hashed-unigram profile
@@ -191,19 +191,19 @@ private[graft] object TextQueries extends QueryFamily {
     // log-free ratio weights (TextAnalysis.dsirSelect's determinism note).
     "q_dsir" -> ((s, dir) => {
       operators.TextAnalysis.dsirSelect(
-        s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text",
+        Crm.table(s, dir, "documents"), "doc_id", "text",
         col("lang") === "en", n = 100)
         .orderBy(col("doc_id"))
     }),
     // Bigram LM count tables: raw + Kneser-Ney continuation/diversity counts.
     "q_ngram_lm" -> ((s, dir) => {
       operators.TextAnalysis.bigramLmCounts(
-        s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text")
+        Crm.table(s, dir, "documents"), "doc_id", "text")
         .orderBy(col("w1"), col("w2"))
     }),
     // Deterministic hash-based negative sampling over (customer, part) pairs.
     "q_negative_sampling" -> ((s, dir) => {
-      val pos = ord(s, dir).join(li(s, dir),
+      val pos = Crm.table(s, dir, "orders").join(Crm.table(s, dir, "lineitem"),
         col("o_orderkey") === col("l_orderkey"))
       operators.Sampling.negativeSample(
         pos, col("o_custkey"), col("l_partkey"), k = 2)
@@ -239,7 +239,7 @@ private[graft] object TextQueries extends QueryFamily {
     // -mass redistribution and full-node-universe arithmetic cross-engine
     // (the symmetric graph queries never exercise that path).
     "q_pagerank_dangling" -> ((s, dir) => {
-      val o = s.read.parquet(s"$dir/orders.parquet")
+      val o = Crm.table(s, dir, "orders")
       val edges = o.select(col("o_custkey").cast("long").as("src"),
         // 2^40 dst offset: disjoint from o_custkey at ANY plausible scale
         // (TPC-H custkey = 150k*SF needs SF > 7e6 to reach 2^40)
@@ -249,7 +249,7 @@ private[graft] object TextQueries extends QueryFamily {
     // HITS hubs & authorities on the same directed bipartite graph —
     // mutual-reinforcement scores (2 rounds, max-scaled quantized norms).
     "q_hits" -> ((s, dir) => {
-      val o = s.read.parquet(s"$dir/orders.parquet")
+      val o = Crm.table(s, dir, "orders")
       val edges = o.select(col("o_custkey").cast("long").as("src"),
         (col("o_orderkey").cast("long") + lit(1L << 40)).as("dst"))
       operators.Graph.hits(edges, maxIter = 2)
@@ -261,7 +261,7 @@ private[graft] object TextQueries extends QueryFamily {
     // for corpus curation. Gates the 0.15·s teleport arithmetic and the
     // rank-0 survival of nodes unreachable from the seeds.
     "q_pagerank_personalized" -> ((s, dir) => {
-      val o = s.read.parquet(s"$dir/orders.parquet")
+      val o = Crm.table(s, dir, "orders")
       val edges = o.select(col("o_custkey").cast("long").as("src"),
         // 2^40 dst offset: disjoint from o_custkey at ANY plausible scale
         // (TPC-H custkey = 150k*SF needs SF > 7e6 to reach 2^40)
@@ -284,7 +284,7 @@ private[graft] object TextQueries extends QueryFamily {
     }),
     // Relational Bloom filter: probe 1997 customers against the 1996 set.
     "q_bloom_probe" -> ((s, dir) => {
-      val o = ord(s, dir)
+      val o = Crm.table(s, dir, "orders")
       operators.Sketches.bloomProbe(
         o.filter(year(col("o_orderdate")) === 1996), col("o_custkey"),
         o.filter(year(col("o_orderdate")) === 1997), col("o_custkey"))
@@ -295,20 +295,20 @@ private[graft] object TextQueries extends QueryFamily {
     // oracle is the plain IN-subquery (Sketches.bloomReduceJoin).
     "q_bloom_join_reduce" -> ((s, dir) => {
       operators.Sketches.bloomReduceJoin(
-        ord(s, dir).filter(col("o_orderpriority") === "1-URGENT"),
-        col("o_orderkey"), li(s, dir), col("l_orderkey"))
+        Crm.table(s, dir, "orders").filter(col("o_orderpriority") === "1-URGENT"),
+        col("o_orderkey"), Crm.table(s, dir, "lineitem"), col("l_orderkey"))
         .select(col("l_orderkey"), col("l_linenumber"), col("l_partkey"),
           col("l_quantity"))
         .orderBy(col("l_orderkey"), col("l_linenumber"))
     }),
     // 2-D Pareto frontier: cheapest price for each dominated-free size.
     "q_skyline" -> ((s, dir) => {
-      operators.Olap.skyline2d(part(s, dir),
+      operators.Olap.skyline2d(Crm.table(s, dir, "part"),
         col("p_partkey"), col("p_retailprice"), col("p_size"))
         .orderBy(col("id"))
     }),
     "q_join_size_est" -> ((s, dir) => {
-      val o = ord(s, dir)
+      val o = Crm.table(s, dir, "orders")
       operators.Sketches.cmsJoinSizeEstimate(
         o.filter(year(col("o_orderdate")) === 1996), col("o_custkey"),
         o.filter(year(col("o_orderdate")) === 1997), col("o_custkey"))
@@ -316,7 +316,7 @@ private[graft] object TextQueries extends QueryFamily {
     }),
     // HLL intersection estimate: customers active in BOTH years.
     "q_intersect_est" -> ((s, dir) => {
-      val o = ord(s, dir)
+      val o = Crm.table(s, dir, "orders")
       def keys(y: Int) = o.filter(year(col("o_orderdate")) === y)
         .select(col("o_custkey").cast("string").as("it"))
       operators.Sketches.hllIntersectEstimate(keys(1996), keys(1997))
@@ -344,38 +344,38 @@ private[graft] object TextQueries extends QueryFamily {
     // C4-style fixed-window line dedup: corpus-first occurrence wins.
     "q_line_dedup" -> ((s, dir) => {
       operators.Dedup.lineDedup(
-        s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text")
+        Crm.table(s, dir, "documents"), "doc_id", "text")
         .orderBy(col("doc_id"))
     }),
     // Pearson correlation from exact quantized sums, per return flag.
     "q_corr" -> ((s, dir) => {
-      operators.Olap.pearsonByGroup(li(s, dir), col("l_returnflag"),
+      operators.Olap.pearsonByGroup(Crm.table(s, dir, "lineitem"), col("l_returnflag"),
         col("l_quantity"), col("l_extendedprice")).orderBy(col("grp"))
     }),
     // Lag-7 autocorrelation of daily revenue (weekly-seasonality probe).
     "q_autocorr" -> ((s, dir) => {
-      operators.Olap.revenueAutocorr(ord(s, dir), lagDays = 7)
+      operators.Olap.revenueAutocorr(Crm.table(s, dir, "orders"), lagDays = 7)
     }),
     // Two-sample Welch z-test between priority segments.
     "q_ab_test" -> ((s, dir) => {
-      operators.Olap.abTestZ(ord(s, dir), col("o_orderpriority"),
+      operators.Olap.abTestZ(Crm.table(s, dir, "orders"), col("o_orderpriority"),
         col("o_totalprice"), "1-URGENT", "5-LOW").orderBy(col("n_a"))
     }),
     // Robust MAD outlier stats per return flag.
     "q_mad_outliers" -> ((s, dir) => {
-      operators.Olap.madOutliers(li(s, dir), col("l_returnflag"),
+      operators.Olap.madOutliers(Crm.table(s, dir, "lineitem"), col("l_returnflag"),
         col("l_extendedprice")).orderBy(col("grp"))
     }),
     // Winsorized sum: clip at the histogram-sketch p99 before aggregating.
     "q_winsorize" -> ((s, dir) => {
-      operators.Sketches.winsorizedSum(ord(s, dir), col("o_totalprice"), 5000.0, 0.99)
+      operators.Sketches.winsorizedSum(Crm.table(s, dir, "orders"), col("o_totalprice"), 5000.0, 0.99)
         .orderBy(col("threshold"))
     }),
     // Streaming HLL: constant-state running distinct over the event stream.
     "q_stream_hll" -> ((s, dir) => {
       val regs = streaming.EventsStream.runToCompletion(s, "q_stream_hll_sink") { ss =>
         streaming.EventsStream.hllRegistersStream(
-          streaming.EventsStream.readEventsStreamNanos(ss, s"$dir/events*"))
+          streaming.EventsStream.readEventsStreamNanos(ss, dir))
       }
       operators.Sketches.estimateFromRegisters(
         regs.withColumn("g", lit("all")), "g").orderBy(col("g"))
@@ -393,12 +393,12 @@ private[graft] object TextQueries extends QueryFamily {
     // Deterministic fair interleave across sources (training order).
     "q_interleave" -> ((s, dir) => {
       operators.Sampling.interleaveBySource(
-        s.read.parquet(s"$dir/documents.parquet"), "doc_id", "source")
+        Crm.table(s, dir, "documents"), "doc_id", "source")
         .orderBy(col("interleave_key"))
     }),
     // Snapshot reconciliation: added/removed/changed keys between versions.
     "q_table_diff" -> ((s, dir) => {
-      val o = ord(s, dir).select(col("o_orderkey"), col("o_totalprice"),
+      val o = Crm.table(s, dir, "orders").select(col("o_orderkey"), col("o_totalprice"),
         col("o_orderstatus"))
       val v2 = o.filter(col("o_orderkey") % 13 =!= 0)
         .withColumn("o_totalprice",
@@ -413,21 +413,21 @@ private[graft] object TextQueries extends QueryFamily {
     // TPC-H Q5-shaped regional revenue (non-FK c_nationkey = s_nationkey).
     "q_olap_region" -> ((s, dir) => {
       operators.Olap.regionalRevenue(
-        s.read.parquet(s"$dir/region.parquet"), nat(s, dir), cust(s, dir),
-        s.read.parquet(s"$dir/supplier.parquet"), ord(s, dir), li(s, dir),
+        Crm.table(s, dir, "region"), Crm.table(s, dir, "nation"), Crm.table(s, dir, "customer"),
+        Crm.table(s, dir, "supplier"), Crm.table(s, dir, "orders"), Crm.table(s, dir, "lineitem"),
         regionName = "ASIA")
     }),
     // One BPE merge-candidate iteration over the character-symbol vocab.
     "q_bpe_merge" -> ((s, dir) => {
       operators.TextAnalysis.bpeMergeCandidates(
-        s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text", k = 20)
+        Crm.table(s, dir, "documents"), "doc_id", "text", k = 20)
     }),
     // BPE tokenizer TRAINING: 5 merge rounds to an ordered merge list —
     // the engine's first trained tokenizer artifact (argmax pair per round,
     // greedy merge applied to the vocabulary, never the token stream).
     "q_bpe_train" -> ((s, dir) => {
       operators.TextAnalysis.bpeTrain(
-        s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text", rounds = 5)
+        Crm.table(s, dir, "documents"), "doc_id", "text", rounds = 5)
         .orderBy(col("round"))
     }),
     // The trained merge list APPLIED (r11 #3): the corpus subword-tokenized
@@ -435,7 +435,7 @@ private[graft] object TextQueries extends QueryFamily {
     // artifact (the oracle replays the identical chain).
     "q_tokenize_bpe" -> ((s, dir) => {
       operators.TextAnalysis.bpeTokenize(
-        s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text", rounds = 5)
+        Crm.table(s, dir, "documents"), "doc_id", "text", rounds = 5)
         .orderBy(col("doc_id"), col("word_idx"), col("token_idx"))
     }),
     // The persisted-tokenizer lifecycle: merges+vocab written ONCE, the
@@ -443,7 +443,7 @@ private[graft] object TextQueries extends QueryFamily {
     // replay; OOV empty here since the training corpus tokenizes itself) —
     // output-equal to q_tokenize_bpe, gated on the SAME oracle.
     "q_tokenize_artifact" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Crm.table(s, dir, "documents")
       // shares the persisted vocab with q_pack_bpe; the manifest check IS
       // the per-serve provenance proof (VERDICT r12 #5)
       val art = bpeVocabArtifact(s, dir)
@@ -453,41 +453,41 @@ private[graft] object TextQueries extends QueryFamily {
     }),
     // Product-quantization codes: per-subvector nearest codebook entry.
     "q_pq_code" -> ((s, dir) => {
-      operators.Similarity.pqCode(s.read.parquet(s"$dir/embeddings.parquet"))
+      operators.Similarity.pqCode(Crm.table(s, dir, "embeddings"))
         .orderBy(col("vec_id"), col("sub"))
     }),
     // One distributed power-iteration step (AᵀAv) toward the top PC.
     "q_pca_power" -> ((s, dir) => {
       operators.Similarity.powerIterationStep(
-        s.read.parquet(s"$dir/embeddings.parquet")).orderBy(col("pos"))
+        Crm.table(s, dir, "embeddings")).orderBy(col("pos"))
     }),
     // Overlapping token-window chunking with materialized chunk text.
     "q_chunk_tokens" -> ((s, dir) => {
       operators.TextAnalysis.chunkTokens(
-        s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text")
+        Crm.table(s, dir, "documents"), "doc_id", "text")
         .orderBy(col("doc_id"), col("chunk_idx"))
     }),
     // Mergeable fixed-bin histogram quantile sketch vs the exact percentile.
     "q_hist_quantile" -> ((s, dir) => {
       operators.Sketches.histogramQuantiles(
-        ord(s, dir), col("o_totalprice"), 5000.0, Seq(0.5, 0.95, 0.99))
+        Crm.table(s, dir, "orders"), col("o_totalprice"), 5000.0, Seq(0.5, 0.95, 0.99))
         .orderBy(col("p"))
     }),
     "q_token_counts" -> ((s, dir) => {
       operators.TextAnalysis.tokenCounts(
-        s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text").orderBy(col("doc_id"))
+        Crm.table(s, dir, "documents"), "doc_id", "text").orderBy(col("doc_id"))
     }),
     "q_text_quality" -> ((s, dir) => {
       operators.TextAnalysis.qualityScore(
-        s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text").orderBy(col("doc_id"))
+        Crm.table(s, dir, "documents"), "doc_id", "text").orderBy(col("doc_id"))
     }),
     "q_lang_id" -> ((s, dir) => {
       operators.TextAnalysis.langId(
-        s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text").orderBy(col("doc_id"))
+        Crm.table(s, dir, "documents"), "doc_id", "text").orderBy(col("doc_id"))
     }),
     "q_fingerprint" -> ((s, dir) => {
       operators.TextAnalysis.fingerprints(
-        s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text").orderBy(col("doc_id"))
+        Crm.table(s, dir, "documents"), "doc_id", "text").orderBy(col("doc_id"))
     }))
 
   def oracleSql: Map[String, String] = Map(

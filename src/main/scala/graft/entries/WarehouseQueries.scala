@@ -126,7 +126,7 @@ private[graft] object WarehouseQueries extends QueryFamily {
     "q_compact_docs" -> ((s, dir) => {
       val scatter = tempDir("compact_in")
       val out = tempDir("compact_out")
-      s.read.parquet(s"$dir/documents.parquet").repartition(32)
+      Crm.table(s, dir, "documents").repartition(32)
         .write.mode("overwrite").parquet(scatter)
       operators.Compaction.compact(s, scatter, out, targetFileBytes = 8L << 20)
       s.read.parquet(out)
@@ -142,7 +142,7 @@ private[graft] object WarehouseQueries extends QueryFamily {
     "q_compact_partitioned" -> ((s, dir) => {
       val scatter = tempDir("compact_part_in")
       val out = tempDir("compact_part_out")
-      s.read.parquet(s"$dir/documents.parquet").repartition(8)
+      Crm.table(s, dir, "documents").repartition(8)
         .write.partitionBy("lang").mode("overwrite").parquet(scatter)
       operators.Compaction.compactPartitioned(s, scatter, out,
         targetFileBytes = 8L << 20)
@@ -161,7 +161,7 @@ private[graft] object WarehouseQueries extends QueryFamily {
     "q_compact_nested" -> ((s, dir) => {
       val scatter = tempDir("compact_nest_in")
       val out = tempDir("compact_nest_out")
-      s.read.parquet(s"$dir/documents.parquet")
+      Crm.table(s, dir, "documents")
         .withColumn("day", col("doc_id") % 3)
         .repartition(4)
         .write.partitionBy("lang", "day").mode("overwrite").parquet(scatter)

@@ -294,9 +294,6 @@ object Dedup {
     * [[shjBuildBudget]] derives it from the executor heap, the unified
     * memory fraction, and the slot count, halved for the BytesToBytesMap
     * growth-doubling and cached-plan storage contention.
-    * `spark.graft.lsh.shjBuildBudgetBytes` overrides the derivation;
-    * `spark.graft.lsh.verifyJoinHint` forces any strategy by name;
-    * the default "auto" is this rule.
     */
   private[graft] def pickVerifyHint(estPairs: Double, avgShingles: Double,
                                     shufflePartitions: Int,
@@ -321,23 +318,19 @@ object Dedup {
     * the operator's own cached build tables.
     * Local mode reads the actual JVM heap (executors share it); cluster
     * mode reads spark.executor.memory/cores. Floor 64 MB so undersized
-    * test JVMs still exercise SHJ. `spark.graft.lsh.shjBuildBudgetBytes`
-    * overrides. */
-  private[graft] def shjBuildBudget(spark: org.apache.spark.sql.SparkSession): Long =
-    spark.conf.getOption("spark.graft.lsh.shjBuildBudgetBytes").map(_.toLong)
-      .getOrElse {
-        val isLocal = spark.sparkContext.master.startsWith("local")
-        val heap: Long =
-          if (isLocal) Runtime.getRuntime.maxMemory
-          else org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-            spark.conf.get("spark.executor.memory", "4g"))
-        val slots: Int =
-          if (isLocal) math.max(1, spark.sparkContext.defaultParallelism)
-          else spark.conf.get("spark.executor.cores", "4").toInt
-        val fraction = spark.conf.get("spark.memory.fraction", "0.6").toDouble
-        math.max(64L << 20,
-          ((heap - (300L << 20)) * fraction / slots / 2).toLong)
-      }
+    * test JVMs still exercise SHJ. */
+  private[graft] def shjBuildBudget(spark: org.apache.spark.sql.SparkSession): Long = {
+    val isLocal = spark.sparkContext.master.startsWith("local")
+    val heap: Long =
+      if (isLocal) Runtime.getRuntime.maxMemory
+      else org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+        spark.conf.get("spark.executor.memory", "4g"))
+    val slots: Int =
+      if (isLocal) math.max(1, spark.sparkContext.defaultParallelism)
+      else spark.conf.get("spark.executor.cores", "4").toInt
+    val fraction = spark.conf.get("spark.memory.fraction", "0.6").toDouble
+    math.max(64L << 20, ((heap - (300L << 20)) * fraction / slots / 2).toLong)
+  }
 
   /** Last auto decision (hint, estPairs, avgShingles) — read by the scale
     * probe and specs to see WHY a strategy was chosen; never read by query
@@ -347,13 +340,11 @@ object Dedup {
   /** Resolve the verification-join hint for a cached band table. `banded`
     * must carry (band, band_hash); when it also carries `__delta`
     * (incremental operator) the pair bound counts only delta-probe
-    * candidates. Returns the conf's value verbatim when it isn't "auto". */
-  private[graft] def verifyHintFor(banded: DataFrame,
-                                   prepared: DataFrame): String = {
+    * candidates. `budget` is the per-task build budget, [[shjBuildBudget]]
+    * unless a spec pins it. */
+  private[graft] def verifyHintFor(banded: DataFrame, prepared: DataFrame,
+                                   budget: Option[Long] = None): String = {
     val spark = banded.sparkSession
-    val conf = spark.conf.get("spark.graft.lsh.verifyJoinHint", "auto")
-    if (conf != "auto") return conf
-    val budget = shjBuildBudget(spark)
     val parts = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
     val deltaAware = banded.columns.contains("__delta")
     val perBucket =
@@ -368,13 +359,22 @@ object Dedup {
     val estPairs = perBucket.agg(coalesce(pairsCol, lit(0.0))).head().getDouble(0)
     val avgSh = prepared.agg(coalesce(avg(size(col("sh"))), lit(0.0)))
       .head().getDouble(0)
-    val hint = pickVerifyHint(estPairs, avgSh, parts, budget)
+    val hint = pickVerifyHint(estPairs, avgSh, parts,
+      budget.getOrElse(shjBuildBudget(spark)))
     lastAutoVerify = Some((hint, estPairs, avgSh))
     hint
   }
 
   def minhashLshPairs(docs: DataFrame, id: String, text: String,
-                      k: Int = 32, bands: Int = 8, threshold: Double = 0.6): DataFrame = {
+                      k: Int = 32, bands: Int = 8, threshold: Double = 0.6): DataFrame =
+    minhashLshPairs(docs, id, text, k, bands, threshold, None)
+
+  /** [[minhashLshPairs]] with the verify join's build budget pinned (None
+    * derives it): the seam the strategy-invariance spec drives both join
+    * strategies through. */
+  private[graft] def minhashLshPairs(docs: DataFrame, id: String, text: String,
+                                     k: Int, bands: Int, threshold: Double,
+                                     budget: Option[Long]): DataFrame = {
     // Cached: the shingle sets feed the hash pipeline AND both sides of the
     // verification join — at scale these signatures would be persisted
     // artifacts anyway (built once, reused by every dedup run).
@@ -411,8 +411,7 @@ object Dedup {
     // where merge completes — make the default corpus-dependent, so
     // [[verifyHintFor]] derives it from the cached band-bucket histogram
     // and shingle-set sizes BEFORE any candidate pair materializes.
-    // `spark.graft.lsh.verifyJoinHint` still forces any strategy by name.
-    val verifyHint = verifyHintFor(banded, prepared)
+    val verifyHint = verifyHintFor(banded, prepared, budget)
     val result = candidates.hint(verifyHint)
       .join(prepared.select(col("doc_id").as("doc_id_a"), col("sh").as("sh_a")), Seq("doc_id_a"))
       .hint(verifyHint)

@@ -16,7 +16,7 @@ import graft.functions.GraftFunctions.{detRound, stableSum2}
 object Events {
 
   /** Coerce the events `ts` column to UTC-instant TIMESTAMP, shared by the
-    * batch reader (SparkEntry.events) and the streaming reader
+    * batch reader (QueryShared.events) and the streaming reader
     * (EventsStream.readEventsStreamNanos) so the two paths cannot drift
     * (r8 advice — the probe-and-coerce logic was duplicated verbatim).
     *

@@ -1,8 +1,13 @@
 package graft.sources
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, LongType, StructType, TimestampNTZType, TimestampType}
 
 /** CRM-shaped input tables derived deterministically from the driver's
   * TPC-H-ish testdata (FIXTURES.md §C role mapping). The engine's operators
@@ -17,15 +22,85 @@ import org.apache.spark.sql.functions._
   */
 object Crm {
 
-  /** Raw-table access, dispatched on the locator: a `jdbc:` URL reads the
+  /** The one declaration of each stored input table's schema — the TPC-H
+    * tables plus the events, documents and embeddings corpora. A parquet
+    * read takes its schema from here instead of inferring it, since
+    * inference runs a one-task Spark job per read; the stream readers
+    * declare their sources from here too. */
+  val schemas: Map[String, StructType] = Map(
+    "region" -> "r_regionkey INT, r_name STRING",
+    "nation" -> "n_nationkey INT, n_name STRING, n_regionkey INT",
+    "customer" -> ("c_custkey BIGINT, c_name STRING, c_nationkey INT, c_acctbal DOUBLE, " +
+      "c_mktsegment STRING"),
+    "supplier" -> "s_suppkey BIGINT, s_name STRING, s_nationkey INT, s_acctbal DOUBLE",
+    "part" -> ("p_partkey BIGINT, p_name STRING, p_brand STRING, p_type STRING, p_size INT, " +
+      "p_retailprice DOUBLE"),
+    "orders" -> ("o_orderkey BIGINT, o_custkey BIGINT, o_orderstatus STRING, " +
+      "o_totalprice DOUBLE, o_orderdate TIMESTAMP_NTZ, o_orderpriority STRING"),
+    "lineitem" -> ("l_orderkey BIGINT, l_partkey BIGINT, l_suppkey BIGINT, l_linenumber INT, " +
+      "l_quantity DOUBLE, l_extendedprice DOUBLE, l_discount DOUBLE, l_tax DOUBLE, " +
+      "l_returnflag STRING, l_linestatus STRING, l_shipdate TIMESTAMP_NTZ"),
+    "events" -> ("event_id BIGINT, ts TIMESTAMP_NTZ, user_id BIGINT, event_type STRING, " +
+      "value DOUBLE, props STRING"),
+    "documents" -> "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT",
+    "embeddings" -> "vec_id BIGINT, embedding ARRAY<FLOAT>, label INT"
+  ).map { case (t, ddl) => t -> StructType.fromDDL(ddl) }
+
+  /** `events.ts` is stored as TIMESTAMP(NANOS) by older testdata
+    * generations (LONG under `nanosAsLong`) and as naive TIMESTAMP(MICROS)
+    * by the current one; the reader takes its type from the footer, and
+    * [[graft.operators.Events.coerceEventTs]] maps each to the same UTC
+    * instant. */
+  private val FooterTyped: Map[(String, String), Set[DataType]] =
+    Map(("events", "ts") -> Set(TimestampNTZType, TimestampType, LongType))
+
+  /** The declared schema of stored table `name` in the parquet directory
+    * `dir`, checked against the footer of its first data file, which is
+    * read here, without a Spark job. With a declared schema Spark reads a
+    * column missing from the file as NULL without a word, so a declared
+    * column the file lacks, or holds with another type, fails here naming
+    * the table and the column. */
+  def storedSchema(spark: SparkSession, dir: String, name: String): StructType = {
+    val declared = schemas.getOrElse(name,
+      throw new IllegalArgumentException(s"'$name' is not a stored table"))
+    val conf = spark.sparkContext.hadoopConfiguration
+    val path = new Path(s"$dir/$name.parquet")
+    val fs = path.getFileSystem(conf)
+    // a file, or the first data file of a directory (ScaleGen's layout);
+    // `_`/`.`-prefixed entries are commit markers and checksums
+    val st = fs.getFileStatus(path)
+    val file =
+      if (!st.isDirectory) st
+      else fs.listStatus(path).filter(c => c.isFile && !"_.".contains(c.getPath.getName.head))
+        .sortBy(_.getPath.getName).headOption.getOrElse(
+          throw new IllegalArgumentException(s"stored table '$name': no data file in $path"))
+    val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(file, conf))
+    val found =
+      try new ParquetToSparkSchemaConverter(spark.sessionState.conf)
+        .convert(reader.getFooter.getFileMetaData.getSchema)
+      finally reader.close()
+    StructType(declared.map { f =>
+      val got = found.find(_.name == f.name).getOrElse(throw new IllegalArgumentException(
+        s"stored table '$name' (${file.getPath}): column '${f.name}' is missing"))
+      // SQL type names compare without nullability, as inference does
+      FooterTyped.getOrElse((name, f.name), Set(f.dataType)).find(_.sql == got.dataType.sql)
+        .map(t => f.copy(dataType = t)).getOrElse(throw new IllegalArgumentException(
+          s"stored table '$name' (${file.getPath}): " +
+            s"column '${f.name}' is ${got.dataType.sql}, declared ${f.dataType.sql}"))
+    })
+  }
+
+  /** Raw-table access — the only way the program reads a stored input
+    * table — dispatched on the locator: a `jdbc:` URL reads the
     * named table over JDBC (reference parity — etl_completo.py:16-30 reads
     * the CRM from PostgreSQL via psycopg2); a `csv:` prefix reads
     * `<name>.csv` files (the landing format real CRM dumps arrive in —
     * header + inferred schema; no pushdown or min-max pruning, so at scale
     * CSV is an INGESTION format only: land, convert to parquet, then run);
     * anything else is a parquet directory (the driver testdata, and the
-    * default). Every derivation below — and therefore every SparkEntry
-    * query — works against any source unchanged.
+    * default), read with the footer-checked [[storedSchema]]. Every
+    * derivation below — and therefore every SparkEntry query — works
+    * against any source unchanged.
     */
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
     if (dir.startsWith("jdbc:")) jdbcTable(spark, dir, name)
@@ -43,7 +118,7 @@ object Crm {
       // min-max statistics, so it is a full-citizen RUNTIME format for
       // deployments whose lake is ORC rather than parquet.
       spark.read.orc(s"${dir.stripPrefix("orc:")}/$name.orc")
-    else spark.read.parquet(s"$dir/$name.parquet")
+    else spark.read.schema(storedSchema(spark, dir, name)).parquet(s"$dir/$name.parquet")
 
   /** Numeric split column per raw table: with it, the JDBC scan fans out as
     * `numPartitions` range-predicated queries across executors instead of

@@ -2,10 +2,10 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, FloatType, IntegerType, LongType, StructField, StructType}
 
 import graft.QueryShared.tempDir
 import graft.operators.{ArtifactManifest, Similarity}
+import graft.sources.Crm
 
 /** Streaming refresh of the persisted IVF-PQ index — the ANN twin of
   * [[ArtifactRefresh]]: the batch lifecycle is build-once /
@@ -34,12 +34,6 @@ import graft.operators.{ArtifactManifest, Similarity}
   */
 object AnnIndexRefresh {
 
-  /** The embeddings table's stream schema (readStream needs it declared). */
-  val embeddingsSchema: StructType = StructType(Seq(
-    StructField("vec_id", LongType),
-    StructField("embedding", ArrayType(FloatType)),
-    StructField("label", IntegerType)))
-
   /** Run the bounded refresh: stream `deltaDir`'s parquet files one per
     * micro-batch into the IVF-PQ index at `indexDir` (already built with a
     * manifest). Returns non-empty micro-batches delivered.
@@ -50,7 +44,7 @@ object AnnIndexRefresh {
                         indexDir: String, checkpointDir: String,
                         m: Int = 4, dim: Int = 64,
                         shufflePartitions: Option[Int] = None): Long =
-    IdempotentFold.foldStream(spark, embeddingsSchema, deltaDir, indexDir,
+    IdempotentFold.foldStream(spark, Crm.schemas("embeddings"), deltaDir, indexDir,
       checkpointDir, shufflePartitions, Seq(col("vec_id"), col("embedding")),
       Seq(s"$indexDir/cells.parquet", s"$indexDir/codes.parquet")) { b =>
       val (cells, codes) = Similarity.ivfPqAssignFrames(b, indexDir, m, dim)
@@ -63,7 +57,7 @@ object AnnIndexRefresh {
     * from the artifact alone — output-equal to the train-on-base /
     * assign-all oracle chain. */
   def gatedRefresh(s: SparkSession, dir: String): DataFrame = {
-    val emb = s.read.parquet(s"$dir/embeddings.parquet")
+    val emb = Crm.table(s, dir, "embeddings")
     val base = emb.filter(col("vec_id") % 4 =!= 0)
     val delta = emb.filter(col("vec_id") % 4 === 0)
     val idx = tempDir("ann_refresh_idx")

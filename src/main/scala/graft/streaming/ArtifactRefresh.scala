@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.QueryShared.tempDir
 import graft.operators.{ArtifactManifest, Dedup}
+import graft.sources.Crm
 
 /** Streaming refresh of the persisted MinHash-LSH signature artifact
   * (VERDICT r13 next #7): the batch lifecycle is build-once /
@@ -48,7 +49,7 @@ object ArtifactRefresh {
                         artifactDir: String, pairsDir: String,
                         checkpointDir: String,
                         shufflePartitions: Option[Int] = None): Long =
-    IdempotentFold.foldStream(spark, EventsStream.documentsSchema, deltaDir,
+    IdempotentFold.foldStream(spark, Crm.schemas("documents"), deltaDir,
       artifactDir, checkpointDir, shufflePartitions, Seq(col(id), col(text)),
       Seq(s"$artifactDir/shingles.parquet", s"$artifactDir/bands.parquet", pairsDir)) { b =>
       // the batch's (shingles, bands) are computed ONCE and shared between
@@ -65,7 +66,7 @@ object ArtifactRefresh {
     * return the accumulated pairs — output-equivalent to the one-shot
     * batch delta path (q_dedup_artifact's oracle). */
   def gatedRefresh(s: SparkSession, dir: String): DataFrame = {
-    val docs = s.read.parquet(s"$dir/documents.parquet")
+    val docs = Crm.table(s, dir, "documents")
     val base = docs.filter(col("doc_id") % 4 =!= 0)
     val delta = docs.filter(col("doc_id") % 4 === 0)
     val art = tempDir("stream_refresh_art")
@@ -99,7 +100,7 @@ object ArtifactRefresh {
     * check proves run B actually folded (batchId-only keying would have
     * silently skipped it). */
   def gatedCompactedRefresh(s: SparkSession, dir: String): DataFrame = {
-    val docs = s.read.parquet(s"$dir/documents.parquet")
+    val docs = Crm.table(s, dir, "documents")
     val dCols = Seq(col("doc_id"), col("text"))
     val base = docs.filter(col("doc_id") % 4 >= 2)
     val art = tempDir("cstream_art")

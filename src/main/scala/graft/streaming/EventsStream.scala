@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 import org.apache.spark.sql.types._
+import graft.sources.Crm
 
 /** Row type of [[EventsStream.audioWindowsStream]] — field names/order
   * match Multimodal.wavWindowsSchema so the stream is gated on the batch
@@ -21,60 +22,43 @@ private[streaming] case class AudioWindowRow(
   */
 object EventsStream {
 
-  val eventsSchema: StructType = StructType(Seq(
-    StructField("event_id", LongType),
-    StructField("ts", TimestampType),
-    StructField("user_id", LongType),
-    StructField("event_type", StringType),
-    StructField("value", DoubleType),
-    StructField("props", StringType)))
+  /** Event rows as [[graft.operators.Events.coerceEventTs]] leaves them:
+    * the stored events schema with `ts` a UTC instant. */
+  val eventsSchema: StructType = StructType(Crm.schemas("events").map {
+    case f if f.name == "ts" => f.copy(dataType = TimestampType)
+    case f => f
+  })
 
   def readEventsStream(spark: SparkSession, dir: String): DataFrame =
     spark.readStream.schema(eventsSchema)
       .option("maxFilesPerTrigger", "1")
       .parquet(s"$dir")
 
-  /** Stream the driver's events.parquet, whose `ts` physical type differs
-    * across testdata generations — TIMESTAMP(NANOS) (pre-r8; Spark 4 refuses
-    * it natively) vs TIMESTAMP(MICROS, naive) (current). A stream source
-    * needs an explicit schema, so probe the file footer through the batch
-    * reader once, then stream with the matching schema and coerce to the
-    * same UTC-instant micros the batch reader (SparkEntry.events) and the
-    * oracle engine produce. No maxFilesPerTrigger: one AvailableNow batch,
-    * so nothing is ever behind the watermark and the result equals the
-    * batch aggregate.
+  /** Stream the stored events table under `dir`, whose `ts` physical type
+    * differs across testdata generations — TIMESTAMP(NANOS) (pre-r8; Spark
+    * 4 refuses it natively) vs TIMESTAMP(MICROS, naive) (current). A stream
+    * source needs an explicit schema: take it from the stored table's
+    * footer ([[Crm.storedSchema]]), then coerce to the same UTC-instant
+    * micros the batch reader (QueryShared.events) and the oracle engine
+    * produce. No maxFilesPerTrigger: one AvailableNow batch, so nothing is
+    * ever behind the watermark and the result equals the batch aggregate.
     */
-  def readEventsStreamNanos(spark: SparkSession, path: String): DataFrame = {
+  def readEventsStreamNanos(spark: SparkSession, dir: String): DataFrame = {
     // SESSION-WIDE side effect (r2 advice): every later parquet read of a
     // TIMESTAMP(NANOS) column in this session sees it as LongType too. That
-    // is intentional here — the batch reader (SparkEntry.events) applies the
+    // is intentional here — the batch reader (QueryShared.events) applies the
     // same flag + div-1000 coercion, so both paths agree — but a caller
     // mixing nanos and native-timestamp parquet in one session must unset it.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // UTC pin: the NTZ branch's cast interprets wall time in the session
     // zone; only UTC makes the instant equal the file's naive micros.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    // The footer probe must NOT hand the glob to the single-path batch
-    // reader: resolveRelation stats the LITERAL path first (the
-    // FileStreamSink metadata check), and a glob that matches nothing
-    // verbatim throws FileNotFoundException before glob expansion. The
-    // stream source globs fine — only this probe needs the expansion, and
-    // one matched file's footer is enough (one generation per directory).
-    val probePath = {
-      val p = new org.apache.hadoop.fs.Path(path)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      Option(fs.globStatus(p)).filter(_.nonEmpty)
-        .map(_.head.getPath.toString).getOrElse(path)
-    }
-    val tsType = spark.read.parquet(probePath).schema("ts").dataType
-    val srcSchema = StructType(eventsSchema.map {
-      case f if f.name == "ts" => f.copy(dataType = tsType)
-      case f => f
-    })
-    val raw = spark.readStream.schema(srcSchema).parquet(path)
+    val schema = Crm.storedSchema(spark, dir, "events")
+    // glob: FileStreamSource requires a directory base path
+    val raw = spark.readStream.schema(schema).parquet(s"$dir/events*")
     // Shared coercion rule with the batch reader (r8 advice: the duplicated
     // probe-and-coerce logic could drift between batch and streaming).
-    graft.operators.Events.coerceEventTs(raw, tsType)
+    graft.operators.Events.coerceEventTs(raw, schema("ts").dataType)
   }
 
   /** Tumbling 1-hour event-time windows with a 2-hour watermark — the
@@ -228,13 +212,6 @@ object EventsStream {
           }
       }
   }
-
-  val documentsSchema: StructType = StructType(Seq(
-    StructField("doc_id", LongType),
-    StructField("text", StringType),
-    StructField("lang", StringType),
-    StructField("source", StringType),
-    StructField("n_chars", LongType)))
 
   /** Streaming exact dedup: running (content → canonical id, copies) state
     * over a document stream — the streaming twin of `Dedup.exactDedup`.
@@ -446,9 +423,7 @@ object EventsStream {
     * bytes under `pathGlob` (dirs count their direct files) and sizes at
     * `targetBytes` per partition with a floor of `floorN` — the gate's
     * tiny input derives the measured-optimal narrow width, a production
-    * feed's multi-GB backlog derives its own scale. The
-    * `spark.graft.stream.statePartitions` conf override (applied in
-    * [[runToCompletion]]) still wins over any derived value. */
+    * feed's multi-GB backlog derives its own scale. */
   def derivedStatePartitions(spark: SparkSession, pathGlob: String,
                              targetBytes: Long = 64L << 20,
                              floorN: Int = 2, cap: Int = 2048): Int = {
@@ -472,21 +447,10 @@ object EventsStream {
     spark.conf.getAll.foreach { case (k, v) =>
       try s.conf.set(k, v) catch { case _: Exception => () }
     }
-    // state width is per-deployment tuning (one state store instance per
-    // shuffle partition per stateful operator, each paying open/commit I/O
-    // every micro-batch): conf override > caller arg, default 8
-    val stateN = spark.conf.getOption("spark.graft.stream.statePartitions")
-      .map { v =>
-        // validated parse (ADVICE r17): a malformed or non-positive value
-        // must fail naming the conf, not as a bare NumberFormatException
-        // (or a 0-width stream) deep inside query setup
-        val n = scala.util.Try(v.trim.toInt).getOrElse(
-          throw new IllegalArgumentException(
-            s"spark.graft.stream.statePartitions must be an integer, got '$v'"))
-        require(n > 0, s"spark.graft.stream.statePartitions must be > 0, got $n")
-        n
-      }.getOrElse(statePartitions)
-    s.conf.set("spark.sql.shuffle.partitions", stateN.toString)
+    // state width (one state store instance per shuffle partition per
+    // stateful operator, each paying open/commit I/O every micro-batch) is
+    // the caller's: default 8, or derivedStatePartitions at the gates
+    s.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
     val q = build(s).writeStream
       .format("memory").queryName(name)
       .outputMode(outputMode)

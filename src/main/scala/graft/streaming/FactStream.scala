@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.types.StructType
 
 /** Incremental (streaming) fact load — the capability the reference's
   * one-shot batch rebuild lacks (etl_completo.py drops and reloads both
@@ -22,13 +22,8 @@ import org.apache.spark.sql.types._
   */
 object FactStream {
 
-  val ordersSchema: StructType = StructType(Seq(
-    StructField("o_orderkey", LongType),
-    StructField("o_custkey", LongType),
-    StructField("o_orderstatus", StringType),
-    StructField("o_totalprice", DoubleType),
-    StructField("o_orderdate", TimestampType),
-    StructField("o_orderpriority", StringType)))
+  /** The orders stream's declared schema: the stored table's. */
+  val ordersSchema: StructType = graft.sources.Crm.schemas("orders")
 
   /** Run the incremental fact load over the bounded source to completion
     * (AvailableNow + PARQUET sink — the DW-append shape; a memory sink

@@ -196,7 +196,7 @@ object IdempotentFold {
     case KeyedRe(run, id) => Some((run, id.toLong))
     case _                => None
   }
-  private val KeyedRe = """^r([0-9a-f]{8,64})_b(\d+)_.*""".r
+  private val KeyedRe = """^r([0-9a-f]{16})_b(\d+)_.*""".r
 
   /** A marker's file name for (`run`, `batchId`). */
   def markerName(run: String, batchId: Long): String = s"r${run}_b$batchId"
@@ -206,7 +206,7 @@ object IdempotentFold {
     case MarkerRe(run, id) => Some((run, id.toLong))
     case _                 => None
   }
-  private val MarkerRe = """^r([0-9a-f]{8,64})_b(\d+)$""".r
+  private val MarkerRe = """^r([0-9a-f]{16})_b(\d+)$""".r
 
   private def markerPath(p: Path, run: String, batchId: Long) =
     new Path(p, s"_commits/${markerName(run, batchId)}")

@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.sources.Crm
 
 /** One-off sf0.1 → ~sf1 scale-up generator for the measured scale probe
   * (r8 verdict #6: the 100 TB story was argued from plan shapes but never
@@ -79,10 +80,10 @@ object ScaleGen {
     def write(name: String, df: DataFrame, nParts: Int = 32): Unit = {
       val out0 = if (nParts > 0) df.repartition(nParts) else df
       out0.write.mode("overwrite").parquet(s"$out/$name.parquet")
-      println(s"[scalegen] $name: ${spark.read.parquet(s"$out/$name.parquet").count()} rows")
+      println(s"[scalegen] $name: ${Crm.table(spark, out, name).count()} rows")
     }
 
-    def read(name: String) = spark.read.parquet(s"$src/$name.parquet")
+    def read(name: String) = Crm.table(spark, src, name)
 
     // fixed dims: copy through unchanged
     Seq("nation", "region").foreach(n => write(n, read(n), nParts = 1))

@@ -454,11 +454,7 @@ class DedupSpec extends SparkSpec {
     assert(Dedup.pickVerifyHint(0.0, 0.0, 0, 1L) === "shuffle_hash")
   }
 
-  test("shjBuildBudget: conf override wins; local derivation is sane") {
-    try {
-      spark.conf.set("spark.graft.lsh.shjBuildBudgetBytes", "12345")
-      assert(Dedup.shjBuildBudget(spark) === 12345L)
-    } finally spark.conf.unset("spark.graft.lsh.shjBuildBudgetBytes")
+  test("shjBuildBudget: local derivation is sane") {
     val b = Dedup.shjBuildBudget(spark)
     assert(b >= (64L << 20)) // floor keeps undersized JVMs on SHJ for tests
     // never anywhere near the whole heap: the derivation divides by slots
@@ -466,45 +462,32 @@ class DedupSpec extends SparkSpec {
     assert(b < Runtime.getRuntime.maxMemory / 2)
   }
 
-  test("verifyHintFor: conf forces verbatim; auto reads the bucket histogram") {
+  test("verifyHintFor: auto reads the bucket histogram against the build budget") {
     val banded = Seq((0, 7L), (0, 7L), (0, 7L), (1, 9L))
       .toDF("band", "band_hash") // one 3-bucket → 3 candidate pairs
     val prepared = Seq((1L, Seq("abc", "bcd", "cde")))
       .toDF("doc_id", "sh")
-    try {
-      spark.conf.set("spark.graft.lsh.verifyJoinHint", "merge")
-      assert(Dedup.verifyHintFor(banded, prepared) === "merge")
-      spark.conf.set("spark.graft.lsh.verifyJoinHint", "auto")
-      assert(Dedup.verifyHintFor(banded, prepared) === "shuffle_hash")
-      // a 1-byte budget makes ANY nonzero pair bound exceed it
-      spark.conf.set("spark.graft.lsh.shjBuildBudgetBytes", "1")
-      assert(Dedup.verifyHintFor(banded, prepared) === "merge")
-      // delta-aware bound: zero delta rows → zero probe-side candidates →
-      // SHJ even under the 1-byte budget (the nightly-delta guarantee)
-      val noDelta = banded.withColumn("__delta", lit(0))
-      assert(Dedup.verifyHintFor(noDelta, prepared) === "shuffle_hash")
-      val oneDelta = Seq((0, 7L, 1), (0, 7L, 0), (0, 7L, 0), (1, 9L, 0))
-        .toDF("band", "band_hash", "__delta") // Σ d·(c−1) = 2 > 0 → merge
-      assert(Dedup.verifyHintFor(oneDelta, prepared) === "merge")
-    } finally {
-      spark.conf.unset("spark.graft.lsh.verifyJoinHint")
-      spark.conf.unset("spark.graft.lsh.shjBuildBudgetBytes")
-    }
+    assert(Dedup.verifyHintFor(banded, prepared) === "shuffle_hash")
+    // a 1-byte budget makes ANY nonzero pair bound exceed it
+    assert(Dedup.verifyHintFor(banded, prepared, Some(1L)) === "merge")
+    // delta-aware bound: zero delta rows → zero probe-side candidates →
+    // SHJ even under the 1-byte budget (the nightly-delta guarantee)
+    val noDelta = banded.withColumn("__delta", lit(0))
+    assert(Dedup.verifyHintFor(noDelta, prepared, Some(1L)) === "shuffle_hash")
+    val oneDelta = Seq((0, 7L, 1), (0, 7L, 0), (0, 7L, 0), (1, 9L, 0))
+      .toDF("band", "band_hash", "__delta") // Σ d·(c−1) = 2 > 0 → merge
+    assert(Dedup.verifyHintFor(oneDelta, prepared, Some(1L)) === "merge")
   }
 
   test("minhashLshPairs results are strategy-invariant (auto-merge == SHJ)") {
-    def run(): Set[(Long, Long, Double)] =
-      Dedup.minhashLshPairs(docs, "doc_id", "text").collect()
+    // an unbounded budget keeps auto on SHJ; a 1-byte budget flips it to merge
+    def run(budget: Long): Set[(Long, Long, Double)] =
+      Dedup.minhashLshPairs(docs, "doc_id", "text", 32, 8, 0.6, Some(budget)).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val forced = try {
-      spark.conf.set("spark.graft.lsh.verifyJoinHint", "shuffle_hash")
-      run()
-    } finally spark.conf.unset("spark.graft.lsh.verifyJoinHint")
-    val autoMerge = try {
-      // auto + 1-byte budget → merge path end-to-end
-      spark.conf.set("spark.graft.lsh.shjBuildBudgetBytes", "1")
-      run()
-    } finally spark.conf.unset("spark.graft.lsh.shjBuildBudgetBytes")
-    assert(autoMerge === forced && forced.nonEmpty)
+    val shj = run(Long.MaxValue)
+    assert(Dedup.lastAutoVerify.map(_._1) === Some("shuffle_hash"))
+    val merge = run(1L)
+    assert(Dedup.lastAutoVerify.map(_._1) === Some("merge"))
+    assert(merge === shj && shj.nonEmpty)
   }
 }

@@ -3,6 +3,7 @@ package graft
 import java.nio.file.{Files, Path}
 import java.sql.Timestamp
 import org.apache.spark.sql.streaming.OutputMode
+import graft.sources.Crm
 import graft.streaming.EventsStream
 import graft.streaming.EventsStream.Ev
 
@@ -295,7 +296,7 @@ class EventsStreamSpec extends SparkSpec {
 
     val out = EventsStream.runToCompletion(spark, "sdedup_test") { ss =>
       EventsStream.streamingExactDedup(
-        ss.readStream.schema(EventsStream.documentsSchema).parquet(dir.toString + "/d"))
+        ss.readStream.schema(Crm.schemas("documents")).parquet(dir.toString + "/d"))
     }.orderBy(col("doc_id")).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
     assert(out.toSeq === Seq(("aa", 1L, 3L), ("bb", 2L, 1L)))
@@ -319,7 +320,7 @@ class EventsStreamSpec extends SparkSpec {
       OutputMode.Append()) { ss =>
       EventsStream.bloomDedupStream(
         ss.read.parquet(dir.toString + "/hist"),
-        ss.readStream.schema(EventsStream.documentsSchema)
+        ss.readStream.schema(Crm.schemas("documents"))
           .parquet(dir.toString + "/delta"),
         "text")
     }.orderBy(col("doc_id")).collect().map(_.getLong(0))
@@ -342,7 +343,7 @@ class EventsStreamSpec extends SparkSpec {
     val streamed = EventsStream.runToCompletion(spark, "saudio_test",
       OutputMode.Append()) { ss =>
       EventsStream.audioWindowsStream(
-        ss.readStream.schema(EventsStream.documentsSchema)
+        ss.readStream.schema(Crm.schemas("documents"))
           .parquet(dir.toString + "/d"))
     }.orderBy(col("doc_id"), col("win_idx")).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getInt(2), r.getLong(3),

@@ -173,7 +173,7 @@ class FoldCompactionSpec extends SparkSpec {
 
   test("in-place swap self-heals: roll back from a gate-less crash, roll forward from a gate-passed one") {
     import spark.implicits._
-    val run = "deadbeef"
+    val run = "deadbeefdeadbeef"
     val parent = tmp("foldc_swap")
     val ds = s"$parent/data.parquet"
     (1L to 100L).map(i => (i, s"row$i")).toDF("id", "v")
@@ -210,7 +210,7 @@ class FoldCompactionSpec extends SparkSpec {
     fsOf(parent).mkdirs(new Path(art))
     def batchDf(lo: Long) = (lo until lo + 10L).map(i => (i, s"v$i")).toDF("id", "v")
 
-    val runA = "aaaaaaaa"; val runB = "bbbbbbbb"
+    val runA = "aaaaaaaaaaaaaaaa"; val runB = "bbbbbbbbbbbbbbbb"
     // run A: batches 0,1 (committed — markers land), horizon will say 1
     for (b <- 0L to 1L) {
       IdempotentFold.appendKeyed(batchDf(b * 10), ds, runA, b)

@@ -48,7 +48,7 @@ class IdempotentFoldSpec extends SparkSpec {
     Seq((1L, "a", "pt", "s", 1L)).toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(src)
     val q = spark.readStream
-      .schema(graft.streaming.EventsStream.documentsSchema).parquet(src)
+      .schema(graft.sources.Crm.schemas("documents")).parquet(src)
       .writeStream
       .foreachBatch((_: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
                      _: Long) => ())
@@ -94,15 +94,14 @@ class IdempotentFoldSpec extends SparkSpec {
     ArtifactManifest.check(art, docs.select(dCols: _*), dCols)
   }
 
-  test("keyed-name parsing: 16-hex and 8-hex run tags; plain parts and other names are unkeyed") {
+  test("keyed-name parsing: 16-hex run tags; 8-hex tags, plain parts and other names are unkeyed") {
     assert(IdempotentFold.parseKeyed("rdeadbeefdeadbeef_b12_part-0.parquet")
       === Some(("deadbeefdeadbeef", 12L)))
-    assert(IdempotentFold.parseKeyed("rdeadbeef_b3_part-0.parquet")
-      === Some(("deadbeef", 3L)))
+    assert(IdempotentFold.parseKeyed("rdeadbeef_b3_part-0.parquet") === None)
     assert(IdempotentFold.parseKeyed("part-00000-c000.snappy.parquet") === None)
     assert(IdempotentFold.parseMarker("rdeadbeefdeadbeef_b12")
       === Some(("deadbeefdeadbeef", 12L)))
-    assert(IdempotentFold.parseMarker("rdeadbeef_b3") === Some(("deadbeef", 3L)))
+    assert(IdempotentFold.parseMarker("rdeadbeef_b3") === None)
     assert(IdempotentFold.parseMarker("anything-else") === None)
     assert(IdempotentFold.keyedPrefix("aa", 5L) === "raa_b5_")
   }
@@ -148,12 +147,12 @@ class IdempotentFoldSpec extends SparkSpec {
     val runA = "aaaaaaaaaaaaaaaa"
     IdempotentFold.markCommitted(spark, art, runA, 0L)
     IdempotentFold.markCommitted(spark, art, runA, 5L)
-    IdempotentFold.markCommitted(spark, art, "bbbbbbbb", 1L)
+    IdempotentFold.markCommitted(spark, art, "bbbbbbbbbbbbbbbb", 1L)
     val n = IdempotentFold.pruneMarkers(spark, art, Seq(runA), 3L)
     assert(n === 1, "runA b0 prunes; b5 is above the horizon")
     assert(!IdempotentFold.isCommitted(spark, art, runA, 0L))
     assert(IdempotentFold.isCommitted(spark, art, runA, 5L))
-    assert(IdempotentFold.isCommitted(spark, art, "bbbbbbbb", 1L),
+    assert(IdempotentFold.isCommitted(spark, art, "bbbbbbbbbbbbbbbb", 1L),
       "an unnamed run's markers survive")
   }
 

@@ -5,7 +5,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 
 /** Every `spark.graft.*` session conf and `SPARK_GRAFT_*` environment
-  * variable the main sources read, each with the reason it exists. A new
+  * variable the main sources read, and every environment variable the
+  * launchers read, each with the reason it exists. A new
   * knob has to be added here, with its reason, before this spec passes;
   * a knob that loses its last reader has to be dropped from here.
   * Per-experiment switches belong in the engine's own `SQLConf`, not here.
@@ -18,10 +19,12 @@ class KnobGuardSpec extends AnyFunSuite {
     "SPARK_GRAFT_MASTER" -> "ClusterMode: run a main on local-cluster/standalone",
     "SPARK_GRAFT_JARS" -> "ClusterMode: application jar shipped to executors",
     "SPARK_GRAFT_EXECUTOR_MEM" -> "ClusterMode: executor heap",
-    "SPARK_GRAFT_ALLOW_STALE_JAR" -> "ClusterMode: downgrade the stale-jar check to a warning",
-    "spark.graft.lsh.verifyJoinHint" -> "force the LSH verify-join strategy (DedupSpec)",
-    "spark.graft.lsh.shjBuildBudgetBytes" -> "override the derived SHJ build budget (DedupSpec)",
-    "spark.graft.stream.statePartitions" -> "streaming state width override (R18OpsSpec)")
+    "SPARK_GRAFT_ALLOW_STALE_JAR" -> "ClusterMode: downgrade the stale-jar check to a warning")
+
+  /** Environment names the JVM launchers read: `build.sbt` (sbt run/test)
+    * and `run_graft.sh`. */
+  private val launcherEnv: Map[String, String] = Map(
+    "SPARK_DRIVER_MEM" -> "JVM heap (-Xmx) of sbt-forked runs and run_graft.sh")
 
   private val knob = """spark\.graft\.[A-Za-z0-9_.]*[A-Za-z0-9_]|SPARK_GRAFT_[A-Z0-9_]+""".r
 
@@ -41,5 +44,21 @@ class KnobGuardSpec extends AnyFunSuite {
     val unused = kept.keySet -- found
     assert(unlisted.isEmpty, s"new knob(s) in src/main/scala; list and justify them here: ${unlisted.toSeq.sorted}")
     assert(unused.isEmpty, s"listed knob(s) no longer read by src/main/scala; drop them here: ${unused.toSeq.sorted}")
+  }
+
+  test("build.sbt and run_graft.sh read exactly the listed environment names") {
+    def read(f: String) = new String(Files.readAllBytes(Paths.get(f)), "UTF-8")
+    val sbtEnv = """sys\.env(?:\.get|\.getOrElse)?\(\s*"([A-Za-z0-9_]+)"""".r
+      .findAllMatchIn(read("build.sbt")).map(_.group(1)).toSet
+    // a shell reference `$NAME`/`${NAME` is an environment read unless the
+    // script assigns NAME itself
+    val sh = read("run_graft.sh")
+    val assigned = """(?m)^\s*(?:for\s+)?([A-Za-z_][A-Za-z0-9_]*)(?:=|\s+in\s)""".r
+      .findAllMatchIn(sh).map(_.group(1)).toSet
+    val shEnv = """\$\{?([A-Za-z_][A-Za-z0-9_]*)""".r
+      .findAllMatchIn(sh).map(_.group(1)).toSet -- assigned
+    val found = sbtEnv ++ shEnv
+    assert(found === launcherEnv.keySet,
+      s"launcher env names changed; list and justify them here: unlisted ${(found -- launcherEnv.keySet).toSeq.sorted}, unused ${(launcherEnv.keySet -- found).toSeq.sorted}")
   }
 }

@@ -2,16 +2,14 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.streaming.OutputMode
-
 import graft.operators.Parallelism
 import graft.streaming.{EventsStream, IdempotentFold}
 
 /** Focused specs for the r18 optimization internals: the per-caller loop
   * width floor + reentrant session lock (ADVICE r17 medium/low), the
   * bounded-pool overlap of independent per-batch side-effects (VERDICT r17
-  * #1), and the derived stream-join state width with validated conf
-  * precedence (VERDICT r17 #6 done-condition).
+  * #1), and the derived stream-join state width (VERDICT r17 #6
+  * done-condition).
   */
 class R18OpsSpec extends SparkSpec {
   import spark.implicits._
@@ -78,22 +76,6 @@ class R18OpsSpec extends SparkSpec {
     assert(EventsStream.derivedStatePartitions(spark, s"$dir/none/*.bin") === 2)
   }
 
-  test("statePartitions conf is validated: malformed or non-positive fails naming the conf") {
-    val key = "spark.graft.stream.statePartitions"
-    try {
-      spark.conf.set(key, "abc")
-      val e = intercept[IllegalArgumentException] {
-        EventsStream.runToCompletion(spark, "sp_bad")(_ => fail("build must not run"))
-      }
-      assert(e.getMessage.contains(key))
-      spark.conf.set(key, "0")
-      val e2 = intercept[IllegalArgumentException] {
-        EventsStream.runToCompletion(spark, "sp_zero")(_ => fail("build must not run"))
-      }
-      assert(e2.getMessage.contains(key))
-    } finally spark.conf.unset(key)
-  }
-
   test("writeIvfPqIndex with a pre-trained coarse table writes an identical artifact") {
     import graft.operators.Similarity
     val emb = Seq(
@@ -113,26 +95,5 @@ class R18OpsSpec extends SparkSpec {
       val b = spark.read.parquet(s"$reuse/$t.parquet").collect().toSet
       assert(a === b, s"table $t differs between retrain and coarse-reuse")
     }
-  }
-
-  test("statePartitions precedence: the conf override wins over the caller arg") {
-    val key = "spark.graft.stream.statePartitions"
-    class Abort extends RuntimeException("abort")
-    def widthSeenWith(arg: Int): Int = {
-      var seen = -1
-      intercept[Abort] {
-        EventsStream.runToCompletion(spark, "sp_prec", OutputMode.Append(),
-          statePartitions = arg) { ss =>
-          seen = ss.conf.get("spark.sql.shuffle.partitions").toInt
-          throw new Abort
-        }
-      }
-      seen
-    }
-    try {
-      assert(widthSeenWith(7) === 7) // no conf: the caller arg (derived at the gates) applies
-      spark.conf.set(key, "3")
-      assert(widthSeenWith(7) === 3) // conf set: it wins over the arg
-    } finally spark.conf.unset(key)
   }
 }

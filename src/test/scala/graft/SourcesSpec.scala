@@ -3,6 +3,7 @@ package graft
 import java.nio.file.Files
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.functions._
+import graft.sources.Crm
 
 /** Source-format coverage: the engine's tables round-trip through CSV and
   * JSON (schema-explicit reads — at 100 TB schema inference is a full extra
@@ -197,5 +198,57 @@ class SourcesSpec extends SparkSpec {
       .select("n_name").queryExecution.executedPlan.toString
     assert(plan.contains("PushedFilters: [IsNotNull(n_nationkey), GreaterThan(n_nationkey,10)"), plan.take(1500))
     assert(plan.contains("ReadSchema: struct<n_nationkey:int,n_name:string>"), plan.take(1500))
+  }
+
+  // ---- the stored-table reader: declared schemas, footer-checked
+
+  private val sf0001 = "/root/testdata/sf0.001"
+  private val storedDirs = Seq(sf0001, "perfbench/data/sf0.001", "perfbench/data/sf0.01")
+
+  test("every stored table's declared schema equals parquet inference") {
+    val checked = for {
+      dir <- storedDirs
+      t <- Crm.schemas.keys.toSeq.sorted
+      if Files.exists(java.nio.file.Paths.get(s"$dir/$t.parquet"))
+    } yield {
+      val inferred = spark.read.parquet(s"$dir/$t.parquet").schema
+      assert(Crm.schemas(t) === inferred, s"$dir/$t")
+      assert(Crm.table(spark, dir, t).schema === inferred, s"$dir/$t")
+      t
+    }
+    assert(checked.toSet === Crm.schemas.keySet, "every declared table is checked somewhere")
+    assert(checked.size === 10 + 8 + 8)
+  }
+
+  test("Warehouse.build on sf0.001 runs no Spark job") {
+    // a fresh session: Warehouse.build memoizes per (session, dir)
+    val s = spark.newSession()
+    val sc = s.sparkContext
+    val group = "sources-spec-warehouse-build"
+    sc.setJobGroup(group, "Warehouse.build")
+    try Warehouse.build(s, sf0001)
+    finally sc.clearJobGroup()
+    assert(sc.statusTracker.getJobIdsForGroup(group).toSeq === Nil)
+  }
+
+  test("a stored table missing a declared column, or holding it with another type, fails naming both") {
+    val nation = spark.read.parquet(s"$sf0001/nation.parquet")
+    val missing = Files.createTempDirectory("stored_missing").toString
+    nation.drop("n_regionkey").write.parquet(s"$missing/nation.parquet")
+    val e1 = intercept[IllegalArgumentException](Crm.table(spark, missing, "nation"))
+    assert(e1.getMessage.contains("'nation'") && e1.getMessage.contains("'n_regionkey'"), e1.getMessage)
+    assert(e1.getMessage.contains("missing"), e1.getMessage)
+
+    val retyped = Files.createTempDirectory("stored_retyped").toString
+    nation.withColumn("n_regionkey", col("n_regionkey").cast("string"))
+      .write.parquet(s"$retyped/nation.parquet")
+    val e2 = intercept[IllegalArgumentException](Crm.table(spark, retyped, "nation"))
+    assert(e2.getMessage.contains("'nation'") && e2.getMessage.contains("'n_regionkey'"), e2.getMessage)
+    assert(e2.getMessage.contains("STRING") && e2.getMessage.contains("INT"), e2.getMessage)
+
+    // a well-formed multi-file directory (commit marker included) reads back
+    val multi = Files.createTempDirectory("stored_multi").toString
+    nation.repartition(3).write.parquet(s"$multi/nation.parquet")
+    assert(Crm.table(spark, multi, "nation").collect().toSet === nation.collect().toSet)
   }
 }
