@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import QueryShared._
 
 /** One per-family query registry under entries/: its gated entries and
   * their DuckDB mirrors, keyed by the same names. */
@@ -22,14 +21,17 @@ private[graft] trait QueryFamily {
   * surrogate keys are deterministic `row_number` over unique natural keys so
   * they ARE compared; `data_cadastro`/`data_carga` (current-date stamps) are
   * excluded (SURVEY §7.4).
+  *
+  * Session rule: an entry reads no ANSI setting and no session time zone,
+  * and sets no conf on the caller's session. Each plan carries its own
+  * semantics: parses that may fail use the `try_` forms, and time
+  * truncation goes through the UTC helper `GraftFunctions.truncUtc`.
   */
 object SparkEntry {
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
-  def entry(spark: SparkSession): DataFrame = {
-    prep(spark)
+  def entry(spark: SparkSession): DataFrame =
     Warehouse.build(spark, "/root/testdata/sf0.001").fatoVendas
-  }
 
   /** The per-family registries, in the order their entries were written.
     * No name is defined by two families (RegistrySpec), so merging them
@@ -40,13 +42,9 @@ object SparkEntry {
     ScdQueries, OlapBreadthQueries, CurationQueries, SketchesQueries,
     ReportQueries)
 
-  /** One entry per implemented operator from SURVEY.md §2. Each runs after
-    * [[QueryShared.prep]] has set the session contract, so no entry sets it
-    * itself. */
+  /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    families.flatMap(_.queries).map { case (name, f) =>
-      name -> ((s: SparkSession, dir: String) => { prep(s); f(s, dir) })
-    }.toMap
+    families.flatMap(_.queries).toMap
 
   def oracleSql: Map[String, String] = families.flatMap(_.oracleSql).toMap
 }

@@ -12,25 +12,25 @@ private[graft] object EventsQueries extends QueryFamily {
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ---- §7.5 extensions: event-time analytics ----------------------------
     "q_events_hourly" -> ((s, dir) => {
-      operators.Events.hourly(events(s, dir))
+      operators.Events.hourly(Crm.table(s, dir, "events"))
         .orderBy(col("hora"), col("event_type"))
     }),
     "q_events_sessions" -> ((s, dir) => {
-      operators.Events.userSessionStats(events(s, dir))
+      operators.Events.userSessionStats(Crm.table(s, dir, "events"))
         .orderBy(col("user_id"))
     }),
     "q_events_top_types" -> ((s, dir) => {
-      operators.Events.topTypesPerHour(events(s, dir))
+      operators.Events.topTypesPerHour(Crm.table(s, dir, "events"))
         .orderBy(col("hora"), col("rank"))
     }),
     "q_events_funnel" -> ((s, dir) => {
-      operators.Events.funnel(events(s, dir), Seq("view", "click", "purchase"))
+      operators.Events.funnel(Crm.table(s, dir, "events"), Seq("view", "click", "purchase"))
         .orderBy(col("stage"))
     }),
     "q_stream_hourly" -> ((s, dir) => {
       streaming.EventsStream.runToCompletion(s, "q_stream_hourly_sink") { ss =>
         streaming.EventsStream.hourlyCounts(
-          streaming.EventsStream.readEventsStreamNanos(ss, dir))
+          streaming.EventsStream.readStoredEventsStream(ss, dir))
       }.orderBy(col("hora"), col("event_type"))
     }),
     // Stateful streaming sessionization over ONE AvailableNow batch: every
@@ -43,7 +43,7 @@ private[graft] object EventsQueries extends QueryFamily {
         org.apache.spark.sql.streaming.OutputMode.Append()) { ss =>
         import ss.implicits._
         streaming.EventsStream.sessionize(
-          streaming.EventsStream.readEventsStreamNanos(ss, dir)
+          streaming.EventsStream.readStoredEventsStream(ss, dir)
             .as[streaming.EventsStream.Ev]).toDF()
       }
         .select(col("user_id"), col("session_start"), col("n_events"))
@@ -64,7 +64,7 @@ private[graft] object EventsQueries extends QueryFamily {
         statePartitions =
           streaming.EventsStream.derivedStatePartitions(s, s"$dir/events*")) { ss =>
         streaming.EventsStream.purchaseViewJoin(
-          streaming.EventsStream.readEventsStreamNanos(ss, dir))
+          streaming.EventsStream.readStoredEventsStream(ss, dir))
       }.orderBy(col("event_id"), col("vts"))
     }),
     // LEFT OUTER stream-stream join: unmatched purchases emit a null view
@@ -78,7 +78,7 @@ private[graft] object EventsQueries extends QueryFamily {
         statePartitions =
           streaming.EventsStream.derivedStatePartitions(s, s"$dir/events*")) { ss =>
         streaming.EventsStream.purchaseViewJoinOuter(
-          streaming.EventsStream.readEventsStreamNanos(ss, dir))
+          streaming.EventsStream.readStoredEventsStream(ss, dir))
       }.orderBy(col("event_id"), col("vts"))
     }),
     // Streaming twin of q_dedup_exact: complete-mode running dedup state.

@@ -12,16 +12,12 @@ private[graft] object OlapBreadthQueries extends QueryFamily {
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ---- OLAP breadth: grouping sets / unpivot / rank family --------------
     "q_grouping_sets" -> ((s, dir) => {
-      Crm.table(s, dir, "lineitem").createOrReplaceTempView("lineitem_v")
-      s.sql(
-        """SELECT l_returnflag, l_linestatus, count(*) AS n_rows,
-          |  CAST(grouping(l_returnflag) AS BIGINT) AS g_rf,
-          |  CAST(grouping(l_linestatus) AS BIGINT) AS g_ls
-          |FROM lineitem_v
-          |GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus),
-          |                        (l_returnflag, l_linestatus))
-          |ORDER BY g_rf, g_ls, l_returnflag NULLS FIRST, l_linestatus NULLS FIRST"""
-          .stripMargin)
+      val (rf, ls) = (col("l_returnflag"), col("l_linestatus"))
+      Crm.table(s, dir, "lineitem")
+        .groupingSets(Seq(Seq(rf), Seq(ls), Seq(rf, ls)), rf, ls)
+        .agg(count(lit(1)).as("n_rows"),
+          grouping(rf).cast("long").as("g_rf"), grouping(ls).cast("long").as("g_ls"))
+        .orderBy(col("g_rf"), col("g_ls"), rf.asc_nulls_first, ls.asc_nulls_first)
     }),
     "q_unpivot" -> ((s, dir) => {
       // wide per-nation metrics → long (nationkey, metric, value) via the

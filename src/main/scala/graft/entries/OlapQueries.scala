@@ -16,7 +16,7 @@ private[graft] object OlapQueries extends QueryFamily {
         .orderBy(col("l_returnflag").asc_nulls_first, col("l_linestatus").asc_nulls_first)
     }),
     "q_pivot" -> ((s, dir) => {
-      operators.Olap.pivotEventCounts(events(s, dir), EventTypes).orderBy(col("hora"))
+      operators.Olap.pivotEventCounts(Crm.table(s, dir, "events"), EventTypes).orderBy(col("hora"))
     }),
     "q_window_running" -> ((s, dir) => {
       operators.Olap.runningTotals(Crm.table(s, dir, "orders"))
@@ -34,7 +34,7 @@ private[graft] object OlapQueries extends QueryFamily {
         .orderBy(col("tag"), col("o_custkey"))
     }),
     "q_gapfill" -> ((s, dir) => {
-      operators.Olap.hourlyGapFill(events(s, dir))
+      operators.Olap.hourlyGapFill(Crm.table(s, dir, "events"))
         .orderBy(col("hora"), col("event_type"))
     }),
     "q_olap_pricing" -> ((s, dir) => {
@@ -42,12 +42,12 @@ private[graft] object OlapQueries extends QueryFamily {
         segment = "BUILDING", cutoff = "1998-01-01", k = 10)
     }),
     "q_asof_join" -> ((s, dir) => {
-      operators.Olap.asofPriorEvent(events(s, dir), "view", "click")
+      operators.Olap.asofPriorEvent(Crm.table(s, dir, "events"), "view", "click")
         .orderBy(col("event_id"))
     }),
     "q_json_extract" -> ((s, dir) => {
       // semi-structured props column: JSON field extraction + aggregation
-      events(s, dir)
+      Crm.table(s, dir, "events")
         .withColumn("k", get_json_object(col("props"), "$.k").cast("long"))
         .groupBy(col("event_type"))
         .agg(count(col("k")).as("n_with_k"), sum(col("k")).as("sum_k"),
@@ -86,7 +86,7 @@ private[graft] object OlapQueries extends QueryFamily {
       // time-range join: per purchase, views by the same user in the
       // preceding 10 minutes — equi key (user_id) + interval predicate; the
       // equi part keeps it a hash/SMJ join, never a cartesian.
-      val ev = events(s, dir)
+      val ev = Crm.table(s, dir, "events")
       val purchases = ev.filter(col("event_type") === "purchase")
         .select(col("event_id"), col("user_id").as("u"), col("ts").as("pts"))
       val views = ev.filter(col("event_type") === "view")

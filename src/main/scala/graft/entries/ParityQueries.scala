@@ -26,10 +26,9 @@ private[graft] object ParityQueries extends QueryFamily {
     // ---- SQL interface: temp views + spark.sql + SQL-registered UDF -------
     "q_sql_api" -> ((s, dir) => {
       s.udf.register("graft_clean", graft.functions.PyText.cleanText _)
-      Crm.localidade(s, dir).createOrReplaceTempView("localidade_v")
-      s.sql(
-        """SELECT id_localidade, graft_clean(cidade) AS cidade_clean
-          |FROM localidade_v ORDER BY id_localidade""".stripMargin)
+      sqlOver(s, Crm.localidade(s, dir))(v =>
+        s"""SELECT id_localidade, graft_clean(cidade) AS cidade_clean
+          |FROM $v ORDER BY id_localidade""".stripMargin)
     }),
     // ---- P-series: scan/project/filter/distinct --------------------------
     "q_scan_project" -> ((s, dir) => {

@@ -5,49 +5,22 @@ import org.apache.spark.sql.functions._
 import graft.sources.{Crm, OracleSql => O}
 
 /** Shared plumbing for the per-family query registries under entries/:
-  * session prep, the events timestamp coercion, the build-once artifact
-  * memos, temp artifact directories, and the oracle-SQL helper fragments.
+  * the build-once artifact memos, temp artifact directories, and the
+  * oracle-SQL helper fragments.
   * Stored tables are read through [[graft.sources.Crm.table]].
   */
 private[graft] object QueryShared {
 
-  /** F13 null-on-parse-failure requires non-ANSI mode (SURVEY §4.3); Spark 4
-    * defaults ANSI on, and the caller owns the session, so
-    * [[SparkEntry.queries]] sets it before every entry.
-    * The UTC pin (also session-wide) makes timezone-sensitive semantics
-    * uniform from the first query instead of flipping when the first
-    * events-based query runs (r8 advice): every oracle comparison assumes a
-    * UTC session, so it is part of the query contract, not a per-reader
-    * detail.
-    */
-  def prep(s: SparkSession): Unit = {
-    s.conf.set("spark.sql.ansi.enabled", "false")
-    s.conf.set("spark.sql.session.timeZone", "UTC")
-  }
-
-  /** The events table with `ts` as a UTC instant. events.parquet `ts`
-    * differs across testdata generations: TIMESTAMP(NANOS) (pre-r8)
-    * needs the nanos-as-long flag + truncate-to-micros, while
-    * TIMESTAMP(MICROS, naive) (current) loads as TIMESTAMP_NTZ and only
-    * needs the NTZ→instant cast. Both coercions land on the same
-    * UTC-instant micros the oracle engine reads from the same file; the
-    * reader takes the stored type from the file's footer, and the coercion
-    * rule is shared with the streaming reader via
-    * [[operators.Events.coerceEventTs]].
-    *
-    * SESSION-WIDE side effects (r8 advice): both conf sets outlive this
-    * call on the driver-owned session. `nanosAsLong` makes every later
-    * TIMESTAMP(NANOS) parquet read load as LongType, and the UTC timezone
-    * pin changes any later timezone-sensitive cast if the driver session
-    * was not already UTC. Both are intentional — [[prep]] pins UTC on every
-    * query entry, so the session is uniformly UTC from the FIRST query
-    * rather than flipping after the first events-based one, and the oracle
-    * comparison is only defined for UTC sessions.
-    */
-  def events(s: SparkSession, dir: String) = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = Crm.table(s, dir, "events")
-    operators.Events.coerceEventTs(raw, raw.schema("ts").dataType)
+  /** `s.sql` over `df` registered as a temp view whose name is unique to
+    * the call, so calls sharing a session cannot swap each other's view;
+    * `text` builds the query from that name. The view is dropped once the
+    * query is analyzed: the analyzed plan holds the view's own plan. */
+  def sqlOver(s: SparkSession, df: DataFrame)(text: String => String): DataFrame = {
+    val view = s"v_${java.util.UUID.randomUUID.toString.replace("-", "")}"
+    df.createTempView(view)
+    // the session catalog's drop, not `s.catalog.dropTempView`, which would
+    // also uncache any cached plan equal to the view's
+    try s.sql(text(view)) finally s.sessionState.catalog.dropTempView(view)
   }
 
   /** Event types present in the driver testdata (pivot needs a static list —

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.GraftFunctions.truncUtc
 import graft.operators.Surrogate
 import graft.sources.{Crm, OracleSql => O}
 import QueryShared._
@@ -92,7 +93,7 @@ private[graft] object SketchesQueries extends QueryFamily {
     }),
     // Trailing-24h z-score volume anomalies on the hourly event series.
     "q_zscore_anomaly" -> ((s, dir) => {
-      operators.Events.zscoreAnomalies(events(s, dir))
+      operators.Events.zscoreAnomalies(Crm.table(s, dir, "events"))
     }),
     // Asymmetric containment near-dups via DF-ordered prefix filtering.
     "q_containment" -> ((s, dir) => {
@@ -102,7 +103,7 @@ private[graft] object SketchesQueries extends QueryFamily {
     }),
     // Hopping 2h/1h windows — each event in exactly two windows.
     "q_events_sliding" -> ((s, dir) => {
-      operators.Events.slidingCounts(events(s, dir))
+      operators.Events.slidingCounts(Crm.table(s, dir, "events"))
         .orderBy(col("win_start"), col("event_type"))
     }),
     // Native session_window streaming sessionization (vs the custom
@@ -111,13 +112,13 @@ private[graft] object SketchesQueries extends QueryFamily {
       streaming.EventsStream.runToCompletion(s, "q_stream_session_window_sink",
         org.apache.spark.sql.streaming.OutputMode.Append()) { ss =>
         streaming.EventsStream.sessionWindowAgg(
-          streaming.EventsStream.readEventsStreamNanos(ss, dir))
+          streaming.EventsStream.readStoredEventsStream(ss, dir))
       }.orderBy(col("user_id"), col("session_start"))
     }),
     // HLL register merge: per-day estimate rolled up from hourly registers.
     "q_hll_merge" -> ((s, dir) => {
       // cast: both engines must md5 the same bytes — the decimal string form
-      operators.Sketches.hllMergedDaily(events(s, dir), col("ts"),
+      operators.Sketches.hllMergedDaily(Crm.table(s, dir, "events"), col("ts"),
         col("user_id").cast("string"))
         .orderBy(col("day"))
     }),
@@ -127,14 +128,14 @@ private[graft] object SketchesQueries extends QueryFamily {
       streaming.EventsStream.runToCompletion(s, "q_stream_dedup_wm_sink",
         org.apache.spark.sql.streaming.OutputMode.Append()) { ss =>
         streaming.EventsStream.streamingDedupWithinWatermark(
-          streaming.EventsStream.readEventsStreamNanos(ss, dir))
+          streaming.EventsStream.readStoredEventsStream(ss, dir))
       }.orderBy(col("user_id"), col("event_type"), col("minuto"))
     }),
     // Streaming hopping windows (complete mode == batch sliding counts).
     "q_stream_sliding" -> ((s, dir) => {
       streaming.EventsStream.runToCompletion(s, "q_stream_sliding_sink") { ss =>
         streaming.EventsStream.slidingCountsStream(
-          streaming.EventsStream.readEventsStreamNanos(ss, dir))
+          streaming.EventsStream.readStoredEventsStream(ss, dir))
       }.orderBy(col("win_start"), col("event_type"))
     }),
     // One Lloyd refinement step over the IVF seed centroids.
@@ -179,13 +180,13 @@ private[graft] object SketchesQueries extends QueryFamily {
     }),
     // Weekly cohort retention over events.
     "q_retention" -> ((s, dir) => {
-      operators.Events.retention(events(s, dir))
+      operators.Events.retention(Crm.table(s, dir, "events"))
         .orderBy(col("cohort_week"), col("age_weeks"))
     }),
     // Incremental view maintenance: merged partial states == full aggregate.
     "q_incr_agg" -> ((s, dir) => {
       val o = Crm.table(s, dir, "orders")
-      val split = lit("1995-01-01").cast("timestamp")
+      val split = lit("1995-01-01").cast("timestamp_ntz") // o_orderdate's type: no zone
       val base = operators.Incremental.revenueState(o.filter(col("o_orderdate") < split))
       val delta = operators.Incremental.revenueState(o.filter(col("o_orderdate") >= split))
       operators.Incremental.finish(operators.Incremental.merge(Seq(base, delta)))
@@ -219,8 +220,8 @@ private[graft] object SketchesQueries extends QueryFamily {
     // Time-RANGE window frame: trailing-3h sums over the hourly series
     // (RANGE, not ROWS — gaps in the series change the answer).
     "q_window_range_frame" -> ((s, dir) => {
-      val hourly = events(s, dir)
-        .groupBy(col("event_type"), date_trunc("hour", col("ts")).as("hora"))
+      val hourly = Crm.table(s, dir, "events")
+        .groupBy(col("event_type"), truncUtc("hour", col("ts")).as("hora"))
         .agg(count(lit(1)).as("n_events"))
       val w = Window.partitionBy(col("event_type"))
         .orderBy(unix_timestamp(col("hora")))
@@ -245,7 +246,7 @@ private[graft] object SketchesQueries extends QueryFamily {
     }),
     // Native session_window in BATCH mode (same operator as the stream).
     "q_session_batch" -> ((s, dir) => {
-      events(s, dir)
+      Crm.table(s, dir, "events")
         .groupBy(session_window(col("ts"), "30 minutes").as("sw"), col("user_id"))
         .agg(count(lit(1)).as("n_events"))
         .select(col("user_id"), col("sw.start").as("session_start"),

@@ -109,8 +109,8 @@ private[graft] object TextQueries extends QueryFamily {
     // SQL-surface natives: dot_fp via the GraftExtensions function registry.
     "q_sql_native" -> ((s, dir) => {
       GraftExtensions.install(s)
-      Crm.table(s, dir, "embeddings").createOrReplaceTempView("embeddings_v")
-      s.sql("SELECT vec_id, dot_fp(embedding, embedding) AS raw FROM embeddings_v")
+      sqlOver(s, Crm.table(s, dir, "embeddings"))(v =>
+        s"SELECT vec_id, dot_fp(embedding, embedding) AS raw FROM $v")
         .select(col("vec_id"),
           graft.functions.GraftFunctions.detRound(col("raw"), 4).as("norm2"))
         .orderBy(col("vec_id"))
@@ -172,9 +172,9 @@ private[graft] object TextQueries extends QueryFamily {
     "q_stream_cms" -> ((s, dir) => {
       val sketch = streaming.EventsStream.runToCompletion(s, "q_stream_cms_sink") { ss =>
         streaming.EventsStream.cmsRegistersStream(
-          streaming.EventsStream.readEventsStreamNanos(ss, dir))
+          streaming.EventsStream.readStoredEventsStream(ss, dir))
       }
-      val exact = events(s, dir).groupBy(col("event_type").as("term"))
+      val exact = Crm.table(s, dir, "events").groupBy(col("event_type").as("term"))
         .agg(count(lit(1)).as("exact_cnt"))
       exact.join(operators.Sketches.cmsEstimate(
           sketch, exact.select(col("term")), col("term")), Seq("term"))
@@ -375,19 +375,19 @@ private[graft] object TextQueries extends QueryFamily {
     "q_stream_hll" -> ((s, dir) => {
       val regs = streaming.EventsStream.runToCompletion(s, "q_stream_hll_sink") { ss =>
         streaming.EventsStream.hllRegistersStream(
-          streaming.EventsStream.readEventsStreamNanos(ss, dir))
+          streaming.EventsStream.readStoredEventsStream(ss, dir))
       }
       operators.Sketches.estimateFromRegisters(
         regs.withColumn("g", lit("all")), "g").orderBy(col("g"))
     }),
     // Sliding 24h distinct-user estimate per hour from HLL register merges.
     "q_sliding_distinct" -> ((s, dir) => {
-      operators.Sketches.hllSlidingDistinct(events(s, dir), col("ts"),
+      operators.Sketches.hllSlidingDistinct(Crm.table(s, dir, "events"), col("ts"),
         col("user_id").cast("string")).orderBy(col("hour"))
     }),
     // Seasonal-naive (t-7d) forecast backtest per event type.
     "q_forecast_naive" -> ((s, dir) => {
-      operators.Events.seasonalNaiveBacktest(events(s, dir))
+      operators.Events.seasonalNaiveBacktest(Crm.table(s, dir, "events"))
         .orderBy(col("event_type"))
     }),
     // Deterministic fair interleave across sources (training order).

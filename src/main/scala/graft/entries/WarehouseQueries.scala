@@ -180,7 +180,8 @@ private[graft] object WarehouseQueries extends QueryFamily {
     "q_compact_range" -> ((s, dir) => {
       val out = tempDir("compact_range")
       operators.Compaction.compact(s, s"$dir/lineitem.parquet", out,
-        targetFileBytes = 4L << 20, sortCol = Some("l_orderkey"))
+        targetFileBytes = 4L << 20, sortCol = Some("l_orderkey"),
+        schema = Some(Crm.storedSchema(s, dir, "lineitem")))
       s.read.parquet(out)
         .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"))
         .orderBy(col("l_orderkey"), col("l_linenumber"))

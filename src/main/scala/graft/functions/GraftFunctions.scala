@@ -177,10 +177,10 @@ object GraftFunctions {
 
   /** F9 percent extraction (etl_completo.py:731-740): first decimal number in
     * the text via `(\d+(?:\.\d+)?)`, else 0.0. `regexp_extract` yields "" on
-    * no-match → cast null → coalesce 0.0.
+    * no-match → `try_cast` null (under any ANSI setting) → coalesce 0.0.
     */
   def extractPercent(c: Column): Column =
-    coalesce(regexp_extract(c, "(\\d+(?:\\.\\d+)?)", 1).cast("double"), lit(0.0))
+    coalesce(regexp_extract(c, "(\\d+(?:\\.\\d+)?)", 1).try_cast("double"), lit(0.0))
 
   // ---- F13 tri-state date handling (etl_completo.py:615-635) --------------
 
@@ -204,12 +204,13 @@ object GraftFunctions {
   private def slashShape(c: Column): Column = length(c) === 10 && charCount(c, "/") === 2
 
   /** F13 parse result: `yyyy-MM-dd` / `dd/MM/yyyy` by shape, null otherwise.
-    * Requires `spark.sql.ansi.enabled=false` (null on parse failure).
+    * `try_to_date` is null on a parse failure whatever the session's ANSI
+    * setting, so the F13 rules below never depend on the session.
     */
   def parseMultiFormatDate(c: Column): Column =
     when(isDateSentinel(c), lit(null).cast("date"))
-      .when(dashShape(c), to_date(c, "yyyy-MM-dd"))
-      .when(slashShape(c), to_date(c, "dd/MM/yyyy"))
+      .when(dashShape(c), try_to_date(c, "yyyy-MM-dd"))
+      .when(slashShape(c), try_to_date(c, "dd/MM/yyyy"))
 
   /** F13 keep-row predicate: sentinels/null KEEP the row (with null date);
     * a well-shaped parseable string keeps it; anything else (bad shape or
@@ -217,8 +218,8 @@ object GraftFunctions {
     */
   def keepRowForDate(c: Column): Column =
     isDateSentinel(c) ||
-      (dashShape(c) && to_date(c, "yyyy-MM-dd").isNotNull) ||
-      (slashShape(c) && to_date(c, "dd/MM/yyyy").isNotNull)
+      (dashShape(c) && try_to_date(c, "yyyy-MM-dd").isNotNull) ||
+      (slashShape(c) && try_to_date(c, "dd/MM/yyyy").isNotNull)
 
   /** P8 sentinel-to-null (promo dates, etl_completo.py:746-750): sentinel →
     * null, otherwise the raw value is kept as-is (reference stores the raw
@@ -226,17 +227,13 @@ object GraftFunctions {
     */
   def sentinelToNullDate(c: Column): Column =
     when(isDateSentinel(c), lit(null).cast("date"))
-      .otherwise(coalesce(to_date(c, "yyyy-MM-dd"), to_date(c, "dd/MM/yyyy")))
+      .otherwise(coalesce(try_to_date(c, "yyyy-MM-dd"), try_to_date(c, "dd/MM/yyyy")))
 
   // ---- F12 numeric guards (etl_completo.py:666-668,886-887) ---------------
 
   /** `float(x) if x and x > 0 else 0.0` */
   def positiveOrZero(c: Column): Column =
     when(c.isNotNull && c > 0, c.cast("double")).otherwise(0.0)
-
-  /** `float(x) if x and x >= 0 else 0.0` (desconto guard, :668) */
-  def nonNegativeOrZero(c: Column): Column =
-    when(c.isNotNull && c >= 0, c.cast("double")).otherwise(0.0)
 
   // ---- cross-engine-stable aggregates --------------------------------------
 
@@ -309,6 +306,32 @@ object GraftFunctions {
     */
   private val Two53: Double = 9007199254740992.0
 
+  // ---- zone-free time truncation -----------------------------------------
+
+  private val MicrosPer: Map[String, Long] = Map(
+    "minute" -> 60000000L, "hour" -> 3600000000L, "day" -> 86400000000L,
+    "week" -> 604800000000L)
+
+  /** `date_trunc(unit, c)` in UTC, whatever the session's time zone
+    * (`date_trunc` truncates in the session zone, so its day, week and
+    * month boundaries move with it). Minute, hour, day and week step back
+    * from the micros of the TIMESTAMP `c` to a whole multiple of the unit;
+    * weeks start on Monday, as `date_trunc`'s do (the epoch is a Thursday,
+    * three days past one). Month reads the wall fields of the
+    * TIMESTAMP_NTZ `c`, which carry no zone, and builds the first of the
+    * month at UTC midnight. The result is a TIMESTAMP either way.
+    */
+  def truncUtc(unit: String, c: Column): Column = unit match {
+    case "month" =>
+      make_timestamp(year(c), month(c), lit(1), lit(0), lit(0), lit(0), lit("UTC"))
+    case u =>
+      val step = MicrosPer.getOrElse(u,
+        throw new IllegalArgumentException(s"truncUtc: unsupported unit '$u'"))
+      val shift = if (u == "week") 3 * MicrosPer("day") else 0L
+      val m = unix_micros(c)
+      timestamp_micros(m - pmod(m + shift, lit(step)))
+  }
+
   // ---- F15 calendar attributes (etl_completo.py:780-799) ------------------
 
   /** Portuguese day names, Monday-first (etl_completo.py:787). */
@@ -327,10 +350,10 @@ object GraftFunctions {
 
   /** Literal-array lookup, NOT `date_format` (locale-dependent) — SURVEY F15. */
   def nomeDiaSemana(c: Column): Column =
-    element_at(array(NomesDiaSemana.map(lit): _*), diaSemana(c))
+    try_element_at(array(NomesDiaSemana.map(lit): _*), diaSemana(c))
 
   def nomeMes(c: Column): Column =
-    element_at(array(NomesMes.map(lit): _*), month(c))
+    try_element_at(array(NomesMes.map(lit): _*), month(c))
 
   def semestre(c: Column): Column = when(month(c) <= 6, 1).otherwise(2)
 

@@ -52,10 +52,19 @@ object ArtifactManifest {
   /** The order-free content fingerprint: (row count, xxhash64 multiset sum
     * over `cols`). Public so consumers that must compare fingerprints
     * WITHOUT publishing a manifest (Compaction's publish gate) share the
-    * exact scheme instead of re-deriving it. One scan of `df`. */
+    * exact scheme instead of re-deriving it. One scan of `df`.
+    *
+    * The sum wraps at 2^64. A SQL sum of the hashes would overflow under
+    * ANSI, so SQL sums their unsigned 32-bit halves, which cannot overflow
+    * below 2^31 rows, and the Spark driver joins the two sums with wrapping
+    * `Long` arithmetic: the same value, bit for bit. */
   def fingerprintOf(df: DataFrame, cols: Seq[Column]): (Long, Long) = {
-    val r = df.agg(count(lit(1)), sum(xxhash64(cols: _*))).collect()(0)
-    (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
+    val h = col("h")
+    val r = df.select(xxhash64(cols: _*).as("h"))
+      .agg(count(lit(1)), sum(shiftrightunsigned(h, 32)), sum(h.bitwiseAND(0xFFFFFFFFL)))
+      .collect()(0)
+    def part(i: Int) = if (r.isNullAt(i)) 0L else r.getLong(i)
+    (r.getLong(0), (part(1) << 32) + part(2))
   }
 
   private def render(n: Long, h: Long, foldBatch: Option[Long],

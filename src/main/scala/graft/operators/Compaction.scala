@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import org.apache.hadoop.fs.Path
 
 /** Small-file compaction — the OPTIMIZE-style dataset rewrite every
@@ -112,9 +113,12 @@ object Compaction {
     * makes the call a no-op. Returns what happened either way. Exactly one
     * content scan of the input (the fingerprint; the rewrite's own write
     * re-reads it, as any rewrite must) and one of the output (read-back).
+    * A caller that knows the input's `schema` passes it, and the input is
+    * read without the schema-inference job.
     */
   def compact(spark: SparkSession, inDir: String, outDir: String,
-              targetFileBytes: Long, sortCol: Option[String] = None): CompactionStats = {
+              targetFileBytes: Long, sortCol: Option[String] = None,
+              schema: Option[StructType] = None): CompactionStats = {
     requireDisjoint(spark, inDir, outDir)
     val inFiles = dataFiles(spark, inDir)
     val subdirs = dataSubdirs(spark, inDir)
@@ -123,7 +127,7 @@ object Compaction {
         "compact() rewrites ONE leaf directory — a nested layout would be " +
         "silently flattened; use compactPartitioned for Hive layouts")
     require(inFiles.nonEmpty, s"$inDir has no data files to compact")
-    val in = spark.read.parquet(inDir)
+    val in = schema.fold(spark.read)(st => spark.read.schema(st)).parquet(inDir)
     val cols = in.columns.toSeq.map(col)
     val bytesIn = inFiles.map(_.getLen).sum
 

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.functions.GraftFunctions.{detRound, stableSum2}
+import graft.functions.GraftFunctions.{detRound, stableSum2, truncUtc}
 
 /** Event-time analytics over the `events` table (SURVEY.md §7.5 — the
   * reference has no streaming/temporal surface, §2.7). Batch forms here;
@@ -15,36 +15,12 @@ import graft.functions.GraftFunctions.{detRound, stableSum2}
   */
 object Events {
 
-  /** Coerce the events `ts` column to UTC-instant TIMESTAMP, shared by the
-    * batch reader (QueryShared.events) and the streaming reader
-    * (EventsStream.readEventsStreamNanos) so the two paths cannot drift
-    * (r8 advice — the probe-and-coerce logic was duplicated verbatim).
-    *
-    * The physical type differs across driver testdata generations:
-    *  - TIMESTAMP(NANOS) loads as LongType under `nanosAsLong` →
-    *    truncate-to-micros (`ts div 1000`; integer division truncates
-    *    toward zero — identical to floor for the post-epoch testdata, and
-    *    the same truncation DuckDB applies reading NANOS).
-    *  - TIMESTAMP(MICROS, naive) loads as TIMESTAMP_NTZ → cast to instant.
-    *    The cast interprets wall time in the session zone; callers must pin
-    *    the session timezone to UTC first for the instant to equal the
-    *    file's naive micros.
-    */
-  def coerceEventTs(df: DataFrame, tsType: org.apache.spark.sql.types.DataType): DataFrame =
-    tsType match {
-      case org.apache.spark.sql.types.LongType =>
-        df.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-      case org.apache.spark.sql.types.TimestampNTZType =>
-        df.withColumn("ts", col("ts").cast("timestamp"))
-      case _ => df
-    }
-
   /** Tumbling 1-hour windows per event type: counts, exact-decimal value
-    * sums, distinct users. `date_trunc` rather than `window()` so the
+    * sums, distinct users. A truncated hour rather than `window()` so the
     * column shape is plain (and oracle-expressible).
     */
   def hourly(events: DataFrame): DataFrame =
-    events.groupBy(date_trunc("hour", col("ts")).as("hora"), col("event_type"))
+    events.groupBy(truncUtc("hour", col("ts")).as("hora"), col("event_type"))
       .agg(count(lit(1)).as("n_events"),
         stableSum2(col("value")).as("sum_value"),
         countDistinct(col("user_id")).as("n_users"))
@@ -79,7 +55,7 @@ object Events {
 
   /** Top-N event types per hour by count (deterministic tiebreak on type). */
   def topTypesPerHour(events: DataFrame, n: Int = 2): DataFrame = {
-    val counts = events.groupBy(date_trunc("hour", col("ts")).as("hora"), col("event_type"))
+    val counts = events.groupBy(truncUtc("hour", col("ts")).as("hora"), col("event_type"))
       .agg(count(lit(1)).as("n_events"))
     val w = Window.partitionBy(col("hora")).orderBy(col("n_events").desc, col("event_type"))
     counts.withColumn("rank", row_number().over(w).cast("long"))
@@ -94,12 +70,12 @@ object Events {
     */
   def retention(events: DataFrame): DataFrame = {
     val weekly = events.select(col("user_id"),
-      date_trunc("week", col("ts")).as("week")).distinct()
+      truncUtc("week", col("ts")).as("week")).distinct()
     val cohort = weekly.groupBy(col("user_id")).agg(min(col("week")).as("cohort_week"))
     val sizes = cohort.groupBy(col("cohort_week")).agg(count(lit(1)).as("cohort_size"))
     weekly.join(cohort, Seq("user_id"))
       .withColumn("age_weeks",
-        expr("CAST(datediff(week, cohort_week) div 7 AS BIGINT)"))
+        expr(s"(unix_micros(week) - unix_micros(cohort_week)) div ${7 * 86400000000L}"))
       .groupBy(col("cohort_week"), col("age_weeks"))
       .agg(count(lit(1)).as("n_users")) // weekly is distinct (user, week)
       .join(sizes, Seq("cohort_week"))
@@ -136,7 +112,7 @@ object Events {
     */
   def zscoreAnomalies(events: DataFrame, trail: Int = 24, topK: Int = 50): DataFrame = {
     val counts = events
-      .groupBy(col("event_type"), date_trunc("hour", col("ts")).as("hora"))
+      .groupBy(col("event_type"), truncUtc("hour", col("ts")).as("hora"))
       .agg(count(lit(1)).as("n_events"))
     val w = Window.partitionBy(col("event_type")).orderBy(col("hora"))
       .rowsBetween(-trail, -1)
@@ -198,7 +174,7 @@ object Events {
     * are integer counts, so only the final MAE division is floating point.
     */
   def seasonalNaiveBacktest(events: DataFrame, lagDays: Int = 7): DataFrame = {
-    val daily = events.select(date_trunc("day", col("ts")).as("day"), col("event_type"))
+    val daily = events.select(truncUtc("day", col("ts")).as("day"), col("event_type"))
       .groupBy(col("day"), col("event_type")).agg(count(lit(1)).as("actual"))
     val fc = daily.select(col("event_type"),
       expr(s"day + make_interval(0, 0, 0, $lagDays, 0, 0, 0)").as("day"),

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.functions.GraftFunctions.truncUtc
 
 /** Incremental aggregate (materialized-view) maintenance: keep a MERGEABLE
   * aggregate state per group — counts and exact DECIMAL sums, both
@@ -19,7 +20,7 @@ object Incremental {
   /** Monthly revenue state per order priority: (count, DECIMAL(18,2) sum). */
   def revenueState(orders: DataFrame): DataFrame =
     orders.groupBy(col("o_orderpriority").as("priority"),
-        date_trunc("month", col("o_orderdate")).as("month"))
+        truncUtc("month", col("o_orderdate")).as("month"))
       .agg(count(lit(1)).as("n_orders"),
         sum(col("o_totalprice").cast("decimal(18,2)")).as("rev_state"))
 

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.functions.GraftFunctions.{detRound, stableSum2, stableSumScaled}
+import graft.functions.GraftFunctions.{detRound, stableSum2, stableSumScaled, truncUtc}
 
 /** General OLAP operator coverage beyond the reference's ETL surface:
   * grouping sets/rollup, pivot, running windows, exact percentiles, set
@@ -27,7 +27,7 @@ object Olap {
     * to match conditional-aggregation semantics.
     */
   def pivotEventCounts(events: DataFrame, types: Seq[String]): DataFrame =
-    events.groupBy(date_trunc("hour", col("ts")).as("hora"))
+    events.groupBy(truncUtc("hour", col("ts")).as("hora"))
       .pivot("event_type", types)
       .agg(count(lit(1)))
       .select(col("hora") +: types.map(t => coalesce(col(t), lit(0L)).as(t)): _*)
@@ -115,7 +115,7 @@ object Olap {
   def hourlyGapFill(events: DataFrame): DataFrame = {
     import graft.functions.GraftFunctions.{detRound, stableSum2}
     val hourly = events
-      .groupBy(date_trunc("hour", col("ts")).as("hora"), col("event_type"))
+      .groupBy(truncUtc("hour", col("ts")).as("hora"), col("event_type"))
       .agg(count(lit(1)).as("n"), stableSum2(col("value")).as("v"))
     val hours = hourly.agg(min(col("hora")).as("lo"), max(col("hora")).as("hi"))
       .select(explode(expr("sequence(lo, hi, interval 1 hour)")).as("hora"))
@@ -136,7 +136,7 @@ object Olap {
     */
   def pricingSummary(customer: DataFrame, orders: DataFrame, lineitem: DataFrame,
                      segment: String, cutoff: String, k: Int): DataFrame = {
-    val cut = to_timestamp(lit(cutoff))
+    val cut = lit(cutoff).cast("timestamp_ntz") // the date columns' own type: no zone
     val c = customer.filter(col("c_mktsegment") === segment).select(col("c_custkey"))
     val o = orders.filter(col("o_orderdate") < cut)
       .select(col("o_orderkey"), col("o_custkey"), col("o_orderdate"), col("o_orderpriority"))

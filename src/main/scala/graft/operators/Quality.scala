@@ -78,8 +78,8 @@ object Quality {
         coalesce(col("n_rows"), lit(0L)).as("n_rows"),
         coalesce(col("n_rows") - col("n_nonnull"), lit(0L)).as("n_nulls"),
         coalesce(col("n_distinct"), lit(0L)).as("n_distinct"),
-        detRound(coalesce(col("n_rows") - col("n_nonnull"), lit(0L)).cast("double")
-          / coalesce(col("n_rows"), lit(0L)), 4).as("null_rate"))
+        detRound(try_divide(coalesce(col("n_rows") - col("n_nonnull"), lit(0L)).cast("double"),
+          coalesce(col("n_rows"), lit(0L))), 4).as("null_rate"))
   }
 
   /** k-anonymity audit over a quasi-identifier tuple — the privacy gate a

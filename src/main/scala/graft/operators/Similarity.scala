@@ -31,7 +31,7 @@ object Similarity {
 
   def norm(a: Column): Column = sqrt(dot(a, a))
 
-  def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
+  def cosine(a: Column, b: Column): Column = try_divide(dot(a, b), norm(a) * norm(b))
 
   /** Brute-force cosine top-k: queries × corpus. The corpus side streams;
     * the (small) query set is broadcast, so this is a map-side nested loop —
@@ -48,7 +48,7 @@ object Similarity {
       sqrt(dotFP(col("embedding"), col("embedding"))).as("norm_q"))
     val scored = c.join(broadcast(q), col("query_id") =!= col("vec_id"))
       .withColumn("cos",
-        detRound(dotFP(col("emb_q"), col("emb_c")) / (col("norm_q") * col("norm_c")), 4))
+        detRound(try_divide(dotFP(col("emb_q"), col("emb_c")), col("norm_q") * col("norm_c")), 4))
     val w = Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("vec_id"))
     scored.withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= k)
@@ -105,7 +105,7 @@ object Similarity {
     val scored = c.join(broadcast(q), Seq("bucket"))
       .filter(col("query_id") =!= col("vec_id"))
       .withColumn("cos",
-        detRound(dotFP(col("emb_q"), col("emb_c")) / (col("norm_q") * col("norm_c")), 4))
+        detRound(try_divide(dotFP(col("emb_q"), col("emb_c")), col("norm_q") * col("norm_c")), 4))
     val w = Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("vec_id"))
     scored.withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= k)
@@ -135,7 +135,7 @@ object Similarity {
       col("nrm").as("norm_b"))
     a.join(b, col("vec_id_a") < col("vec_id_b"))
       .withColumn("cos",
-        detRound(dotFP(col("emb_a"), col("emb_b")) / (col("norm_a") * col("norm_b")), 4))
+        detRound(try_divide(dotFP(col("emb_a"), col("emb_b")), col("norm_a") * col("norm_b")), 4))
       .filter(col("cos") >= threshold)
       .select(col("vec_id_a"), col("vec_id_b"), col("cos"))
   }
@@ -181,7 +181,7 @@ object Similarity {
     a.join(b, Seq("bucket"))
       .filter(col("vec_id_a") < col("vec_id_b"))
       .withColumn("cos",
-        detRound(dotFP(col("emb_a"), col("emb_b")) / (col("norm_a") * col("norm_b")), 4))
+        detRound(try_divide(dotFP(col("emb_a"), col("emb_b")), col("norm_a") * col("norm_b")), 4))
       .filter(col("cos") >= threshold)
       .select(col("vec_id_a"), col("vec_id_b"), col("cos"))
   }
@@ -245,8 +245,8 @@ object Similarity {
     // SORTED the whole product; with two atomic longs the argmax is a
     // HashAggregate (r9 scale probe: the sort was the IVF family's
     // super-linear term). |qcos| ≤ 10^4 by construction; an UNDEFINED
-    // cosine — zero-norm vector or centroid, where Spark's non-ANSI
-    // double division yields NULL (and a defensive NaN is possible from
+    // cosine — zero-norm vector or centroid, where `try_divide` yields
+    // NULL under any ANSI setting (and a defensive NaN is possible from
     // degenerate inputs) — maps to the −10001 sentinel so it sorts LAST:
     // that is DuckDB's NULLS LAST under the oracle mirrors' ORDER BY cos
     // DESC, and it means a zero-norm vector still gets a DETERMINISTIC
@@ -260,7 +260,7 @@ object Similarity {
         .otherwise(col("cell")))
     val best = vecs.join(broadcast(guardedCents))
       .withColumn("cent_cos",
-        detRound(dotFP(col("embedding"), col("emb_cent")) / (col("nrm") * col("norm_cent")), 4))
+        detRound(try_divide(dotFP(col("embedding"), col("emb_cent")), col("nrm") * col("norm_cent")), 4))
       .withColumn("__ord",
         coalesce(
           when(!isnan(col("cent_cos")), floor(col("cent_cos") * 1e4 + 0.5).cast("long")),
@@ -553,7 +553,7 @@ object Similarity {
     a.join(b, Seq("cell"))
       .filter(col("vid_a") =!= col("vid_b"))
       .withColumn("cos",
-        detRound(dotFP(col("emb_a"), col("emb_b")) / (col("norm_a") * col("norm_b")), 4))
+        detRound(try_divide(dotFP(col("emb_a"), col("emb_b")), col("norm_a") * col("norm_b")), 4))
       .withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= k)
       .select(col("vid_a").as("vec_id"), col("rank"),
@@ -709,7 +709,7 @@ object Similarity {
     val dups = a.join(b, Seq("cell"))
       .filter(col("vid_a") < col("vid_b"))
       .withColumn("cos",
-        detRound(dotFP(col("emb_a"), col("emb_b")) / (col("norm_a") * col("norm_b")), 4))
+        detRound(try_divide(dotFP(col("emb_a"), col("emb_b")), col("norm_a") * col("norm_b")), 4))
       .filter(col("cos") >= threshold)
       .select(col("vid_b").as("vec_id")).distinct()
       .withColumn("__dup", lit(true))
@@ -766,7 +766,7 @@ object Similarity {
         sqrt(dotFP(col("embedding"), col("embedding"))).as("norm_q"))
       .join(broadcast(cents))
       .withColumn("cent_cos",
-        detRound(dotFP(col("emb_q"), col("emb_cent")) / (col("norm_q") * col("norm_cent")), 4))
+        detRound(try_divide(dotFP(col("emb_q"), col("emb_cent")), col("norm_q") * col("norm_cent")), 4))
       .withColumn("rn", row_number().over(probeW))
       .filter(col("rn") <= nprobe)
       .select(col("query_id"), col("emb_q"), col("norm_q"), col("cent_id").as("cell"))
@@ -774,7 +774,7 @@ object Similarity {
     val scored = cells.join(broadcast(probes), Seq("cell"))
       .filter(col("query_id") =!= col("vec_id"))
       .withColumn("cos",
-        detRound(dotFP(col("emb_q"), col("emb_c")) / (col("norm_q") * col("norm_c")), 4))
+        detRound(try_divide(dotFP(col("emb_q"), col("emb_c")), col("norm_q") * col("norm_c")), 4))
     val w = Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("vec_id"))
     scored.withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= k)
@@ -845,7 +845,7 @@ object Similarity {
         sqrt(dotFP(col("embedding"), col("embedding"))).as("norm_q"))
       .join(broadcast(cents))
       .withColumn("cent_cos",
-        detRound(dotFP(col("emb_q"), col("emb_cent")) / (col("norm_q") * col("norm_cent")), 4))
+        detRound(try_divide(dotFP(col("emb_q"), col("emb_cent")), col("norm_q") * col("norm_cent")), 4))
       .withColumn("rn", row_number().over(probeW))
       .filter(col("rn") <= nprobe)
       .select(col("query_id"), col("cent_id").as("cell"))
@@ -1002,7 +1002,7 @@ object Similarity {
         sqrt(dotFP(col("embedding"), col("embedding"))).as("norm_q"))
       .join(broadcast(cents))
       .withColumn("cent_cos",
-        detRound(dotFP(col("emb_q"), col("emb_cent")) / (col("norm_q") * col("norm_cent")), 4))
+        detRound(try_divide(dotFP(col("emb_q"), col("emb_cent")), col("norm_q") * col("norm_cent")), 4))
       .withColumn("rn", row_number().over(probeW))
       .filter(col("rn") <= nprobe)
       .select(col("query_id"), col("cent_id").as("cell"))

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.functions.GraftFunctions.{detRound, stableSumScaled}
+import graft.functions.GraftFunctions.{detRound, stableSumScaled, truncUtc}
 
 /** Probabilistic sketches for corpus statistics at 100 TB — the class of
   * operator where an exact answer needs a vocabulary-sized shuffle but a
@@ -102,8 +102,8 @@ object Sketches {
     */
   def hllMergedDaily(df: DataFrame, ts: Column, item: Column): DataFrame = {
     // same dedup-first shape as hllDistinct, at (day, hour, item) grain
-    val uniq = df.select(date_trunc("day", ts).as("day"),
-      date_trunc("hour", ts).as("hour"), item.as("it"))
+    val uniq = df.select(truncUtc("day", ts).as("day"),
+      truncUtc("hour", ts).as("hour"), item.as("it"))
       .filter(col("it").isNotNull).distinct() // null-is-not-an-item, as hllDistinct
     val rows = withBucketRho(uniq.withColumn("h", Dedup.hash60(col("it"))))
     val hourly = rows.groupBy(col("day"), col("hour"), col("bucket"))
@@ -128,7 +128,7 @@ object Sketches {
     */
   def hllSlidingDistinct(df: DataFrame, ts: Column, item: Column,
                          windowHours: Int = 24): DataFrame = {
-    val uniq = df.select(date_trunc("hour", ts).as("hour"), item.as("it"))
+    val uniq = df.select(truncUtc("hour", ts).as("hour"), item.as("it"))
       .filter(col("it").isNotNull).distinct() // null-is-not-an-item, as hllDistinct
     val rows = withBucketRho(uniq.withColumn("h", Dedup.hash60(col("it"))))
     val hourly = rows.groupBy(col("hour"), col("bucket")).agg(max(col("rho")).as("m"))

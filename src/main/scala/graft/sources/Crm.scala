@@ -3,11 +3,12 @@ package graft.sources
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.schema.MessageType
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, LongType, StructType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{DataType, StructType, TimestampNTZType, TimestampType}
 
 /** CRM-shaped input tables derived deterministically from the driver's
   * TPC-H-ish testdata (FIXTURES.md §C role mapping). The engine's operators
@@ -26,7 +27,9 @@ object Crm {
     * tables plus the events, documents and embeddings corpora. A parquet
     * read takes its schema from here instead of inferring it, since
     * inference runs a one-task Spark job per read; the stream readers
-    * declare their sources from here too. */
+    * declare their sources from here too. `events.ts` is declared a
+    * TIMESTAMP, an instant: the files store it as naive TIMESTAMP(MICROS),
+    * which reads as the instant of the same micros in UTC ([[readsAs]]). */
   val schemas: Map[String, StructType] = Map(
     "region" -> "r_regionkey INT, r_name STRING",
     "nation" -> "n_nationkey INT, n_name STRING, n_regionkey INT",
@@ -40,26 +43,27 @@ object Crm {
     "lineitem" -> ("l_orderkey BIGINT, l_partkey BIGINT, l_suppkey BIGINT, l_linenumber INT, " +
       "l_quantity DOUBLE, l_extendedprice DOUBLE, l_discount DOUBLE, l_tax DOUBLE, " +
       "l_returnflag STRING, l_linestatus STRING, l_shipdate TIMESTAMP_NTZ"),
-    "events" -> ("event_id BIGINT, ts TIMESTAMP_NTZ, user_id BIGINT, event_type STRING, " +
+    "events" -> ("event_id BIGINT, ts TIMESTAMP, user_id BIGINT, event_type STRING, " +
       "value DOUBLE, props STRING"),
     "documents" -> "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT",
     "embeddings" -> "vec_id BIGINT, embedding ARRAY<FLOAT>, label INT"
   ).map { case (t, ddl) => t -> StructType.fromDDL(ddl) }
 
-  /** `events.ts` is stored as TIMESTAMP(NANOS) by older testdata
-    * generations (LONG under `nanosAsLong`) and as naive TIMESTAMP(MICROS)
-    * by the current one; the reader takes its type from the footer, and
-    * [[graft.operators.Events.coerceEventTs]] maps each to the same UTC
-    * instant. */
-  private val FooterTyped: Map[(String, String), Set[DataType]] =
-    Map(("events", "ts") -> Set(TimestampNTZType, TimestampType, LongType))
+  /** Whether a footer column of type `stored` reads as the declared type:
+    * the same SQL type (names compare without nullability, as inference
+    * does), or a TIMESTAMP_NTZ under a declared TIMESTAMP. Spark reads the
+    * naive micros of the latter as the same instant in UTC, without the
+    * session's time zone, which is how `events.ts` is stored. */
+  private def readsAs(stored: DataType, declared: DataType): Boolean =
+    stored.sql == declared.sql || (stored == TimestampNTZType && declared == TimestampType)
 
   /** The declared schema of stored table `name` in the parquet directory
     * `dir`, checked against the footer of its first data file, which is
     * read here, without a Spark job. With a declared schema Spark reads a
     * column missing from the file as NULL without a word, so a declared
-    * column the file lacks, or holds with another type, fails here naming
-    * the table and the column. */
+    * column the file lacks, holds with another type, or holds in a type
+    * Spark cannot read (TIMESTAMP(NANOS)), fails here naming the table and
+    * the column. */
   def storedSchema(spark: SparkSession, dir: String, name: String): StructType = {
     val declared = schemas.getOrElse(name,
       throw new IllegalArgumentException(s"'$name' is not a stored table"))
@@ -75,19 +79,21 @@ object Crm {
         .sortBy(_.getPath.getName).headOption.getOrElse(
           throw new IllegalArgumentException(s"stored table '$name': no data file in $path"))
     val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(file, conf))
-    val found =
-      try new ParquetToSparkSchemaConverter(spark.sessionState.conf)
-        .convert(reader.getFooter.getFileMetaData.getSchema)
-      finally reader.close()
-    StructType(declared.map { f =>
-      val got = found.find(_.name == f.name).getOrElse(throw new IllegalArgumentException(
-        s"stored table '$name' (${file.getPath}): column '${f.name}' is missing"))
-      // SQL type names compare without nullability, as inference does
-      FooterTyped.getOrElse((name, f.name), Set(f.dataType)).find(_.sql == got.dataType.sql)
-        .map(t => f.copy(dataType = t)).getOrElse(throw new IllegalArgumentException(
-          s"stored table '$name' (${file.getPath}): " +
-            s"column '${f.name}' is ${got.dataType.sql}, declared ${f.dataType.sql}"))
-    })
+    val footer = try reader.getFooter.getFileMetaData.getSchema finally reader.close()
+    val converter = new ParquetToSparkSchemaConverter(spark.sessionState.conf)
+    def fail(msg: String) = throw new IllegalArgumentException(
+      s"stored table '$name' (${file.getPath}): $msg")
+    declared.foreach { f =>
+      if (!footer.containsField(f.name)) fail(s"column '${f.name}' is missing")
+      val field = footer.getType(footer.getFieldIndex(f.name))
+      // one column at a time: a type Spark cannot read, such as
+      // TIMESTAMP(NANOS), fails the whole footer's conversion unnamed
+      val got = try converter.convert(new MessageType(footer.getName, field)).head.dataType
+        catch { case e: Exception => fail(s"column '${f.name}' is $field: ${e.getMessage}") }
+      if (!readsAs(got, f.dataType))
+        fail(s"column '${f.name}' is ${got.sql}, declared ${f.dataType.sql}")
+    }
+    declared
   }
 
   /** Raw-table access — the only way the program reads a stored input

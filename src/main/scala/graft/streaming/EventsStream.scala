@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
-import org.apache.spark.sql.types._
+import graft.functions.GraftFunctions.truncUtc
 import graft.sources.Crm
 
 /** Row type of [[EventsStream.audioWindowsStream]] — field names/order
@@ -22,44 +22,20 @@ private[streaming] case class AudioWindowRow(
   */
 object EventsStream {
 
-  /** Event rows as [[graft.operators.Events.coerceEventTs]] leaves them:
-    * the stored events schema with `ts` a UTC instant. */
-  val eventsSchema: StructType = StructType(Crm.schemas("events").map {
-    case f if f.name == "ts" => f.copy(dataType = TimestampType)
-    case f => f
-  })
-
   def readEventsStream(spark: SparkSession, dir: String): DataFrame =
-    spark.readStream.schema(eventsSchema)
+    spark.readStream.schema(Crm.schemas("events"))
       .option("maxFilesPerTrigger", "1")
       .parquet(s"$dir")
 
-  /** Stream the stored events table under `dir`, whose `ts` physical type
-    * differs across testdata generations — TIMESTAMP(NANOS) (pre-r8; Spark
-    * 4 refuses it natively) vs TIMESTAMP(MICROS, naive) (current). A stream
-    * source needs an explicit schema: take it from the stored table's
-    * footer ([[Crm.storedSchema]]), then coerce to the same UTC-instant
-    * micros the batch reader (QueryShared.events) and the oracle engine
-    * produce. No maxFilesPerTrigger: one AvailableNow batch, so nothing is
-    * ever behind the watermark and the result equals the batch aggregate.
+  /** Stream the stored events table under `dir`, declared and
+    * footer-checked by [[Crm.storedSchema]] (`ts` reads as the UTC
+    * instant the batch reader and the oracle engine see). No
+    * maxFilesPerTrigger: one AvailableNow batch, so nothing is ever behind
+    * the watermark and the result equals the batch aggregate.
     */
-  def readEventsStreamNanos(spark: SparkSession, dir: String): DataFrame = {
-    // SESSION-WIDE side effect (r2 advice): every later parquet read of a
-    // TIMESTAMP(NANOS) column in this session sees it as LongType too. That
-    // is intentional here — the batch reader (QueryShared.events) applies the
-    // same flag + div-1000 coercion, so both paths agree — but a caller
-    // mixing nanos and native-timestamp parquet in one session must unset it.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // UTC pin: the NTZ branch's cast interprets wall time in the session
-    // zone; only UTC makes the instant equal the file's naive micros.
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    val schema = Crm.storedSchema(spark, dir, "events")
+  def readStoredEventsStream(spark: SparkSession, dir: String): DataFrame =
     // glob: FileStreamSource requires a directory base path
-    val raw = spark.readStream.schema(schema).parquet(s"$dir/events*")
-    // Shared coercion rule with the batch reader (r8 advice: the duplicated
-    // probe-and-coerce logic could drift between batch and streaming).
-    graft.operators.Events.coerceEventTs(raw, schema("ts").dataType)
-  }
+    spark.readStream.schema(Crm.storedSchema(spark, dir, "events")).parquet(s"$dir/events*")
 
   /** Tumbling 1-hour event-time windows with a 2-hour watermark — the
     * streaming form of Events.hourly. Late rows beyond the watermark are
@@ -104,7 +80,7 @@ object EventsStream {
   def streamingDedupWithinWatermark(events: DataFrame): DataFrame =
     events.withWatermark("ts", "2 hours")
       .select(col("user_id"), col("event_type"),
-        date_trunc("minute", col("ts")).as("minuto"), col("ts"))
+        truncUtc("minute", col("ts")).as("minuto"), col("ts"))
       .dropDuplicatesWithinWatermark("user_id", "event_type", "minuto")
       .select(col("user_id"), col("event_type"), col("minuto"))
 
@@ -409,9 +385,7 @@ object EventsStream {
     * SparkContext but has its own SQL conf): batch queries planned
     * concurrently on the caller's session keep their own setting, and
     * concurrent `runToCompletion` calls cannot race on a shared
-    * save/restore (r3 advice). This also keeps side-effecting source flags
-    * (e.g. `nanosAsLong` from [[readEventsStreamNanos]]) out of the
-    * caller's session. The `build` callback must construct the whole
+    * save/restore (r3 advice). The `build` callback must construct the whole
     * stream from the session it is given.
     */
   /** State-store width DERIVED from the stream's bounded input bytes —

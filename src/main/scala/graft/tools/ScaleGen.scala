@@ -1,7 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Cast
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.TimestampNTZType
 import graft.sources.Crm
 
 /** One-off sf0.1 → ~sf1 scale-up generator for the measured scale probe
@@ -43,7 +45,6 @@ object ScaleGen {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -119,8 +120,12 @@ object ScaleGen {
     // scale-up). Coalesced to ~10 part files so streaming consumers
     // (maxFilesPerTrigger=1) see a bounded micro-batch count: the probe
     // measures data scaling, not file-layout-dependent per-batch tax.
+    // `ts` reads as an instant; it is written back as the naive UTC wall
+    // clock it is stored as (a cast pinned to UTC, not the session zone).
+    val storedTs = GraftColumnBridge.column(
+      Cast(GraftColumnBridge.expression(col("ts")), TimestampNTZType, Some("UTC")))
     write("events",
-      shiftKeys(read("events"), "event_id", "user_id"), nParts = 10)
+      shiftKeys(read("events"), "event_id", "user_id").withColumn("ts", storedTs), nParts = 10)
     spark.stop()
   }
 }

@@ -46,6 +46,16 @@ class KnobGuardSpec extends AnyFunSuite {
     assert(unused.isEmpty, s"listed knob(s) no longer read by src/main/scala; drop them here: ${unused.toSeq.sorted}")
   }
 
+  test("no src/main/scala file sets ANSI, the session time zone or nanosAsLong") {
+    // entries carry their own date, overflow and zone semantics; a conf set
+    // here would rewrite the caller's session
+    val contract = """spark\.sql\.ansi\.enabled|spark\.sql\.session\.timeZone|nanosAsLong""".r
+    val found = mainSources.flatMap { p =>
+      contract.findAllIn(new String(Files.readAllBytes(p), "UTF-8")).map(m => s"$p: $m").toSeq
+    }
+    assert(found.isEmpty, s"session-contract confs named in src/main/scala: $found")
+  }
+
   test("build.sbt and run_graft.sh read exactly the listed environment names") {
     def read(f: String) = new String(Files.readAllBytes(Paths.get(f)), "UTF-8")
     val sbtEnv = """sys\.env(?:\.get|\.getOrElse)?\(\s*"([A-Za-z0-9_]+)"""".r

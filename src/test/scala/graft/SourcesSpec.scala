@@ -212,8 +212,14 @@ class SourcesSpec extends SparkSpec {
       if Files.exists(java.nio.file.Paths.get(s"$dir/$t.parquet"))
     } yield {
       val inferred = spark.read.parquet(s"$dir/$t.parquet").schema
-      assert(Crm.schemas(t) === inferred, s"$dir/$t")
-      assert(Crm.table(spark, dir, t).schema === inferred, s"$dir/$t")
+      // the one declared difference: events.ts, stored as naive micros,
+      // is declared the instant they read as
+      val expected = if (t != "events") inferred else StructType(inferred.map {
+        case f if f.name == "ts" && f.dataType == TimestampNTZType => f.copy(dataType = TimestampType)
+        case f => f
+      })
+      assert(Crm.schemas(t) === expected, s"$dir/$t")
+      assert(Crm.table(spark, dir, t).schema === expected, s"$dir/$t")
       t
     }
     assert(checked.toSet === Crm.schemas.keySet, "every declared table is checked somewhere")

@@ -53,8 +53,8 @@ def norm_sql(col, typ):
     q = '"' + col.replace('"', '""') + '"'
     if "[]" in t or "STRUCT" in t or "MAP" in t or "LIST" in t:
         # nested cells (never in driver-compared outputs — the driver's
-        # pandas comparator crashes on arrays by design — but staged_oracle
-        # bighashes INTERMEDIATE stage files that do carry vector columns)
+        # pandas comparator crashes on arrays by design — but a bighash of
+        # an intermediate file may carry vector columns)
         e = f"CAST({q} AS VARCHAR)"
     elif "DOUBLE" in t or "FLOAT" in t or t == "REAL":
         e = f"printf('%.10g', {q})"

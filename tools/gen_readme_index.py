@@ -32,7 +32,7 @@ END = "<!-- OPERATOR-INDEX-END -->"
 # harness plumbing, not entry points
 CALL_BLOCKLIST = {
     "EventsStream.runToCompletion", "EventsStream.documentsSchema",
-    "EventsStream.eventsSchema", "EventsStream.readEventsStreamNanos",
+    "EventsStream.readStoredEventsStream",
     "OutputMode.Append", "OutputMode.Complete", "OutputMode.Update",
 }
 
