@@ -6,5 +6,5 @@ for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio 
   ADDOPENS="$ADDOPENS --add-opens=java.base/$p=ALL-UNNAMED"
 done
 exec java $ADDOPENS -Xmx${SPARK_DRIVER_MEM:-12g} \
-  -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
+  -Dspark.ui.enabled=false \
   -cp "/root/repo/target/scala-2.13/classes:/opt/spark/jars/*" "$MAIN" "$@"

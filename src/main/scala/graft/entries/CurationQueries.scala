@@ -20,11 +20,10 @@ private[graft] object CurationQueries extends QueryFamily {
         "doc_id", "text", flagThreshold = 0.5)
         .orderBy(col("doc_id"))
     }),
-    "q_repetition" -> ((s, dir) => {
+    "q_repetition" -> ((s, dir) =>
       operators.TextAnalysis.repetitionScore(
         Crm.table(s, dir, "documents"), "doc_id", "text")
-        .orderBy(col("doc_id"))
-    }),
+        .orderBy(col("doc_id"))),
     "q_pii_redact" -> ((s, dir) => {
       // The corpus text is digit-free, so PII shapes are synthesized from
       // customer fields — the REDACTION itself (regex masking + audit
@@ -39,12 +38,11 @@ private[graft] object CurationQueries extends QueryFamily {
     }),
     // Domain rebalancing: per-language deterministic sampling fractions
     // (drop zh/fr entirely, thin en, keep most of de).
-    "q_sample_stratified" -> ((s, dir) => {
+    "q_sample_stratified" -> ((s, dir) =>
       operators.Sampling.stratifiedSample(
         Crm.table(s, dir, "documents"),
         col("doc_id"), col("lang"), Map("en" -> 0.3, "es" -> 0.7, "de" -> 0.9))
-        .select(col("doc_id"), col("lang")).orderBy(col("doc_id"))
-    }),
+        .select(col("doc_id"), col("lang")).orderBy(col("doc_id"))),
     "q_length_hist" -> ((s, dir) => {
       Crm.table(s, dir, "documents")
         .groupBy((floor(col("n_chars") / 100) * 100).cast("long").as("bucket_lo"))

@@ -11,27 +11,23 @@ import QueryShared._
 private[graft] object DedupQueries extends QueryFamily {
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ---- §7.5 extensions: dedup -------------------------------------------
-    "q_dedup_exact" -> ((s, dir) => {
+    "q_dedup_exact" -> ((s, dir) =>
       operators.Dedup.exactDedup(
         Crm.table(s, dir, "documents"), col("text"), col("doc_id"))
-        .orderBy(col("doc_id"))
-    }),
-    "q_dedup_jaccard" -> ((s, dir) => {
+        .orderBy(col("doc_id"))),
+    "q_dedup_jaccard" -> ((s, dir) =>
       operators.Dedup.jaccardPairs(
         Crm.table(s, dir, "documents"), "doc_id", "text", "lang", 0.6)
-        .orderBy(col("doc_id_a"), col("doc_id_b"))
-    }),
-    "q_dedup_minhash" -> ((s, dir) => {
-      lshPairs(s, dir).orderBy(col("doc_id_a"), col("doc_id_b"))
-    }),
+        .orderBy(col("doc_id_a"), col("doc_id_b"))),
+    "q_dedup_minhash" -> ((s, dir) =>
+      lshPairs(s, dir).orderBy(col("doc_id_a"), col("doc_id_b"))),
     // Incremental LSH: dedup the doc_id%4==0 "delta" against itself + the
     // base without base×base pair formation (the nightly-feed shape).
-    "q_dedup_incr" -> ((s, dir) => {
+    "q_dedup_incr" -> ((s, dir) =>
       operators.Dedup.minhashLshPairsIncremental(
         Crm.table(s, dir, "documents"), "doc_id", "text",
         col("doc_id") % 4 === 0)
-        .orderBy(col("doc_id_a"), col("doc_id_b"))
-    }),
+        .orderBy(col("doc_id_a"), col("doc_id_b"))),
     // The persisted-signature lifecycle: base signatures built ONCE to a
     // parquet artifact, then the same delta deduped against it without
     // re-reading base text — must emit exactly q_dedup_incr's rows (same
@@ -52,24 +48,21 @@ private[graft] object DedupQueries extends QueryFamily {
     // against the artifact, folds itself in, and atomically updates + checks
     // the provenance manifest. The accumulated pair set is invariant to the
     // batch split, so the bounded run shares q_dedup_artifact's oracle.
-    "q_stream_artifact_refresh" -> ((s, dir) => {
+    "q_stream_artifact_refresh" -> ((s, dir) =>
       streaming.ArtifactRefresh.gatedRefresh(s, dir)
-        .orderBy(col("doc_id_a"), col("doc_id_b"))
-    }),
+        .orderBy(col("doc_id_a"), col("doc_id_b"))),
     // TWO refresh runs (separate checkpoints — batch ids restart at 0, the
     // run-identity guard) with the nightly artifact COMPACTION between them
     // (r16): merging replay-dead keyed files and pruning dead markers must
     // be invisible to the pair set, which equals the one-shot incremental
     // path over the union delta.
-    "q_stream_refresh_compacted" -> ((s, dir) => {
+    "q_stream_refresh_compacted" -> ((s, dir) =>
       streaming.ArtifactRefresh.gatedCompactedRefresh(s, dir)
-        .orderBy(col("doc_id_a"), col("doc_id_b"))
-    }),
-    "q_dedup_simhash" -> ((s, dir) => {
+        .orderBy(col("doc_id_a"), col("doc_id_b"))),
+    "q_dedup_simhash" -> ((s, dir) =>
       operators.Dedup.simhashPairs(
         Crm.table(s, dir, "documents"), "doc_id", "text", maxHamming = 3)
-        .orderBy(col("doc_id_a"), col("doc_id_b"))
-    }),
+        .orderBy(col("doc_id_a"), col("doc_id_b"))),
     // Cluster/canonical assignment: pairwise near-dup output → per-document
     // keep/drop decision (cluster_id = min reachable doc id; the keeper is
     // the row with doc_id == cluster_id). Edges come from the minhash-LSH

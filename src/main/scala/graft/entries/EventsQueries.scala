@@ -11,22 +11,18 @@ import QueryShared._
 private[graft] object EventsQueries extends QueryFamily {
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ---- §7.5 extensions: event-time analytics ----------------------------
-    "q_events_hourly" -> ((s, dir) => {
+    "q_events_hourly" -> ((s, dir) =>
       operators.Events.hourly(Crm.table(s, dir, "events"))
-        .orderBy(col("hora"), col("event_type"))
-    }),
-    "q_events_sessions" -> ((s, dir) => {
+        .orderBy(col("hora"), col("event_type"))),
+    "q_events_sessions" -> ((s, dir) =>
       operators.Events.userSessionStats(Crm.table(s, dir, "events"))
-        .orderBy(col("user_id"))
-    }),
-    "q_events_top_types" -> ((s, dir) => {
+        .orderBy(col("user_id"))),
+    "q_events_top_types" -> ((s, dir) =>
       operators.Events.topTypesPerHour(Crm.table(s, dir, "events"))
-        .orderBy(col("hora"), col("rank"))
-    }),
-    "q_events_funnel" -> ((s, dir) => {
+        .orderBy(col("hora"), col("rank"))),
+    "q_events_funnel" -> ((s, dir) =>
       operators.Events.funnel(Crm.table(s, dir, "events"), Seq("view", "click", "purchase"))
-        .orderBy(col("stage"))
-    }),
+        .orderBy(col("stage"))),
     "q_stream_hourly" -> ((s, dir) => {
       streaming.EventsStream.runToCompletion(s, "q_stream_hourly_sink") { ss =>
         streaming.EventsStream.hourlyCounts(

@@ -11,49 +11,39 @@ import QueryShared._
 private[graft] object OlapQueries extends QueryFamily {
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ---- OLAP coverage: rollup/pivot/windows/percentiles/set-ops/Q3/asof --
-    "q_rollup" -> ((s, dir) => {
+    "q_rollup" -> ((s, dir) =>
       operators.Olap.rollupQuantities(Crm.table(s, dir, "lineitem"))
-        .orderBy(col("l_returnflag").asc_nulls_first, col("l_linestatus").asc_nulls_first)
-    }),
-    "q_pivot" -> ((s, dir) => {
-      operators.Olap.pivotEventCounts(Crm.table(s, dir, "events"), EventTypes).orderBy(col("hora"))
-    }),
-    "q_window_running" -> ((s, dir) => {
+        .orderBy(col("l_returnflag").asc_nulls_first, col("l_linestatus").asc_nulls_first)),
+    "q_pivot" -> ((s, dir) =>
+      operators.Olap.pivotEventCounts(Crm.table(s, dir, "events"), EventTypes).orderBy(col("hora"))),
+    "q_window_running" -> ((s, dir) =>
       operators.Olap.runningTotals(Crm.table(s, dir, "orders"))
-        .orderBy(col("o_custkey"), col("order_seq"))
-    }),
-    "q_percentile" -> ((s, dir) => {
-      operators.Olap.pricePercentiles(Crm.table(s, dir, "lineitem")).orderBy(col("l_returnflag"))
-    }),
-    "q_set_ops" -> ((s, dir) => {
+        .orderBy(col("o_custkey"), col("order_seq"))),
+    "q_percentile" -> ((s, dir) =>
+      operators.Olap.pricePercentiles(Crm.table(s, dir, "lineitem")).orderBy(col("l_returnflag"))),
+    "q_set_ops" -> ((s, dir) =>
       operators.Olap.customerYearSetOps(Crm.table(s, dir, "orders"), 1996, 1997)
-        .orderBy(col("tag"), col("o_custkey"))
-    }),
-    "q_set_ops_all" -> ((s, dir) => {
+        .orderBy(col("tag"), col("o_custkey"))),
+    "q_set_ops_all" -> ((s, dir) =>
       operators.Olap.customerYearSetOpsAll(Crm.table(s, dir, "orders"), 1996, 1997)
-        .orderBy(col("tag"), col("o_custkey"))
-    }),
-    "q_gapfill" -> ((s, dir) => {
+        .orderBy(col("tag"), col("o_custkey"))),
+    "q_gapfill" -> ((s, dir) =>
       operators.Olap.hourlyGapFill(Crm.table(s, dir, "events"))
-        .orderBy(col("hora"), col("event_type"))
-    }),
-    "q_olap_pricing" -> ((s, dir) => {
+        .orderBy(col("hora"), col("event_type"))),
+    "q_olap_pricing" -> ((s, dir) =>
       operators.Olap.pricingSummary(Crm.table(s, dir, "customer"), Crm.table(s, dir, "orders"), Crm.table(s, dir, "lineitem"),
-        segment = "BUILDING", cutoff = "1998-01-01", k = 10)
-    }),
-    "q_asof_join" -> ((s, dir) => {
+        segment = "BUILDING", cutoff = "1998-01-01", k = 10)),
+    "q_asof_join" -> ((s, dir) =>
       operators.Olap.asofPriorEvent(Crm.table(s, dir, "events"), "view", "click")
-        .orderBy(col("event_id"))
-    }),
-    "q_json_extract" -> ((s, dir) => {
+        .orderBy(col("event_id"))),
+    "q_json_extract" -> ((s, dir) =>
       // semi-structured props column: JSON field extraction + aggregation
       Crm.table(s, dir, "events")
         .withColumn("k", get_json_object(col("props"), "$.k").cast("long"))
         .groupBy(col("event_type"))
         .agg(count(col("k")).as("n_with_k"), sum(col("k")).as("sum_k"),
           min(col("k")).as("min_k"), max(col("k")).as("max_k"))
-        .orderBy(col("event_type"))
-    }),
+        .orderBy(col("event_type"))),
     "q_window_ntile" -> ((s, dir) => {
       // Scale-safe global ntile (r2 verdict #2): a bare Window.orderBy would
       // pull the whole table through one WindowExec task. Instead: dense

@@ -31,32 +31,27 @@ private[graft] object ParityQueries extends QueryFamily {
           |FROM $v ORDER BY id_localidade""".stripMargin)
     }),
     // ---- P-series: scan/project/filter/distinct --------------------------
-    "q_scan_project" -> ((s, dir) => {
+    "q_scan_project" -> ((s, dir) =>
       Crm.table(s, dir, "customer").filter(col("c_acctbal") > 1000.0)
         .select(col("c_custkey"), col("c_name"), col("c_mktsegment"))
-        .orderBy(col("c_custkey"))
-    }),
-    "q_distinct" -> ((s, dir) => {
-      Crm.table(s, dir, "customer").select(col("c_mktsegment")).distinct().orderBy(col("c_mktsegment"))
-    }),
+        .orderBy(col("c_custkey"))),
+    "q_distinct" -> ((s, dir) =>
+      Crm.table(s, dir, "customer").select(col("c_mktsegment")).distinct().orderBy(col("c_mktsegment"))),
     // ---- J-series: joins ---------------------------------------------------
-    "q_join_inner" -> ((s, dir) => {
+    "q_join_inner" -> ((s, dir) =>
       Crm.table(s, dir, "orders").join(Crm.table(s, dir, "lineitem"), col("o_orderkey") === col("l_orderkey"), "inner")
         .groupBy(col("o_orderkey"))
         .agg(count(lit(1)).as("n_items"),
           graft.functions.GraftFunctions.detRound(
             graft.functions.GraftFunctions.stableSumScaled(
               col("l_extendedprice") * (lit(1) - col("l_discount")), 4), 2).as("revenue"))
-        .orderBy(col("o_orderkey"))
-    }),
-    "q_anti_join" -> ((s, dir) => {
+        .orderBy(col("o_orderkey"))),
+    "q_anti_join" -> ((s, dir) =>
       Crm.table(s, dir, "customer").join(Crm.table(s, dir, "orders"), col("c_custkey") === col("o_custkey"), "left_anti")
-        .select(col("c_custkey"), col("c_name")).orderBy(col("c_custkey"))
-    }),
-    "q_semi_join" -> ((s, dir) => {
+        .select(col("c_custkey"), col("c_name")).orderBy(col("c_custkey"))),
+    "q_semi_join" -> ((s, dir) =>
       Crm.table(s, dir, "customer").join(Crm.table(s, dir, "orders"), col("c_custkey") === col("o_custkey"), "left_semi")
-        .select(col("c_custkey"), col("c_name")).orderBy(col("c_custkey"))
-    }),
+        .select(col("c_custkey"), col("c_name")).orderBy(col("c_custkey"))),
     "q_decorrelated_avg" -> ((s, dir) => {
       val avgPrice = Crm.table(s, dir, "lineitem").groupBy(col("l_partkey"))
         .agg(graft.functions.GraftFunctions.stableAvg2(col("l_extendedprice")).as("__avg"))
@@ -67,38 +62,33 @@ private[graft] object ParityQueries extends QueryFamily {
         .orderBy(col("p_partkey"))
     }),
     // ---- sort/limit/window -------------------------------------------------
-    "q_topk" -> ((s, dir) => {
+    "q_topk" -> ((s, dir) =>
       Crm.table(s, dir, "orders").select(col("o_orderkey"), col("o_totalprice"))
-        .orderBy(col("o_totalprice").desc, col("o_orderkey")).limit(10)
-    }),
-    "q_window_rownum" -> ((s, dir) => {
+        .orderBy(col("o_totalprice").desc, col("o_orderkey")).limit(10)),
+    "q_window_rownum" -> ((s, dir) =>
       Crm.table(s, dir, "customer")
         .withColumn("rn", row_number()
           .over(Window.partitionBy(col("c_mktsegment")).orderBy(col("c_custkey"))).cast("long"))
         .filter(col("rn") <= 3)
         .select(col("c_mktsegment"), col("rn"), col("c_custkey"))
-        .orderBy(col("c_mktsegment"), col("rn"))
-    }),
-    "q_surrogate_key" -> ((s, dir) => {
+        .orderBy(col("c_mktsegment"), col("rn"))),
+    "q_surrogate_key" -> ((s, dir) =>
       Surrogate.withSurrogateKey(Crm.table(s, dir, "nation").select(col("n_nationkey"), col("n_name")),
-        "sk", Seq(col("n_nationkey"))).orderBy(col("n_nationkey"))
-    }),
-    "q_surrogate_scalable" -> ((s, dir) => {
+        "sk", Seq(col("n_nationkey"))).orderBy(col("n_nationkey"))),
+    "q_surrogate_scalable" -> ((s, dir) =>
       // §7.3 scale path: dense 1..N in total key order with NO
       // single-partition window (two-pass partition-offset row_number).
       Surrogate.zipWithIndexOrdered(
         Crm.table(s, dir, "orders").select(col("o_orderkey"), col("o_custkey")),
         "sk", Seq(col("o_orderkey")))
-        .orderBy(col("o_orderkey"))
-    }),
-    "q_first_match" -> ((s, dir) => {
+        .orderBy(col("o_orderkey"))),
+    "q_first_match" -> ((s, dir) =>
       // (l_orderkey, l_linenumber) is NOT unique in the testdata, so the
       // tiebreak includes l_partkey to stay deterministic.
       Surrogate.firstMatch(
         Crm.table(s, dir, "lineitem").select(col("l_orderkey"), col("l_linenumber"), col("l_partkey")),
         Seq(col("l_orderkey")), Seq(col("l_linenumber"), col("l_partkey")))
-        .orderBy(col("l_orderkey"))
-    }),
+        .orderBy(col("l_orderkey"))),
     "q_join_full_outer" -> ((s, dir) => {
       val cu = Crm.table(s, dir, "customer").groupBy(col("c_nationkey").as("nk_c"))
         .agg(count(lit(1)).as("n_customers"))
@@ -110,11 +100,10 @@ private[graft] object ParityQueries extends QueryFamily {
           coalesce(col("n_suppliers"), lit(0L)).as("n_suppliers"))
         .orderBy(col("nationkey"))
     }),
-    "q_cube" -> ((s, dir) => {
+    "q_cube" -> ((s, dir) =>
       Crm.table(s, dir, "lineitem").cube(col("l_returnflag"), col("l_linestatus"))
         .agg(count(lit(1)).as("n_rows"))
-        .orderBy(col("l_returnflag").asc_nulls_first, col("l_linestatus").asc_nulls_first)
-    }),
+        .orderBy(col("l_returnflag").asc_nulls_first, col("l_linestatus").asc_nulls_first)),
     "q_array_agg" -> ((s, dir) => {
       // Array outputs are serialized to a CSV string: the driver's pandas
       // comparator cannot sort array-typed cells (r2 verdict), and "1,5,9"

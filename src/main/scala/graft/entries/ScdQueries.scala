@@ -11,13 +11,12 @@ import QueryShared._
 private[graft] object ScdQueries extends QueryFamily {
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ---- DW temporal versioning (SCD Type 2) ------------------------------
-    "q_scd2" -> ((s, dir) => {
+    "q_scd2" -> ((s, dir) =>
       operators.Scd.scd2(Crm.table(s, dir, "orders"),
         col("o_custkey"), col("o_orderdate"), col("o_orderpriority"))
         .select(col("key").as("o_custkey"), col("version"), col("attr").as("priority"),
           col("valid_from"), col("valid_to"), col("is_current"))
-        .orderBy(col("o_custkey"), col("version"))
-    }),
+        .orderBy(col("o_custkey"), col("version"))),
     // Point-in-time (temporal) lookup against the SCD2 dimension: every
     // probe lands in exactly one [valid_from, valid_to) interval.
     "q_scd2_lookup" -> ((s, dir) => {

@@ -36,17 +36,15 @@ private[graft] object SimilarityQueries extends QueryFamily {
         .orderBy(col("query_id"), col("rank"))
     }),
     // Join-fanout audit for orders⋈lineitem, without running the join.
-    "q_join_fanout" -> ((s, dir) => {
+    "q_join_fanout" -> ((s, dir) =>
       operators.Skew.joinFanoutAudit(
-        Crm.table(s, dir, "orders"), col("o_orderkey"), Crm.table(s, dir, "lineitem"), col("l_orderkey"))
-    }),
+        Crm.table(s, dir, "orders"), col("o_orderkey"), Crm.table(s, dir, "lineitem"), col("l_orderkey"))),
     // Per-source integrity manifest: counts, order-free checksum, key range.
-    "q_manifest" -> ((s, dir) => {
+    "q_manifest" -> ((s, dir) =>
       operators.Reconcile.manifest(
         Crm.table(s, dir, "documents"),
         col("source"), col("doc_id"), col("text"))
-        .orderBy(col("part"))
-    }),
+        .orderBy(col("part"))),
     // Streaming twin of q_manifest: complete-mode per-source integrity
     // record over the document stream (bounded run == batch, the oracle).
     "q_stream_manifest" -> ((s, dir) => {
@@ -83,11 +81,10 @@ private[graft] object SimilarityQueries extends QueryFamily {
       operators.Reconcile.driftFromCounts(base, streamCounts)
     }),
     // Embedding covariance (upper triangle): the whitening/PCA input.
-    "q_embed_cov" -> ((s, dir) => {
+    "q_embed_cov" -> ((s, dir) =>
       operators.Similarity.covarianceMatrix(
         Crm.table(s, dir, "embeddings"))
-        .orderBy(col("i"), col("j"))
-    }),
+        .orderBy(col("i"), col("j"))),
     // IVF-PQ ANN: coarse cell pruning + asymmetric-distance (ADC) scoring.
     "q_ann_ivfpq" -> ((s, dir) => {
       val emb = Crm.table(s, dir, "embeddings")
@@ -129,10 +126,9 @@ private[graft] object SimilarityQueries extends QueryFamily {
     // (FAISS `add`; never retrained), appended, and the provenance manifest
     // re-proven. The refreshed index is invariant to the batch split, so
     // the search gates against the train-on-base / assign-all SQL chain.
-    "q_stream_ann_refresh" -> ((s, dir) => {
+    "q_stream_ann_refresh" -> ((s, dir) =>
       streaming.AnnIndexRefresh.gatedRefresh(s, dir)
-        .orderBy(col("query_id"), col("rank"))
-    }),
+        .orderBy(col("query_id"), col("rank"))),
     // Two-stage retrieval (IVFADC+R, the FAISS refine shape): the trained
     // IVF-PQ search keeps a 20-candidate shortlist per query by ADC over
     // codes only; full vectors are fetched for the shortlist alone (a
@@ -176,57 +172,50 @@ private[graft] object SimilarityQueries extends QueryFamily {
       operators.Similarity.annMrr(emb, emb.filter(col("vec_id") % 50 === 0), k = 5)
         .orderBy(col("query_id"))
     }),
-    "q_cosine_neardup" -> ((s, dir) => {
+    "q_cosine_neardup" -> ((s, dir) =>
       operators.Similarity.cosineNearDupPairs(
         Crm.table(s, dir, "embeddings"), threshold = 0.4)
-        .orderBy(col("vec_id_a"), col("vec_id_b"))
-    }),
+        .orderBy(col("vec_id_a"), col("vec_id_b"))),
     // the scale path: same-bucket candidates only (~n²/2^nBits pairs)
-    "q_cosine_neardup_lsh" -> ((s, dir) => {
+    "q_cosine_neardup_lsh" -> ((s, dir) =>
       operators.Similarity.lshNearDupPairs(
         Crm.table(s, dir, "embeddings"), dim = 64, threshold = 0.4)
-        .orderBy(col("vec_id_a"), col("vec_id_b"))
-    }),
+        .orderBy(col("vec_id_a"), col("vec_id_b"))),
     // deterministic md5-keyed train/eval split — reproducible across reruns,
     // engines and cluster layouts (rand() is none of those)
-    "q_train_split" -> ((s, dir) => {
+    "q_train_split" -> ((s, dir) =>
       operators.Sampling.trainEvalSplit(
         Crm.table(s, dir, "documents"), col("doc_id"), 0.8)
         .groupBy(col("split")).agg(count(lit(1)).as("n_docs"))
-        .orderBy(col("split"))
-    }),
+        .orderBy(col("split"))),
     // end-to-end curation: lang filter → quality gate → dedup keepers →
     // deterministic subsample, fused into one corpus pass + one agg shuffle
-    "q_curation" -> ((s, dir) => {
+    "q_curation" -> ((s, dir) =>
       operators.Curation.curate(Crm.table(s, dir, "documents"),
         "doc_id", "text", lang = "en", minQuality = 0.45, sampleFraction = 0.5)
-        .orderBy(col("doc_id"))
-    }),
+        .orderBy(col("doc_id"))),
     // Data-constrained epoch scheduling: budget split ∝ token mass, ≤4 epochs.
-    "q_token_budget" -> ((s, dir) => {
+    "q_token_budget" -> ((s, dir) =>
       operators.Curation.tokenBudget(Crm.table(s, dir, "documents"),
         "text", "source", budget = 100000L, maxEpochs = 4)
-        .orderBy(col("source"))
-    }),
+        .orderBy(col("source"))),
     // The whole pipeline composed: curate → leakage-safe split → shard.
     // Gated end-to-end on the (split, shard) manifest.
-    "q_pipeline_manifest" -> ((s, dir) => {
+    "q_pipeline_manifest" -> ((s, dir) =>
       operators.Curation.pipelineManifest(
         Crm.table(s, dir, "documents"), "doc_id", "text",
         lang = "en", minQuality = 0.3, sampleFraction = 1.0,
         pairs = lshPairs(s, dir), aCol = "doc_id_a", bCol = "doc_id_b",
         trainFraction = 0.8, nShards = 8)
-        .orderBy(col("split"), col("shard"))
-    }),
+        .orderBy(col("split"), col("shard"))),
     // Epoch-seeded shuffle-sharding: the loader's "global shuffle" as a
     // pure row-local hash — reproducible, different per epoch, no global
     // sort. Gated on the shard manifest (balance + order-free checksums).
-    "q_shuffle_shards" -> ((s, dir) => {
+    "q_shuffle_shards" -> ((s, dir) =>
       operators.Curation.shuffleShards(
         Crm.table(s, dir, "documents"), "doc_id", "text",
         nShards = 8, epochs = 2)
-        .orderBy(col("epoch"), col("shard"))
-    }),
+        .orderBy(col("epoch"), col("shard"))),
     // Observability twin of q_curation: per-stage survivor/drop counts.
     "q_curation_funnel" -> ((s, dir) => {
       operators.Curation.curationFunnel(Crm.table(s, dir, "documents"),

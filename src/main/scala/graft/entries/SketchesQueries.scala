@@ -27,85 +27,72 @@ private[graft] object SketchesQueries extends QueryFamily {
       operators.Sketches.cmsHeavyHitters(tok, col("term"), 20)
     }),
     // MOSS winnowing fingerprints: position-aware k-gram selections.
-    "q_winnow" -> ((s, dir) => {
+    "q_winnow" -> ((s, dir) =>
       operators.TextAnalysis.winnow(
         Crm.table(s, dir, "documents"), "doc_id", "text")
-        .orderBy(col("doc_id"), col("pos"), col("fp"))
-    }),
+        .orderBy(col("doc_id"), col("pos"), col("fp"))),
     // Vocabulary coverage curve via the distributed prefix sum — no global
     // window anywhere (Surrogate.rankedRunningTotal).
-    "q_vocab_coverage" -> ((s, dir) => {
+    "q_vocab_coverage" -> ((s, dir) =>
       operators.TextAnalysis.vocabCoverage(
         Crm.table(s, dir, "documents"), "doc_id", "text",
-        Seq(0.5, 0.9, 0.99))
-    }),
+        Seq(0.5, 0.9, 0.99))),
     // Web-corpus rebalancing: keep at most 50 best docs per source domain.
-    "q_domain_cap" -> ((s, dir) => {
+    "q_domain_cap" -> ((s, dir) =>
       operators.Curation.capPerDomain(
         Crm.table(s, dir, "documents"), "doc_id", "text", "source", 50)
-        .orderBy(col("domain"), col("rank_in_domain"))
-    }),
+        .orderBy(col("domain"), col("rank_in_domain"))),
     // Join-key skew diagnostics over the fact join key.
-    "q_key_skew" -> ((s, dir) => {
-      operators.Olap.keySkewStats(Crm.table(s, dir, "lineitem"), col("l_orderkey"))
-    }),
+    "q_key_skew" -> ((s, dir) =>
+      operators.Olap.keySkewStats(Crm.table(s, dir, "lineitem"), col("l_orderkey"))),
     // Catalog-style column profile over the noisy cliente table.
-    "q_column_profile" -> ((s, dir) => {
+    "q_column_profile" -> ((s, dir) =>
       operators.Quality.columnProfile(Crm.cliente(s, dir),
         Seq("nome_cliente", "idade", "genero", "id_categoria_cliente", "id_localidade"))
-        .orderBy(col("column_name"))
-    }),
+        .orderBy(col("column_name"))),
     // k-anonymity audit over (lang, source, length-bucket) quasi-identifiers.
-    "q_k_anonymity" -> ((s, dir) => {
+    "q_k_anonymity" -> ((s, dir) =>
       operators.Quality.kAnonymity(
         Crm.table(s, dir, "documents"),
         Seq(col("lang"), col("source"),
           (col("n_chars") / 100).cast("long").as("len_bucket")), k = 5)
-        .orderBy(col("lang"), col("source"), col("len_bucket"))
-    }),
+        .orderBy(col("lang"), col("source"), col("len_bucket"))),
     // l-diversity twin: groups must also span >= l distinct langs.
-    "q_l_diversity" -> ((s, dir) => {
+    "q_l_diversity" -> ((s, dir) =>
       operators.Quality.lDiversity(
         Crm.table(s, dir, "documents"),
         Seq(col("source"), (col("n_chars") / 200).cast("long").as("len_bucket")),
         col("lang"), l = 3)
-        .orderBy(col("source"), col("len_bucket"))
-    }),
+        .orderBy(col("source"), col("len_bucket"))),
     // t-closeness: group lang-distributions within TV distance t of global.
-    "q_t_closeness" -> ((s, dir) => {
+    "q_t_closeness" -> ((s, dir) =>
       operators.Quality.tCloseness(
         Crm.table(s, dir, "documents"),
         Seq(col("source"), (col("n_chars") / 200).cast("long").as("len_bucket")),
         col("lang"), t = 0.25)
-        .orderBy(col("source"), col("len_bucket"))
-    }),
+        .orderBy(col("source"), col("len_bucket"))),
     // Gini concentration of the docs-per-domain distribution.
-    "q_domain_gini" -> ((s, dir) => {
+    "q_domain_gini" -> ((s, dir) =>
       operators.Curation.domainConcentration(
-        Crm.table(s, dir, "documents"), "source")
-    }),
+        Crm.table(s, dir, "documents"), "source")),
     // Same cap via the O(k)-state TopKByScore aggregate (the mega-domain
     // scale path) — shares q_domain_cap's oracle: identical output.
-    "q_domain_cap_agg" -> ((s, dir) => {
+    "q_domain_cap_agg" -> ((s, dir) =>
       operators.Curation.capPerDomainAgg(
         Crm.table(s, dir, "documents"), "doc_id", "text", "source", 50)
-        .orderBy(col("domain"), col("rank_in_domain"))
-    }),
+        .orderBy(col("domain"), col("rank_in_domain"))),
     // Trailing-24h z-score volume anomalies on the hourly event series.
-    "q_zscore_anomaly" -> ((s, dir) => {
-      operators.Events.zscoreAnomalies(Crm.table(s, dir, "events"))
-    }),
+    "q_zscore_anomaly" -> ((s, dir) =>
+      operators.Events.zscoreAnomalies(Crm.table(s, dir, "events"))),
     // Asymmetric containment near-dups via DF-ordered prefix filtering.
-    "q_containment" -> ((s, dir) => {
+    "q_containment" -> ((s, dir) =>
       operators.Dedup.containmentPairs(
         Crm.table(s, dir, "documents"), "doc_id", "text")
-        .orderBy(col("doc_id_a"), col("doc_id_b"))
-    }),
+        .orderBy(col("doc_id_a"), col("doc_id_b"))),
     // Hopping 2h/1h windows — each event in exactly two windows.
-    "q_events_sliding" -> ((s, dir) => {
+    "q_events_sliding" -> ((s, dir) =>
       operators.Events.slidingCounts(Crm.table(s, dir, "events"))
-        .orderBy(col("win_start"), col("event_type"))
-    }),
+        .orderBy(col("win_start"), col("event_type"))),
     // Native session_window streaming sessionization (vs the custom
     // flatMapGroupsWithState form of q_stream_sessions).
     "q_stream_session_window" -> ((s, dir) => {
@@ -116,12 +103,11 @@ private[graft] object SketchesQueries extends QueryFamily {
       }.orderBy(col("user_id"), col("session_start"))
     }),
     // HLL register merge: per-day estimate rolled up from hourly registers.
-    "q_hll_merge" -> ((s, dir) => {
+    "q_hll_merge" -> ((s, dir) =>
       // cast: both engines must md5 the same bytes — the decimal string form
       operators.Sketches.hllMergedDaily(Crm.table(s, dir, "events"), col("ts"),
         col("user_id").cast("string"))
-        .orderBy(col("day"))
-    }),
+        .orderBy(col("day"))),
     // Native bounded-state streaming dedup (keys only — arrival order
     // decides the winning payload, so only the key set is deterministic).
     "q_stream_dedup_wm" -> ((s, dir) => {
@@ -139,19 +125,17 @@ private[graft] object SketchesQueries extends QueryFamily {
       }.orderBy(col("win_start"), col("event_type"))
     }),
     // One Lloyd refinement step over the IVF seed centroids.
-    "q_kmeans_step" -> ((s, dir) => {
+    "q_kmeans_step" -> ((s, dir) =>
       operators.Similarity.kmeansStep(Crm.table(s, dir, "embeddings"))
-        .orderBy(col("cell"), col("pos"))
-    }),
+        .orderBy(col("cell"), col("pos"))),
     // Lloyd's to a fixpoint (tol=0 ⇒ exactly 3 deterministic rounds, the
     // mode the DuckDB oracle unrolls); final centroids exploded per-element.
-    "q_kmeans" -> ((s, dir) => {
+    "q_kmeans" -> ((s, dir) =>
       operators.Similarity.kmeans(Crm.table(s, dir, "embeddings"), maxIter = 3)
         .select(col("cell"), col("n_vectors"), posexplode(col("emb_cent")))
         .select(col("cell"), col("pos").cast("long").as("pos"),
           col("col").as("value"), col("n_vectors"))
-        .orderBy(col("cell"), col("pos"))
-    }),
+        .orderBy(col("cell"), col("pos"))),
     // CDC apply: latest-wins snapshot from a synthesized I/U/D change log.
     "q_cdc_apply" -> ((s, dir) => {
       val o = Crm.table(s, dir, "orders")
@@ -172,17 +156,15 @@ private[graft] object SketchesQueries extends QueryFamily {
         .orderBy(col("o_orderkey"))
     }),
     // Deterministic fixed-size per-language reservoir (eval-set carving).
-    "q_reservoir" -> ((s, dir) => {
+    "q_reservoir" -> ((s, dir) =>
       operators.Sampling.reservoirPerGroup(
         Crm.table(s, dir, "documents"), col("doc_id"), col("lang"), 20)
         .select(col("group").as("lang"), col("rank"), col("key").as("doc_id"))
-        .orderBy(col("lang"), col("rank"))
-    }),
+        .orderBy(col("lang"), col("rank"))),
     // Weekly cohort retention over events.
-    "q_retention" -> ((s, dir) => {
+    "q_retention" -> ((s, dir) =>
       operators.Events.retention(Crm.table(s, dir, "events"))
-        .orderBy(col("cohort_week"), col("age_weeks"))
-    }),
+        .orderBy(col("cohort_week"), col("age_weeks"))),
     // Incremental view maintenance: merged partial states == full aggregate.
     "q_incr_agg" -> ((s, dir) => {
       val o = Crm.table(s, dir, "orders")
@@ -245,72 +227,62 @@ private[graft] object SketchesQueries extends QueryFamily {
         .orderBy(col("c_mktsegment"))
     }),
     // Native session_window in BATCH mode (same operator as the stream).
-    "q_session_batch" -> ((s, dir) => {
+    "q_session_batch" -> ((s, dir) =>
       Crm.table(s, dir, "events")
         .groupBy(session_window(col("ts"), "30 minutes").as("sw"), col("user_id"))
         .agg(count(lit(1)).as("n_events"))
         .select(col("user_id"), col("sw.start").as("session_start"),
           col("sw.end").as("session_end"), col("n_events"))
-        .orderBy(col("user_id"), col("session_start"))
-    }),
+        .orderBy(col("user_id"), col("session_start"))),
     // Rebalance to a target mix: data-dependent per-language fractions.
-    "q_mix_rebalance" -> ((s, dir) => {
+    "q_mix_rebalance" -> ((s, dir) =>
       operators.Sampling.rebalanceToTarget(
         Crm.table(s, dir, "documents"), col("doc_id"), col("lang"), 60)
-        .select(col("doc_id"), col("lang")).orderBy(col("doc_id"))
-    }),
+        .select(col("doc_id"), col("lang")).orderBy(col("doc_id"))),
     // Deterministic Poisson bootstrap: 16 replicates of mean(o_totalprice).
-    "q_bootstrap" -> ((s, dir) => {
+    "q_bootstrap" -> ((s, dir) =>
       operators.Sampling.poissonBootstrap(
         Crm.table(s, dir, "orders"), col("o_orderkey"), col("o_totalprice"))
-        .orderBy(col("r"))
-    }),
+        .orderBy(col("r"))),
     // Temperature-scaled mixture sampling (XLM-R α=0.5 via exact sqrt).
-    "q_temperature_mix" -> ((s, dir) => {
+    "q_temperature_mix" -> ((s, dir) =>
       operators.Sampling.temperatureMix(
         Crm.table(s, dir, "documents"), col("doc_id"), col("lang"), 150)
-        .select(col("doc_id"), col("lang")).orderBy(col("doc_id"))
-    }),
+        .select(col("doc_id"), col("lang")).orderBy(col("doc_id"))),
     // Weighted Bernoulli sample: inclusion probability ∝ document length.
-    "q_weighted_sample" -> ((s, dir) => {
+    "q_weighted_sample" -> ((s, dir) =>
       operators.Sampling.weightedSample(
         Crm.table(s, dir, "documents"), col("doc_id"), col("n_chars"),
         targetFraction = 0.8)
-        .select(col("doc_id"), col("n_chars")).orderBy(col("doc_id"))
-    }),
+        .select(col("doc_id"), col("n_chars")).orderBy(col("doc_id"))),
     // Leakage-safe group k-fold: a domain never straddles folds.
-    "q_group_kfold" -> ((s, dir) => {
+    "q_group_kfold" -> ((s, dir) =>
       operators.Sampling.groupKFold(
         Crm.table(s, dir, "documents").select(col("doc_id"), col("source")),
         col("source"), 5)
-        .orderBy(col("doc_id"))
-    }),
+        .orderBy(col("doc_id"))),
     // Duplicate-span fraction: per doc, share of 5-gram hashes seen in ≥2 docs.
-    "q_dup_span" -> ((s, dir) => {
+    "q_dup_span" -> ((s, dir) =>
       operators.Dedup.duplicateSpanStats(
         Crm.table(s, dir, "documents"), "doc_id", "text")
-        .orderBy(col("doc_id"))
-    }),
+        .orderBy(col("doc_id"))),
     // Exact duplicated-substring spans (ExactSubstr, Lee et al. 2022):
     // bounded prefix-doubling suffix ranks — hash-free, exact at any scale.
-    "q_exact_substr" -> ((s, dir) => {
+    "q_exact_substr" -> ((s, dir) =>
       operators.Dedup.exactSubstrSpans(
         Crm.table(s, dir, "documents"), "doc_id", "text")
-        .orderBy(col("doc_id"))
-    }),
+        .orderBy(col("doc_id"))),
     // The ExactSubstr cleaning transform: duplicated spans cut out of the
     // corpus, canonical-form reconstruction of the survivors.
-    "q_exact_substr_clean" -> ((s, dir) => {
+    "q_exact_substr_clean" -> ((s, dir) =>
       operators.Dedup.exactSubstrClean(
         Crm.table(s, dir, "documents"), "doc_id", "text")
-        .orderBy(col("doc_id"))
-    }),
+        .orderBy(col("doc_id"))),
     // Sorted-neighborhood entity resolution (Hernández & Stolfo 1995):
     // N·w candidates by construction, codegen Jaro-Winkler comparator.
-    "q_er_neighborhood" -> ((s, dir) => {
+    "q_er_neighborhood" -> ((s, dir) =>
       operators.Linkage.sortedNeighborhood(Crm.table(s, dir, "part"), "p_partkey", "p_name")
-        .orderBy(col("id1"), col("id2"))
-    }),
+        .orderBy(col("id1"), col("id2"))),
     // Exact edit-distance near-dup pairs via PassJoin segment pigeonhole,
     // over DISTINCT names (min-key representative) of parts plus
     // deterministically-perturbed copies (4th char cut). Exact repeats are
@@ -329,32 +301,28 @@ private[graft] object SketchesQueries extends QueryFamily {
         .orderBy(col("id1"), col("id2"))
     }),
     // CCNet-style head/middle/tail LM quality terciles.
-    "q_lm_bucket" -> ((s, dir) => {
+    "q_lm_bucket" -> ((s, dir) =>
       operators.TextAnalysis.lmQualityBuckets(
         Crm.table(s, dir, "documents"), "doc_id", "text")
-        .orderBy(col("doc_id"))
-    }),
+        .orderBy(col("doc_id"))),
     // Hashed-feature linear scorer: fastText-filter plumbing, margin + keep.
-    "q_logreg_score" -> ((s, dir) => {
+    "q_logreg_score" -> ((s, dir) =>
       operators.TextAnalysis.hashLinearScore(
         Crm.table(s, dir, "documents"), "doc_id", "text")
-        .orderBy(col("doc_id"))
-    }),
+        .orderBy(col("doc_id"))),
     // TRAINED quality classifier: distributed batch perceptron over hashed
     // unigram features, weak-supervised by the lang-id heuristic — the
     // learned weight table q_logreg_score's doc promises.
-    "q_quality_train" -> ((s, dir) => {
+    "q_quality_train" -> ((s, dir) =>
       operators.TextAnalysis.perceptronTrain(
         Crm.table(s, dir, "documents"), "doc_id", "text")
-        .orderBy(col("bucket"))
-    }),
+        .orderBy(col("bucket"))),
     // The trained classifier's consumer: the corpus filtered by the learned
     // weights (integer-exact margins, keep = margin > 0).
-    "q_quality_filter" -> ((s, dir) => {
+    "q_quality_filter" -> ((s, dir) =>
       operators.TextAnalysis.perceptronScore(
         Crm.table(s, dir, "documents"), "doc_id", "text")
-        .orderBy(col("doc_id"))
-    }),
+        .orderBy(col("doc_id"))),
     // The persisted-model lifecycle: the trained weight table written ONCE,
     // the corpus scored from the artifact (inference only — no labels, no
     // training loop) — output-equal to q_quality_filter, same oracle.

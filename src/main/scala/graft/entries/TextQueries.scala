@@ -11,7 +11,7 @@ import QueryShared._
 private[graft] object TextQueries extends QueryFamily {
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ---- §7.5 extensions: text analysis -----------------------------------
-    "q_embed_centroid" -> ((s, dir) => {
+    "q_embed_centroid" -> ((s, dir) =>
       // Exploded (label, pos, value) shape: the centroid array itself is not
       // harness-comparable (pandas cannot sort array cells — r2 verdict), and
       // per-element rows let the driver's float normalization do its job.
@@ -19,25 +19,21 @@ private[graft] object TextQueries extends QueryFamily {
         .select(col("label"), posexplode(col("centroid")), col("n_vectors"))
         .select(col("label"), col("pos").cast("long").as("pos"),
           col("col").as("value"), col("n_vectors"))
-        .orderBy(col("label"), col("pos"))
-    }),
-    "q_tfidf" -> ((s, dir) => {
+        .orderBy(col("label"), col("pos"))),
+    "q_tfidf" -> ((s, dir) =>
       operators.TextAnalysis.topTermsByTfRarity(
         Crm.table(s, dir, "documents"), "doc_id", "text", k = 3)
-        .orderBy(col("doc_id"), col("rank"))
-    }),
+        .orderBy(col("doc_id"), col("rank"))),
     // BM25 top terms (tf saturation + length normalization; odds idf).
-    "q_bm25" -> ((s, dir) => {
+    "q_bm25" -> ((s, dir) =>
       operators.TextAnalysis.bm25TopTerms(
         Crm.table(s, dir, "documents"), "doc_id", "text", k = 3)
-        .orderBy(col("doc_id"), col("rank"))
-    }),
+        .orderBy(col("doc_id"), col("rank"))),
     // Top-k bigrams per language via the O(k)-state TopKByScore aggregate.
-    "q_ngrams_top" -> ((s, dir) => {
+    "q_ngrams_top" -> ((s, dir) =>
       operators.TextAnalysis.topNgramsPerLang(
         Crm.table(s, dir, "documents"), "text", "lang", k = 20)
-        .orderBy(col("lang"), col("rank"))
-    }),
+        .orderBy(col("lang"), col("rank"))),
     // Market-basket co-occurrence lift over (order, part) baskets.
     "q_cooccur_lift" -> ((s, dir) => {
       // prime the shared pair artifact: the lift plan's pairs subtree is
@@ -73,15 +69,13 @@ private[graft] object TextQueries extends QueryFamily {
         .orderBy(col("degree"))
     }),
     // Z-order (Morton) layout audit: per-cell (part, supplier) bounding box.
-    "q_zorder_cells" -> ((s, dir) => {
-      operators.Layout.zorderCells(Crm.table(s, dir, "lineitem")).orderBy(col("zcell"))
-    }),
+    "q_zorder_cells" -> ((s, dir) =>
+      operators.Layout.zorderCells(Crm.table(s, dir, "lineitem")).orderBy(col("zcell"))),
     // Concat-and-chunk sequence packing over the two-pass prefix sum.
-    "q_pack" -> ((s, dir) => {
+    "q_pack" -> ((s, dir) =>
       operators.Packing.packPlan(
         Crm.table(s, dir, "documents"), "doc_id", "text", 2048)
-        .orderBy(col("doc_id"))
-    }),
+        .orderBy(col("doc_id"))),
     // The training-data final mile, composed from two gated pieces: counts
     // from the TRAINED tokenizer artifact (writeBpeVocab →
     // bpeTokenizeWithVocab), packing from those counts — the sequence
@@ -102,10 +96,9 @@ private[graft] object TextQueries extends QueryFamily {
       operators.Packing.packFromCounts(counts, 2048).orderBy(col("doc_id"))
     }),
     // SemDeDup: k-means cell assignment + intra-cell cosine near-dup marking.
-    "q_semantic_dedup" -> ((s, dir) => {
+    "q_semantic_dedup" -> ((s, dir) =>
       operators.Similarity.semanticDedup(
-        Crm.table(s, dir, "embeddings")).orderBy(col("vec_id"))
-    }),
+        Crm.table(s, dir, "embeddings")).orderBy(col("vec_id"))),
     // SQL-surface natives: dot_fp via the GraftExtensions function registry.
     "q_sql_native" -> ((s, dir) => {
       GraftExtensions.install(s)
@@ -116,31 +109,27 @@ private[graft] object TextQueries extends QueryFamily {
         .orderBy(col("vec_id"))
     }),
     // Materialized BPE-ish tokenizer output: (doc, position, token) stream.
-    "q_tokenize" -> ((s, dir) => {
+    "q_tokenize" -> ((s, dir) =>
       operators.TextAnalysis
         .tokenStream(Crm.table(s, dir, "documents"), "doc_id", "text")
-        .orderBy(col("doc_id"), col("token_idx"))
-    }),
+        .orderBy(col("doc_id"), col("token_idx"))),
     // CMS join-size estimate: |orders96 x orders97 on custkey| from sketches.
     // Per-language p50/p95 doc length from the grouped fixed-bin sketch.
-    "q_grouped_quantiles" -> ((s, dir) => {
+    "q_grouped_quantiles" -> ((s, dir) =>
       operators.Sketches.histogramQuantilesByGroup(
         Crm.table(s, dir, "documents"),
         col("lang"), col("n_chars"), 100.0, Seq(0.5, 0.95))
-        .orderBy(col("g"), col("p"))
-    }),
+        .orderBy(col("g"), col("p"))),
     // Sparse TF-IDF cosine near-dup pairs over the token inverted index.
-    "q_sparse_cosine" -> ((s, dir) => {
+    "q_sparse_cosine" -> ((s, dir) =>
       operators.TextAnalysis.sparseCosinePairs(
         Crm.table(s, dir, "documents"), "doc_id", "text")
-        .orderBy(col("doc_a"), col("doc_b"))
-    }),
+        .orderBy(col("doc_a"), col("doc_b"))),
     // IVF-pruned kNN graph: per-vector top-3 in-cell neighbors by cosine.
-    "q_knn_graph" -> ((s, dir) => {
+    "q_knn_graph" -> ((s, dir) =>
       operators.Similarity.knnGraph(
         Crm.table(s, dir, "embeddings"), k = 3)
-        .orderBy(col("vec_id"), col("rank"))
-    }),
+        .orderBy(col("vec_id"), col("rank"))),
     // Late-interaction MaxSim top-k (ColBERT shape) over m=4 sub-vectors.
     "q_maxsim" -> ((s, dir) => {
       val emb = Crm.table(s, dir, "embeddings")
@@ -157,17 +146,15 @@ private[graft] object TextQueries extends QueryFamily {
         .orderBy(col("query_id"), col("fused_rank"))
     }),
     // Hard negatives: closest non-duplicate neighbors per vector.
-    "q_hard_negatives" -> ((s, dir) => {
+    "q_hard_negatives" -> ((s, dir) =>
       operators.Similarity.hardNegatives(
         Crm.table(s, dir, "embeddings"))
-        .orderBy(col("vec_id"), col("hard_rank"))
-    }),
+        .orderBy(col("vec_id"), col("hard_rank"))),
     // Nearest-label-centroid confusion matrix over the embedding corpus.
-    "q_centroid_confusion" -> ((s, dir) => {
+    "q_centroid_confusion" -> ((s, dir) =>
       operators.Similarity.centroidConfusion(
         Crm.table(s, dir, "embeddings"))
-        .orderBy(col("label"), col("predicted"))
-    }),
+        .orderBy(col("label"), col("predicted"))),
     // Streaming CMS register build; probe finished in batch per event type.
     "q_stream_cms" -> ((s, dir) => {
       val sketch = streaming.EventsStream.runToCompletion(s, "q_stream_cms_sink") { ss =>
@@ -181,26 +168,23 @@ private[graft] object TextQueries extends QueryFamily {
         .orderBy(col("term"))
     }),
     // Hashing-trick featurization: (doc, bucket, count) triples, no vocab.
-    "q_feature_hashing" -> ((s, dir) => {
+    "q_feature_hashing" -> ((s, dir) =>
       operators.TextAnalysis.hashFeatures(
         Crm.table(s, dir, "documents"), "doc_id", "text")
-        .orderBy(col("doc_id"), col("bucket"))
-    }),
+        .orderBy(col("doc_id"), col("bucket"))),
     // DSIR-style data selection: the 100 docs whose hashed-unigram profile
     // best matches the English target domain, scored with first-order
     // log-free ratio weights (TextAnalysis.dsirSelect's determinism note).
-    "q_dsir" -> ((s, dir) => {
+    "q_dsir" -> ((s, dir) =>
       operators.TextAnalysis.dsirSelect(
         Crm.table(s, dir, "documents"), "doc_id", "text",
         col("lang") === "en", n = 100)
-        .orderBy(col("doc_id"))
-    }),
+        .orderBy(col("doc_id"))),
     // Bigram LM count tables: raw + Kneser-Ney continuation/diversity counts.
-    "q_ngram_lm" -> ((s, dir) => {
+    "q_ngram_lm" -> ((s, dir) =>
       operators.TextAnalysis.bigramLmCounts(
         Crm.table(s, dir, "documents"), "doc_id", "text")
-        .orderBy(col("w1"), col("w2"))
-    }),
+        .orderBy(col("w1"), col("w2"))),
     // Deterministic hash-based negative sampling over (customer, part) pairs.
     "q_negative_sampling" -> ((s, dir) => {
       val pos = Crm.table(s, dir, "orders").join(Crm.table(s, dir, "lineitem"),
@@ -214,17 +198,15 @@ private[graft] object TextQueries extends QueryFamily {
     // joins cooccurrenceLift adds are cardinality-preserving but Catalyst
     // can't prove that, so feeding the lift output here paid for two
     // marginal joins + a scalar cross the operator ignores.
-    "q_triangle_count" -> ((s, dir) => {
+    "q_triangle_count" -> ((s, dir) =>
       operators.Graph.triangleStats(
-        copurchasePairsArtifact(s, dir), "pk_a", "pk_b")
-    }),
+        copurchasePairsArtifact(s, dir), "pk_a", "pk_b")),
     // Resource-Allocation link prediction: top-50 non-edge item pairs by
     // Σ 1/deg over shared co-purchase neighbors (log-free Adamic–Adar).
-    "q_link_predict" -> ((s, dir) => {
+    "q_link_predict" -> ((s, dir) =>
       operators.Graph.resourceAllocation(
         copurchasePairsArtifact(s, dir), "pk_a", "pk_b", k = 50)
-        .orderBy(col("item_a"), col("item_b"))
-    }),
+        .orderBy(col("item_a"), col("item_b"))),
     // One label-propagation step over the co-purchase graph (node%10 seeds).
     "q_label_prop" -> ((s, dir) => {
       val pairs = copurchasePairsArtifact(s, dir)
@@ -293,20 +275,18 @@ private[graft] object TextQueries extends QueryFamily {
     // constant-size broadcast bitmap that prefilters the lineitem scan
     // before the exact semi join — result is exactly the semi join, so the
     // oracle is the plain IN-subquery (Sketches.bloomReduceJoin).
-    "q_bloom_join_reduce" -> ((s, dir) => {
+    "q_bloom_join_reduce" -> ((s, dir) =>
       operators.Sketches.bloomReduceJoin(
         Crm.table(s, dir, "orders").filter(col("o_orderpriority") === "1-URGENT"),
         col("o_orderkey"), Crm.table(s, dir, "lineitem"), col("l_orderkey"))
         .select(col("l_orderkey"), col("l_linenumber"), col("l_partkey"),
           col("l_quantity"))
-        .orderBy(col("l_orderkey"), col("l_linenumber"))
-    }),
+        .orderBy(col("l_orderkey"), col("l_linenumber"))),
     // 2-D Pareto frontier: cheapest price for each dominated-free size.
-    "q_skyline" -> ((s, dir) => {
+    "q_skyline" -> ((s, dir) =>
       operators.Olap.skyline2d(Crm.table(s, dir, "part"),
         col("p_partkey"), col("p_retailprice"), col("p_size"))
-        .orderBy(col("id"))
-    }),
+        .orderBy(col("id"))),
     "q_join_size_est" -> ((s, dir) => {
       val o = Crm.table(s, dir, "orders")
       operators.Sketches.cmsJoinSizeEstimate(
@@ -342,35 +322,29 @@ private[graft] object TextQueries extends QueryFamily {
         .orderBy(col("node"))
     }),
     // C4-style fixed-window line dedup: corpus-first occurrence wins.
-    "q_line_dedup" -> ((s, dir) => {
+    "q_line_dedup" -> ((s, dir) =>
       operators.Dedup.lineDedup(
         Crm.table(s, dir, "documents"), "doc_id", "text")
-        .orderBy(col("doc_id"))
-    }),
+        .orderBy(col("doc_id"))),
     // Pearson correlation from exact quantized sums, per return flag.
-    "q_corr" -> ((s, dir) => {
+    "q_corr" -> ((s, dir) =>
       operators.Olap.pearsonByGroup(Crm.table(s, dir, "lineitem"), col("l_returnflag"),
-        col("l_quantity"), col("l_extendedprice")).orderBy(col("grp"))
-    }),
+        col("l_quantity"), col("l_extendedprice")).orderBy(col("grp"))),
     // Lag-7 autocorrelation of daily revenue (weekly-seasonality probe).
-    "q_autocorr" -> ((s, dir) => {
-      operators.Olap.revenueAutocorr(Crm.table(s, dir, "orders"), lagDays = 7)
-    }),
+    "q_autocorr" -> ((s, dir) =>
+      operators.Olap.revenueAutocorr(Crm.table(s, dir, "orders"), lagDays = 7)),
     // Two-sample Welch z-test between priority segments.
-    "q_ab_test" -> ((s, dir) => {
+    "q_ab_test" -> ((s, dir) =>
       operators.Olap.abTestZ(Crm.table(s, dir, "orders"), col("o_orderpriority"),
-        col("o_totalprice"), "1-URGENT", "5-LOW").orderBy(col("n_a"))
-    }),
+        col("o_totalprice"), "1-URGENT", "5-LOW").orderBy(col("n_a"))),
     // Robust MAD outlier stats per return flag.
-    "q_mad_outliers" -> ((s, dir) => {
+    "q_mad_outliers" -> ((s, dir) =>
       operators.Olap.madOutliers(Crm.table(s, dir, "lineitem"), col("l_returnflag"),
-        col("l_extendedprice")).orderBy(col("grp"))
-    }),
+        col("l_extendedprice")).orderBy(col("grp"))),
     // Winsorized sum: clip at the histogram-sketch p99 before aggregating.
-    "q_winsorize" -> ((s, dir) => {
+    "q_winsorize" -> ((s, dir) =>
       operators.Sketches.winsorizedSum(Crm.table(s, dir, "orders"), col("o_totalprice"), 5000.0, 0.99)
-        .orderBy(col("threshold"))
-    }),
+        .orderBy(col("threshold"))),
     // Streaming HLL: constant-state running distinct over the event stream.
     "q_stream_hll" -> ((s, dir) => {
       val regs = streaming.EventsStream.runToCompletion(s, "q_stream_hll_sink") { ss =>
@@ -381,21 +355,18 @@ private[graft] object TextQueries extends QueryFamily {
         regs.withColumn("g", lit("all")), "g").orderBy(col("g"))
     }),
     // Sliding 24h distinct-user estimate per hour from HLL register merges.
-    "q_sliding_distinct" -> ((s, dir) => {
+    "q_sliding_distinct" -> ((s, dir) =>
       operators.Sketches.hllSlidingDistinct(Crm.table(s, dir, "events"), col("ts"),
-        col("user_id").cast("string")).orderBy(col("hour"))
-    }),
+        col("user_id").cast("string")).orderBy(col("hour"))),
     // Seasonal-naive (t-7d) forecast backtest per event type.
-    "q_forecast_naive" -> ((s, dir) => {
+    "q_forecast_naive" -> ((s, dir) =>
       operators.Events.seasonalNaiveBacktest(Crm.table(s, dir, "events"))
-        .orderBy(col("event_type"))
-    }),
+        .orderBy(col("event_type"))),
     // Deterministic fair interleave across sources (training order).
-    "q_interleave" -> ((s, dir) => {
+    "q_interleave" -> ((s, dir) =>
       operators.Sampling.interleaveBySource(
         Crm.table(s, dir, "documents"), "doc_id", "source")
-        .orderBy(col("interleave_key"))
-    }),
+        .orderBy(col("interleave_key"))),
     // Snapshot reconciliation: added/removed/changed keys between versions.
     "q_table_diff" -> ((s, dir) => {
       val o = Crm.table(s, dir, "orders").select(col("o_orderkey"), col("o_totalprice"),
@@ -411,33 +382,29 @@ private[graft] object TextQueries extends QueryFamily {
         .orderBy(col("status"), col("o_orderkey"))
     }),
     // TPC-H Q5-shaped regional revenue (non-FK c_nationkey = s_nationkey).
-    "q_olap_region" -> ((s, dir) => {
+    "q_olap_region" -> ((s, dir) =>
       operators.Olap.regionalRevenue(
         Crm.table(s, dir, "region"), Crm.table(s, dir, "nation"), Crm.table(s, dir, "customer"),
         Crm.table(s, dir, "supplier"), Crm.table(s, dir, "orders"), Crm.table(s, dir, "lineitem"),
-        regionName = "ASIA")
-    }),
+        regionName = "ASIA")),
     // One BPE merge-candidate iteration over the character-symbol vocab.
-    "q_bpe_merge" -> ((s, dir) => {
+    "q_bpe_merge" -> ((s, dir) =>
       operators.TextAnalysis.bpeMergeCandidates(
-        Crm.table(s, dir, "documents"), "doc_id", "text", k = 20)
-    }),
+        Crm.table(s, dir, "documents"), "doc_id", "text", k = 20)),
     // BPE tokenizer TRAINING: 5 merge rounds to an ordered merge list —
     // the engine's first trained tokenizer artifact (argmax pair per round,
     // greedy merge applied to the vocabulary, never the token stream).
-    "q_bpe_train" -> ((s, dir) => {
+    "q_bpe_train" -> ((s, dir) =>
       operators.TextAnalysis.bpeTrain(
         Crm.table(s, dir, "documents"), "doc_id", "text", rounds = 5)
-        .orderBy(col("round"))
-    }),
+        .orderBy(col("round"))),
     // The trained merge list APPLIED (r11 #3): the corpus subword-tokenized
     // through the same 5 learned merges — tokens provably from q_bpe_train's
     // artifact (the oracle replays the identical chain).
-    "q_tokenize_bpe" -> ((s, dir) => {
+    "q_tokenize_bpe" -> ((s, dir) =>
       operators.TextAnalysis.bpeTokenize(
         Crm.table(s, dir, "documents"), "doc_id", "text", rounds = 5)
-        .orderBy(col("doc_id"), col("word_idx"), col("token_idx"))
-    }),
+        .orderBy(col("doc_id"), col("word_idx"), col("token_idx"))),
     // The persisted-tokenizer lifecycle: merges+vocab written ONCE, the
     // corpus tokenized from the artifact (in-vocab join + OOV merge
     // replay; OOV empty here since the training corpus tokenizes itself) —
@@ -452,39 +419,32 @@ private[graft] object TextQueries extends QueryFamily {
         .orderBy(col("doc_id"), col("word_idx"), col("token_idx"))
     }),
     // Product-quantization codes: per-subvector nearest codebook entry.
-    "q_pq_code" -> ((s, dir) => {
+    "q_pq_code" -> ((s, dir) =>
       operators.Similarity.pqCode(Crm.table(s, dir, "embeddings"))
-        .orderBy(col("vec_id"), col("sub"))
-    }),
+        .orderBy(col("vec_id"), col("sub"))),
     // One distributed power-iteration step (AᵀAv) toward the top PC.
-    "q_pca_power" -> ((s, dir) => {
+    "q_pca_power" -> ((s, dir) =>
       operators.Similarity.powerIterationStep(
-        Crm.table(s, dir, "embeddings")).orderBy(col("pos"))
-    }),
+        Crm.table(s, dir, "embeddings")).orderBy(col("pos"))),
     // Overlapping token-window chunking with materialized chunk text.
-    "q_chunk_tokens" -> ((s, dir) => {
+    "q_chunk_tokens" -> ((s, dir) =>
       operators.TextAnalysis.chunkTokens(
         Crm.table(s, dir, "documents"), "doc_id", "text")
-        .orderBy(col("doc_id"), col("chunk_idx"))
-    }),
+        .orderBy(col("doc_id"), col("chunk_idx"))),
     // Mergeable fixed-bin histogram quantile sketch vs the exact percentile.
-    "q_hist_quantile" -> ((s, dir) => {
+    "q_hist_quantile" -> ((s, dir) =>
       operators.Sketches.histogramQuantiles(
         Crm.table(s, dir, "orders"), col("o_totalprice"), 5000.0, Seq(0.5, 0.95, 0.99))
-        .orderBy(col("p"))
-    }),
-    "q_token_counts" -> ((s, dir) => {
+        .orderBy(col("p"))),
+    "q_token_counts" -> ((s, dir) =>
       operators.TextAnalysis.tokenCounts(
-        Crm.table(s, dir, "documents"), "doc_id", "text").orderBy(col("doc_id"))
-    }),
-    "q_text_quality" -> ((s, dir) => {
+        Crm.table(s, dir, "documents"), "doc_id", "text").orderBy(col("doc_id"))),
+    "q_text_quality" -> ((s, dir) =>
       operators.TextAnalysis.qualityScore(
-        Crm.table(s, dir, "documents"), "doc_id", "text").orderBy(col("doc_id"))
-    }),
-    "q_lang_id" -> ((s, dir) => {
+        Crm.table(s, dir, "documents"), "doc_id", "text").orderBy(col("doc_id"))),
+    "q_lang_id" -> ((s, dir) =>
       operators.TextAnalysis.langId(
-        Crm.table(s, dir, "documents"), "doc_id", "text").orderBy(col("doc_id"))
-    }),
+        Crm.table(s, dir, "documents"), "doc_id", "text").orderBy(col("doc_id"))),
     "q_fingerprint" -> ((s, dir) => {
       operators.TextAnalysis.fingerprints(
         Crm.table(s, dir, "documents"), "doc_id", "text").orderBy(col("doc_id"))

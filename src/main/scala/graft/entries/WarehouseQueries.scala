@@ -11,29 +11,24 @@ import QueryShared._
 private[graft] object WarehouseQueries extends QueryFamily {
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ---- DW dimension builds (CRM-shaped inputs from Crm adapter) ---------
-    "q_dim_localidade" -> ((s, dir) => {
-      operators.Dims.dimLocalidade(Crm.localidade(s, dir)).orderBy(col("id_localidade"))
-    }),
-    "q_dim_categoria_cliente" -> ((s, dir) => {
+    "q_dim_localidade" -> ((s, dir) =>
+      operators.Dims.dimLocalidade(Crm.localidade(s, dir)).orderBy(col("id_localidade"))),
+    "q_dim_categoria_cliente" -> ((s, dir) =>
       operators.Dims.dimCategoriaCliente(Crm.categoriaCliente(s, dir))
-        .orderBy(col("id_categoria_cliente"))
-    }),
-    "q_dim_categoria_produto" -> ((s, dir) => {
+        .orderBy(col("id_categoria_cliente"))),
+    "q_dim_categoria_produto" -> ((s, dir) =>
       operators.Dims.dimCategoriaProduto(Crm.categoriaProduto(s, dir))
-        .orderBy(col("id_categoria_produto"))
-    }),
-    "q_dim_fornecedor" -> ((s, dir) => {
-      operators.Dims.dimFornecedor(Crm.fornecedores(s, dir)).orderBy(col("id_fornecedor"))
-    }),
+        .orderBy(col("id_categoria_produto"))),
+    "q_dim_fornecedor" -> ((s, dir) =>
+      operators.Dims.dimFornecedor(Crm.fornecedores(s, dir)).orderBy(col("id_fornecedor"))),
     // Each dim query constructs ONLY its dependency chain — Warehouse.build
     // would analyze the full fact plan just to discard it (DataFrame ops run
     // the Catalyst analyzer eagerly, so dead plan weight costs real seconds).
-    "q_dim_cliente" -> ((s, dir) => {
+    "q_dim_cliente" -> ((s, dir) =>
       operators.Dims.dimCliente(Crm.cliente(s, dir),
         operators.Dims.dimCategoriaCliente(Crm.categoriaCliente(s, dir)),
         operators.Dims.dimLocalidade(Crm.localidade(s, dir)))
-        .drop("data_cadastro").orderBy(col("id_cliente"))
-    }),
+        .drop("data_cadastro").orderBy(col("id_cliente"))),
     "q_dim_produto" -> ((s, dir) => {
       import graft.functions.GraftFunctions.detRound
       operators.Dims.dimProduto(Crm.produto(s, dir), Crm.itemVendas(s, dir),
@@ -44,19 +39,15 @@ private[graft] object WarehouseQueries extends QueryFamily {
         detRound(col("margem_lucro"), 4).as("margem_lucro"),
         col("status_produto")).orderBy(col("id_produto"))
     }),
-    "q_dim_vendedor" -> ((s, dir) => {
-      operators.Dims.dimVendedor(Crm.vendedor(s, dir)).orderBy(col("id_vendedor"))
-    }),
-    "q_dim_loja" -> ((s, dir) => {
+    "q_dim_vendedor" -> ((s, dir) =>
+      operators.Dims.dimVendedor(Crm.vendedor(s, dir)).orderBy(col("id_vendedor"))),
+    "q_dim_loja" -> ((s, dir) =>
       operators.Dims.dimLoja(Crm.lojas(s, dir),
-        operators.Dims.dimLocalidade(Crm.localidade(s, dir))).orderBy(col("id_loja"))
-    }),
-    "q_dim_promocao" -> ((s, dir) => {
-      operators.Dims.dimPromocao(Crm.promocoes(s, dir)).orderBy(col("id_promocao"))
-    }),
-    "q_dim_tempo" -> ((s, dir) => {
-      operators.Dims.dimTempo(s).orderBy(col("data_completa"))
-    }),
+        operators.Dims.dimLocalidade(Crm.localidade(s, dir))).orderBy(col("id_loja"))),
+    "q_dim_promocao" -> ((s, dir) =>
+      operators.Dims.dimPromocao(Crm.promocoes(s, dir)).orderBy(col("id_promocao"))),
+    "q_dim_tempo" -> ((s, dir) =>
+      operators.Dims.dimTempo(s).orderBy(col("data_completa"))),
     // ---- the fact build (flagship) ----------------------------------------
     "q_fato_vendas" -> ((s, dir) => {
       val w = Warehouse.build(s, dir)

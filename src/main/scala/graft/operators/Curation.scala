@@ -110,7 +110,7 @@ object Curation {
     // AQE flip to SHUFFLE_HASH would stake correctness on an unspillable
     // per-partition build map (the recorded hash-relation failure mode;
     // at sf100 the SHARED LSH verify join hit exactly that under too few
-    // shuffle partitions — SCALE_PROBE_r12_pipeline_sf100.json).
+    // shuffle partitions — history/SCALE_PROBE_r12_pipeline_sf100.json).
     val survivorPairs = pairs
       .join(curated.select(col(id).as(aCol)).hint("merge"), Seq(aCol), "left_semi")
       .join(curated.select(col(id).as(bCol)).hint("merge"), Seq(bCol), "left_semi")

@@ -264,7 +264,7 @@ object Dedup {
   }
 
   /** Self-tuning strategy for the LSH verification joins (r12, closing the
-    * SCALE_PROBE_r12_pipeline_sf100 thread). Two measured data points say
+    * history/SCALE_PROBE_r12_pipeline_sf100 thread). Two measured data points say
     * the right strategy is CORPUS-DEPENDENT: SHUFFLE_HASH won r10's sf100
     * run (109 s where SortMergeJoin cliffed on sorting the corpus-sized
     * shingle table), but its build map is UNSPILLABLE — on r12's
@@ -308,7 +308,7 @@ object Dedup {
   }
 
   /** Per-task unspillable-build budget for the SHJ choice. The measured
-    * failure mode (SCALE_PROBE_r12_verifyhint.json, sf10 AND sf100
+    * failure mode (history/SCALE_PROBE_r12_verifyhint.json, sf10 AND sf100
     * replicas): every slot builds its hash map CONCURRENTLY out of
     * `heap × spark.memory.fraction` execution memory, so a map bigger than
     * its 1/slots share dies on the growth acquire regardless of how many

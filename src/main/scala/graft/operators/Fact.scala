@@ -145,8 +145,8 @@ object Fact {
     * independently-run slices can never collide (monotonically_increasing_id
     * restarts its partition numbering per job, so the plain key would).
     * Used by the oracle-gated q_fato_backfill; the operational recipe
-    * ([[backfillSlices]]; sf100 run in SCALE_PROBE_r11_backfill.json, crash
-    * resume in SCALE_PROBE_r12_backfill_resume.json) runs the same slices as
+    * ([[backfillSlices]]; sf100 run in history/SCALE_PROBE_r11_backfill.json, crash
+    * resume in history/SCALE_PROBE_r12_backfill_resume.json) runs the same slices as
     * SEPARATE jobs with a sink append between them, which is what actually
     * bounds scratch.
     */

@@ -249,7 +249,7 @@ object Graph {
       // quantized — exactly applyQuantized's contract (pagerank's r11
       // recipe): reliable-mode checkpoints carry the 1e10-scaled LONG and
       // the read-back division is bit-identical. MEASURED at sf10 (15M
-      // edges, SCALE_PROBE_r12_iterio.json): wall 12–13 s and state bytes
+      // edges, history/SCALE_PROBE_r12_iterio.json): wall 12–13 s and state bytes
       // 174.7 MB on BOTH sides, checksum equal — the pagerank 2.4× file shrink does
       // NOT transfer here, because HITS scores are degree-diverse (high-
       // entropy longs; pagerank's win came from repeated rank values that

@@ -181,7 +181,7 @@ object Sampling {
     // full distinct-shuffle over p without this cache (r9 profile: the
     // index build was 2.5 s of the ~8 s eager build; this removes two of
     // the three distinct evaluations; later q_negative_sampling timings
-    // are in AB_NEGSAMP_r18.json).
+    // are in history/AB_NEGSAMP_r18.json).
     val distinctItems = p.select(col("item")).distinct().cache()
     val items = Surrogate.zipWithIndexOrdered(
       distinctItems, "idx", Seq(col("item"))).cache()

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.MessageType
@@ -68,16 +68,8 @@ object Crm {
     val declared = schemas.getOrElse(name,
       throw new IllegalArgumentException(s"'$name' is not a stored table"))
     val conf = spark.sparkContext.hadoopConfiguration
-    val path = new Path(s"$dir/$name.parquet")
-    val fs = path.getFileSystem(conf)
-    // a file, or the first data file of a directory (ScaleGen's layout);
-    // `_`/`.`-prefixed entries are commit markers and checksums
-    val st = fs.getFileStatus(path)
-    val file =
-      if (!st.isDirectory) st
-      else fs.listStatus(path).filter(c => c.isFile && !"_.".contains(c.getPath.getName.head))
-        .sortBy(_.getPath.getName).headOption.getOrElse(
-          throw new IllegalArgumentException(s"stored table '$name': no data file in $path"))
+    val file = dataFiles(spark, dir, name).headOption.getOrElse(throw
+      new IllegalArgumentException(s"stored table '$name': no data file in $dir/$name.parquet"))
     val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(file, conf))
     val footer = try reader.getFooter.getFileMetaData.getSchema finally reader.close()
     val converter = new ParquetToSparkSchemaConverter(spark.sessionState.conf)
@@ -95,6 +87,29 @@ object Crm {
     }
     declared
   }
+
+  /** The data files of stored table `name` in the parquet directory `dir`:
+    * the file `<name>.parquet` itself, or the files of that directory
+    * (ScaleGen's layout) sorted by name, without the `_`/`.`-prefixed
+    * commit markers and checksums; none when the table is absent. A
+    * driver-side listing, no Spark job. */
+  private def dataFiles(spark: SparkSession, dir: String, name: String): Seq[FileStatus] = {
+    val path = new Path(s"$dir/$name.parquet")
+    val all = try path.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(path)
+      catch { case _: java.io.FileNotFoundException => Array.empty[FileStatus] }
+    all.filter(c => c.isFile && !"_.".contains(c.getPath.getName.head)).sortBy(_.getPath.getName).toSeq
+  }
+
+  /** What a build over `dir` reads: (file, size, modification time) of the
+    * data files of every table in [[schemas]] present under `dir`, from the
+    * same listing as [[storedSchema]]. [[graft.BuildOnce]] keys on it, so a
+    * table rewritten in place changes the key. Other locators (`jdbc:`,
+    * `csv:`, `json:`, `orc:`) are not listed: their signature is empty, so
+    * a memo over one keys on the locator's name only. */
+  def signature(spark: SparkSession, dir: String): Seq[(String, Long, Long)] =
+    if (Seq("jdbc:", "csv:", "json:", "orc:").exists(dir.startsWith)) Nil
+    else schemas.keys.toSeq.sorted.flatMap(t => dataFiles(spark, dir, t).map(f =>
+      (s"$t/${f.getPath.getName}", f.getLen, f.getModificationTime)))
 
   /** Raw-table access — the only way the program reads a stored input
     * table — dispatched on the locator: a `jdbc:` URL reads the

@@ -140,12 +140,13 @@ class ArtifactManifestSpec extends SparkSpec {
   test("the gated consumers serve from the persisted artifact: q_tokenize_artifact output is unchanged by memo reuse") {
     // two invocations share ONE build (the path memo): outputs identical
     val dir = "/root/testdata/sf0.001"
-    val a = SparkEntry.queries("q_tokenize_artifact")(spark, dir)
-      .agg(sum(xxhash64(col("doc_id"), col("word_idx"), col("token_idx"),
-        col("token")))).collect()(0).getLong(0)
-    val b = SparkEntry.queries("q_tokenize_artifact")(spark, dir)
-      .agg(sum(xxhash64(col("doc_id"), col("word_idx"), col("token_idx"),
-        col("token")))).collect()(0).getLong(0)
+    def tokens() = ArtifactManifest.fingerprintOf(
+      SparkEntry.queries("q_tokenize_artifact")(spark, dir),
+      Seq(col("doc_id"), col("word_idx"), col("token_idx"), col("token")))
+    val a = tokens()
+    val art = QueryShared.bpeVocabArtifact(spark, dir)
+    val b = tokens()
     assert(a === b)
+    assert(QueryShared.bpeVocabArtifact(spark, dir) === art)
   }
 }

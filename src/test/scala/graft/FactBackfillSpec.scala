@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.Fact
+import graft.operators.{ArtifactManifest, Fact}
 import graft.sources.Crm
 
 /** The bounded-scratch backfill contract (SURVEY §8.8 / VERDICT r10 #1):
@@ -59,12 +59,12 @@ class FactBackfillSpec extends SparkSpec {
 
   test("backfillSlices: crash-and-rerun converges to the clean run, done slices untouched") {
     val (v, iv, t, c, p, vd, l) = inputs
-    def checksum(dir: String) =
-      spark.read.parquet(dir).agg(
-        count(lit(1)),
-        sum(xxhash64(col("id_venda"), col("id_produto"))),
-        sum(xxhash64(floor(col("valor_final") * 100 + 0.5),
-          floor(col("custo_total_item") * 10000 + 0.5)))).collect()(0)
+    def checksum(dir: String) = {
+      val df = spark.read.parquet(dir)
+      (ArtifactManifest.fingerprintOf(df, Seq(col("id_venda"), col("id_produto"))),
+        ArtifactManifest.fingerprintOf(df, Seq(floor(col("valor_final") * 100 + 0.5),
+          floor(col("custo_total_item") * 10000 + 0.5))))
+    }
 
     val clean = java.nio.file.Files.createTempDirectory("bf_clean").toString
     val ranClean = Fact.backfillSlices(v, iv, t, c, p, vd, l, 4, clean)
@@ -89,7 +89,7 @@ class FactBackfillSpec extends SparkSpec {
     mtimes01.foreach { case (path, mt) =>
       assert(new java.io.File(path).lastModified === mt, s"$path was rewritten")
     }
-    assert(checksum(crashed).toSeq === checksum(clean).toSeq)
+    assert(checksum(crashed) === checksum(clean))
     // and a third run over the now-complete sink is a no-op
     assert(Fact.backfillSlices(v, iv, t, c, p, vd, l, 4, crashed).isEmpty)
     rmRec(new java.io.File(clean)); rmRec(new java.io.File(crashed))

@@ -13,7 +13,7 @@ import graft.sources.Crm
 /** The program's results do not depend on the caller's session: the same
   * build and the same entries on a session with ANSI on and a non-UTC
   * zone (America/Sao_Paulo, three hours west of UTC) give the rows the
-  * harness session (ANSI off, UTC) gives. Each plan carries its own date,
+  * harness session (Spark's defaults, in the JVM's zone) gives. Each plan carries its own date,
   * overflow and time-zone semantics, so no entry sets a session conf.
   */
 class SessionIndependenceSpec extends SparkSpec {

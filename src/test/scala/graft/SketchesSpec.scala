@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import graft.functions.GraftFunctions
 import graft.operators.Sketches
 
 class SketchesSpec extends SparkSpec {
@@ -41,7 +42,7 @@ class SketchesSpec extends SparkSpec {
     // direct per-day estimate over the same items — must be IDENTICAL
     // (register merge by max is lossless)
     val direct = Sketches.hllDistinct(
-      df.select(date_trunc("day", $"ts").as("d"), $"user_id".cast("string").as("u")),
+      df.select(GraftFunctions.truncUtc("day", $"ts").as("d"), $"user_id".cast("string").as("u")),
       $"d", $"u").orderBy($"grp").collect()
       .map(r => (r.getLong(1), r.getDouble(2)))
     assert(merged.toSeq === direct.toSeq)

@@ -5,8 +5,8 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all specs — one JVM-wide session (ScalaTest
-  * runs suites in the same forked JVM), configured like graft.Verify:
-  * non-ANSI (F13 null-on-parse-failure), UTC, small shuffle fan-out.
+  * runs suites in the same forked JVM) on Spark's default ANSI and time-zone
+  * settings, as graft.Verify runs, with a small shuffle fan-out.
   */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
@@ -19,8 +19,6 @@ object SparkSpec {
     val s = SparkSession.builder()
       .master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")

@@ -9,7 +9,7 @@ SparkEntry.queries:
   - the primary entry function(s) it drives (operators.X.y / streaming.X.y
     / functions.X.y / Warehouse.* / sources.*), with the `def` signature
     looked up from the source file
-  - which committed SCALE_PROBE_*.json files carry scale evidence naming
+  - which committed history/SCALE_PROBE_*.json files carry scale evidence naming
     the query or its entry function
 
 and rewrites the section between the OPERATOR-INDEX markers in README.md.
@@ -25,6 +25,7 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 ENTRY = os.path.join(ROOT, "src/main/scala/graft/SparkEntry.scala")
 README = os.path.join(ROOT, "README.md")
 SRC = os.path.join(ROOT, "src/main/scala/graft")
+HISTORY = os.path.join(ROOT, "history")
 
 START = "<!-- OPERATOR-INDEX-START (generated by tools/gen_readme_index.py; do not hand-edit) -->"
 END = "<!-- OPERATOR-INDEX-END -->"
@@ -163,13 +164,13 @@ def find_signature(qualified):
 def probe_evidence():
     """query/function name -> sorted probe files mentioning it."""
     out = {}
-    for f in sorted(os.listdir(ROOT)):
+    for f in sorted(os.listdir(HISTORY)):
         if not (f.startswith("SCALE_PROBE") and f.endswith(".json")):
             continue
-        with open(os.path.join(ROOT, f), encoding="utf-8") as fh:
+        with open(os.path.join(HISTORY, f), encoding="utf-8") as fh:
             content = fh.read()
         for tok in set(re.findall(r"\bq_\w+", content)):
-            out.setdefault(tok, []).append(f)
+            out.setdefault(tok, []).append("history/" + f)
     return out
 
 
@@ -244,7 +245,7 @@ def main():
         if not comment and doc_fallback:
             comment = doc_fallback
         ev = probes.get(name, [])
-        ev_cell = ", ".join(f"[{e.replace('SCALE_PROBE_', '').replace('.json', '')}]({e})"
+        ev_cell = ", ".join(f"[{os.path.basename(e).replace('SCALE_PROBE_', '').replace('.json', '')}]({e})"
                             for e in ev) or "sf0.01 oracle gate"
         desc = (comment[:140] + "…") if len(comment) > 140 else comment
         if not desc:
