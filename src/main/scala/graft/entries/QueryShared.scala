@@ -76,9 +76,10 @@ private[graft] object QueryShared {
     * through [[operators.ArtifactManifest.check]] — the corpus it serves
     * must fingerprint-match the corpus the artifact was trained on, or the
     * query throws. Disk paths (not cached frames): a caller that clears
-    * the cache cannot drop them, and a rewritten corpus gets a new path. */
+    * the cache cannot drop them, and a rewritten corpus gets a new path
+    * (the superseded one is deleted). */
   def bpeVocabArtifact(s: SparkSession, dir: String): String =
-    BuildOnce("bpe_vocab", s, dir)((_: String) => Nil) {
+    BuildOnce.path("bpe_vocab", s, dir) {
       val docs = Crm.table(s, dir, "documents")
       val art = tempDir("bpe_vocab")
       operators.TextAnalysis.writeBpeVocab(docs, "doc_id", "text", rounds = 5, art)
@@ -87,7 +88,7 @@ private[graft] object QueryShared {
     }
 
   def ivfPqIndexArtifact(s: SparkSession, dir: String): String =
-    BuildOnce("ivfpq_index", s, dir)((_: String) => Nil) {
+    BuildOnce.path("ivfpq_index", s, dir) {
       val emb = Crm.table(s, dir, "embeddings")
       val idx = tempDir("ivfpq_index")
       // reuse the fixed-K coarse quantizer (identical train:

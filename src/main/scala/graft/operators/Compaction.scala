@@ -19,7 +19,7 @@ import org.apache.hadoop.fs.Path
   *
   * Contract (the part a plain `.repartition().write()` doesn't give you):
   *  - **Size-aware**: output file count is computed from the INPUT's real
-  *    bytes (`planOutputFiles`), not guessed; compressed size in ≈ size
+  *    bytes ([[Parallelism.widthFor]]), not guessed; compressed size in ≈ size
   *    out for a rewrite of the same codec.
   *  - **Proven content-preserving, THEN published** (r15, ADVICE r14): the
   *    input's order-free fingerprint (count + xxhash64 multiset sum over
@@ -80,13 +80,6 @@ object Compaction {
       val n = st.getPath.getName
       st.isDirectory && !n.startsWith("_") && !n.startsWith(".")
     }
-  }
-
-  /** ceil(totalBytes / targetBytes), min 1 — the bin count a same-codec
-    * rewrite needs for ~target-sized output files. */
-  def planOutputFiles(totalBytes: Long, targetFileBytes: Long): Int = {
-    require(targetFileBytes > 0, s"targetFileBytes must be > 0: $targetFileBytes")
-    math.max(1L, (totalBytes + targetFileBytes - 1) / targetFileBytes).toInt
   }
 
   /** `outDir` must be a different directory from `inDir` and neither may
@@ -150,7 +143,8 @@ object Compaction {
         nIn, skipped = true)
     }
 
-    val nOut = planOutputFiles(bytesIn, targetFileBytes)
+    // the bin count a same-codec rewrite needs for ~target-sized files
+    val nOut = Parallelism.widthFor(bytesIn, targetFileBytes, 1, Int.MaxValue)
     val packed = sortCol match {
       case Some(c) if nOut > 1 =>
         in.repartitionByRange(nOut, col(c)).sortWithinPartitions(col(c))
@@ -221,19 +215,6 @@ object Compaction {
     go(p, "").sorted
   }
 
-  /** Run `f` over `items` with at most `parallelism` in flight — the fleet
-    * compactor's bound (one rewrite's bytes per slot, never the table's). */
-  private def runBounded[A, B](items: Seq[A], parallelism: Int)(f: A => B): Seq[B] =
-    if (parallelism <= 1) items.map(f)
-    else {
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.Duration
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(parallelism)
-      implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
-      try Await.result(Future.traverse(items)(a => Future(f(a))), Duration.Inf)
-      finally pool.shutdown()
-    }
-
   /** Per-partition compaction of a Hive-partitioned dataset (`key=value`
     * dirs, nested to any depth): each LEAF partition directory is compacted
     * INDEPENDENTLY into the same relative layout under `outDir` — the shape
@@ -245,7 +226,9 @@ object Compaction {
     * too: re-running after one partition received new data rewrites ONLY
     * that partition (`skipped` everywhere else). `parallelism` bounds how
     * many leaf rewrites run concurrently (default 1 — the single-runner
-    * nightly; a fleet driver raises it to its memory budget).
+    * nightly; a fleet driver raises it to its memory budget — one
+    * rewrite's bytes per slot, never the table's). A failed leaf fails the
+    * call only once every other leaf rewrite has finished.
     *
     * After the per-leaf pass, a DATASET-LEVEL rollup manifest lands at
     * `outDir`: the SUM of the leaf manifests — exact, by the fingerprint's
@@ -271,10 +254,10 @@ object Compaction {
       if (partitions.isEmpty) Map.empty
       else parts.flatMap(part =>
         ArtifactManifest.read(s"$outDir/$part", spark).map(part -> _)).toMap
-    val stats = runBounded(parts, parallelism) { part =>
+    val stats = Parallelism.inParallel(spark, parallelism)(parts.map { part => () =>
       part -> compact(spark, s"$inDir/$part", s"$outDir/$part",
         targetFileBytes, sortCol)
-    }
+    }: _*)
     val newLeaf = parts.map { part =>
       ArtifactManifest.read(s"$outDir/$part", spark).getOrElse(
         throw new IllegalStateException(s"leaf $part compacted but has no manifest"))

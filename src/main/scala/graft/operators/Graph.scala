@@ -635,12 +635,8 @@ object Graph {
     // ceil(2·|pairs bytes| / 128 KB) clamped to [1, 16] — edge-byte-derived
     // so it stays a no-op at scale, where the 32 MB main derivation
     // already exceeds any floor.
-    val voteFloor = {
-      val raw = pairs.queryExecution.optimizedPlan.stats.sizeInBytes
-      val b = if (raw.isValidLong && raw.toLong > 0L &&
-        raw.toLong < Long.MaxValue / 2) raw.toLong else 0L
-      math.min(16L, math.max(1L, 2L * b / (128L << 10))).toInt
-    }
+    val voteFloor =
+      Parallelism.widthFor(2L * Parallelism.planBytes(pairs).getOrElse(0L), 128L << 10, 1, 16)
     // per-round exchanges sized to the pair table (see pagerankRun)
     Parallelism.withInputSizedShuffle(Seq(pairs, labels), floorN = voteFloor) {
     val ckRoot = IterState.root(checkpointDir)

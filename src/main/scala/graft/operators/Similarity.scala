@@ -1066,7 +1066,7 @@ object Similarity {
     // summed task time at 32 cores: driver-gap-bound, not compute-bound).
     // Outputs are byte-identical: same plans, same writes, just submitted
     // from two threads.
-    graft.streaming.IdempotentFold.inParallel(spark)(
+    Parallelism.inParallel(spark)(
       () => {
         coarse.getOrElse(kmeansFixedK(corpus, kCoarse, coarseIters))
           .write.mode("overwrite").parquet(s"$dir/cents.parquet")

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.QueryShared.tempDir
-import graft.operators.{ArtifactManifest, Dedup}
+import graft.operators.{ArtifactManifest, Dedup, Parallelism}
 import graft.sources.Crm
 
 /** Streaming refresh of the persisted MinHash-LSH signature artifact
@@ -74,7 +74,7 @@ object ArtifactRefresh {
     // sidecar, delta files) — overlap them (guide §2.6); the stream starts
     // only after all three have landed
     val deltaDir = tempDir("stream_refresh_delta")
-    IdempotentFold.inParallel(s)(
+    Parallelism.inParallel(s)(
       () => Dedup.writeSignatureArtifact(base, "doc_id", "text", art),
       () => ArtifactManifest.write(art, base.select(col("doc_id"), col("text")),
         Seq(col("doc_id"), col("text"))),
@@ -106,7 +106,7 @@ object ArtifactRefresh {
     val art = tempDir("cstream_art")
     // artifact tables and manifest sidecar are independent — overlap
     // (guide §2.6), same as gatedRefresh
-    IdempotentFold.inParallel(s)(
+    Parallelism.inParallel(s)(
       () => Dedup.writeSignatureArtifact(base, "doc_id", "text", art),
       () => ArtifactManifest.write(art, base.select(dCols: _*), dCols))
     val pairsDir = tempDir("cstream_pairs")

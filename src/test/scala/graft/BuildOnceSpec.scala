@@ -61,9 +61,11 @@ class BuildOnceSpec extends SparkSpec {
     val dir = copyOfSf0001()
     val s = spark.newSession()
     val first = QueryShared.bpeVocabArtifact(s, dir)
+    assert(new File(first).isDirectory)
     rewrite(dir, "documents")(_.filter(col("doc_id") % 2 === 0))
     val second = QueryShared.bpeVocabArtifact(s, dir)
     assert(second !== first)
+    assert(!new File(first).exists, "the superseded vocab directory was left on disk")
     ArtifactManifest.check(second, Crm.table(s, dir, "documents"), Seq(col("doc_id"), col("text")))
   }
 

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.Compaction
+import graft.operators.{Compaction, Parallelism}
 
 /** Pins the small-file compaction contract (r14): size-aware bin-packing,
   * proven content preservation, idempotent re-runs, and the range variant's
@@ -18,13 +18,15 @@ class CompactionSpec extends SparkSpec {
     (1 to n).map(i => (i.toLong, s"doc $i body ${"x" * (i % 97)}", i % 7))
       .toDF("doc_id", "text", "grp")
 
-  test("planOutputFiles is ceil(bytes/target), min 1") {
-    assert(Compaction.planOutputFiles(0L, 100L) == 1)
-    assert(Compaction.planOutputFiles(1L, 100L) == 1)
-    assert(Compaction.planOutputFiles(100L, 100L) == 1)
-    assert(Compaction.planOutputFiles(101L, 100L) == 2)
-    assert(Compaction.planOutputFiles(1000L, 100L) == 10)
-    intercept[IllegalArgumentException](Compaction.planOutputFiles(10L, 0L))
+  test("output file count is ceil(bytes/target), min 1") {
+    // the count compact() and FoldCompaction ask of widthFor
+    def files(bytes: Long, target: Long) = Parallelism.widthFor(bytes, target, 1, Int.MaxValue)
+    assert(files(0L, 100L) == 1)
+    assert(files(1L, 100L) == 1)
+    assert(files(100L, 100L) == 1)
+    assert(files(101L, 100L) == 2)
+    assert(files(1000L, 100L) == 10)
+    intercept[IllegalArgumentException](files(10L, 0L))
   }
 
   test("bin-pack merges a scattered dataset, preserving content exactly") {
@@ -115,6 +117,33 @@ class CompactionSpec extends SparkSpec {
     assert(!stats2("grp=3").skipped)
     assert((0 to 6).filter(_ != 3).forall(g => stats2(s"grp=$g").skipped))
     assert(spark.read.parquet(out).count() == 702)
+  }
+
+  test("a failed leaf fails compactPartitioned only once no leaf rewrite is running") {
+    val in = tmp("compact_fail_in"); val out = tmp("compact_fail_out")
+    // g=2 is big enough that its rewrite outlasts g=1's failure by seconds
+    spark.range(3000000).selectExpr("id", "id % 1000 as v").write.parquet(s"$in/g=2")
+    // g=1 holds a file that is not parquet: its rewrite fails at once
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$in/g=1"))
+    java.nio.file.Files.write(java.nio.file.Paths.get(s"$in/g=1/part-0.parquet"),
+      "not parquet".getBytes("UTF-8"))
+    val sc = spark.sparkContext
+    val group = "compact-fail-fast"
+    // pool threads inherit the caller's job group
+    sc.setJobGroup(group, group)
+    try intercept[Exception](
+      Compaction.compactPartitioned(spark, in, out, 64L << 20, parallelism = 2))
+    finally sc.clearJobGroup()
+    val running = sc.statusTracker.getJobIdsForGroup(group).filter(id =>
+      sc.statusTracker.getJobInfo(id).exists(_.status == org.apache.spark.JobExecutionStatus.RUNNING))
+    assert(running.isEmpty, s"jobs still running after the call threw: ${running.toSeq}")
+    // the good leaf's rewrite finished before the call threw, and nothing
+    // lands afterwards that a caller retrying at once could race
+    val manifest = new java.io.File(s"$out/g=2/_input_manifest.json")
+    assert(manifest.exists, "g=2's rewrite was still running when the call threw")
+    val landed = manifest.lastModified
+    Thread.sleep(1000)
+    assert(manifest.lastModified === landed)
   }
 
   test("compact refuses inDir == outDir and nested in/out dirs (r15 guard)") {

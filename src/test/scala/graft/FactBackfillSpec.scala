@@ -111,6 +111,24 @@ class FactBackfillSpec extends SparkSpec {
       Fact.suggestSlices(Seq(a, b), bytes))
   }
 
+  test("suggestSlices: an input of unknown size adds no slices") {
+    // an RDD-backed frame: Catalyst sizes it at Long.MaxValue ("unknown")
+    val rdd = spark.sparkContext.parallelize(Seq(org.apache.spark.sql.Row(1L)))
+    val unknown = spark.createDataFrame(rdd,
+      new org.apache.spark.sql.types.StructType().add("x", "long"))
+    assert(Fact.suggestSlices(Seq(unknown), 1L << 30) === 1)
+    assert(Fact.suggestSlices(Seq(unknown, unknown), 1L << 30) === 1)
+    // beside a file input, K is sized from the file bytes alone
+    val a = spark.read.parquet(s"$dir/orders.parquet")
+    val aBytes = new java.io.File(s"$dir/orders.parquet").length
+    assert(Fact.suggestSlices(Seq(a, unknown), aBytes) === 4)
+    // the loop sizing reads the same input as unknown and leaves the width alone
+    val width = spark.conf.get("spark.sql.shuffle.partitions")
+    graft.operators.Parallelism.withInputSizedShuffle(Seq(unknown)) {
+      assert(spark.conf.get("spark.sql.shuffle.partitions") === width)
+    }
+  }
+
   test("slice filter sits over the scan — no shuffle feeds it") {
     val (v, iv, t, c, p, vd, l) = inputs
     val plan = Fact.fatoVendasSlice(v, iv, t, c, p, vd, l, 4, 1)

@@ -379,23 +379,30 @@ class FoldCompactionSpec extends SparkSpec {
     assertConverged()
   }
 
-  test("foldSession: a caller-set shuffle-partition override survives; default stays 8") {
-    assert(IdempotentFold.foldSession(spark, Some(5))
-      .conf.get("spark.sql.shuffle.partitions") === "5")
-    assert(IdempotentFold.foldSession(spark, None)
-      .conf.get("spark.sql.shuffle.partitions") === "8")
-    // and the override changes nothing observable: same refresh, same pairs
+  test("fold session width: a caller override survives; default stays 8") {
     val docs = spark.read.parquet(s"$dir/documents.parquet")
     val base = docs.filter(col("doc_id") % 4 =!= 0)
     val delta = docs.filter(col("doc_id") % 4 === 0)
     val deltaDir = splitDelta(delta)
-    def runWith(sp: Option[Int]): Seq[(Long, Long)] = {
+    // the fold's stream pins its session's width in the checkpoint's first
+    // offset log entry; returns that width and the emitted pairs
+    def runWith(sp: Option[Int]): (String, Seq[(Long, Long)]) = {
       val art = buildArtifact(base)
       val pairs = tmp("foldc_sp_pairs")
+      val ck = tmp("foldc_sp_ck")
       ArtifactRefresh.refreshFromStream(spark, deltaDir, "doc_id", "text",
-        art, pairs, tmp("foldc_sp_ck"), shufflePartitions = sp)
-      pairsMultiset(pairs)
+        art, pairs, ck, shufflePartitions = sp)
+      val offsets = new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(ck, "offsets", "0")), "UTF-8")
+      val width = """"spark\.sql\.shuffle\.partitions":"(\d+)"""".r
+        .findFirstMatchIn(offsets).map(_.group(1)).getOrElse(offsets)
+      (width, pairsMultiset(pairs))
     }
-    assert(runWith(Some(5)) === runWith(None))
+    val (overridden, pairs5) = runWith(Some(5))
+    val (default, pairsDefault) = runWith(None)
+    assert(overridden === "5")
+    assert(default === "8")
+    // and the override changes nothing observable: same refresh, same pairs
+    assert(pairs5 === pairsDefault)
   }
 }

@@ -3,7 +3,7 @@ package graft
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 
-import graft.operators.ArtifactManifest
+import graft.operators.{ArtifactManifest, Parallelism}
 import graft.streaming.{ArtifactRefresh, IdempotentFold}
 
 /** Pins the run-identity contract (ADVICE r16): UUID-keyed 64-bit run tags,
@@ -108,10 +108,11 @@ class IdempotentFoldSpec extends SparkSpec {
 
   test("per-batch shuffle self-sizing: derived tracks input bytes, explicit override wins (VERDICT r16 #5)") {
     // pure derivation: floor for tiny, linear ramp, cap for pathological
-    assert(IdempotentFold.deriveShufflePartitions(0L) === 8)
-    assert(IdempotentFold.deriveShufflePartitions(64L << 20) === 8)
-    assert(IdempotentFold.deriveShufflePartitions((64L << 20) * 100) === 100)
-    assert(IdempotentFold.deriveShufflePartitions(Long.MaxValue / 2) === 2048)
+    def derive(bytes: Long) = Parallelism.widthFor(bytes, 64L << 20, 8, 2048)
+    assert(derive(0L) === 8)
+    assert(derive(64L << 20) === 8)
+    assert(derive((64L << 20) * 100) === 100)
+    assert(derive(Long.MaxValue / 2) === 2048)
 
     // a parquet-backed batch sizes by its real file bytes: same data,
     // larger relative batch (smaller per-partition target) -> more
@@ -124,7 +125,7 @@ class IdempotentFoldSpec extends SparkSpec {
       .write.mode("overwrite").parquet(d2)
     def bytesOf(p: String) = fsOf(p).listStatus(new Path(p))
       .filter(_.isFile).map(_.getLen).sum
-    val s = IdempotentFold.foldSession(spark, None)
+    val s = Parallelism.isolated(spark, 8)
     val df = s.read.parquet(d)
     val whole = IdempotentFold.sizeBatchShuffle(df, None, targetBytes = bytesOf(d))
     assert(whole === 8, "a batch at/below one target-partition stays at the floor")
@@ -139,6 +140,10 @@ class IdempotentFoldSpec extends SparkSpec {
     // explicit override wins and the per-batch path never touches conf
     assert(IdempotentFold.sizeBatchShuffle(df, Some(5)) === 5)
     assert(s.conf.get("spark.sql.shuffle.partitions") === bigger.toString)
+    // a batch of unknown size (an RDD-backed frame) gets the floor
+    val rdd = s.sparkContext.parallelize(Seq(org.apache.spark.sql.Row(1L)))
+    val unknown = s.createDataFrame(rdd, new org.apache.spark.sql.types.StructType().add("x", "long"))
+    assert(IdempotentFold.sizeBatchShuffle(unknown, None) === 8)
   }
 
   test("pruneMarkers prunes the named runs at or below the horizon") {

@@ -10,6 +10,8 @@ import scala.jdk.CollectionConverters._
   * knob has to be added here, with its reason, before this spec passes;
   * a knob that loses its last reader has to be dropped from here.
   * Per-experiment switches belong in the engine's own `SQLConf`, not here.
+  * The same source scan keeps the session contract and the sizing
+  * machinery each in its one place.
   */
 class KnobGuardSpec extends AnyFunSuite {
 
@@ -54,6 +56,16 @@ class KnobGuardSpec extends AnyFunSuite {
       contract.findAllIn(new String(Files.readAllBytes(p), "UTF-8")).map(m => s"$p: $m").toSeq
     }
     assert(found.isEmpty, s"session-contract confs named in src/main/scala: $found")
+  }
+
+  test("only Parallelism.scala reads plan statistics, clones a session or builds a thread pool") {
+    // turning bytes into a width, and the session clones and pools that
+    // widths live in, are written once in graft.operators.Parallelism
+    val owned = """optimizedPlan\.stats|newSession\(\)|Executors\.new\w*|ExecutionContext\.from\w*""".r
+    val found = mainSources.filterNot(_.getFileName.toString == "Parallelism.scala").flatMap { p =>
+      owned.findAllIn(new String(Files.readAllBytes(p), "UTF-8")).map(m => s"$p: $m").toSeq
+    }
+    assert(found.isEmpty, s"use graft.operators.Parallelism instead: $found")
   }
 
   test("build.sbt and run_graft.sh read exactly the listed environment names") {

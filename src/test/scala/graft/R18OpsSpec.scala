@@ -3,13 +3,12 @@ package graft
 import java.nio.file.Files
 
 import graft.operators.Parallelism
-import graft.streaming.{EventsStream, IdempotentFold}
 
-/** Focused specs for the r18 optimization internals: the per-caller loop
-  * width floor + reentrant session lock (ADVICE r17 medium/low), the
-  * bounded-pool overlap of independent per-batch side-effects (VERDICT r17
-  * #1), and the derived stream-join state width (VERDICT r17 #6
-  * done-condition).
+/** Focused specs for the r18 optimization internals, now all members of
+  * [[graft.operators.Parallelism]]: the per-caller loop width floor +
+  * reentrant session lock (ADVICE r17 medium/low), the bounded-pool
+  * overlap of independent driver-side work (VERDICT r17 #1), and the
+  * derived stream-join state width (VERDICT r17 #6 done-condition).
   */
 class R18OpsSpec extends SparkSpec {
   import spark.implicits._
@@ -42,13 +41,13 @@ class R18OpsSpec extends SparkSpec {
 
   test("inParallel runs every task and propagates the first failure's cause") {
     val hits = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-    IdempotentFold.inParallel(spark)(
+    Parallelism.inParallel(spark)(
       () => { hits.add(1): Unit },
       () => { hits.add(2): Unit },
       () => { hits.add(3): Unit })
     assert(hits.size === 3)
     val e = intercept[IllegalStateException] {
-      IdempotentFold.inParallel(spark)(
+      Parallelism.inParallel(spark)(
         () => (),
         () => throw new IllegalStateException("boom"))
     }
@@ -58,22 +57,53 @@ class R18OpsSpec extends SparkSpec {
   test("inParallel runs a single task on the caller thread") {
     val t = Thread.currentThread()
     var ran: Thread = null
-    IdempotentFold.inParallel(spark)(() => { ran = Thread.currentThread() })
+    Parallelism.inParallel(spark)(() => { ran = Thread.currentThread() })
     assert(ran eq t)
   }
 
-  test("derivedStatePartitions sizes from input bytes with floor and cap") {
-    val dir = Files.createTempDirectory("dsp")
-    Files.write(dir.resolve("a.bin"), new Array[Byte](1000))
-    Files.write(dir.resolve("b.bin"), new Array[Byte](1000))
+  test("stream-join state width sizes from input bytes with floor and cap") {
+    // the stream-join gates' rule: planBytes of the stored events at 64 MB
+    // per partition, clamped to [2, 2048]
+    val dir = Files.createTempDirectory("dsp").resolve("t").toString
+    spark.range(1000).write.parquet(dir)
+    val fileBytes = new java.io.File(dir).listFiles()
+      .filter(_.getName.endsWith(".parquet")).map(_.length).sum
+    // a file-backed plan's size is its files' bytes
+    assert(Parallelism.planBytes(spark.read.parquet(dir)) === Some(fileBytes))
+    def width(bytes: Long, targetBytes: Long = 64L << 20, cap: Int = 2048) =
+      Parallelism.widthFor(bytes, targetBytes, 2, cap)
     // tiny input derives the floor (the gate's measured-optimal narrow width)
-    assert(EventsStream.derivedStatePartitions(spark, s"$dir/*.bin") === 2)
+    assert(width(2000L) === 2)
     // a backlog derives its own scale: ceil(2000 / 512) = 4
-    assert(EventsStream.derivedStatePartitions(spark, s"$dir/*.bin", targetBytes = 512L) === 4)
+    assert(width(2000L, targetBytes = 512L) === 4)
     // the cap bounds a pathological burst
-    assert(EventsStream.derivedStatePartitions(spark, s"$dir/*.bin", targetBytes = 1L, cap = 8) === 8)
-    // no matches → the floor, not a failure
-    assert(EventsStream.derivedStatePartitions(spark, s"$dir/none/*.bin") === 2)
+    assert(width(2000L, targetBytes = 1L, cap = 8) === 8)
+    // no bytes → the floor, not a failure
+    assert(width(0L) === 2)
+    // an input of unknown size has no bytes
+    val rdd = spark.sparkContext.parallelize(Seq(org.apache.spark.sql.Row(1L)))
+    assert(Parallelism.planBytes(spark.createDataFrame(rdd,
+      new org.apache.spark.sql.types.StructType().add("x", "long"))) === None)
+  }
+
+  test("inParallel returns results in task order, runs at most bound at once, waits before rethrowing") {
+    val live = new java.util.concurrent.atomic.AtomicInteger()
+    val peak = new java.util.concurrent.atomic.AtomicInteger()
+    val out = Parallelism.inParallel(spark, bound = 2)((1 to 6).map { i => () =>
+      peak.accumulateAndGet(live.incrementAndGet(), math.max): Unit
+      Thread.sleep(50)
+      live.decrementAndGet()
+      i * 10
+    }: _*)
+    assert(out === (1 to 6).map(_ * 10))
+    assert(peak.get <= 2)
+    val slowDone = new java.util.concurrent.atomic.AtomicBoolean()
+    intercept[IllegalStateException] {
+      Parallelism.inParallel(spark)(
+        () => throw new IllegalStateException("fast failure"),
+        () => { Thread.sleep(500); slowDone.set(true) })
+    }
+    assert(slowDone.get, "the call threw while a task was still running")
   }
 
   test("writeIvfPqIndex with a pre-trained coarse table writes an identical artifact") {
