@@ -44,10 +44,12 @@ object ArtifactManifest {
     * at-least-once delivery. The run tag matters because batch ids restart
     * at 0 under a new checkpoint (ADVICE r15): without it, a finished
     * run's final stamp could silently swallow a NEW run's same-numbered
-    * first batch. */
+    * first batch. A compaction's output also records the column its
+    * rewrite sorted by, if any ([[graft.operators.Compaction]]). */
   final case class Manifest(nRows: Long, inputHash: Long,
                             foldBatch: Option[Long],
-                            foldRun: Option[String] = None)
+                            foldRun: Option[String] = None,
+                            sortCol: Option[String] = None)
 
   /** The order-free content fingerprint: (row count, xxhash64 multiset sum
     * over `cols`). Public so consumers that must compare fingerprints
@@ -68,19 +70,22 @@ object ArtifactManifest {
   }
 
   private def render(n: Long, h: Long, foldBatch: Option[Long],
-                     foldRun: Option[String] = None): String = {
+                     foldRun: Option[String] = None,
+                     sortCol: Option[String] = None): String = {
     val stamp = foldBatch.map(b => s""","fold_batch":$b""").getOrElse("") +
-      foldRun.map(r => s""","fold_run":"$r"""").getOrElse("")
+      foldRun.map(r => s""","fold_run":"$r"""").getOrElse("") +
+      sortCol.map(c => s""","sort_col":"$c"""").getOrElse("")
     s"""{"n_rows":$n,"input_hash":$h$stamp}"""
   }
 
   private val ManifestRe =
     ("""\{"n_rows":(-?\d+),"input_hash":(-?\d+)""" +
-      """(?:,"fold_batch":(-?\d+))?(?:,"fold_run":"([0-9a-f]+)")?\}""").r
+      """(?:,"fold_batch":(-?\d+))?(?:,"fold_run":"([0-9a-f]+)")?""" +
+      """(?:,"sort_col":"([^"]+)")?\}""").r
 
   private def parse(s: String, where: String): Manifest = s.trim match {
-    case ManifestRe(n, h, fb, fr) =>
-      Manifest(n.toLong, h.toLong, Option(fb).map(_.toLong), Option(fr))
+    case ManifestRe(n, h, fb, fr, sc) =>
+      Manifest(n.toLong, h.toLong, Option(fb).map(_.toLong), Option(fr), Option(sc))
     case other =>
       throw new IllegalArgumentException(
         s"unparseable input manifest at $where: $other")
@@ -150,14 +155,24 @@ object ArtifactManifest {
 
   /** Publish an ALREADY-COMPUTED fingerprint (no scan) — for callers that
     * proved content preservation in memory first and only then land the
-    * manifest (Compaction's publish gate, the partitioned rollup). */
+    * manifest (Compaction's publish gate, the partitioned rollup), with the
+    * column the rewrite sorted by, if any. */
   def writeValues(artifactDir: String, nRows: Long, inputHash: Long,
-                  spark: SparkSession, foldBatch: Option[Long] = None,
-                  foldRun: Option[String] = None): Unit = {
+                  spark: SparkSession, sortCol: Option[String] = None): Unit = {
     val hconf = spark.sparkContext.hadoopConfiguration
     val (fs, p) = manifestPath(artifactDir, hconf)
-    atomicWrite(fs, p, render(nRows, inputHash, foldBatch, foldRun), hconf)
+    atomicWrite(fs, p, render(nRows, inputHash, None, None, sortCol), hconf)
   }
+
+  /** Whether the manifest stored at `dir` records `fingerprint` and
+    * `sortCol`: the skip test of an idempotent rewrite. A missing or
+    * unreadable manifest is no match, so the caller rewrites. No data
+    * scan. */
+  private[graft] def matches(dir: String, spark: SparkSession, fingerprint: (Long, Long),
+                             sortCol: Option[String] = None): Boolean =
+    try read(dir, spark).exists(m =>
+      (m.nRows, m.inputHash) == fingerprint && m.sortCol == sortCol)
+    catch { case _: Exception => false }
 
   /** Verify the corpus about to be served equals the corpus the artifact
     * was trained on; throws with both fingerprints on any mismatch (a

@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import org.apache.hadoop.fs.Path
 
+import graft.sources.Crm
+
 /** Small-file compaction — the OPTIMIZE-style dataset rewrite every
   * streaming ingest eventually needs (§7.5 extension; no reference
   * counterpart — the reference's psycopg2 sink has no file layout at all).
@@ -28,10 +30,11 @@ import org.apache.hadoop.fs.Path
   *    manifest land at the output. A lossy rewrite — or a crash anywhere
   *    before the compare passes — leaves NO manifest, so the next run can
   *    never mistake a corrupt output for a finished one.
-  *  - **Idempotent**: the published manifest records the input fingerprint;
-  *    a re-run whose current input matches it skips the rewrite entirely
-  *    (the nightly-cron shape — re-running a compaction job must be a
-  *    no-op, exactly like `Fact.backfillSlices`' `_SUCCESS` probing). The
+  *  - **Idempotent**: the published manifest records the input fingerprint
+  *    and the sort column; a re-run whose current input and `sortCol` match
+  *    it skips the rewrite entirely (the nightly-cron shape — re-running a
+  *    compaction job must be a no-op, exactly like `Fact.backfillSlices`'
+  *    `_SUCCESS` probing). The
   *    skip decision and the stats row count reuse the ONE fingerprint scan
   *    — no separate `count()` actions (ADVICE r14 low).
   *  - **Clustering-preserving (optional)**: with `sortCol` the rewrite
@@ -45,12 +48,17 @@ import org.apache.hadoop.fs.Path
   *    recurses to the LEAF `key=value` directories of arbitrarily nested
   *    layouts and preserves the full relative layout on the output side.
   *
+  * The size, write, read-back and publish steps are ONE private[graft]
+  * step, [[rewrite]], which [[graft.streaming.FoldCompaction]] runs too;
+  * [[compact]] adds the listing, the input fingerprint and the skip.
   * Physical plan: one exchange (round-robin or range) over one scan, then
   * the write — no global sort, no window, no driver-side row movement.
   * The range variant adds Spark's reservoir-sampling pass to pick bounds
-  * (bounded by sampling, not data size). All I/O goes through Hadoop
-  * `FileSystem` resolved from the path, so `file:`/`hdfs:`/`s3a:` dirs
-  * all work (same portability contract as the artifact manifest).
+  * (bounded by sampling, not data size). Which files of a directory are
+  * data is [[graft.sources.Crm.dataFiles]]' rule, and all I/O goes through
+  * the Hadoop `FileSystem` [[graft.sources.Crm.fsFor]] resolves from the
+  * path, so `file:`/`hdfs:`/`s3a:` dirs all work (same portability
+  * contract as the artifact manifest).
   */
 object Compaction {
 
@@ -60,36 +68,13 @@ object Compaction {
                                    nFilesOut: Long, bytesOut: Long,
                                    rows: Long, skipped: Boolean)
 
-  /** Data files under a dataset dir: everything not hidden (`_` metadata
-    * like _SUCCESS/_input_manifest.json, `.` checksums). */
-  private def dataFiles(spark: SparkSession, dir: String) = {
-    val p = new Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.listStatus(p).toSeq.filter { st =>
-      val n = st.getPath.getName
-      st.isFile && !n.startsWith("_") && !n.startsWith(".")
-    }
-  }
-
-  /** Non-hidden sub-directories — a leaf dataset dir must have none. */
-  private def dataSubdirs(spark: SparkSession, dir: String) = {
-    val p = new Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq.filter { st =>
-      val n = st.getPath.getName
-      st.isDirectory && !n.startsWith("_") && !n.startsWith(".")
-    }
-  }
-
   /** `outDir` must be a different directory from `inDir` and neither may
     * nest inside the other: compacting onto the input would read and
     * overwrite the same files mid-job, and a nested output would pollute
     * the other side's listing on the next run. Checked up front so the
     * failure is a clear precondition, not a mid-write stack trace. */
   private def requireDisjoint(spark: SparkSession, inDir: String, outDir: String): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    def qualified(d: String) = { val p = new Path(d); p.getFileSystem(conf).makeQualified(p) }
+    def qualified(d: String) = { val (fs, p) = Crm.fsFor(spark, d); fs.makeQualified(p) }
     val (qi, qo) = (qualified(inDir), qualified(outDir))
     require(qi != qo, s"compaction outDir must differ from inDir: $qi")
     def nests(a: Path, b: Path): Boolean =
@@ -99,83 +84,76 @@ object Compaction {
   }
 
   /** Rewrite `inDir`'s parquet dataset into `outDir` at ~`targetFileBytes`
-    * per file. `sortCol` switches the exchange from round-robin to
-    * range-partition + in-file sort (clustering-preserving mode). The
-    * output is verified against the input's content fingerprint and only
-    * then is the manifest published; a manifest already matching the input
-    * makes the call a no-op. Returns what happened either way. Exactly one
-    * content scan of the input (the fingerprint; the rewrite's own write
-    * re-reads it, as any rewrite must) and one of the output (read-back).
-    * A caller that knows the input's `schema` passes it, and the input is
+    * per file through [[rewrite]], with `sortCol` its clustering column. A
+    * manifest at `outDir` already recording the input's fingerprint and
+    * the same `sortCol` makes the call a no-op. Returns what happened
+    * either way. Exactly one content scan of the input (the fingerprint,
+    * which also gives the stats' row count; the rewrite's own write re-reads
+    * it, as any rewrite must) and one of the output (the read-back). A
+    * caller that knows the input's `schema` passes it, and the input is
     * read without the schema-inference job.
     */
   def compact(spark: SparkSession, inDir: String, outDir: String,
               targetFileBytes: Long, sortCol: Option[String] = None,
               schema: Option[StructType] = None): CompactionStats = {
     requireDisjoint(spark, inDir, outDir)
-    val inFiles = dataFiles(spark, inDir)
-    val subdirs = dataSubdirs(spark, inDir)
+    val (inFiles, subdirs) = Crm.visible(spark, inDir).partition(_.isFile)
     require(subdirs.isEmpty,
       s"$inDir contains sub-directories (${subdirs.map(_.getPath.getName).mkString(", ")}): " +
         "compact() rewrites ONE leaf directory — a nested layout would be " +
         "silently flattened; use compactPartitioned for Hive layouts")
     require(inFiles.nonEmpty, s"$inDir has no data files to compact")
     val in = schema.fold(spark.read)(st => spark.read.schema(st)).parquet(inDir)
-    val cols = in.columns.toSeq.map(col)
     val bytesIn = inFiles.map(_.getLen).sum
+    val fingerprint = contentOf(in)
+    // a missing, unreadable or drifted manifest falls through to a fresh
+    // rewrite — redoing is precisely what compaction should do then
+    val skipped = ArtifactManifest.matches(outDir, spark, fingerprint, sortCol)
+    if (!skipped) rewrite(spark, in, bytesIn, outDir, targetFileBytes, sortCol, fingerprint)
+    val outFiles = Crm.dataFiles(spark, outDir)
+    CompactionStats(inFiles.size.toLong, bytesIn,
+      outFiles.size.toLong, outFiles.map(_.getLen).sum, fingerprint._1, skipped)
+  }
 
-    // ONE fingerprint scan serves the skip decision, the publish gate's
-    // input side, and every stats row count below.
-    val (nIn, hIn) = ArtifactManifest.fingerprintOf(in, cols)
+  /** The order-free content fingerprint of `in` over all its columns
+    * ([[ArtifactManifest.fingerprintOf]]): what [[rewrite]] must preserve
+    * and what its manifest records. One scan. */
+  private[graft] def contentOf(in: DataFrame): (Long, Long) =
+    ArtifactManifest.fingerprintOf(in, in.columns.toSeq.map(col))
 
-    // Idempotent re-run: an output manifest that fingerprint-matches the
-    // CURRENT input means this exact content is already compacted there.
-    // A missing/unreadable/drifted manifest falls through to a fresh
-    // rewrite — redoing is precisely what compaction should do then.
-    val alreadyDone =
-      try ArtifactManifest.read(outDir, spark)
-        .exists(m => m.nRows == nIn && m.inputHash == hIn)
-      catch { case _: Exception => false }
-    if (alreadyDone) {
-      val outFiles = dataFiles(spark, outDir)
-      return CompactionStats(inFiles.size.toLong, bytesIn,
-        outFiles.size.toLong, outFiles.map(_.getLen).sum,
-        nIn, skipped = true)
-    }
-
-    // the bin count a same-codec rewrite needs for ~target-sized files
-    val nOut = Parallelism.widthFor(bytesIn, targetFileBytes, 1, Int.MaxValue)
+  /** The verified rewrite, shared by [[compact]] and
+    * [[graft.streaming.FoldCompaction]]: bin-pack `in` (`inBytes` of data)
+    * into `out` at ~`targetFileBytes` per file, fingerprint the read-back
+    * output, require that it equals `fingerprint` (the caller's
+    * [[contentOf]] `in`), and only then publish the manifest at `out`,
+    * recording `sortCol`. A lossy rewrite, or a crash before the compare
+    * passes, leaves no manifest, so it is never skipped as done.
+    *
+    * The file count is [[Parallelism.widthFor]] of the input's bytes.
+    * Without `sortCol` the merge needs no exchange: the parquet scan
+    * already groups small files into ~maxPartitionBytes splits, so merging
+    * down is a coalesce, and only splitting (more files than scan splits)
+    * shuffles. With `sortCol` the rewrite range-partitions and sorts within
+    * files, so per-file min/max stay disjoint. */
+  private[graft] def rewrite(spark: SparkSession, in: DataFrame, inBytes: Long, out: String,
+                             targetFileBytes: Long, sortCol: Option[String],
+                             fingerprint: (Long, Long)): Unit = {
+    val nOut = Parallelism.widthFor(inBytes, targetFileBytes, 1, Int.MaxValue)
     val packed = sortCol match {
       case Some(c) if nOut > 1 =>
         in.repartitionByRange(nOut, col(c)).sortWithinPartitions(col(c))
       case Some(c) => in.repartition(1).sortWithinPartitions(col(c))
       case None =>
-        // Bin-packing needs NO exchange: the parquet scan already groups
-        // small files into ~maxPartitionBytes splits, so merging down to
-        // nOut is a coalesce — each write task streams a few scan splits
-        // straight to one output file, zero shuffle bytes at any scale.
-        // repartition only when SPLITTING (more output files than scan
-        // splits), where a shuffle is the only way to spread rows.
-        val scanParts = in.rdd.getNumPartitions
-        if (nOut <= scanParts) in.coalesce(nOut) else in.repartition(nOut)
+        if (nOut <= in.rdd.getNumPartitions) in.coalesce(nOut) else in.repartition(nOut)
     }
-    packed.write.mode("overwrite").parquet(outDir)
-
-    // Publish gate (ADVICE r14 high): prove the rewrite content-preserving
-    // IN MEMORY — read-back fingerprint must equal the input's — and only
-    // then land the manifest. A lossy rewrite, or a crash before this
-    // point, leaves no manifest, so it can never be skipped as "done".
+    packed.write.mode("overwrite").parquet(out)
+    val (nIn, hIn) = fingerprint
     val (nOutRows, hOut) =
-      ArtifactManifest.fingerprintOf(spark.read.parquet(outDir), cols)
+      ArtifactManifest.fingerprintOf(spark.read.parquet(out), in.columns.toSeq.map(col))
     require(nOutRows == nIn && hOut == hIn,
-      s"compaction of $inDir altered content: input (n=$nIn, hash=$hIn) vs " +
+      s"rewrite into $out altered content: input (n=$nIn, hash=$hIn) vs " +
         s"read-back output (n=$nOutRows, hash=$hOut) — manifest NOT published")
-    ArtifactManifest.writeValues(outDir, nIn, hIn, spark)
-
-    val outFiles = dataFiles(spark, outDir)
-    CompactionStats(inFiles.size.toLong, bytesIn,
-      outFiles.size.toLong, outFiles.map(_.getLen).sum,
-      nIn, skipped = false)
+    ArtifactManifest.writeValues(out, nIn, hIn, spark, sortCol)
   }
 
   /** The LEAF partition directories of a (possibly nested) Hive layout,
@@ -189,12 +167,8 @@ object Compaction {
     * class as the flatten bug `compact` refuses loudly — so a mixed layout
     * fails here instead. */
   private def leafPartitionDirs(spark: SparkSession, root: String): Seq[String] = {
-    val p = new Path(root)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     def go(dir: Path, rel: String): Seq[String] = {
-      val entries = fs.listStatus(dir).toSeq
-        .filterNot(st => st.getPath.getName.startsWith("_") ||
-          st.getPath.getName.startsWith("."))
+      val entries = Crm.visible(spark, dir.toString)
       val partDirs = entries.filter(st => st.isDirectory && st.getPath.getName.contains("="))
       if (partDirs.isEmpty) { if (rel.isEmpty) Seq.empty else Seq(rel) }
       else {
@@ -212,7 +186,7 @@ object Compaction {
         }
       }
     }
-    go(p, "").sorted
+    go(new Path(root), "").sorted
   }
 
   /** Per-partition compaction of a Hive-partitioned dataset (`key=value`
@@ -298,7 +272,6 @@ object Compaction {
   private def validateSubset(spark: SparkSession, inDir: String,
                              sel: Seq[String]): Seq[String] = {
     require(sel.nonEmpty, "subset compaction: empty partition list")
-    val conf = spark.sparkContext.hadoopConfiguration
     // Normalize BEFORE dedup (ADVICE r16): "grp=2" and "grp=2/" name the
     // same leaf — a raw-string distinct would keep both, compacting the
     // leaf twice (possibly concurrently under `parallelism`, racing
@@ -307,10 +280,9 @@ object Compaction {
     val normalized = sel.map(_.split("/").filter(_.nonEmpty).mkString("/"))
     normalized.distinct.map { rel =>
       require(rel.nonEmpty && rel.split("/").forall(seg =>
-        seg.contains("=") && !seg.startsWith("_") && !seg.startsWith(".")),
+        seg.contains("=") && !Crm.hidden(seg)),
         s"subset partition '$rel' is not a relative key=value[/key=value…] path")
-      val p = new Path(s"$inDir/$rel")
-      val fs = p.getFileSystem(conf)
+      val (fs, p) = Crm.fsFor(spark, s"$inDir/$rel")
       require(fs.exists(p) && fs.getFileStatus(p).isDirectory,
         s"subset partition '$rel' does not exist under $inDir")
       val kids = fs.listStatus(p).toSeq

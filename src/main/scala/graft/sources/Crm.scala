@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.MessageType
@@ -58,17 +58,18 @@ object Crm {
     stored.sql == declared.sql || (stored == TimestampNTZType && declared == TimestampType)
 
   /** The declared schema of stored table `name` in the parquet directory
-    * `dir`, checked against the footer of its first data file, which is
-    * read here, without a Spark job. With a declared schema Spark reads a
-    * column missing from the file as NULL without a word, so a declared
-    * column the file lacks, holds with another type, or holds in a type
-    * Spark cannot read (TIMESTAMP(NANOS)), fails here naming the table and
-    * the column. */
+    * `dir`, checked against the footer of the first of its [[dataFiles]]
+    * (the file `<name>.parquet`, or the first file of that directory in
+    * ScaleGen's layout), which is read here, without a Spark job. With a
+    * declared schema Spark reads a column missing from the file as NULL
+    * without a word, so a declared column the file lacks, holds with
+    * another type, or holds in a type Spark cannot read (TIMESTAMP(NANOS)),
+    * fails here naming the table and the column. */
   def storedSchema(spark: SparkSession, dir: String, name: String): StructType = {
     val declared = schemas.getOrElse(name,
       throw new IllegalArgumentException(s"'$name' is not a stored table"))
     val conf = spark.sparkContext.hadoopConfiguration
-    val file = dataFiles(spark, dir, name).headOption.getOrElse(throw
+    val file = dataFiles(spark, s"$dir/$name.parquet").headOption.getOrElse(throw
       new IllegalArgumentException(s"stored table '$name': no data file in $dir/$name.parquet"))
     val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(file, conf))
     val footer = try reader.getFooter.getFileMetaData.getSchema finally reader.close()
@@ -88,17 +89,30 @@ object Crm {
     declared
   }
 
-  /** The data files of stored table `name` in the parquet directory `dir`:
-    * the file `<name>.parquet` itself, or the files of that directory
-    * (ScaleGen's layout) sorted by name, without the `_`/`.`-prefixed
-    * commit markers and checksums; none when the table is absent. A
-    * driver-side listing, no Spark job. */
-  private def dataFiles(spark: SparkSession, dir: String, name: String): Seq[FileStatus] = {
-    val path = new Path(s"$dir/$name.parquet")
-    val all = try path.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(path)
-      catch { case _: java.io.FileNotFoundException => Array.empty[FileStatus] }
-    all.filter(c => c.isFile && !"_.".contains(c.getPath.getName.head)).sortBy(_.getPath.getName).toSeq
+  /** The filesystem that holds `dir`, resolved from the path (so `file:`,
+    * `hdfs:` and `s3a:` locations all work), and the path itself. */
+  private[graft] def fsFor(spark: SparkSession, dir: String): (FileSystem, Path) = {
+    val p = new Path(dir)
+    (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
   }
+
+  /** Whether an entry named `name` is bookkeeping rather than data: `_`
+    * (commit markers, `_SUCCESS`, manifests, staging) or `.` (checksums). */
+  private[graft] def hidden(name: String): Boolean = "_.".contains(name.head)
+
+  /** The entries of `dir` that are not [[hidden]], sorted by name; none
+    * when `dir` is absent, and `dir` itself when it is a file. A
+    * driver-side listing, no Spark job. */
+  private[graft] def visible(spark: SparkSession, dir: String): Seq[FileStatus] = {
+    val (fs, p) = fsFor(spark, dir)
+    val all = try fs.listStatus(p) catch { case _: java.io.FileNotFoundException => Array.empty[FileStatus] }
+    all.filterNot(c => hidden(c.getPath.getName)).sortBy(_.getPath.getName).toSeq
+  }
+
+  /** The data files of a parquet dataset at `dir`: its [[visible]] plain
+    * files. The one rule for which files in a directory are data. */
+  private[graft] def dataFiles(spark: SparkSession, dir: String): Seq[FileStatus] =
+    visible(spark, dir).filter(_.isFile)
 
   /** What a build over `dir` reads: (file, size, modification time) of the
     * data files of every table in [[schemas]] present under `dir`, from the
@@ -108,7 +122,7 @@ object Crm {
     * a memo over one keys on the locator's name only. */
   def signature(spark: SparkSession, dir: String): Seq[(String, Long, Long)] =
     if (Seq("jdbc:", "csv:", "json:", "orc:").exists(dir.startsWith)) Nil
-    else schemas.keys.toSeq.sorted.flatMap(t => dataFiles(spark, dir, t).map(f =>
+    else schemas.keys.toSeq.sorted.flatMap(t => dataFiles(spark, s"$dir/$t.parquet").map(f =>
       (s"$t/${f.getPath.getName}", f.getLen, f.getModificationTime)))
 
   /** Raw-table access — the only way the program reads a stored input

@@ -2,9 +2,9 @@ package graft.streaming
 
 import org.apache.hadoop.fs.{FileUtil, Path}
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions.col
 
-import graft.operators.{ArtifactManifest, Parallelism}
+import graft.operators.{ArtifactManifest, Compaction, Parallelism}
+import graft.sources.Crm
 
 /** Small-file compaction for STREAMED artifacts (VERDICT r15 #3 — the
   * natural composition of the round's two families): [[IdempotentFold]]'s
@@ -27,15 +27,19 @@ import graft.operators.{ArtifactManifest, Parallelism}
   * marker proves the batch fully landed; replays of it skip on the marker,
   * which is never pruned for foreign runs).
   *
-  * Per dataset the rewrite is [[graft.operators.Compaction]]'s shape —
-  * size-aware bin-packing (exchange-free coalesce), an in-memory
-  * fingerprint publish gate, a content manifest enabling the idempotent
-  * skip — plus a crash-safe IN-PLACE swap, since the artifact's location is
-  * its identity: build the merged copy at a hidden sibling
-  * (`_compact_tmp_<name>`), verify, copy live keyed files in verbatim, then
-  * swap via two directory renames with a self-healing recovery path (a
+  * Per dataset the merge set goes through the steps `Compaction.compact` runs too:
+  * [[graft.operators.Compaction.contentOf]], the manifest skip
+  * ([[graft.operators.ArtifactManifest.matches]]) and the verified
+  * [[graft.operators.Compaction.rewrite]], here into a hidden sibling
+  * (`_compact_tmp_<name>`). What is this object's own
+  * is choosing the merge set, linking the kept files into the sibling, and
+  * the crash-safe IN-PLACE swap, since the artifact's location is its
+  * identity: two directory renames with a self-healing recovery path (a
   * crash between the renames is detected on the next run and rolled
-  * forward or back by whether the tmp's publish gate had passed).
+  * forward or back by whether the sibling's publish gate had passed).
+  * Commit markers are read and retired through [[IdempotentFold]], which
+  * alone names their directory; which files are data is
+  * [[graft.sources.Crm.dataFiles]]' rule.
   *
   * The artifact-level provenance manifest (`_input_manifest.json` at the
   * ARTIFACT dir, with its fold stamp) is never touched — compaction changes
@@ -51,11 +55,6 @@ object FoldCompaction {
     * `skipped` the idempotent no-op path. */
   final case class FoldStats(merged: Long, filesOut: Long, liveKept: Long,
                              rows: Long, skipped: Boolean)
-
-  private def fsFor(spark: SparkSession, dir: String) = {
-    val p = new Path(dir)
-    (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
-  }
 
   /** Compact every dataset of a streamed artifact against `checkpointDir`'s
     * committed horizon, then prune the current run's replay-dead markers.
@@ -77,22 +76,13 @@ object FoldCompaction {
     stats.toMap
   }
 
-  /** Commit markers present under `markerDir`, as (run, batchId) — the
-    * proof a foreign run's batch fully landed. */
-  private def markerSet(spark: SparkSession, markerDir: String): Set[(String, Long)] = {
-    val (fs, p) = fsFor(spark, s"$markerDir/_commits")
-    if (!fs.exists(p)) Set.empty
-    else fs.listStatus(p).toSeq
-      .flatMap(st => IdempotentFold.parseMarker(st.getPath.getName)).toSet
-  }
-
   /** Tags of every run that still has commit markers at `artifactDir` —
     * the candidates for [[retireRuns]]. */
   def markerRuns(spark: SparkSession, artifactDir: String): Set[String] =
-    markerSet(spark, artifactDir).map(_._1)
+    IdempotentFold.markers(spark, artifactDir).map(_._1)
 
   /** Retire DEAD runs' commit markers (VERDICT r16 #4): a long-lived
-    * artifact accumulates one `_commits/r<tag>_b<id>` file per (run,
+    * artifact accumulates one commit marker per (run,
     * batch) forever, because [[IdempotentFold.pruneMarkers]] only prunes
     * the CURRENT run (foreign markers are the merge-safety proof
     * [[compactFold]] relies on). Once a run is dead — its checkpoint
@@ -107,29 +97,15 @@ object FoldCompaction {
     require(runTags.nonEmpty, "retireRuns: no run tags given")
     runTags.foreach { tag =>
       datasetDirs.foreach { d =>
-        val (fs, p) = fsFor(spark, d)
-        if (fs.exists(p)) {
-          val left = fs.listStatus(p).toSeq.filter { st =>
-            st.isFile &&
-              IdempotentFold.parseKeyed(st.getPath.getName).exists(_._1 == tag)
-          }
-          require(left.isEmpty,
-            s"refusing to retire run '$tag': $d still holds its keyed files " +
-              left.map(_.getPath.getName).take(3).mkString(", ") +
-              " — compact the artifact first so they merge under marker proof")
-        }
+        val left = Crm.dataFiles(spark, d).filter(st =>
+          IdempotentFold.parseKeyed(st.getPath.getName).exists(_._1 == tag))
+        require(left.isEmpty,
+          s"refusing to retire run '$tag': $d still holds its keyed files " +
+            left.map(_.getPath.getName).take(3).mkString(", ") +
+            " — compact the artifact first so they merge under marker proof")
       }
     }
-    val (fs, p) = fsFor(spark, s"$artifactDir/_commits")
-    if (!fs.exists(p)) 0
-    else {
-      val dead = fs.listStatus(p).toSeq.filter { st =>
-        IdempotentFold.parseMarker(st.getPath.getName)
-          .exists { case (r, _) => runTags.contains(r) }
-      }
-      dead.foreach(st => fs.delete(st.getPath, false))
-      dead.size
-    }
+    IdempotentFold.deleteMarkers(spark, artifactDir) { case (r, _) => runTags.contains(r) }
   }
 
   /** Compact ONE flat parquet dataset that received [[IdempotentFold]]
@@ -149,7 +125,7 @@ object FoldCompaction {
   def compactFold(spark: SparkSession, dir: String, run: String,
                   horizon: Long, targetFileBytes: Long,
                   markerDir: Option[String] = None): FoldStats = {
-    val (fs, target) = fsFor(spark, dir)
+    val (fs, target) = Crm.fsFor(spark, dir)
     val qt = fs.makeQualified(target)
     val name = qt.getName
     val tmp = new Path(qt.getParent, s"_compact_tmp_$name")
@@ -179,11 +155,8 @@ object FoldCompaction {
       if (fs.exists(old)) fs.delete(old, true): Unit
     }
 
-    val markers = markerDir.map(markerSet(spark, _)).getOrElse(Set.empty)
-    val files = fs.listStatus(qt).toSeq.filter { st =>
-      val n = st.getPath.getName
-      st.isFile && !n.startsWith("_") && !n.startsWith(".")
-    }
+    val markers = markerDir.map(IdempotentFold.markers(spark, _)).getOrElse(Set.empty)
+    val files = Crm.dataFiles(spark, qt.toString)
     val (deadAll, live) = files.partition { st =>
       IdempotentFold.parseKeyed(st.getPath.getName) match {
         case None                      => true // plain part (base build / prior compaction)
@@ -206,36 +179,18 @@ object FoldCompaction {
     if (dead.isEmpty || singlePlainRunt)
       return FoldStats(0L, 0L, kept.size.toLong, 0L, skipped = true)
 
-    val in = spark.read.parquet(dead.map(_.getPath.toString): _*)
-    val cols = in.columns.toSeq.map(col)
-    val (nIn, hIn) = ArtifactManifest.fingerprintOf(in, cols)
-
     // Idempotent skip: the stored content manifest fingerprints the MERGE
     // SET as of the last compaction — unchanged content (no newly
-    // committed batches since) means nothing to do.
-    val alreadyDone =
-      try ArtifactManifest.read(dir, spark)
-        .exists(m => m.nRows == nIn && m.inputHash == hIn)
-      catch { case _: Exception => false }
-    if (alreadyDone)
+    // committed batches since) means nothing to do. Otherwise the verified
+    // rewrite lands the merged copy, and its manifest, in the tmp sibling:
+    // that manifest is also the roll-forward signal for the recovery above.
+    val in = spark.read.parquet(dead.map(_.getPath.toString): _*)
+    val fingerprint = Compaction.contentOf(in)
+    if (ArtifactManifest.matches(dir, spark, fingerprint))
       return FoldStats(dead.size.toLong, dead.size.toLong, kept.size.toLong,
-        nIn, skipped = true)
-
-    // Bin-pack exchange-free (Compaction.compact's merge path): the scan
-    // already groups small files into splits, so merging is a coalesce.
-    val nOut = Parallelism.widthFor(dead.map(_.getLen).sum, targetFileBytes, 1, Int.MaxValue)
-    val scanParts = in.rdd.getNumPartitions
-    val packed = if (nOut <= scanParts) in.coalesce(nOut) else in.repartition(nOut)
-    packed.write.mode("overwrite").parquet(tmp.toString)
-
-    // Publish gate, then manifest INTO THE TMP — its presence is also the
-    // roll-forward signal for the swap recovery above.
-    val (nOutRows, hOut) =
-      ArtifactManifest.fingerprintOf(spark.read.parquet(tmp.toString), cols)
-    require(nOutRows == nIn && hOut == hIn,
-      s"fold compaction of $dir altered content: in (n=$nIn, hash=$hIn) vs " +
-        s"read-back (n=$nOutRows, hash=$hOut) — aborted, original untouched")
-    ArtifactManifest.writeValues(tmp.toString, nIn, hIn, spark)
+        fingerprint._1, skipped = true)
+    Compaction.rewrite(spark, in, dead.map(_.getLen).sum, tmp.toString,
+      targetFileBytes, None, fingerprint)
 
     // Retained files (live keyed + compaction-sized plain) ride along
     // verbatim — hard link where the FS allows, else a raw byte copy;
@@ -254,10 +209,7 @@ object FoldCompaction {
         FileUtil.copy(fs, st.getPath, fs, to, false, hconf): Unit
     }
 
-    val outParts = fs.listStatus(tmp).count { st =>
-      val n = st.getPath.getName
-      st.isFile && !n.startsWith("_") && !n.startsWith(".")
-    }
+    val outParts = Crm.dataFiles(spark, tmp.toString).size
 
     // The swap: two renames. A crash between them leaves the dataset dir
     // missing with a gate-passed tmp — the recovery path rolls it forward.
@@ -266,6 +218,6 @@ object FoldCompaction {
     fs.delete(old, true)
 
     FoldStats(dead.size.toLong, (outParts - kept.size).toLong,
-      kept.size.toLong, nIn, skipped = false)
+      kept.size.toLong, fingerprint._1, skipped = false)
   }
 }

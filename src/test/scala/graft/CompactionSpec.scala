@@ -1,8 +1,27 @@
 package graft
 
+import org.apache.hadoop.fs.{FileUtil, Path}
+import org.apache.hadoop.mapreduce.JobContext
+import org.apache.spark.internal.io.FileCommitProtocol.TaskCommitMessage
+import org.apache.spark.sql.execution.datasources.SQLHadoopMapReduceCommitProtocol
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Compaction, Parallelism}
+import graft.operators.{ArtifactManifest, Compaction, Parallelism}
+import graft.streaming.FoldCompaction
+
+/** A commit protocol whose jobs land one data file twice: a rewrite that
+  * alters content, for the publish gate to refuse. */
+class DuplicatingCommitProtocol(jobId: String, path: String, dynamicPartitionOverwrite: Boolean)
+    extends SQLHadoopMapReduceCommitProtocol(jobId, path, dynamicPartitionOverwrite) {
+  override def commitJob(jobContext: JobContext, taskCommits: Seq[TaskCommitMessage]): Unit = {
+    super.commitJob(jobContext, taskCommits)
+    val dir = new Path(path)
+    val fs = dir.getFileSystem(jobContext.getConfiguration)
+    val part = fs.listStatus(dir).map(_.getPath).filter(_.getName.startsWith("part-")).minBy(_.getName)
+    FileUtil.copy(fs, part, fs, new Path(dir, s"dup-${part.getName}"), false,
+      jobContext.getConfiguration): Unit
+  }
+}
 
 /** Pins the small-file compaction contract (r14): size-aware bin-packing,
   * proven content preservation, idempotent re-runs, and the range variant's
@@ -376,5 +395,81 @@ class CompactionSpec extends SparkSpec {
     val (ri, rf) = (ArtifactManifest.read(out, spark).get,
       ArtifactManifest.read(outFull, spark).get)
     assert((ri.nRows, ri.inputHash) === ((rf.nRows, rf.inputHash)))
+  }
+
+  /** Per-file [min, max] of `key` over the data files of `dir`, by min. */
+  private def fileRanges(dir: String, key: String): Seq[(Long, Long)] = {
+    val p = new Path(dir)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.listStatus(p).toSeq
+      .filter(f => f.isFile && f.getPath.getName.startsWith("part-"))
+      .map { f =>
+        val r = spark.read.parquet(f.getPath.toString)
+          .agg(min(col(key)), max(col(key))).collect()(0)
+        (r.getLong(0), r.getLong(1))
+      }.sortBy(_._1)
+  }
+
+  test("the skip honours the sort column: an unsorted output is rewritten when a sort is asked") {
+    val in = tmp("compact_sortskip_in"); val out = tmp("compact_sortskip_out")
+    docs(4000).repartition(32).write.mode("overwrite").parquet(in)
+    val bytesIn = {
+      val p = new Path(in)
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(p)
+        .filter(f => f.isFile && f.getPath.getName.startsWith("part-")).map(_.getLen).sum
+    }
+    val target = math.max(1L, bytesIn / 4)
+    assert(!Compaction.compact(spark, in, out, target).skipped)
+    val sorted = Compaction.compact(spark, in, out, target, sortCol = Some("doc_id"))
+    assert(!sorted.skipped, "same content, but the stored layout is not sorted by doc_id")
+    assert(sorted.nFilesOut >= 2, s"expected a multi-file rewrite, got ${sorted.nFilesOut}")
+    val ranges = fileRanges(out, "doc_id")
+    ranges.sliding(2).foreach {
+      case Seq((_, hi), (lo2, _)) => assert(hi < lo2, s"overlapping file ranges: $ranges")
+      case _ =>
+    }
+    assert(ArtifactManifest.read(out, spark).flatMap(_.sortCol) === Some("doc_id"))
+    // the same sort again is the no-op; dropping the sort is not
+    assert(Compaction.compact(spark, in, out, target, sortCol = Some("doc_id")).skipped)
+    assert(!Compaction.compact(spark, in, out, target).skipped)
+    assert(spark.read.parquet(out).collect().toSet === docs(4000).collect().toSet)
+  }
+
+  test("the verified rewrite refuses a fingerprint its output does not match: no manifest, and the next compact rewrites") {
+    val in = tmp("compact_gate_in"); val out = tmp("compact_gate_out")
+    docs(100).repartition(4).write.mode("overwrite").parquet(in)
+    val df = spark.read.parquet(in)
+    val (n, h) = Compaction.contentOf(df)
+    val e = intercept[IllegalArgumentException](
+      Compaction.rewrite(spark, df, 1L << 20, out, 64L << 20, None, (n, h + 1)))
+    assert(e.getMessage.contains("altered content"), e.getMessage)
+    assert(ArtifactManifest.read(out, spark).isEmpty, "a refused rewrite must publish no manifest")
+    val st = Compaction.compact(spark, in, out, 64L << 20)
+    assert(!st.skipped, "an output without a manifest is rewritten, never skipped")
+    assert(ArtifactManifest.read(out, spark).map(m => (m.nRows, m.inputHash)) === Some((n, h)))
+  }
+
+  test("a fold rewrite that alters content throws and leaves the dataset byte-for-byte untouched") {
+    val parent = tmp("compact_fold_gate")
+    val ds = s"$parent/data.parquet"
+    docs(300).repartition(6).write.parquet(ds)
+    def snapshot: Map[String, Seq[Byte]] = {
+      val files = new java.io.File(ds).listFiles().toSeq
+      files.map(f => f.getName -> java.nio.file.Files.readAllBytes(f.toPath).toSeq).toMap
+    }
+    val before = snapshot
+    val altering = spark.newSession()
+    altering.conf.set("spark.sql.sources.commitProtocolClass",
+      classOf[DuplicatingCommitProtocol].getName)
+    val run = "deadbeefdeadbeef"
+    val e = intercept[IllegalArgumentException](
+      FoldCompaction.compactFold(altering, ds, run, horizon = -1L, targetFileBytes = 64L << 20))
+    assert(e.getMessage.contains("altered content"), e.getMessage)
+    assert(snapshot === before)
+    assert(ArtifactManifest.read(s"$parent/_compact_tmp_data.parquet", spark).isEmpty)
+    // the next pass discards the refused copy and compacts
+    val st = FoldCompaction.compactFold(spark, ds, run, horizon = -1L, targetFileBytes = 64L << 20)
+    assert(!st.skipped && st.merged === 6 && st.filesOut === 1)
+    assert(spark.read.parquet(ds).collect().toSet === docs(300).collect().toSet)
   }
 }

@@ -10,8 +10,9 @@ import scala.jdk.CollectionConverters._
   * knob has to be added here, with its reason, before this spec passes;
   * a knob that loses its last reader has to be dropped from here.
   * Per-experiment switches belong in the engine's own `SQLConf`, not here.
-  * The same source scan keeps the session contract and the sizing
-  * machinery each in its one place.
+  * The same source scan keeps the session contract, the sizing machinery,
+  * the data-file rule and the commit-marker directory each in its one
+  * place.
   */
 class KnobGuardSpec extends AnyFunSuite {
 
@@ -66,6 +67,20 @@ class KnobGuardSpec extends AnyFunSuite {
       owned.findAllIn(new String(Files.readAllBytes(p), "UTF-8")).map(m => s"$p: $m").toSeq
     }
     assert(found.isEmpty, s"use graft.operators.Parallelism instead: $found")
+  }
+
+  test("only Crm.scala filters hidden file names, and only IdempotentFold.scala names the commit markers") {
+    // which entries of a directory are data is one listing (Crm.visible and
+    // Crm.dataFiles), and the commit-marker directory has one owner
+    val owned = Seq(
+      "Crm.scala" -> """startsWith\("[_.]"\)|"_\."""".r,
+      "IdempotentFold.scala" -> "_commits".r)
+    val found = for {
+      (owner, rule) <- owned
+      p <- mainSources if p.getFileName.toString != owner
+      m <- rule.findAllIn(new String(Files.readAllBytes(p), "UTF-8")).toSeq
+    } yield s"$p: $m"
+    assert(found.isEmpty, s"use Crm.dataFiles / IdempotentFold's marker helpers instead: $found")
   }
 
   test("build.sbt and run_graft.sh read exactly the listed environment names") {
