@@ -33,17 +33,18 @@ object ClusterMode {
       .getOrCreate()
   }
 
-  private val LocalCluster = """local-cluster\[\s*\d+\s*,\s*\d+\s*,\s*(\d+)\s*\]""".r
+  private val LocalCluster = """local-cluster\[\s*\d+\s*,\s*(\d+)\s*,\s*(\d+)\s*\]""".r
 
   /** The confs a local-cluster worker needs to launch executors outside
-    * spark-submit: the driver's class path and a heap of the master's
-    * per-worker MB. Empty for any other master. The executors' JDK module
-    * options need no conf: SparkContext adds Spark's own
-    * (`JavaModuleOptions`) to every executor's java options. */
+    * spark-submit: the driver's class path, and the master's per-worker
+    * cores and MB as each executor's cores and heap. Empty for any other
+    * master. The executors' JDK module options need no conf: SparkContext
+    * adds Spark's own (`JavaModuleOptions`) to every executor's java
+    * options. */
   private[graft] def executorConfs(master: String,
       sparkHome: Option[String] = sys.env.get("SPARK_HOME")): Map[String, String] =
     master match {
-      case LocalCluster(mb) =>
+      case LocalCluster(cores, mb) =>
         // the worker puts $SPARK_HOME/jars on every executor's class path
         val jars = sparkHome.map(h => new File(h, "jars"))
         require(jars.exists(_.isDirectory),
@@ -58,6 +59,7 @@ object ClusterMode {
           // it looks in $SPARK_HOME/jars, and a binary install has no build
           // directory to infer it from
           "spark.executorEnv.SPARK_SCALA_VERSION" -> "2.13",
+          "spark.executor.cores" -> cores,
           "spark.executor.memory" -> s"${mb}m")
       case _ => Map.empty
     }

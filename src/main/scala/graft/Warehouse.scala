@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SparkSession}
 import graft.operators.{Dims, Fact}
 import graft.sources.Crm
 
@@ -27,96 +27,91 @@ final case class Warehouse(
     dimTempo: DataFrame,
     fatoVendas: DataFrame) {
 
-  /** The ETL "load" step (reference: per-row INSERTs into PostgreSQL DW
-    * tables, etl_completo.py §S7/S8): one atomic columnar directory per DW
-    * table. Columnar min-max statistics take the role of the reference's 21
-    * post-load b-tree indices (SURVEY §2.1 S9; see [[writeFactIndexed]] for
-    * the sorted form); at 100 TB the fact would additionally be written
-    * `partitionBy` a date-derived column ([[writeFactPartitioned]]).
-    * `format` accepts any columnar batch format on the classpath —
-    * "parquet" (default) or "orc", matching the `orc:` read locator.
+  /** The ETL "load" step (reference: per-table `INSERT … ON CONFLICT DO
+    * NOTHING` into the PostgreSQL DW, each in its own try / roll back /
+    * continue block, etl_completo.py §S7/S8): one pass over [[sinkTables]],
+    * one table after another.
+    *  - `target`: a directory, holding one `format` ("parquet" or "orc")
+    *    directory per table, or a `jdbc:` URL ([[Crm.isJdbc]]) — the
+    *    reference's relational DW (etl_completo.py:32-46). `df.write.jdbc`
+    *    ships each partition over its own connection, 10,000 rows per
+    *    round-trip; dims coalesce to one partition (a 30-row dim needs one
+    *    connection, not 32), the fact keeps its partitioning.
+    *  - `decimalExact`: money columns in the DDL's DECIMAL types.
+    *  - `mode`: [[Warehouse.Overwrite]] replaces each table;
+    *    [[Warehouse.InsertNewKeys]] appends only natural keys the table
+    *    lacks, so a re-run over the same inputs is a no-op.
+    *  - `bestEffort`: the reference's error model — every table is
+    *    attempted, one failing dim never aborts the others. The rollback
+    *    analogue is Spark's per-directory commit protocol: a failed job
+    *    commits nothing to its table. Without it the first failing table
+    *    throws and the later ones are not written.
+    *  - `factLayout`: how `fato_vendas` is laid out ([[Warehouse.FactLayout]]).
+    *    Columnar min-max statistics take the role of the reference's 21
+    *    post-load b-tree indices (SURVEY §2.1 S9).
+    * Returns one (table, error) row per table, `None` = loaded.
     */
-  def write(outDir: String, format: String = "parquet",
-            decimalExact: Boolean = false): Unit =
-    sinkTables(decimalExact).foreach { case (name, df) =>
-      df.write.mode("overwrite").format(format).save(s"$outDir/$name")
+  def write(target: String, format: String = "parquet", decimalExact: Boolean = false,
+            mode: Warehouse.LoadMode = Warehouse.Overwrite, bestEffort: Boolean = false,
+            factLayout: Warehouse.FactLayout = Warehouse.Plain): Seq[(String, Option[String])] = {
+    import Warehouse._
+    import org.apache.spark.sql.SaveMode
+    import org.apache.spark.sql.functions.{col, lit, max, coalesce}
+    val jdbc = Crm.isJdbc(target)
+    def unsupported(why: String) = s"$mode load into '$target': $why"
+    require(!(jdbc && mode == InsertNewKeys), unsupported("a JDBC target has no key scan"))
+    require(!(jdbc && factLayout == Partitioned), unsupported("a JDBC table has no partition directories"))
+    require(!(mode == InsertNewKeys && factLayout == Partitioned),
+      unsupported("a partitioned fact has no top-level data files to find its keys in"))
+
+    def save(name: String, df: DataFrame, saveMode: SaveMode): Unit = {
+      val writer = (if (name == "fato_vendas") factLayout.writer(df) else df.write).mode(saveMode)
+      if (jdbc) writer.option("batchsize", "10000").jdbc(target, name, new java.util.Properties())
+      else writer.format(format).save(s"$target/$name")
     }
-
-  /** The 100 TB fact layout: partitioned by sale year (`ano_particao`), so
-    * time-windowed consumers prune whole partitions at the file listing —
-    * the role the reference's date-keyed b-tree index plays. On the small
-    * testdata this is demonstration (WarehouseSpec asserts the pruned scan);
-    * at scale add a second level (month) and size partitions to ≥128 MB
-    * files.
-    */
-  def writeFactPartitioned(outDir: String): Unit =
-    fatoVendas.write.mode("overwrite")
-      .partitionBy("ano_particao").parquet(s"$outDir/fato_vendas_part")
-
-  /** S9 analogue — the index-like layout. The reference's 21 post-load
-    * b-tree indices (sql/cria_indices_dw.sql:9-37) have no DDL counterpart
-    * in Spark; their ROLE — point/range lookups that touch a fraction of
-    * the fact — is played by SORTED parquet: globally range-partition and
-    * sort the fact by the hot lookup key (the reference indexes the fact
-    * by date, product, customer and store keys — pick the one the
-    * deployment's point queries lead with) so each row group's min-max
-    * envelope is narrow and the reader SKIPS row groups the predicate
-    * excludes. Same scan API, no index maintenance, and at 100 TB the skip
-    * happens at the footer before any column data is read. WarehouseSpec
-    * proves it with scan metrics: a point predicate over this layout emits
-    * a fraction of the rows the unsorted layout emits. `blockSize` shrinks
-    * row groups on small testdata so the skip is observable; production
-    * keeps the 128 MB default.
-    */
-  def writeFactIndexed(outDir: String, sortKey: String = "sk_produto",
-                       blockSize: Int = 128 * 1024 * 1024): Unit =
-    fatoVendas
-      .repartitionByRange(org.apache.spark.sql.functions.col(sortKey))
-      .sortWithinPartitions(sortKey)
-      .write.mode("overwrite")
-      .option("parquet.block.size", blockSize.toString)
-      .parquet(s"$outDir/fato_vendas_idx")
-
-  /** The reference's ACTUAL load target: INSERTs into a relational DW over
-    * JDBC (etl_completo.py:32-46 opens the PostgreSQL connection; the
-    * per-table loads insert at :688-698 and :914-927). `df.write.jdbc`
-    * ships each partition over its own connection with `batchsize` rows per
-    * round-trip — the distributed counterpart of the reference's single
-    * psycopg2 cursor, and at 100 TB the parallel-load lever (1000 executors
-    * = 1000 concurrent COPY-ish streams; size `numPartitions` to what the
-    * target DB accepts). Dimension tables coalesce to one partition — a
-    * 30-row dim needs one connection, not 32 — while the fact keeps its
-    * partitioning. Derby-tested (WarehouseSpec), like the JDBC source.
-    */
-  def writeJdbc(url: String, mode: String = "overwrite",
-                decimalExact: Boolean = false): Unit =
-    sinkTables(decimalExact).foreach { case (name, df) =>
-      val out = if (name == "fato_vendas") df else df.coalesce(1)
-      out.write.mode(mode).option("batchsize", "10000")
-        .jdbc(url, name, new java.util.Properties())
-    }
-
-  /** Stage-level BEST-EFFORT load — the reference's error model
-    * (etl_completo.py:184,704 et al.): every stage is its own
-    * try / log / roll back / continue block, so one failing dimension
-    * never aborts the others. The rollback analogue is Spark's per-
-    * directory commit protocol: a failed job commits nothing to the
-    * target, exactly as the reference's `conn_dw.rollback()` leaves the
-    * stage's table untouched. Returns one (table, error) row per stage —
-    * `None` = loaded; the caller decides whether partial success is
-    * acceptable (the reference always continued).
-    */
-  def writeBestEffort(outDir: String, format: String = "parquet",
-                      decimalExact: Boolean = false): Seq[(String, Option[String])] =
-    sinkTables(decimalExact).map { case (name, df) =>
-      try {
-        df.write.mode("overwrite").format(format).save(s"$outDir/$name")
-        name -> None
-      } catch {
-        case e: Exception =>
-          name -> Some(s"${e.getClass.getName}: ${e.getMessage}")
+    // ON CONFLICT DO NOTHING (etl_completo.py:172-177 et al.): one
+    // key-columns-only read of the target, one left-anti join, an append;
+    // the existing data is never rewritten. A true upsert needs a
+    // transactional table format, which the reference does not use either.
+    def insertNewKeys(name: String, df: DataFrame): Unit = {
+      val keys = naturalKeys(name)
+      // ON CONFLICT also fires WITHIN one load: a batch carrying the same
+      // PK twice keeps only the first insert. The fact grain (id_venda,
+      // id_produto) genuinely repeats in the source (lineitem re-lists a
+      // part within an order), so first-wins per key, with the run's sk as
+      // the deterministic-within-run tiebreak. Dim natural keys are unique.
+      val batch = regeneratedSks.get(name).fold(df)(sk =>
+        operators.Surrogate.firstMatch(df, keys.map(col), Seq(col(sk))))
+      val path = s"$target/$name"
+      // a stage that failed before left its directory without data files
+      if (Crm.dataFiles(df.sparkSession, path).isEmpty) save(name, batch, SaveMode.Overwrite)
+      else {
+        val existing = df.sparkSession.read.format(format).schema(batch.schema).load(path)
+        val delta = batch.join(existing.select(keys.map(col): _*), keys, "left_anti")
+        // A per-run sk (the fact's sk_venda) could collide with the sks of a
+        // partially written target — the interrupted load this mode exists
+        // for. Delta sks are ≥ 1, so old + max(existing) is unique within
+        // the delta and above every existing sk. Dim sks are deterministic.
+        save(name, regeneratedSks.get(name).fold(delta) { sk =>
+          val maxSk = existing.agg(coalesce(max(col(sk)), lit(0L))).collect()(0).getLong(0)
+          delta.withColumn(sk, col(sk) + lit(maxSk))
+        }, SaveMode.Append)
       }
     }
+
+    sinkTables(decimalExact).map { case (name, df) =>
+      val batch = if (jdbc && name != "fato_vendas") df.coalesce(1) else df
+      try {
+        mode match {
+          case Overwrite => save(name, batch, SaveMode.Overwrite)
+          case InsertNewKeys => insertNewKeys(name, batch)
+        }
+        name -> None
+      } catch {
+        case e: Exception if bestEffort => name -> Some(s"${e.getClass.getName}: ${e.getMessage}")
+      }
+    }
+  }
 
   /** Sink-facing table list. With `decimalExact`, money/percent columns are
     * cast to the reference DW DDL's exact DECIMAL types
@@ -130,59 +125,6 @@ final case class Warehouse(
   def sinkTables(decimalExact: Boolean): Seq[(String, DataFrame)] =
     if (!decimalExact) tables
     else tables.map { case (name, df) => name -> Warehouse.withDdlDecimals(name, df) }
-
-  /** Idempotent load (S7 — the reference's `INSERT … ON CONFLICT DO NOTHING`,
-    * etl_completo.py:172-177 et al.): rows whose natural key already exists
-    * in the target are skipped, only new keys are appended, so a re-run over
-    * the same inputs is a no-op. Per table: one key-columns-only read of the
-    * target (parquet column pruning — the existing data is never rewritten)
-    * + one left-anti join + an append. At 100 TB that is a key-scan and an
-    * append, never a rewrite; a true upsert (`MERGE … WHEN MATCHED UPDATE`)
-    * needs a transactional table format, which the reference does not use
-    * either.
-    */
-  def writeIdempotent(outDir: String): Unit =
-    tables.foreach { case (name, df) =>
-      import org.apache.spark.sql.functions.{col, lit, max, coalesce}
-      val target = s"$outDir/$name"
-      val spark = df.sparkSession
-      val path = new org.apache.hadoop.fs.Path(target)
-      val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val keys = Warehouse.naturalKeys(name)
-      // ON CONFLICT DO NOTHING also fires WITHIN one load: a batch carrying
-      // the same PK twice keeps only the first insert. The fact grain
-      // (id_venda, id_produto) genuinely repeats in the source (lineitem
-      // re-lists a part within an order), so the idempotent target holds
-      // exactly one row per natural key — first-wins per key, with the
-      // run's sk as the deterministic-within-run tiebreak. Dimension
-      // natural keys are unique by construction (PK sources), no-op there.
-      val batch = Warehouse.regeneratedSks.get(name) match {
-        case Some(sk) => operators.Surrogate.firstMatch(df, keys.map(col), Seq(col(sk)))
-        case None => df
-      }
-      if (!fs.exists(path)) batch.write.mode("overwrite").parquet(target)
-      else {
-        val existing = spark.read.parquet(target)
-        val delta = batch.join(existing.select(keys.map(col): _*), keys, "left_anti")
-        // Surrogate keys that are generated fresh per run (the fact's
-        // sk_venda comes from monotonically_increasing_id) could collide
-        // with sks already in a partially-written target — exactly the
-        // interrupted-load scenario idempotent load exists for (r3 advice).
-        // Re-base the appended sks above max(existing): delta sks are ≥ 1,
-        // so old + max(existing) is both unique within the delta and
-        // strictly greater than every existing sk. Dimension sks are
-        // deterministic (row_number over the natural-key order) and need no
-        // re-basing. The max() is a single-scalar aggregate of one pruned
-        // parquet column — not a driver-side data loop.
-        val appended = Warehouse.regeneratedSks.get(name) match {
-          case Some(sk) =>
-            val maxSk = existing.agg(coalesce(max(col(sk)), lit(0L))).collect()(0).getLong(0)
-            delta.withColumn(sk, col(sk) + lit(maxSk))
-          case None => delta
-        }
-        appended.write.mode("append").parquet(target)
-      }
-    }
 
   def tables: Seq[(String, DataFrame)] = Seq(
     "dim_localidade" -> dimLocalidade,
@@ -199,6 +141,36 @@ final case class Warehouse(
 }
 
 object Warehouse {
+
+  /** What [[Warehouse.write]] does to a table that already holds rows. */
+  sealed trait LoadMode
+  case object Overwrite extends LoadMode
+  /** The reference's `INSERT … ON CONFLICT DO NOTHING`: rows whose
+    * [[naturalKeys]] the table already holds are skipped. */
+  case object InsertNewKeys extends LoadMode
+
+  /** The physical layout of `fato_vendas` in [[Warehouse.write]]. */
+  sealed trait FactLayout { def writer(fact: DataFrame): DataFrameWriter[Row] }
+  case object Plain extends FactLayout { def writer(fact: DataFrame) = fact.write }
+  /** The 100 TB layout: one directory per sale year (`ano_particao`), so a
+    * time-windowed consumer prunes whole partitions at the file listing,
+    * the role of the reference's date-keyed b-tree index. At scale add a
+    * month level and size partitions to ≥ 128 MB files. */
+  case object Partitioned extends FactLayout {
+    def writer(fact: DataFrame) = fact.write.partitionBy("ano_particao")
+  }
+  /** The index-like layout (S9 analogue): the reference's post-load b-tree
+    * indices (sql/cria_indices_dw.sql:9-37) serve point and range lookups
+    * that touch a fraction of the fact. Range-partitioning and sorting the
+    * fact by the hot lookup `key` narrows each parquet row group's min-max
+    * envelope, so the reader skips the row groups a predicate excludes, at
+    * the footer, with no index to maintain. `blockSize` is the row-group
+    * size: small on testdata so the skip shows, 128 MB in production. */
+  final case class Sorted(key: String, blockSize: Int = 128 * 1024 * 1024) extends FactLayout {
+    def writer(fact: DataFrame) =
+      fact.repartitionByRange(org.apache.spark.sql.functions.col(key)).sortWithinPartitions(key)
+        .write.option("parquet.block.size", blockSize.toString)
+  }
 
   /** Natural (conflict) keys = the reference's PRIMARY KEYs
     * (sql/create_tables.sql:15,22,27,32,37,45,53,59,68,81,95): dimensions on

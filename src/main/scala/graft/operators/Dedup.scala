@@ -316,19 +316,27 @@ object Dedup {
     * reserved) × fraction / slots / 2 — the final /2 covers the
     * BytesToBytesMap growth-doubling transient and storage contention from
     * the operator's own cached build tables.
-    * Local mode reads the actual JVM heap (executors share it); cluster
-    * mode reads spark.executor.memory/cores. Floor 64 MB so undersized
+    * Local mode (`local`, `local[N]`) reads the actual JVM heap (executors
+    * share it) and its parallelism; any other master, `local-cluster`
+    * included, reads spark.executor.memory/cores. Floor 64 MB so undersized
     * test JVMs still exercise SHJ. */
-  private[graft] def shjBuildBudget(spark: org.apache.spark.sql.SparkSession): Long = {
-    val isLocal = spark.sparkContext.master.startsWith("local")
+  private[graft] def shjBuildBudget(spark: org.apache.spark.sql.SparkSession): Long =
+    shjBuildBudget(spark.sparkContext.master, spark.conf.getOption,
+      spark.sparkContext.defaultParallelism, Runtime.getRuntime.maxMemory)
+
+  /** The budget from its inputs: the master, a conf lookup, and the
+    * driver's parallelism and heap, which count in local mode only. */
+  private[graft] def shjBuildBudget(master: String, conf: String => Option[String],
+                                    localSlots: Int, localHeap: Long): Long = {
+    val isLocal = master == "local" || master.startsWith("local[")
     val heap: Long =
-      if (isLocal) Runtime.getRuntime.maxMemory
+      if (isLocal) localHeap
       else org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-        spark.conf.get("spark.executor.memory", "4g"))
+        conf("spark.executor.memory").getOrElse("4g"))
     val slots: Int =
-      if (isLocal) math.max(1, spark.sparkContext.defaultParallelism)
-      else spark.conf.get("spark.executor.cores", "4").toInt
-    val fraction = spark.conf.get("spark.memory.fraction", "0.6").toDouble
+      if (isLocal) math.max(1, localSlots)
+      else conf("spark.executor.cores").getOrElse("4").toInt
+    val fraction = conf("spark.memory.fraction").getOrElse("0.6").toDouble
     math.max(64L << 20, ((heap - (300L << 20)) * fraction / slots / 2).toLong)
   }
 

@@ -89,7 +89,7 @@ object Fact {
     // custo: NULL dim value or Python-falsy 0 both end at 0.0 (:675-680).
     val custo = coalesce(col("__custo_dim"), lit(0.0))
     // ano_particao: the physical partition column for the 100 TB layout
-    // (Warehouse.writeFactPartitioned) — year of the already-parsed sale
+    // (Warehouse.write with factLayout = Warehouse.Partitioned) — year of the already-parsed sale
     // date, 0 for kept-with-null-date rows so they land in one well-known
     // partition.
     val measured = joined.select(

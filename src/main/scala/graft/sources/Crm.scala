@@ -114,14 +114,23 @@ object Crm {
   private[graft] def dataFiles(spark: SparkSession, dir: String): Seq[FileStatus] =
     visible(spark, dir).filter(_.isFile)
 
+  /** Whether locator `dir` is a JDBC URL, read (and written) over JDBC. */
+  def isJdbc(dir: String): Boolean = dir.startsWith("jdbc:")
+
+  /** Whether locator `dir` is a parquet directory: it has none of the
+    * `jdbc:`, `csv:`, `json:` or `orc:` prefixes [[table]] dispatches on.
+    * URI-scheme paths (`file:/`, `hdfs://`, `s3a://`) are directories. */
+  def isParquetDir(dir: String): Boolean =
+    !isJdbc(dir) && !Seq("csv:", "json:", "orc:").exists(dir.startsWith)
+
   /** What a build over `dir` reads: (file, size, modification time) of the
     * data files of every table in [[schemas]] present under `dir`, from the
     * same listing as [[storedSchema]]. [[graft.BuildOnce]] keys on it, so a
-    * table rewritten in place changes the key. Other locators (`jdbc:`,
-    * `csv:`, `json:`, `orc:`) are not listed: their signature is empty, so
-    * a memo over one keys on the locator's name only. */
+    * table rewritten in place changes the key. Other locators are not
+    * listed: their signature is empty, so a memo over one keys on the
+    * locator's name only. */
   def signature(spark: SparkSession, dir: String): Seq[(String, Long, Long)] =
-    if (Seq("jdbc:", "csv:", "json:", "orc:").exists(dir.startsWith)) Nil
+    if (!isParquetDir(dir)) Nil
     else schemas.keys.toSeq.sorted.flatMap(t => dataFiles(spark, s"$dir/$t.parquet").map(f =>
       (s"$t/${f.getPath.getName}", f.getLen, f.getModificationTime)))
 
@@ -138,7 +147,7 @@ object Crm {
     * against any source unchanged.
     */
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    if (dir.startsWith("jdbc:")) jdbcTable(spark, dir, name)
+    if (isJdbc(dir)) jdbcTable(spark, dir, name)
     else if (dir.startsWith("csv:"))
       spark.read.option("header", "true").option("inferSchema", "true")
         .csv(s"${dir.stripPrefix("csv:")}/$name.csv")

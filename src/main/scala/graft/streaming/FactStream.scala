@@ -55,23 +55,16 @@ object FactStream {
                         dimVendedor: DataFrame, dimLoja: DataFrame,
                         out: String): DataFrame = {
     // FileStreamSource only reads files — the parquet-directory layout. The
-    // csv:/json:/jdbc:/orc: locators Crm.table accepts for batch have no
-    // streaming PARQUET source, so reject exactly those four (URI-scheme
-    // paths like file:/ hdfs:// s3a:// are valid file-stream locations and
-    // pass); an unguarded orc: would only fail deep in Hadoop with a
-    // baffling "No FileSystem for scheme: orc".
-    require(!dir.startsWith("csv:") && !dir.startsWith("json:") &&
-      !dir.startsWith("jdbc:") && !dir.startsWith("orc:"),
+    // other locators Crm.table accepts for batch have no streaming PARQUET
+    // source, so reject them here; an unguarded orc: would only fail deep
+    // in Hadoop with a baffling "No FileSystem for scheme: orc".
+    require(graft.sources.Crm.isParquetDir(dir),
       s"incrementalFact streams from a parquet directory; got locator '$dir'")
-    val base = dir.stripPrefix("parquet:")
     // glob: FileStreamSource wants a directory base path (same trick as the
     // events stream readers)
-    val orders = spark.readStream.schema(ordersSchema).parquet(s"$base/orders*")
+    val orders = spark.readStream.schema(ordersSchema).parquet(s"$dir/orders*")
     val stream = graft.operators.Fact.fatoVendasNoSk(
-      graft.sources.Crm.vendasFrom(orders),
-      // base, not dir: Crm.table's parquet fallback must not see a
-      // `parquet:`-prefixed path
-      graft.sources.Crm.itemVendas(spark, base),
+      graft.sources.Crm.vendasFrom(orders), graft.sources.Crm.itemVendas(spark, dir),
       dimTempo, dimCliente, dimProduto, dimVendedor, dimLoja)
     val q = stream.writeStream.format("parquet")
       .option("path", s"$out/data").option("checkpointLocation", s"$out/ckpt")

@@ -462,6 +462,20 @@ class DedupSpec extends SparkSpec {
     assert(b < Runtime.getRuntime.maxMemory / 2)
   }
 
+  test("shjBuildBudget: local[N] sizes from the driver, local-cluster from its executors") {
+    val mb = 1L << 20
+    val driverHeap = 4096 * mb
+    def budget(master: String, confs: Map[String, String]): Long =
+      Dedup.shjBuildBudget(master, confs.get, 4, driverHeap)
+    // (heap − 300 MB) × memory.fraction / slots / 2
+    assert(budget("local[4]", Map.empty) === ((driverHeap - 300 * mb) * 0.6 / 4 / 2).toLong)
+    // two executors of 2 cores and 1536 MB each: the driver's heap and
+    // parallelism say nothing about an executor's task share
+    val cluster = "local-cluster[2,2,1536]"
+    assert(budget(cluster, ClusterMode.executorConfs(cluster)) ===
+      ((1536 - 300) * mb * 0.6 / 2 / 2).toLong)
+  }
+
   test("verifyHintFor: auto reads the bucket histogram against the build budget") {
     val banded = Seq((0, 7L), (0, 7L), (0, 7L), (1, 9L))
       .toDF("band", "band_hash") // one 3-bucket → 3 candidate pairs

@@ -11,8 +11,8 @@ import scala.jdk.CollectionConverters._
   * a knob that loses its last reader has to be dropped from here.
   * Per-experiment switches belong in the engine's own `SQLConf`, not here.
   * The same source scan keeps the session contract, the mains' session
-  * builder, the sizing machinery, the data-file rule and the
-  * commit-marker directory each in its one place.
+  * builder, the sizing machinery, the data-file rule, the locator
+  * grammar and the commit-marker directory each in its one place.
   */
 class KnobGuardSpec extends AnyFunSuite {
 
@@ -87,6 +87,16 @@ class KnobGuardSpec extends AnyFunSuite {
       m <- rule.findAllIn(new String(Files.readAllBytes(p), "UTF-8")).toSeq
     } yield s"$p: $m"
     assert(found.isEmpty, s"use Crm.dataFiles / IdempotentFold's marker helpers instead: $found")
+  }
+
+  test("only Crm.scala names a locator prefix") {
+    // which locator is JDBC and which a parquet directory is decided by
+    // Crm.isJdbc and Crm.isParquetDir
+    val prefix = """"(?:jdbc|csv|json|orc|parquet):""".r
+    val found = mainSources.filterNot(_.getFileName.toString == "Crm.scala").flatMap { p =>
+      prefix.findAllIn(new String(Files.readAllBytes(p), "UTF-8")).map(m => s"$p: $m").toSeq
+    }
+    assert(found.isEmpty, s"use Crm.isJdbc / Crm.isParquetDir instead: $found")
   }
 
   test("build.sbt and run_graft.sh read exactly the listed environment names") {

@@ -46,7 +46,7 @@ class WarehouseSpec extends SparkSpec {
   test("JDBC sink (S2/S8): write the DW to Derby, read back consistent") {
     val w = Warehouse.build(spark, "/root/testdata/sf0.001")
     val url = s"jdbc:derby:${Files.createTempDirectory("graft_derby_dw")}/dw;create=true"
-    w.writeJdbc(url)
+    w.write(url)
 
     // every table round-trips with the same count, through the SAME jdbc:
     // locator dispatch the CRM source uses
@@ -62,7 +62,7 @@ class WarehouseSpec extends SparkSpec {
     assert(revenue(graft.sources.Crm.table(spark, url, "fato_vendas"))
       === revenue(w.fatoVendas))
     // overwrite mode is a true replace, not an append
-    w.writeJdbc(url)
+    w.write(url)
     assert(graft.sources.Crm.table(spark, url, "dim_localidade").count()
       === w.dimLocalidade.count())
   }
@@ -91,7 +91,7 @@ class WarehouseSpec extends SparkSpec {
     // Derby round-trip: the JDBC DW exposes DECIMAL, not DOUBLE, and keeps
     // the cent-exact total
     val url = s"jdbc:derby:${Files.createTempDirectory("graft_derby_dec")}/dw;create=true"
-    w.writeJdbc(url, decimalExact = true)
+    w.write(url, decimalExact = true)
     val jdbcFato = graft.sources.Crm.table(spark, url, "fato_vendas")
     assert(jdbcFato.schema("valor_final").dataType.isInstanceOf[DecimalType])
     assert(jdbcFato.agg(sum(col("valor_final"))).collect()(0).getDecimal(0)
@@ -106,7 +106,7 @@ class WarehouseSpec extends SparkSpec {
       .map[Long] { _ => sys.error("poisoned stage") }.toDF("x")
     val poisoned = w.copy(dimLoja = poisonDf)
     val out = Files.createTempDirectory("dw_be").toString
-    val report = poisoned.writeBestEffort(out)
+    val report = poisoned.write(out, bestEffort = true)
     assert(report.size === w.tables.size)
     val failed = report.filter(_._2.isDefined).map(_._1)
     assert(failed === Seq("dim_loja"), s"expected only dim_loja to fail: $report")
@@ -125,8 +125,8 @@ class WarehouseSpec extends SparkSpec {
   test("partitioned fact write: year filter prunes partitions at the scan") {
     val w = Warehouse.build(spark, "/root/testdata/sf0.001")
     val out = Files.createTempDirectory("dw_part").toString
-    w.writeFactPartitioned(out)
-    val read = spark.read.parquet(s"$out/fato_vendas_part")
+    w.write(out, factLayout = Warehouse.Partitioned)
+    val read = spark.read.parquet(s"$out/fato_vendas")
     assert(read.count() === w.fatoVendas.count())
     val filtered = read.filter(org.apache.spark.sql.functions.col("ano_particao") === 1996L)
     val plan = filtered.queryExecution.executedPlan.toString
@@ -140,7 +140,7 @@ class WarehouseSpec extends SparkSpec {
     val w = Warehouse.build(spark, "/root/testdata/sf0.001")
     val out = Files.createTempDirectory("dw_idx").toString
     // tiny row groups so the small fact spans many of them
-    w.writeFactIndexed(out, sortKey = "sk_produto", blockSize = 16 * 1024)
+    w.write(out, factLayout = Warehouse.Sorted("sk_produto", blockSize = 16 * 1024))
     w.fatoVendas.write.mode("overwrite")
       .option("parquet.block.size", (16 * 1024).toString)
       .parquet(s"$out/fato_vendas_plain")
@@ -156,7 +156,7 @@ class WarehouseSpec extends SparkSpec {
         .map(_.metrics("numOutputRows").value).sum
     }
     val total = w.fatoVendas.count()
-    val sortedRead = scanRows(s"$out/fato_vendas_idx")
+    val sortedRead = scanRows(s"$out/fato_vendas")
     val plainRead = scanRows(s"$out/fato_vendas_plain")
     // the sorted layout's narrow envelopes must skip far more than whatever
     // natural clustering the plain insert order happens to provide
@@ -175,14 +175,14 @@ class WarehouseSpec extends SparkSpec {
     // has some of these keys" scenario
     w.dimLocalidade.limit(10).write.parquet(s"$out/dim_localidade")
 
-    w.writeIdempotent(out)
+    w.write(out, mode = Warehouse.InsertNewKeys)
     val first = w.tables.map { case (n, _) =>
       n -> spark.read.parquet(s"$out/$n").count()
     }.toMap
     // the pre-seeded table was topped up to the full row set, not duplicated
     assert(first("dim_localidade") === w.dimLocalidade.count())
 
-    w.writeIdempotent(out) // full re-run against the existing DW
+    w.write(out, mode = Warehouse.InsertNewKeys) // full re-run against the existing DW
     w.tables.foreach { case (n, _) =>
       assert(spark.read.parquet(s"$out/$n").count() === first(n),
         s"$n changed on idempotent re-run")
@@ -197,13 +197,13 @@ class WarehouseSpec extends SparkSpec {
     // pre-seed fato_vendas with a partial write — as if a prior load died
     // mid-append. The seeded sks come from the same monotonically-increasing
     // generator a fresh run would use, so un-rebased appends WOULD collide.
-    // (Seed rows are key-deduped like any writeIdempotent batch would be.)
+    // (Seed rows are key-deduped like any InsertNewKeys batch would be.)
     operators.Surrogate.firstMatch(w.fatoVendas,
       Seq(col("id_venda"), col("id_produto")), Seq(col("sk_venda")))
       .limit(200).write.parquet(s"$out/fato_vendas")
     assert(spark.read.parquet(s"$out/fato_vendas").count() === 200L)
 
-    w.writeIdempotent(out)
+    w.write(out, mode = Warehouse.InsertNewKeys)
     val full = spark.read.parquet(s"$out/fato_vendas")
     // ON CONFLICT parity: the target holds exactly one row per natural key
     // — the source grain (id_venda, id_produto) is NOT unique (lineitem can
@@ -216,8 +216,42 @@ class WarehouseSpec extends SparkSpec {
     assert(full.select("sk_venda").distinct().count() === expected,
       "sk_venda collided between seeded and topped-up rows")
 
-    w.writeIdempotent(out) // and a second full re-run is still a no-op
+    w.write(out, mode = Warehouse.InsertNewKeys) // and a second full re-run is still a no-op
     assert(spark.read.parquet(s"$out/fato_vendas").count() === expected)
+  }
+
+  test("idempotent re-run after a failed best-effort stage loads every table in full") {
+    // the reference's recovery path: a stage rolled back, then a re-run
+    val w = Warehouse.build(spark, "/root/testdata/sf0.001")
+    import spark.implicits._
+    val poisonDf = spark.range(1)
+      .map[Long] { _ => sys.error("poisoned stage") }.toDF("x")
+    val out = Files.createTempDirectory("dw_recover").toString
+    val report = w.copy(dimLoja = poisonDf).write(out, bestEffort = true)
+    assert(report.filter(_._2.isDefined).map(_._1) === Seq("dim_loja"), report)
+    // the failed stage's directory holds no data file
+    assert(graft.sources.Crm.dataFiles(spark, s"$out/dim_loja").isEmpty)
+
+    w.write(out, mode = Warehouse.InsertNewKeys)
+    w.tables.foreach { case (name, df) =>
+      assert(spark.read.parquet(s"$out/$name").count() === df.count(),
+        s"$name not at its full row set after the re-run")
+    }
+  }
+
+  test("load combinations the loop does not implement fail before any table is written") {
+    val w = Warehouse.build(spark, "/root/testdata/sf0.001")
+    val dir = Files.createTempDirectory("dw_reject")
+    val url = s"jdbc:derby:$dir/dw;create=true"
+    val rejected = Seq(
+      (url, Warehouse.InsertNewKeys, Warehouse.Plain),
+      (url, Warehouse.Overwrite, Warehouse.Partitioned),
+      (dir.toString, Warehouse.InsertNewKeys, Warehouse.Partitioned))
+    rejected.foreach { case (target, mode, layout) =>
+      val e = intercept[IllegalArgumentException](w.write(target, mode = mode, factLayout = layout))
+      assert(e.getMessage.contains(target) && e.getMessage.contains(mode.toString), e.getMessage)
+      assert(dir.toFile.list().isEmpty, s"$mode/$layout into $target wrote ${dir.toFile.list().toSeq}")
+    }
   }
 
   test("observed load metrics: row count and measure total ride the fact action") {
